@@ -439,8 +439,7 @@ def main() -> None:
         )
         leaves = reduce_2d(leaves, dim=DIM, seed=cfg.seed)
         incremental_update(
-            spark, tree_holder["base"], leaves, cfg,
-            start_resolution=4, max_layers=6, embed_dim=DIM,
+            spark, tree_holder["base"], leaves, cfg, max_layers=6, embed_dim=DIM
         ).count()
 
     timed("incremental_append_1pct", _incremental_append)
@@ -497,8 +496,7 @@ def main() -> None:
             )
         )
         incremental_update(
-            spark, tree_holder["base"], delta, cfg,
-            start_resolution=4, max_layers=6, embed_dim=DIM,
+            spark, tree_holder["base"], delta, cfg, max_layers=6, embed_dim=DIM
         ).count()
 
     timed("incremental_append_clustered", _incremental_append_clustered)
@@ -549,8 +547,7 @@ def main() -> None:
             )
             leaves = reduce_2d(leaves, dim=DIM, seed=cfg.seed)
             incremental_update_planned(
-                spark, base, leaves, cfg,
-                start_resolution=4, max_layers=6, embed_dim=DIM,
+                spark, base, leaves, cfg, max_layers=6, embed_dim=DIM,
                 min_pending_per_cell=4,
                 force_flush=(day == n_days - 1),
             ).count()

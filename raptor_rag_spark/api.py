@@ -136,8 +136,7 @@ class RaptorEngine:
         leaves = reduce_2d(leaves, dim=self.dim, seed=self.cfg.seed)
         if deferred:
             self.nodes = incremental_update_planned(
-                self.spark, self.base, leaves, self.cfg,
-                start_resolution=self.start_resolution, embed_dim=self.dim,
+                self.spark, self.base, leaves, self.cfg, embed_dim=self.dim,
                 min_pending_per_cell=min_pending_per_cell,
                 min_pending_frac=min_pending_frac,
             ).cache()
@@ -147,8 +146,7 @@ class RaptorEngine:
             # planner with force_flush) — the invariant lives in the
             # streaming module, not at call sites
             self.nodes = incremental_update(
-                self.spark, self.base, leaves, self.cfg,
-                start_resolution=self.start_resolution, embed_dim=self.dim,
+                self.spark, self.base, leaves, self.cfg, embed_dim=self.dim
             ).cache()
 
     def flush_appends(self) -> None:
@@ -162,8 +160,7 @@ class RaptorEngine:
         if self.nodes is None:
             raise ValueError("no tree built")
         self.nodes = incremental_update_planned(
-            self.spark, self.base, None, self.cfg,
-            start_resolution=self.start_resolution, embed_dim=self.dim,
+            self.spark, self.base, None, self.cfg, embed_dim=self.dim,
             force_flush=True,
         ).cache()
 

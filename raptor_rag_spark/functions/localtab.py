@@ -19,8 +19,8 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     pandas/Arrow constructor. Schema is applied explicitly, so types
     match the plain createDataFrame exactly (long stays long, etc.)."""
     import pandas as pd
-    from pyspark.sql.types import _parse_datatype_string
+    from pyspark.sql.types import StructType
 
-    st = _parse_datatype_string(schema) if isinstance(schema, str) else schema
+    st = StructType.fromDDL(schema) if isinstance(schema, str) else schema
     pdf = pd.DataFrame(list(rows), columns=st.fieldNames())
     return spark.createDataFrame(pdf, schema=st)

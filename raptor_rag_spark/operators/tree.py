@@ -49,9 +49,11 @@ from raptor_rag_spark.operators.tile import (
 )
 from raptor_rag_spark.tokenizer import DEFAULT_TOKENIZER
 
+# the columns of every level >= 1 (what build_level(with_embedding=True)
+# emits): levels are read through this fixed schema, never inferred
 NODES_SCHEMA = (
     "node_id long, layer int, cell_id string, text string, "
-    "children array<long>, n_tokens int"
+    "children array<long>, n_tokens int, embedding array<float>, x double, y double"
 )
 
 
@@ -460,6 +462,7 @@ def write_level(
     layer: int,
     lineage: dict,
     partition_prefix_len: int | None = None,
+    start_resolution: int | None = None,
 ) -> dict:
     """Atomic level checkpoint: parquet + manifest with per-partition
     row counts, lineage and timings. The manifest is written AFTER the
@@ -470,7 +473,14 @@ def write_level(
     level_resolution+1 makes each start-resolution cell its own
     partition — exactly the closed recompute unit of incremental
     maintenance, so an append overwrites ONLY affected partitions
-    (dynamic partition overwrite) instead of rewriting the level."""
+    (dynamic partition overwrite) instead of rewriting the level.
+    Per-partition counts come from the parquet footers (see
+    storage_partition_counts; no data re-scan) and are keyed by
+    cell_pfx on such levels, so incremental maintenance can later
+    update them ARITHMETICALLY (update_manifest_delta).
+
+    ``start_resolution`` (build_tree passes it at level 0) is recorded
+    in the manifest; see :func:`tree_start_resolution`."""
     t0 = time.time()
     path = _level_path(base, layer)
     if partition_prefix_len and "cell_id" in df.columns:
@@ -488,9 +498,22 @@ def write_level(
     else:
         partition_prefix_len = None
         df.write.mode("overwrite").parquet(path)
-    return refresh_manifest(
-        df.sparkSession, base, layer, lineage, partition_prefix_len, t0=t0
-    )
+    per_part = storage_partition_counts(path, bool(partition_prefix_len))
+    manifest = {
+        "layer": layer,
+        "rows": int(sum(per_part.values())),
+        "partitions": {k: int(v) for k, v in per_part.items()},
+        "partitions_by": "cell_pfx" if partition_prefix_len else "partition_id",
+        "partition_prefix_len": partition_prefix_len,
+        "lineage": lineage,
+        "wall_sec": round(time.time() - t0, 3),
+        "written_at_epoch": int(time.time()),
+    }
+    if start_resolution is not None:
+        manifest["start_resolution"] = int(start_resolution)
+    with open(_manifest_path(base, layer), "w") as f:
+        json.dump(manifest, f, indent=1)
+    return manifest
 
 
 def storage_partition_counts(path: str, by_cell_pfx: bool) -> dict[str, int]:
@@ -533,39 +556,6 @@ def storage_partition_counts(path: str, by_cell_pfx: bool) -> dict[str, int]:
     return counts
 
 
-def refresh_manifest(
-    spark: SparkSession,
-    base: str,
-    layer: int,
-    lineage: dict,
-    partition_prefix_len: int | None = None,
-    t0: float | None = None,
-) -> dict:
-    """(Re)write a level's manifest from what is on storage (footer
-    metadata walk — see storage_partition_counts; no data re-scan).
-    Prefix-partitioned levels key the per-partition counts by cell_pfx
-    (the physical partition), so incremental maintenance can later
-    update them ARITHMETICALLY from the write delta
-    (update_manifest_delta) without rescanning."""
-    t0 = time.time() if t0 is None else t0
-    per_part = storage_partition_counts(
-        _level_path(base, layer), bool(partition_prefix_len)
-    )
-    manifest = {
-        "layer": layer,
-        "rows": int(sum(per_part.values())),
-        "partitions": {k: int(v) for k, v in per_part.items()},
-        "partitions_by": "cell_pfx" if partition_prefix_len else "partition_id",
-        "partition_prefix_len": partition_prefix_len,
-        "lineage": lineage,
-        "wall_sec": round(time.time() - t0, 3),
-        "written_at_epoch": int(time.time()),
-    }
-    with open(_manifest_path(base, layer), "w") as f:
-        json.dump(manifest, f, indent=1)
-    return manifest
-
-
 def update_manifest_delta(
     base: str,
     layer: int,
@@ -604,49 +594,39 @@ def update_manifest_delta(
     return manifest
 
 
+# levels >= 1 on disk: NODES_SCHEMA plus the physical partition column,
+# read as a STRING — default partition-type inference parses the
+# quadkey prefix '01230' as the integer 1230 (the round-5 manifest drift)
+_LEVEL_READ_SCHEMA = NODES_SCHEMA + ", cell_pfx string"
+
+
 def read_level(spark: SparkSession, base: str, layer: int) -> DataFrame:
-    """Level checkpoint reader: drops the physical partition column
-    (cell_pfx) when the level was written prefix-partitioned, so every
-    consumer sees the same logical schema regardless of layout."""
-    df = spark.read.parquet(_level_path(base, layer))
-    return df.drop("cell_pfx") if "cell_pfx" in df.columns else df
+    """Level checkpoint reader, without the physical partition column.
+    Levels >= 1 are read through the fixed NODES_SCHEMA: no schema-
+    inference job, only the file listing. Level 0 keeps inference — its
+    leaf columns come from the caller."""
+    path = _level_path(base, layer)
+    if layer == 0:
+        return spark.read.parquet(path)
+    return spark.read.schema(_LEVEL_READ_SCHEMA).parquet(path).drop("cell_pfx")
 
 
 def read_level_pruned(
     spark: SparkSession, base: str, layer: int, prefixes: list[str]
 ) -> DataFrame:
-    """Partition-pruned read of a prefix-partitioned level: only the
-    ``cell_pfx=`` directories matching ``prefixes`` (exactly, or by
-    quadkey-prefix when the given strings are SHORTER than the level's
-    partition key) are listed and read — the O(affected) I/O path of
-    incremental maintenance. Two details matter:
-
-    - the partition column is read through an EXPLICIT schema as a
-      STRING: default partition-type inference parses '01230' as the
-      integer 1230, silently merging distinct quadkeys (the same
-      inference caused the round-5 manifest drift);
-    - the predicate is on the partition column only, so Catalyst
-      evaluates it against directory values during listing
-      (PartitionFilters in the scan — no data files outside the
-      affected dirs are opened).
-
-    Returns the level WITHOUT cell_pfx, like read_level. Caller must
-    know the level is prefix-partitioned (manifest
-    partition_prefix_len)."""
-    from pyspark.sql import types as T
-
-    path = _level_path(base, layer)
-    inferred = spark.read.parquet(path).schema
-    fields = [
-        T.StructField("cell_pfx", T.StringType()) if f.name == "cell_pfx" else f
-        for f in inferred.fields
-    ]
-    df = spark.read.schema(T.StructType(fields)).parquet(path)
-    if not prefixes:
-        return df.drop("cell_pfx").limit(0)
-    plen = len(prefixes[0])
-    pred = F.substring("cell_pfx", 1, plen).isin(list(prefixes))
-    return df.filter(pred).drop("cell_pfx")
+    """Partition-pruned read of a level >= 1: only the ``cell_pfx=``
+    directories equal to one of ``prefixes`` are read — the O(affected)
+    I/O path of incremental maintenance. The predicate is on the
+    partition column only, so Catalyst evaluates it against directory
+    values during listing (PartitionFilters in the scan — no data files
+    outside the affected dirs are opened). Returns the level WITHOUT
+    cell_pfx, like read_level."""
+    return (
+        spark.read.schema(_LEVEL_READ_SCHEMA)
+        .parquet(_level_path(base, layer))
+        .filter(F.col("cell_pfx").isin(list(prefixes)))
+        .drop("cell_pfx")
+    )
 
 
 def read_manifest(base: str, layer: int) -> dict:
@@ -660,6 +640,24 @@ def last_complete_level(base: str) -> int:
     while os.path.exists(_manifest_path(base, lvl + 1)):
         lvl += 1
     return lvl
+
+
+def tree_start_resolution(base: str) -> int | None:
+    """The start resolution the tree under ``base`` was built with —
+    level L >= 1 groups at resolution start - (L-1) and is partitioned
+    by cell prefixes one digit longer. build_tree records it in the
+    level-0 manifest; a tree written before that is read off level 1's
+    partition key. None when neither exists."""
+    if not os.path.exists(_manifest_path(base, 0)):
+        return None
+    recorded = read_manifest(base, 0).get("start_resolution")
+    if recorded is not None:
+        return int(recorded)
+    if os.path.exists(_manifest_path(base, 1)):
+        pfx_len = read_manifest(base, 1).get("partition_prefix_len")
+        if pfx_len:
+            return int(pfx_len) - 1
+    return None
 
 
 def build_tree(
@@ -687,6 +685,16 @@ def build_tree(
     os.makedirs(checkpoint_base, exist_ok=True)
 
     done = last_complete_level(checkpoint_base) if resume else -1
+    if done >= 0:
+        # growing a tree at another resolution would break the layout
+        # incremental maintenance relies on (one partition per recompute
+        # unit) — refuse instead
+        recorded = tree_start_resolution(checkpoint_base)
+        if recorded is not None and recorded != start_resolution:
+            raise ValueError(
+                f"tree at {checkpoint_base!r} was built with start_resolution="
+                f"{recorded}, got start_resolution={start_resolution}"
+            )
     if done < 0:
         lvl0 = (
             leaves.withColumn("layer", F.lit(0))
@@ -701,6 +709,7 @@ def build_tree(
             checkpoint_base,
             0,
             {"input": "leaves"},
+            start_resolution=start_resolution,
         )
         done = 0
 

@@ -201,11 +201,25 @@ def append_level(
     return manifest
 
 
+def _require_start_resolution(base: str) -> int:
+    """The tree's start resolution (tree.tree_start_resolution); raises
+    ValueError naming the base when the tree records none."""
+    from raptor_rag_spark.operators.tree import tree_start_resolution
+
+    res = tree_start_resolution(base)
+    if res is None:
+        raise ValueError(
+            f"tree at {base!r} records no start resolution (no level-0 "
+            "start_resolution and no prefix-partitioned level 1); rebuild "
+            "it with build_tree"
+        )
+    return res
+
+
 def _propagate_affected(
     spark: SparkSession,
     checkpoint_base: str,
     cfg: EngineConfig,
-    start_resolution: int,
     top: int,
     dim: int,
     delta: DataFrame | None = None,
@@ -221,16 +235,15 @@ def _propagate_affected(
     leaves, not just today's batch. Returns aggregate stats
     {recomputed_parents, replaced_parents, affected_cells_l1}.
 
-    Driver-round-trip budget (round 6): the affected-cell set is a
-    DRIVER LIST (it always was — the manifest delta collected it), so
-    membership tests compile to map-side ``isin`` filters instead of
-    broadcast-join builds; the recomputed level is written ONCE with
-    dynamic partition overwrite and read BACK (partition-pruned to the
-    affected dirs) where its rows are needed again, instead of an
-    eager localCheckpoint followed by a write; and per-partition counts
-    come from the written files' parquet footers (no counting job).
-    4 Spark jobs per level instead of ~8, identical rows (the
-    append==rebuild pytest covers this path)."""
+    Every level is partitioned by its start-res cell (build_tree's
+    layout, checked against the manifest), so the affected cells ARE
+    partitions: the recomputed level is written ONCE with dynamic
+    partition overwrite — kept rows are never read or written — and
+    read BACK (partition-pruned to the affected dirs) where its rows
+    are needed again. The affected-cell set is a DRIVER LIST, so
+    membership tests compile to map-side ``isin`` filters; per-partition
+    counts come from the written files' parquet footers and the
+    manifest (no counting job)."""
     from pyspark.sql import functions as F
 
     from raptor_rag_spark.operators.tile import tile
@@ -238,17 +251,29 @@ def _propagate_affected(
         _level_path,
         build_level,
         read_level,
-        read_manifest,
         read_level_pruned,
-        refresh_manifest,
+        read_manifest,
         storage_partition_counts,
         update_manifest_delta,
-        write_level,
     )
 
+    start_resolution = _require_start_resolution(checkpoint_base)
     stats = {"recomputed_parents": 0, "replaced_parents": 0, "affected_cells_l1": 0}
     for layer in range(1, top + 1):
         res = max(start_resolution - (layer - 1), 0)
+        old_manifest = read_manifest(checkpoint_base, layer)
+        layout = (
+            old_manifest.get("partitions_by"),
+            old_manifest.get("partition_prefix_len"),
+        )
+        if layout != ("cell_pfx", res + 1):
+            raise ValueError(
+                f"level {layer} of tree {checkpoint_base!r} is partitioned by "
+                f"{layout[0]!r} with prefix length {layout[1]!r}; incremental "
+                f"maintenance needs 'cell_pfx' with prefix length {res + 1} "
+                f"(one partition per resolution-{res} cell) — rebuild the "
+                "tree with build_tree"
+            )
         if layer == 1 and affected_l1 is not None:
             affected = sorted(affected_l1)
         else:
@@ -280,95 +305,53 @@ def _propagate_affected(
             "node_id", "layer", "cell_id", "text", "children", "n_tokens",
             "embedding", "x", "y",
         )
-        old_manifest = read_manifest(checkpoint_base, layer)
-        pfx_len = old_manifest.get("partition_prefix_len")
-        prefix = F.substring("cell_id", 1, res + 1)
         # pinned BEFORE the overwrite below: this plan reads the very
-        # files being replaced. Partition-pruned on the affected dirs
-        # when the layout allows (the affected cells ARE this level's
-        # partitions), else scan + row filter.
-        if old_manifest.get("partitions_by") == "cell_pfx" and pfx_len == res + 1:
-            replaced_src = read_level_pruned(
-                spark, checkpoint_base, layer, affected
-            )
-        else:
-            replaced_src = read_level(spark, checkpoint_base, layer).filter(
-                prefix.isin(affected)
-            )
-        replaced = replaced_src.select("node_id", "x", "y").localCheckpoint(
-            eager=True
+        # files being replaced
+        replaced = (
+            read_level_pruned(spark, checkpoint_base, layer, affected)
+            .select("node_id", "x", "y")
+            .localCheckpoint(eager=True)
         )
-        if old_manifest.get("partitions_by") == "cell_pfx" and pfx_len == res + 1:
-            # manifest partition counts are exact (footer-derived and
-            # append-free at levels >= 1): the replaced-parents count is
-            # plain arithmetic, no counting job
-            parts = old_manifest.get("partitions", {})
-            n_replaced = int(sum(int(parts.get(c, 0)) for c in affected))
-        else:
-            n_replaced = int(replaced.count())
+        # manifest partition counts are exact (footer-derived and
+        # append-free at levels >= 1): the replaced-parents count is
+        # plain arithmetic, no counting job
+        parts = old_manifest.get("partitions", {})
+        n_replaced = int(sum(int(parts.get(c, 0)) for c in affected))
         lineage = {
             "input": "incremental",
             "resolution": res,
             "affected_cells": len(affected),
+            "write": "dynamic-partition-overwrite",
         }
-        if pfx_len == res + 1:
-            # prefix-partitioned level: affected start-res cells ARE
-            # partitions — dynamic partition overwrite rewrites ONLY
-            # those directories; kept rows are never read or written
-            # (the 100 TB maintenance path).
-            lineage["write"] = "dynamic-partition-overwrite"
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
+        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        try:
+            (
+                recomputed.withColumn("cell_pfx", F.substring("cell_id", 1, res + 1))
+                .write.mode("overwrite")
+                .partitionBy("cell_pfx")
+                .parquet(_level_path(checkpoint_base, layer))
             )
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                (
-                    recomputed.withColumn(
-                        "cell_pfx", F.substring("cell_id", 1, res + 1)
-                    )
-                    .write.mode("overwrite")
-                    .partitionBy("cell_pfx")
-                    .parquet(_level_path(checkpoint_base, layer))
-                )
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-            # O(affected) footer walk of the just-written dirs — the
-            # recomputed counts without a counting job
-            all_counts = storage_partition_counts(
-                _level_path(checkpoint_base, layer), True
-            )
-            rec_counts = {c: all_counts.get(c, 0) for c in affected}
-            n_recomputed = int(sum(rec_counts.values()))
-            lineage["recomputed_parents"] = n_recomputed
-            lineage["replaced_parents"] = n_replaced
-            if old_manifest.get("partitions_by") == "cell_pfx":
-                # O(affected) manifest update — no level rescan
-                update_manifest_delta(
-                    checkpoint_base, layer, affected,
-                    {k: v for k, v in rec_counts.items() if v}, lineage,
-                )
-            else:  # legacy manifest (partition-id keyed): refresh once
-                refresh_manifest(spark, checkpoint_base, layer, lineage, pfx_len)
-            # the written partitions ARE the recomputed rows: read them
-            # back partition-pruned for the next level's delta instead
-            # of holding a checkpoint
-            recomputed_rb = read_level_pruned(
-                spark, checkpoint_base, layer, affected
-            ).select("node_id", "x", "y")
-        else:
-            recomputed = recomputed.localCheckpoint(eager=True)
-            n_recomputed = int(recomputed.count())
-            lineage["recomputed_parents"] = n_recomputed
-            lineage["replaced_parents"] = n_replaced
-            # coalesce: a NULL prefix must stay kept (the old anti-join
-            # semantics — NULL never matched)
-            kept = old.filter(F.coalesce(~prefix.isin(affected), F.lit(True)))
-            merged = kept.unionByName(recomputed).localCheckpoint(eager=True)
-            write_level(
-                merged, checkpoint_base, layer, lineage,
-                partition_prefix_len=pfx_len,
-            )
-            recomputed_rb = recomputed.select("node_id", "x", "y")
+        finally:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # O(affected) footer walk of the just-written dirs — the
+        # recomputed counts without a counting job
+        all_counts = storage_partition_counts(_level_path(checkpoint_base, layer), True)
+        rec_counts = {c: all_counts.get(c, 0) for c in affected}
+        n_recomputed = int(sum(rec_counts.values()))
+        lineage["recomputed_parents"] = n_recomputed
+        lineage["replaced_parents"] = n_replaced
+        # O(affected) manifest update — no level rescan
+        update_manifest_delta(
+            checkpoint_base, layer, affected,
+            {k: v for k, v in rec_counts.items() if v}, lineage,
+        )
+        # the written partitions ARE the recomputed rows: read them back
+        # partition-pruned for the next level's delta instead of holding
+        # a checkpoint
+        recomputed_rb = read_level_pruned(
+            spark, checkpoint_base, layer, affected
+        ).select("node_id", "x", "y")
         stats["recomputed_parents"] += n_recomputed
         stats["replaced_parents"] += n_replaced
         # both the new and the vanished/updated parents perturb level+1
@@ -381,7 +364,6 @@ def incremental_update(
     checkpoint_base: str,
     new_leaves: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
-    start_resolution: int = 4,
     max_layers: int = 8,
     embed_dim: int | None = None,
 ) -> DataFrame:
@@ -389,7 +371,10 @@ def incremental_update(
     e.g. incremental_level0 output; node_ids must be fresh) to a
     checkpointed tree and re-run ONLY the affected cells of each level.
 
-    Per level L (start resolution res_L = start_resolution - (L-1)):
+    The start resolution is the tree's own (recorded by build_tree,
+    see tree.tree_start_resolution) — never a parameter, so an update
+    cannot address cells at another resolution than the build's. Per
+    level L (resolution res_L = start - (L-1)):
     1. affected = distinct res_L cells containing any changed child
        node (new leaves at level 0; recomputed OR replaced parents at
        higher levels — a vanished parent changes the next level too);
@@ -398,16 +383,17 @@ def incremental_update(
     3. carry over every parent whose cell_id prefix is unaffected;
     4. the changed-parent set becomes the next level's delta.
 
-    Level 0 is an APPEND (immutable data files + manifest delta);
-    levels >= 1 rewrite the level file with kept ∪ recomputed rows —
-    the summarize/embed work (the expensive part) runs only on affected
-    cells; at production scale the level files would be partitioned by
-    cell prefix so the rewrite too touches only affected partitions
-    (levels above 0 are already compression-ratio smaller than leaves).
-    Finishes with a resumed build_tree to extend the top if the append
-    pushed the top level back over min_level_nodes; returns the
-    collapsed node table. Result equals a from-scratch build over the
-    merged leaves (pytest-asserted).
+    Level 0 is an APPEND (immutable data files + manifest delta).
+    Levels >= 1 are partitioned by their res_L cell, so step 3 is
+    physical: a dynamic partition overwrite rewrites ONLY the affected
+    ``cell_pfx=`` dirs and the manifest is updated arithmetically —
+    kept parents are never read or written, and the summarize/embed
+    work (the expensive part) runs only on affected cells. A level
+    with any other layout raises ValueError. Finishes with a resumed
+    build_tree to extend the top if the append pushed the top level
+    back over min_level_nodes; returns the collapsed node table.
+    Result equals a from-scratch build over the merged leaves
+    (pytest-asserted).
 
     On a tree that has ever taken a deferred append (a planner ledger
     exists — :func:`has_pending_ledger`), the call routes through
@@ -438,18 +424,16 @@ def incremental_update(
         # sites, so every caller keeps the invariant.
         return incremental_update_planned(
             spark, checkpoint_base, new_leaves, cfg,
-            start_resolution=start_resolution, max_layers=max_layers,
-            embed_dim=dim, force_flush=True,
+            max_layers=max_layers, embed_dim=dim, force_flush=True,
         )
 
+    start_resolution = _require_start_resolution(checkpoint_base)
     lvl0_delta, _aid = _stage_level0_append(new_leaves, checkpoint_base)
 
     # changed rows at the current child level: (node_id, x, y) —
     # lvl0_delta is already checkpointed by the staging
     delta = lvl0_delta.select("node_id", "x", "y")
-    _propagate_affected(
-        spark, checkpoint_base, cfg, start_resolution, top, dim, delta=delta
-    )
+    _propagate_affected(spark, checkpoint_base, cfg, top, dim, delta=delta)
     # extend the top if the append pushed it back over min_level_nodes
     return build_tree(
         spark,
@@ -576,7 +560,6 @@ def incremental_update_planned(
     checkpoint_base: str,
     new_leaves: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
-    start_resolution: int = 4,
     max_layers: int = 8,
     embed_dim: int | None = None,
     min_pending_per_cell: int = 4,
@@ -645,6 +628,7 @@ def incremental_update_planned(
     top = last_complete_level(checkpoint_base)
     if top < 0:
         raise ValueError(f"no complete levels under {checkpoint_base}; build first")
+    start_resolution = _require_start_resolution(checkpoint_base)
 
     ledger = read_pending(checkpoint_base)
     if ledger["resolution"] is None:
@@ -678,7 +662,7 @@ def incremental_update_planned(
     elif int(ledger["resolution"]) != int(start_resolution):
         raise ValueError(
             f"pending ledger tracks cells at resolution {ledger['resolution']}, "
-            f"got start_resolution={start_resolution}"
+            f"but the tree's start resolution is {start_resolution}"
         )
 
     if new_leaves is not None:
@@ -715,8 +699,7 @@ def incremental_update_planned(
         return _read_collapsed(spark, checkpoint_base, top)
 
     stats = _propagate_affected(
-        spark, checkpoint_base, cfg, start_resolution, top, dim,
-        affected_l1=list(due),
+        spark, checkpoint_base, cfg, top, dim, affected_l1=list(due)
     )
     for c in due:
         ledger["cells"].pop(c, None)

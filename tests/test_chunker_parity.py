@@ -14,7 +14,14 @@ from raptor_rag_spark.tokenizer import DEFAULT_TOKENIZER
 
 from tests.conftest import load_reference_utils
 
-ref_utils = load_reference_utils()
+try:
+    ref_utils = load_reference_utils()
+except FileNotFoundError:
+    pytest.skip(
+        reason="reference RAPTOR checkout not present; the chunk-md5 oracle "
+        "still pins chunker output",
+        allow_module_level=True,
+    )
 
 SAMPLES = [
     "",

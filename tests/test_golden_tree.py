@@ -30,7 +30,10 @@ def _load_cinderella():
 
 @pytest.fixture(scope="module")
 def ref_tree():
-    return _load_cinderella()
+    try:
+        return _load_cinderella()
+    except FileNotFoundError:
+        pytest.skip(reason="reference RAPTOR checkout (Cinderella artifact) not present")
 
 
 def test_reference_tree_invariants(ref_tree):

@@ -194,8 +194,7 @@ def test_cfg_summarizer_threads_through_incremental_recompute(
 
     calls_before = len(_MockChat.state["requests"])
     got = incremental_update(
-        spark, base, reduce_2d(new, dim=32, seed=cfg.seed), cfg,
-        start_resolution=3, embed_dim=32,
+        spark, base, reduce_2d(new, dim=32, seed=cfg.seed), cfg, embed_dim=32
     )
     re_parents = got.filter("layer > 0").select("text").collect()
     assert re_parents and all(r["text"] == r["text"].upper() for r in re_parents)

@@ -330,3 +330,23 @@ def test_score_candidates_join_plans_hash_join(spark):
     plan = _plan(out)
     assert "CartesianProduct" not in plan.replace("CartesianProduct", "", 1), plan  # only the test's own crossJoin
     assert ("ShuffledHashJoin" in plan or "SortMergeJoin" in plan or "BroadcastHashJoin" in plan), plan
+
+
+def test_plan_is_bare_scan_rejects_python_kernel(spark):
+    """A pandas UDF projected straight over a checkpoint is a 3-line
+    plan (Project / ArrowEvalPython / LogicalRDD) but not a cheap
+    re-scan: re-executing it re-runs the Python kernel."""
+    import pandas as pd
+
+    from raptor_rag_spark.functions.planutil import plan_is_bare_scan
+
+    @F.pandas_udf("double")
+    def plus_one(s: pd.Series) -> pd.Series:
+        return s + 1.0
+
+    pinned = spark.range(8).selectExpr("cast(id as double) as x").localCheckpoint()
+    assert plan_is_bare_scan(pinned)
+    with_udf = pinned.withColumn("y", plus_one("x"))
+    plan = with_udf._jdf.queryExecution().optimizedPlan().toString()
+    assert "ArrowEvalPython" in plan and len(plan.strip().splitlines()) == 3, plan
+    assert not plan_is_bare_scan(with_udf)

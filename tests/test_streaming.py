@@ -197,7 +197,7 @@ def test_streamed_pages_feed_incremental_tree_update(spark, tmp_path_factory):
     new_leaves = read_stream_level0(spark, out)
     assert new_leaves.count() > 0
 
-    got = incremental_update(spark, base, new_leaves, DEFAULT_CONFIG, start_resolution=3)
+    got = incremental_update(spark, base, new_leaves, DEFAULT_CONFIG)
 
     # from-scratch oracle over the merged leaves
     want = build_tree(
@@ -242,7 +242,7 @@ def test_manifest_rows_match_storage_after_incremental_update(
             "page_id", F.col("page_id") + 7000
         )
     )
-    incremental_update(spark, base, delta, DEFAULT_CONFIG, start_resolution=3)
+    incremental_update(spark, base, delta, DEFAULT_CONFIG)
 
     lvl = 0
     while os.path.exists(_manifest_path(base, lvl)):
@@ -517,9 +517,7 @@ def test_crawl_day_end_to_end(spark, tmp_path_factory):
         spark.sql(f"DROP TABLE IF EXISTS {_t}")
 
     new_leaves = incremental_level0(new_pages).localCheckpoint(eager=True)
-    got_tree = incremental_update(
-        spark, tree_base, new_leaves, DEFAULT_CONFIG, start_resolution=3
-    )
+    got_tree = incremental_update(spark, tree_base, new_leaves, DEFAULT_CONFIG)
     want_tree = build_tree(
         spark, leaves0.unionByName(new_leaves), tree_all, DEFAULT_CONFIG,
         start_resolution=3, resume=False,
@@ -661,12 +659,12 @@ def test_incremental_update_planned_defers_counts_and_flushes_exact(
 
     root = tmp_path_factory.mktemp("planned")
     base, base_all = str(root / "tree"), str(root / "tree_all")
-    kw = dict(start_resolution=3, max_layers=4)
+    kw = dict(max_layers=4)
 
     leaves0 = incremental_level0(synthetic_pages(spark, n=40, seed=61)).localCheckpoint(
         eager=True
     )
-    build_tree(spark, leaves0, base, DEFAULT_CONFIG, **kw)
+    build_tree(spark, leaves0, base, DEFAULT_CONFIG, start_resolution=3, **kw)
     parents_before = sorted(
         map(tuple, read_level(spark, base, 1).select("node_id", "text").collect())
     )
@@ -732,7 +730,9 @@ def test_incremental_update_planned_defers_counts_and_flushes_exact(
     )
     assert not read_pending(base)["cells"]
     merged = leaves0.unionByName(b1).unionByName(b2).unionByName(b3)
-    want = build_tree(spark, merged, base_all, DEFAULT_CONFIG, resume=False, **kw)
+    want = build_tree(
+        spark, merged, base_all, DEFAULT_CONFIG, resume=False, start_resolution=3, **kw
+    )
     cols = ["node_id", "layer", "cell_id", "text", "n_tokens"]
     assert sorted(map(tuple, got.select(*cols).collect())) == sorted(
         map(tuple, want.select(*cols).collect())
@@ -758,11 +758,11 @@ def test_planner_seed_persists_before_append_no_double_count(
 
     root = tmp_path_factory.mktemp("planned_crash")
     base = str(root / "tree")
-    kw = dict(start_resolution=3, max_layers=4)
+    kw = dict(max_layers=4)
     leaves0 = incremental_level0(synthetic_pages(spark, n=30, seed=71)).localCheckpoint(
         eager=True
     )
-    build_tree(spark, leaves0, base, DEFAULT_CONFIG, **kw)
+    build_tree(spark, leaves0, base, DEFAULT_CONFIG, start_resolution=3, **kw)
     n_lvl0 = read_level(spark, base, 0).count()
 
     pages = synthetic_pages(spark, n=8, seed=7100).withColumn(
@@ -820,11 +820,11 @@ def test_planner_noop_flush_skips_seeding_scan(spark, tmp_path_factory):
 
     root = tmp_path_factory.mktemp("planned_noop")
     base = str(root / "tree")
-    kw = dict(start_resolution=3, max_layers=4)
+    kw = dict(max_layers=4)
     leaves0 = incremental_level0(synthetic_pages(spark, n=25, seed=81)).localCheckpoint(
         eager=True
     )
-    want = build_tree(spark, leaves0, base, DEFAULT_CONFIG, **kw)
+    want = build_tree(spark, leaves0, base, DEFAULT_CONFIG, start_resolution=3, **kw)
     got = incremental_update_planned(
         spark, base, None, DEFAULT_CONFIG, force_flush=True, **kw
     )
@@ -853,11 +853,11 @@ def test_flush_history_bounded_with_running_totals(
     monkeypatch.setattr(streaming.incremental, "_PENDING_FLUSHES_KEEP", 2)
     root = tmp_path_factory.mktemp("flush_cap")
     base = str(root / "tree")
-    kw = dict(start_resolution=3, max_layers=4)
+    kw = dict(max_layers=4)
     leaves0 = incremental_level0(synthetic_pages(spark, n=25, seed=91)).localCheckpoint(
         eager=True
     )
-    build_tree(spark, leaves0, base, DEFAULT_CONFIG, **kw)
+    build_tree(spark, leaves0, base, DEFAULT_CONFIG, start_resolution=3, **kw)
 
     for day in range(3):  # min_pending_per_cell=1 => every batch flushes
         pages = synthetic_pages(spark, n=4, seed=9100 + day).withColumn(
@@ -892,11 +892,11 @@ def test_direct_eager_update_settles_pending_ledger(spark, tmp_path_factory):
 
     root = tmp_path_factory.mktemp("direct_settle")
     base = str(root / "tree")
-    kw = dict(start_resolution=3, max_layers=4)
+    kw = dict(max_layers=4)
     leaves0 = incremental_level0(synthetic_pages(spark, n=25, seed=92)).localCheckpoint(
         eager=True
     )
-    build_tree(spark, leaves0, base, DEFAULT_CONFIG, **kw)
+    build_tree(spark, leaves0, base, DEFAULT_CONFIG, start_resolution=3, **kw)
 
     p1 = synthetic_pages(spark, n=5, seed=9200).withColumn(
         "page_id", F.col("page_id") + 60_000
@@ -917,3 +917,153 @@ def test_direct_eager_update_settles_pending_ledger(spark, tmp_path_factory):
     assert not led["cells"]  # settled, not bypassed
     assert led["flushes"] and led["flushes"][-1]["forced"]
     assert got.filter("layer = 0").count() == leaves0.count() + b1.count() + b2.count()
+
+
+# ---------------------------------------------- one tree layout
+
+@pytest.fixture(scope="module")
+def small_tree(spark, tmp_path_factory):
+    """A 48-page tree built at start_resolution=3; tests copy it before
+    editing it."""
+    from raptor_rag_spark.config import DEFAULT_CONFIG
+    from raptor_rag_spark.operators.tree import build_tree
+
+    base = str(tmp_path_factory.mktemp("layout_tree") / "tree")
+    leaves = incremental_level0(synthetic_pages(spark, n=48, seed=21))
+    build_tree(spark, leaves, base, DEFAULT_CONFIG, start_resolution=3)
+    return base
+
+
+def _copy_tree(src, tmp_path):
+    import shutil
+
+    dst = str(tmp_path / "tree")
+    shutil.copytree(src, dst)
+    return dst
+
+
+def test_tree_records_start_resolution_and_refuses_another(
+    spark, small_tree, tmp_path
+):
+    """build_tree records its start resolution in the level-0 manifest
+    (a tree written before that is read off level 1's partition key),
+    and resuming — directly or by reopening an engine — with another
+    value raises a named error instead of growing levels at another
+    resolution."""
+    import json
+    import os
+
+    from raptor_rag_spark.api import RaptorEngine
+    from raptor_rag_spark.config import DEFAULT_CONFIG
+    from raptor_rag_spark.operators.tree import (
+        _manifest_path,
+        build_tree,
+        read_manifest,
+        tree_start_resolution,
+    )
+
+    base = _copy_tree(small_tree, tmp_path)
+    assert read_manifest(base, 0)["start_resolution"] == 3
+    assert tree_start_resolution(base) == 3
+    empty = spark.createDataFrame(
+        [], "node_id long, text string, n_tokens int, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match="start_resolution=3, got start_resolution=2"):
+        build_tree(spark, empty, base, DEFAULT_CONFIG, start_resolution=2, resume=True)
+    with pytest.raises(ValueError, match="start_resolution=3, got start_resolution=4"):
+        RaptorEngine(spark, base, DEFAULT_CONFIG)
+
+    # a tree written before the field existed
+    m0 = read_manifest(base, 0)
+    del m0["start_resolution"]
+    with open(_manifest_path(base, 0), "w") as fh:
+        json.dump(m0, fh)
+    assert tree_start_resolution(base) == 3
+    os.remove(_manifest_path(base, 1))
+    assert tree_start_resolution(base) is None
+
+
+def test_append_on_foreign_layout_raises_named_error(spark, small_tree, tmp_path):
+    """Incremental maintenance refuses a level whose partition key is
+    not its start-resolution cell (a named ValueError, not the NameError
+    the removed merge branch died with), and a tree that records no
+    start resolution at all."""
+    import json
+
+    from raptor_rag_spark.config import DEFAULT_CONFIG
+    from raptor_rag_spark.operators.tree import _manifest_path, read_manifest
+    from raptor_rag_spark.streaming.incremental import incremental_update
+
+    base = _copy_tree(small_tree, tmp_path)
+    m1 = read_manifest(base, 1)
+    assert m1["partition_prefix_len"] == 4
+    m1["partition_prefix_len"] = 5
+    with open(_manifest_path(base, 1), "w") as fh:
+        json.dump(m1, fh)
+    delta = incremental_level0(
+        synthetic_pages(spark, n=4, seed=23).withColumn(
+            "page_id", F.col("page_id") + 8000
+        )
+    )
+    with pytest.raises(ValueError, match="level 1 .* prefix length 5.*prefix length 4"):
+        incremental_update(spark, base, delta, DEFAULT_CONFIG)
+
+    m0 = read_manifest(base, 0)
+    del m0["start_resolution"]
+    with open(_manifest_path(base, 0), "w") as fh:
+        json.dump(m0, fh)
+    m1["partition_prefix_len"] = None
+    with open(_manifest_path(base, 1), "w") as fh:
+        json.dump(m1, fh)
+    with pytest.raises(ValueError, match="records no start resolution"):
+        incremental_update(spark, base, delta, DEFAULT_CONFIG)
+
+
+def test_level_reads_run_at_most_one_job(spark, small_tree):
+    """Levels >= 1 are read through the fixed level schema: building the
+    DataFrame costs at most the partition listing (no schema-inference
+    job), and the rows are the level's, quadkey prefixes intact. The
+    listing is forced onto the cluster, as on a level with many
+    partitions, so a schema-inference job would show up as a second."""
+    from raptor_rag_spark.operators.tree import (
+        _level_path,
+        read_level,
+        read_level_pruned,
+        read_manifest,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    listing = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+    def jobs_to_build(group, make):
+        prev = spark.conf.get(listing)
+        spark.conf.set(listing, "1")
+        sc.setJobGroup(group, group)
+        try:
+            df = make()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            spark.conf.set(listing, prev)
+        return df, len(tracker.getJobIdsForGroup(group))
+
+    prefixes = sorted(read_manifest(small_tree, 1)["partitions"])[:2]
+    pruned, n_pruned = jobs_to_build(
+        "layout-read-pruned",
+        lambda: read_level_pruned(spark, small_tree, 1, prefixes),
+    )
+    full, n_full = jobs_to_build(
+        "layout-read-level", lambda: read_level(spark, small_tree, 1)
+    )
+    assert n_pruned <= 1 and n_full <= 1, (n_pruned, n_full)
+
+    on_disk = spark.read.parquet(_level_path(small_tree, 1)).drop("cell_pfx")
+    assert full.schema.simpleString() == on_disk.schema.simpleString()
+    cols = ["node_id", "cell_id", "text"]
+    assert sorted(map(tuple, full.select(*cols).collect())) == sorted(
+        map(tuple, on_disk.select(*cols).collect())
+    )
+    got = pruned.select("cell_id").collect()
+    assert len(got) == sum(read_manifest(small_tree, 1)["partitions"][p] for p in prefixes)
+    assert {r["cell_id"][:4] for r in got} == set(prefixes)

@@ -121,9 +121,7 @@ def test_incremental_update_matches_scratch(spark, leaves, tmp_path_factory):
     new = leaves.filter(F.col("node_id") % 5 == 0)
     build_tree(spark, old, base_inc, CFG, start_resolution=3, embed_dim=32)
     new_xy = reduce_2d(new, dim=32, seed=CFG.seed)
-    got = incremental_update(
-        spark, base_inc, new_xy, CFG, start_resolution=3, embed_dim=32
-    )
+    got = incremental_update(spark, base_inc, new_xy, CFG, embed_dim=32)
     want = build_tree(
         spark, leaves, base_all, CFG, start_resolution=3, embed_dim=32, resume=False
     )
@@ -175,7 +173,7 @@ def test_incremental_partial_partition_overwrite(spark, leaves, tmp_path_factory
     assert snapshot(1), "level 1 should be prefix-partitioned"
     before = snapshot(1)
     new_xy = reduce_2d(new, dim=32, seed=CFG.seed)
-    incremental_update(spark, base, new_xy, CFG, start_resolution=3, embed_dim=32)
+    incremental_update(spark, base, new_xy, CFG, embed_dim=32)
     after = snapshot(1)
     untouched = [p for p in before if after.get(p) == before[p]]
     changed = [p for p in after if after[p] != before.get(p)]
@@ -210,3 +208,27 @@ def test_cap_assign_start_res_beyond_max_resolution(spark):
     out = _assign_cells_with_cap(nodes, start_res=8, cfg=cfg).collect()
     assert len(out) == 8
     assert all(r["resolution"] == 8 and len(r["cell_id"]) == 9 for r in out)
+
+
+def test_cap_split_join_twin_matches_broadcast(spark, leaves, monkeypatch):
+    """The join twin of the cap-split pick (taken when the ladder's cell
+    universe passes the driver bound, e.g. max_resolution >= 10 at start
+    4) assigns every node the same (resolution, cell_id) as the
+    broadcast path, with a token cap low enough that cells split."""
+    from raptor_rag_spark.operators import tree
+    from raptor_rag_spark.operators.tile import reduce_2d
+
+    cfg = EngineConfig(embedding_dim=32, max_resolution=6, max_tokens_in_cluster=200)
+    nodes = reduce_2d(leaves, dim=32, seed=cfg.seed).localCheckpoint(eager=True)
+    cols = ["node_id", "resolution", "cell_id"]
+
+    def assigned():
+        out = tree._assign_cells_with_cap(nodes, 3, cfg).select(*cols)
+        return sorted(map(tuple, out.collect()))
+
+    broadcast = assigned()
+    monkeypatch.setattr(tree, "_MAX_SPLITTABLE_BROADCAST", 0)
+    joined = assigned()
+    assert joined == broadcast
+    assert len(broadcast) == nodes.count()
+    assert any(res > 3 for _, res, _ in broadcast), "the cap must split some cell"
