@@ -22,14 +22,16 @@ Two physical strategies over identical semantics:
    candidates retry with a wider ring (driver loop, geometrically rare).
 
 Distances: embeddings are unit-norm, so cosine distance = 1 - dot.
-The dot product is computed JVM-side (zip_with + aggregate in double
-precision) — no Python in the join hot path. Ordering ties break on
+Scoring runs as float64 BLAS (matmul / einsum) inside Arrow kernels,
+one call per batch. Ordering ties break on
 node_id: np.argsort's default quicksort is NOT stable, so the
 reference's tie order is undefined; the engine pins (dist, node_id)
 total order (SURVEY.md §2.5 W1, documented deviation).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -39,24 +41,12 @@ from raptor_rag_spark.operators.tile import (
     MAX_BROADCAST_RESOLUTION,
     cell_key_col,
     grid_index,
+    in_sorted,
     neighbor_cells,
+    np_cell_keys,
+    ring_probe_keys,
+    sorted_keys,
 )
-
-
-def dot_product(a: Column, b: Column) -> Column:
-    """double dot product of two array<float> columns, JVM-side."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def cosine_distance(a: Column, b: Column) -> Column:
-    """1 - cosine similarity, assuming unit-norm inputs (reference
-    stores normalized e5 vectors; FAISS IP == cosine there too,
-    FaissRetriever.py:181-185)."""
-    return F.lit(1.0) - dot_product(a, b)
 
 
 def _rank_and_take(
@@ -263,7 +253,6 @@ def brute_force_knn(
     node_id: str = "node_id",
     q_emb: str = "q_embedding",
     n_emb: str = "embedding",
-    broadcast_queries: bool = True,  # kept for API compat (pre-strategy)
     strategy: str = "auto",
     allowed: DataFrame | None = None,
 ) -> DataFrame:
@@ -547,39 +536,30 @@ def _score_candidates_quantized(
     )
 
 
-def tile_knn(
+def _ring_knn(
     queries: DataFrame,
     nodes: DataFrame,
-    node_tiles: DataFrame,
-    resolution: int,
-    k: int = DEFAULT_CONFIG.top_k,
-    ring: int = 1,
-    max_ring: int | None = None,
-    query_id: str = "query_id",
-    q_emb: str = "q_embedding",
-    scoring: str = "auto",
+    candidates: Callable[[DataFrame, int, bool], DataFrame],
+    k: int,
+    ring: int,
+    max_ring: int,
+    query_id: str,
+    q_emb: str,
+    scoring: str,
 ) -> DataFrame:
-    """Tile-pruned kNN: candidates via cell equi-join, exact re-rank.
+    """The ring-expansion loop of the tile kNN joins.
+    ``candidates(remaining, ring, broadcast_probe)`` returns the
+    (query_id, node_id) candidate pairs at one ring; each round scores
+    them exactly and ranks the top k.
 
-    ``scoring`` picks the exact-re-rank physical path: 'broadcast'
-    (driver-collected query matrix, small batches), 'join' (fully
-    distributed, unbounded batches), 'auto' (switch on query count —
-    resolved ONCE here, not per ring round).
-
-    ``queries`` must carry x, y (from tile.reduce_2d on the query
-    embedding). If ``max_ring`` > ring, queries with < k candidates are
-    retried at wider rings on a SHORT fixed schedule: ring -> 4*ring ->
-    max_ring (at most 3 passes; a long geometric ladder multiplies
-    whole-job latency for the rare straggler query, so we jump straight
-    to the fallback ring instead). Each round's result is
-    localCheckpoint'ed: the loop otherwise compounds lineage and
-    re-executes prior rounds inside later plans.
+    Queries with < k candidates are retried at wider rings on a SHORT
+    fixed schedule: ring -> 4*ring -> max_ring (at most 3 passes; a long
+    geometric ladder multiplies whole-job latency for the rare straggler
+    query, so we jump straight to the fallback ring instead). Each
+    round's result is localCheckpoint'ed: the loop otherwise compounds
+    lineage and re-executes prior rounds inside later plans.
     """
-    max_ring = max_ring if max_ring is not None else ring
-    grid_n = 1 << (resolution + 1)
-    max_ring = min(max_ring, grid_n)
     schedule = sorted({min(ring, max_ring), min(ring * 4, max_ring), max_ring})
-
     # pin the (small) query side once: every round broadcasts it, and
     # without this the query-embedding pipeline re-executes per round
     remaining = queries.localCheckpoint(eager=True) if len(schedule) > 1 else queries
@@ -590,10 +570,7 @@ def tile_knn(
         scoring = "broadcast" if n_remaining <= BROADCAST_MAX_QUERIES else "join"
     results: DataFrame | None = None
     for round_i, r in enumerate(schedule):
-        cand = tile_knn_candidates(
-            remaining, node_tiles, resolution, r, query_id,
-            broadcast_probe=(scoring == "broadcast"),
-        )
+        cand = candidates(remaining, r, scoring == "broadcast")
         scored = _score_candidates(
             cand.join(nodes.select("node_id", "embedding"), "node_id"),
             remaining,
@@ -626,6 +603,39 @@ def tile_knn(
     return results
 
 
+def tile_knn(
+    queries: DataFrame,
+    nodes: DataFrame,
+    node_tiles: DataFrame,
+    resolution: int,
+    k: int = DEFAULT_CONFIG.top_k,
+    ring: int = 1,
+    max_ring: int | None = None,
+    query_id: str = "query_id",
+    q_emb: str = "q_embedding",
+    scoring: str = "auto",
+) -> DataFrame:
+    """Tile-pruned kNN: candidates via cell equi-join, exact re-rank.
+
+    ``scoring`` picks the exact-re-rank physical path: 'broadcast'
+    (driver-collected query matrix, small batches), 'join' (fully
+    distributed, unbounded batches), 'auto' (switch on query count —
+    resolved ONCE here, not per ring round).
+
+    ``queries`` must carry x, y (from tile.reduce_2d on the query
+    embedding). If ``max_ring`` > ring, queries with < k candidates are
+    retried at wider rings (ring -> 4*ring -> max_ring, see _ring_knn).
+    """
+    max_ring = min(max_ring if max_ring is not None else ring, 1 << (resolution + 1))
+
+    def candidates(remaining: DataFrame, r: int, broadcast_probe: bool) -> DataFrame:
+        return tile_knn_candidates(
+            remaining, node_tiles, resolution, r, query_id, broadcast_probe=broadcast_probe
+        )
+
+    return _ring_knn(queries, nodes, candidates, k, ring, max_ring, query_id, q_emb, scoring)
+
+
 _FINE_RING_CAP = 4
 
 
@@ -645,12 +655,13 @@ def probe_cells(
     probe radius = ring * cell_width(qres). Per resolution r:
     ring_r = 1 for coarser r, ring at qres, min(ring * 2^(r-qres),
     _FINE_RING_CAP) for finer r (a dense pocket next to the query).
+    ``populated_keys`` is a key set or a sorted key array.
     """
     import numpy as np
     import pandas as pd
 
     spark = queries_xy.sparkSession
-    b_keys = spark.sparkContext.broadcast(populated_keys)
+    b_keys = spark.sparkContext.broadcast(sorted_keys(populated_keys))
     res_list = sorted(resolutions)
 
     def kernel(it):
@@ -661,58 +672,18 @@ def probe_cells(
             qid = pdf[query_id].to_numpy(dtype=np.int64)
             x = pdf["x"].to_numpy(dtype=np.float64)
             y = pdf["y"].to_numpy(dtype=np.float64)
-            n_q = len(qid)
-            # grid indices + morton per resolution
-            ix_r, iy_r, key_r = {}, {}, {}
-            for r in res_list:
-                n = 1 << (r + 1)
-                ix = np.clip(((x + 1.0) / 2.0 * n).astype(np.int64), 0, n - 1)
-                iy = np.clip(((y + 1.0) / 2.0 * n).astype(np.int64), 0, n - 1)
-                m = np.zeros(n_q, dtype=np.int64)
-                for i in range(r + 1):
-                    m += ((ix >> i) & 1) << (2 * i)
-                    m += ((iy >> i) & 1) << (2 * i + 1)
-                ix_r[r], iy_r[r], key_r[r] = ix, iy, (r << 32) + m
             # qres: finest populated containing cell, else coarsest res
-            qres = np.full(n_q, res_list[0], dtype=np.int64)
-            undecided = np.ones(n_q, dtype=bool)
-            for r in sorted(res_list, reverse=True):
-                hit = np.fromiter((int(k) in keys for k in key_r[r]), dtype=bool, count=n_q)
-                sel = undecided & hit
+            qres = np.full(len(qid), res_list[0], dtype=np.int64)
+            undecided = np.ones(len(qid), dtype=bool)
+            for r in reversed(res_list):
+                sel = undecided & in_sorted(keys, np_cell_keys(x, y, r)[2])
                 qres[sel] = r
                 undecided &= ~sel
-            out_q, out_k = [], []
-            for r in res_list:
-                n = 1 << (r + 1)
-                ring_r = np.where(
-                    qres > r, 1,
-                    np.where(qres == r, ring,
-                             np.minimum(ring << np.clip(r - qres, 0, 62), _FINE_RING_CAP)),
-                )
-                R = int(ring_r.max()) if n_q else 0
-                for dx in range(-R, R + 1):
-                    for dy in range(-R, R + 1):
-                        d = max(abs(dx), abs(dy))
-                        nx, ny = ix_r[r] + dx, iy_r[r] + dy
-                        mask = (d <= ring_r) & (nx >= 0) & (nx < n) & (ny >= 0) & (ny < n)
-                        if not mask.any():
-                            continue
-                        m = np.zeros(mask.sum(), dtype=np.int64)
-                        sx, sy = nx[mask], ny[mask]
-                        for i in range(r + 1):
-                            m += ((sx >> i) & 1) << (2 * i)
-                            m += ((sy >> i) & 1) << (2 * i + 1)
-                        out_q.append(qid[mask])
-                        out_k.append((r << 32) + m)
-            if out_q:
-                allq = np.concatenate(out_q)
-                allk = np.concatenate(out_k)
-                # only emit probes that hit populated cells: shrinks the
-                # join probe side for free (we hold the key set anyway)
-                hit = np.fromiter((int(k) in keys for k in allk), dtype=bool, count=len(allk))
-                yield pd.DataFrame({query_id: allq[hit], "cell_key": allk[hit]})
-            else:
-                yield pd.DataFrame({query_id: [], "cell_key": []})
+            q, cell = ring_probe_keys(qid, x, y, qres, res_list, ring, _FINE_RING_CAP)
+            # only emit probes that hit populated cells: shrinks the
+            # join probe side for free (we hold the key set anyway)
+            hit = in_sorted(keys, cell)
+            yield pd.DataFrame({query_id: q[hit], "cell_key": cell[hit]})
 
     return queries_xy.select(query_id, "x", "y").mapInPandas(
         kernel, f"{query_id} long, cell_key long"
@@ -771,42 +742,14 @@ def probe_cells_join(
         for pdf in it:
             if not len(pdf):
                 continue
-            qid = pdf[query_id].to_numpy(dtype=np.int64)
-            x = pdf["x"].to_numpy(dtype=np.float64)
-            y = pdf["y"].to_numpy(dtype=np.float64)
-            qr = pdf["qres"].to_numpy(dtype=np.int64)
-            n_q = len(qid)
-            out_q, out_k = [], []
-            for r in res_list:
-                n = 1 << (r + 1)
-                ix = np.clip(((x + 1.0) / 2.0 * n).astype(np.int64), 0, n - 1)
-                iy = np.clip(((y + 1.0) / 2.0 * n).astype(np.int64), 0, n - 1)
-                ring_r = np.where(
-                    qr > r, 1,
-                    np.where(qr == r, ring,
-                             np.minimum(ring << np.clip(r - qr, 0, 62), _FINE_RING_CAP)),
-                )
-                R = int(ring_r.max()) if n_q else 0
-                for dx in range(-R, R + 1):
-                    for dy in range(-R, R + 1):
-                        d = max(abs(dx), abs(dy))
-                        nx, ny = ix + dx, iy + dy
-                        mask = (d <= ring_r) & (nx >= 0) & (nx < n) & (ny >= 0) & (ny < n)
-                        if not mask.any():
-                            continue
-                        m = np.zeros(int(mask.sum()), dtype=np.int64)
-                        sx, sy = nx[mask], ny[mask]
-                        for i in range(r + 1):
-                            m += ((sx >> i) & 1) << (2 * i)
-                            m += ((sy >> i) & 1) << (2 * i + 1)
-                        out_q.append(qid[mask])
-                        out_k.append((r << 32) + m)
-            if out_q:
-                yield pd.DataFrame(
-                    {query_id: np.concatenate(out_q), "cell_key": np.concatenate(out_k)}
-                )
-            else:
-                yield pd.DataFrame({query_id: [], "cell_key": []})
+            qid, cell = ring_probe_keys(
+                pdf[query_id].to_numpy(dtype=np.int64),
+                pdf["x"].to_numpy(dtype=np.float64),
+                pdf["y"].to_numpy(dtype=np.float64),
+                pdf["qres"].to_numpy(dtype=np.int64),
+                res_list, ring, _FINE_RING_CAP,
+            )
+            yield pd.DataFrame({query_id: qid, "cell_key": cell})
 
     probes = q.mapInPandas(kernel, f"{query_id} long, cell_key long")
     # second scan: keep only probes that hit populated cells
@@ -825,8 +768,8 @@ def adaptive_candidates(
     """Candidate generation: vectorized probe-cell kernel + one long
     equi-join on the Morton cell_key. Each node lives in exactly one
     cell, so no dedup shuffle is needed. ``populated`` is either a
-    broadcastable key set (fast path, bounded cell counts) or the
-    distinct-cells DataFrame (join path, unbounded);
+    broadcastable key set or sorted key array (fast path, bounded cell
+    counts) or the distinct-cells DataFrame (join path, unbounded);
     ``broadcast_probe=False`` lets AQE plan a shuffle-hash join for
     huge query batches."""
     if isinstance(populated, DataFrame):
@@ -859,13 +802,14 @@ def tile_knn_adaptive(
 
     ``membership`` picks how probe cells are checked against populated
     cells: 'broadcast' collects the distinct cell keys into a driver
-    set (fast, bounded — fine while max resolution <= 12, ~10^7 cells);
-    'join' keeps them as a DataFrame and intersects via two broadcast
-    joins (unbounded, two extra scans of the distinct-cells table);
-    'auto' switches on the finest resolution present. ``scoring`` is
-    the query-side twin of the same bound: 'broadcast' collects the
-    query matrix to the driver, 'join' scores via a distributed
-    equi-join (no collect), 'auto' switches on query count."""
+    array (fast, bounded — fine while max resolution <= 12, ~10^7
+    cells); 'join' keeps them as a DataFrame and intersects via two
+    broadcast joins (unbounded, two extra scans of the distinct-cells
+    table, never a collect of the keys); 'auto' switches on the finest
+    resolution present. ``scoring`` is the query-side twin of the same
+    bound: 'broadcast' collects the query matrix to the driver, 'join'
+    scores via a distributed equi-join (no collect), 'auto' switches on
+    query count."""
     # the tile table is consumed at least twice per call (the populated
     # cell/resolution collect + one candidate join per ring round): if
     # it is a lazy plan with real compute behind it (e.g. the adaptive
@@ -877,81 +821,37 @@ def tile_knn_adaptive(
 
     if not plan_is_bare_scan(atiles):
         atiles = atiles.localCheckpoint(eager=False)
-    need_resolutions = resolutions is None
-    if membership == "auto" and need_resolutions:
+
+    def collect_keys():
+        return sorted_keys(
+            [int(r["cell_key"]) for r in atiles.select("cell_key").distinct().collect()]
+        )
+
+    keys = None
+    if resolutions is None and membership != "join":
         # the morton cell_key embeds its resolution (key >> 32), so ONE
-        # distinct-keys collect yields BOTH the populated set and the
-        # resolution ladder — previously two full passes over atiles
-        # (an expensive double-run when the tile table is a lazy plan)
-        keys = [
-            int(r["cell_key"])
-            for r in atiles.select("cell_key").distinct().collect()
-        ]
-        resolutions = sorted({k >> 32 for k in keys})
-        membership = (
-            "broadcast" if max(resolutions) <= MAX_BROADCAST_RESOLUTION else "join"
+        # distinct-keys collect yields BOTH the populated keys and the
+        # resolution ladder
+        keys = collect_keys()
+        resolutions = sorted(set((keys >> 32).tolist()))
+    elif resolutions is None:
+        resolutions = sorted(
+            r["resolution"] for r in atiles.select("resolution").distinct().collect()
         )
-        populated: set[int] | DataFrame = (
-            set(keys)
-            if membership == "broadcast"
-            else atiles.select("cell_key").distinct().localCheckpoint(eager=True)
-        )
+    if membership == "auto":
+        membership = "broadcast" if max(resolutions) <= MAX_BROADCAST_RESOLUTION else "join"
+    if membership == "join":
+        populated = atiles.select("cell_key").distinct().localCheckpoint(eager=True)
     else:
-        if need_resolutions:
-            resolutions = sorted(
-                r["resolution"] for r in atiles.select("resolution").distinct().collect()
-            )
-        if membership == "auto":
-            membership = (
-                "broadcast" if max(resolutions) <= MAX_BROADCAST_RESOLUTION else "join"
-            )
-        if membership == "join":
-            populated = (
-                atiles.select("cell_key").distinct().localCheckpoint(eager=True)
-            )
-        else:
-            populated = {
-                int(r["cell_key"])
-                for r in atiles.select("cell_key").distinct().collect()
-            }
-    schedule = sorted({min(ring, max_ring), min(ring * 4, max_ring), max_ring})
-    remaining = queries.localCheckpoint(eager=True) if len(schedule) > 1 else queries
-    n_remaining = remaining.count() if (scoring == "auto" or len(schedule) > 1) else None
-    if scoring == "auto":
-        scoring = "broadcast" if n_remaining <= BROADCAST_MAX_QUERIES else "join"
-    results: DataFrame | None = None
-    for round_i, r in enumerate(schedule):
-        cand = adaptive_candidates(
+        populated = collect_keys() if keys is None else keys
+
+    def candidates(remaining: DataFrame, r: int, broadcast_probe: bool) -> DataFrame:
+        return adaptive_candidates(
             remaining, atiles, populated, resolutions, r, query_id,
-            broadcast_probe=(scoring == "broadcast"),
+            broadcast_probe=broadcast_probe,
         )
-        scored = _score_candidates(
-            cand.join(nodes.select("node_id", "embedding"), "node_id"),
-            remaining,
-            query_id,
-            q_emb,
-            strategy=scoring,
-        )
-        ranked = _rank_and_take(scored, k, query_id)
-        if round_i == len(schedule) - 1:
-            results = ranked if results is None else results.unionByName(ranked)
-            break
-        ranked = ranked.localCheckpoint(eager=True)
-        counts = ranked.groupBy(query_id).agg(F.count("*").alias("_n"))
-        n_done = counts.filter(F.col("_n") >= k).count()
-        if n_done == n_remaining:
-            # every remaining query already has its k (the common case
-            # when the first ring suffices): skip the bookkeeping joins
-            results = ranked if results is None else results.unionByName(ranked)
-            break
-        done_ids = counts.filter(F.col("_n") >= k).select(query_id).localCheckpoint(eager=True)
-        done = ranked.join(F.broadcast(done_ids), query_id, "left_semi")
-        results = done if results is None else results.unionByName(done)
-        remaining = remaining.join(F.broadcast(done_ids), query_id, "left_anti").localCheckpoint(
-            eager=True
-        )
-        n_remaining -= n_done
-    return results
+
+    return _ring_knn(queries, nodes, candidates, k, ring, max_ring, query_id, q_emb, scoring)
 
 
 def token_budget_prefix(

@@ -409,8 +409,7 @@ def compact_level(
         manifest.setdefault("compactions", []).append(
             {k: report[k] for k in ("files_before", "files_after", "rows", "wall_sec")}
         )
-        with open(_manifest_path(base, layer), "w") as fh:
-            json.dump(manifest, fh, indent=1)
+        write_meta_atomic(_manifest_path(base, layer), manifest)
     return report
 
 
@@ -442,8 +441,7 @@ def compact_ann_nodes(
         meta.setdefault("compactions", []).append(
             {k: report[k] for k in ("files_before", "files_after", "rows", "wall_sec")}
         )
-        with open(meta_path, "w") as fh:
-            json.dump(meta, fh, indent=1)
+        write_meta_atomic(meta_path, meta)
     return report
 
 

@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 from raptor_rag_spark.operators.knn import (
     _rank_and_take,
     _score_candidates,
+    adaptive_candidates,
     brute_force_knn,
-    probe_cells,
     tile_knn,
 )
 from raptor_rag_spark.operators.tile import (
@@ -588,7 +588,7 @@ class TileAnnIndex:
         filter, fewer candidates survive per probe cell — raise
         ``ring`` to restore recall (the probe region, not the corpus
         tiling, is what bounds filtered recall)."""
-        from raptor_rag_spark.operators.knn import _resolve_strategy, probe_cells_join
+        from raptor_rag_spark.operators.knn import _resolve_strategy
 
         q = queries.localCheckpoint(eager=True)
         scoring = _resolve_strategy(scoring, q)
@@ -597,15 +597,9 @@ class TileAnnIndex:
             q_xy = reduce_2d(
                 q.withColumnRenamed("q_embedding", "embedding"), dim=self.dim, seed=seed
             ).select(F.col("query_id"), "x", "y")
-            if isinstance(populated, DataFrame):
-                pc = probe_cells_join(q_xy, populated, self.resolutions, ring)
-            else:
-                pc = probe_cells(q_xy, populated, self.resolutions, ring)
-            probe = F.broadcast(pc) if scoring == "broadcast" else pc
-            c = (
-                probe
-                .join(atiles.select("node_id", "cell_key"), "cell_key")
-                .select("query_id", "node_id")
+            c = adaptive_candidates(
+                q_xy, atiles, populated, self.resolutions, ring,
+                broadcast_probe=(scoring == "broadcast"),
             )
             cands = c if cands is None else cands.unionByName(c)
         cands = cands.dropDuplicates(["query_id", "node_id"])

@@ -314,24 +314,21 @@ def polygon_cell_cover(
                 inside = not inside
         return inside
 
-    full: set[int] = set()
-    boundary: set[int] = set()
+    from raptor_rag_spark.operators.tile import np_morton_keys
+
+    kind = np.zeros((n, n), dtype=np.int8)  # per (ix, iy): 1 boundary, 2 full
     for ix in range(n):
         x0 = -1.0 + ix * width
         for iy in range(n):
             y0 = -1.0 + iy * width
             x1, y1 = x0 + width, y0 + width
-            crossed = any(seg_rect_crosses(a, b, x0, y0, x1, y1) for a, b in edges)
-            key = 0
-            for i in range(resolution + 1):
-                key += ((ix >> i) & 1) << (2 * i)
-                key += ((iy >> i) & 1) << (2 * i + 1)
-            key += resolution << 32
-            if crossed:
-                boundary.add(key)
+            if any(seg_rect_crosses(a, b, x0, y0, x1, y1) for a, b in edges):
+                kind[ix, iy] = 1
             elif point_inside(x0 + width / 2, y0 + width / 2):
-                full.add(key)
-    return full, boundary
+                kind[ix, iy] = 2
+    ix, iy = np.indices((n, n))
+    keys = np_morton_keys(ix.ravel(), iy.ravel(), resolution)
+    return set(keys[kind.ravel() == 2].tolist()), set(keys[kind.ravel() == 1].tolist())
 
 
 def point_in_polygon_tiled(

@@ -141,6 +141,106 @@ def cell_key_col(x: Column, y: Column, resolution: int) -> Column:
     return morton_key(grid_index(x, resolution), grid_index(y, resolution), resolution)
 
 
+# ------------------------------------------- numpy twin of the cell keys
+# Arrow kernels encode cell keys here and nowhere else, so the key format
+# cannot drift from grid_index + morton_key above (pytest-asserted equal).
+
+
+def np_morton_keys(ix: np.ndarray, iy: np.ndarray, resolution: int) -> np.ndarray:
+    """int64 grid indices -> morton_key's ``r<<32 | interleave(ix, iy)``."""
+    m = np.zeros(len(ix), dtype=np.int64)
+    for i in range(resolution + 1):
+        m += ((ix >> i) & 1) << (2 * i)
+        m += ((iy >> i) & 1) << (2 * i + 1)
+    return (resolution << 32) + m
+
+
+def np_cell_keys(
+    x: np.ndarray, y: np.ndarray, resolution: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Coordinates -> (ix, iy, cell_key) at one resolution, clamped to
+    the grid like grid_index."""
+    n = 1 << (resolution + 1)
+    ix = np.clip(((x + 1.0) / 2.0 * n).astype(np.int64), 0, n - 1)
+    iy = np.clip(((y + 1.0) / 2.0 * n).astype(np.int64), 0, n - 1)
+    return ix, iy, np_morton_keys(ix, iy, resolution)
+
+
+def sorted_keys(keys) -> np.ndarray:
+    """A driver-side key set (or array) as the sorted unique int64
+    array :func:`in_sorted` searches — built once per call, before it is
+    broadcast."""
+    if not isinstance(keys, np.ndarray):
+        keys = np.fromiter(keys, dtype=np.int64, count=len(keys))
+    return np.unique(keys)
+
+
+def in_sorted(haystack: np.ndarray, keys: np.ndarray) -> np.ndarray:
+    """Membership of ``keys`` in a sorted int64 array: one binary search
+    per key. (np.isin would re-sort the haystack on every call, i.e. per
+    Arrow batch.)"""
+    if not len(haystack):
+        return np.zeros(len(keys), dtype=bool)
+    pos = np.minimum(np.searchsorted(haystack, keys), len(haystack) - 1)
+    return haystack[pos] == keys
+
+
+def pick_open_cells(
+    x: np.ndarray, y: np.ndarray, base_resolution: int, max_resolution: int,
+    closed: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per point, the coarsest resolution in [base, max) whose cell key
+    is not in the sorted ``closed`` array, else ``max_resolution``.
+    Returns (resolution int32, cell_key int64). The cap-split rule of
+    both the tree build (closed = splittable cells) and the adaptive
+    quadtree (closed = cells over the occupancy cap)."""
+    res = np.full(len(x), max_resolution, dtype=np.int32)
+    key = np.zeros(len(x), dtype=np.int64)
+    undecided = np.ones(len(x), dtype=bool)
+    for r in range(base_resolution, max_resolution):
+        k = np_cell_keys(x, y, r)[2]
+        sel = undecided & ~in_sorted(closed, k)
+        res[sel] = r
+        key[sel] = k[sel]
+        undecided &= ~sel
+        if not undecided.any():
+            return res, key
+    key[undecided] = np_cell_keys(x[undecided], y[undecided], max_resolution)[2]
+    return res, key
+
+
+def ring_probe_keys(
+    qid: np.ndarray, x: np.ndarray, y: np.ndarray, qres: np.ndarray,
+    resolutions: list[int], ring: int, fine_ring_cap: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Ring-probe cell keys of queries whose local density level is
+    ``qres``: per resolution r, every in-grid cell within Chebyshev
+    distance ring_r of the query's cell, where ring_r is 1 for r coarser
+    than qres, ``ring`` at qres and min(ring * 2^(r-qres),
+    ``fine_ring_cap``) finer. Returns (query ids, cell keys), one entry
+    per probe, unfiltered."""
+    out_q, out_k = [], []
+    for r in resolutions:
+        n = 1 << (r + 1)
+        ix, iy, _ = np_cell_keys(x, y, r)
+        ring_r = np.where(
+            qres > r, 1,
+            np.where(qres == r, ring,
+                     np.minimum(ring << np.clip(r - qres, 0, 62), fine_ring_cap)),
+        )
+        R = int(ring_r.max()) if len(qid) else 0
+        for dx in range(-R, R + 1):
+            for dy in range(-R, R + 1):
+                nx, ny = ix + dx, iy + dy
+                mask = (max(abs(dx), abs(dy)) <= ring_r) & (nx >= 0) & (nx < n) & (ny >= 0) & (ny < n)
+                if mask.any():
+                    out_q.append(qid[mask])
+                    out_k.append(np_morton_keys(nx[mask], ny[mask], r))
+    if not out_q:
+        return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
+    return np.concatenate(out_q), np.concatenate(out_k)
+
+
 def tile(df: DataFrame, resolution: int, x_col: str = "x", y_col: str = "y") -> DataFrame:
     """Adds ix, iy, cell_id (home cell) at one resolution."""
     ix = grid_index(F.col(x_col), resolution)
@@ -250,6 +350,12 @@ def cell_occupancy_map(
 MAX_BROADCAST_RESOLUTION = 12
 
 
+def _over_cap(cmap: dict[int, int], cap: int) -> np.ndarray:
+    """The occupancy map's over-cap cell keys, sorted: for every
+    populated key, occupancy <= cap holds exactly when it is absent."""
+    return sorted_keys([k for k, n in cmap.items() if n > cap])
+
+
 def chosen_cells_from_occupancy(
     cmap: dict[int, int], base_resolution: int, max_resolution: int,
     max_occupancy: int,
@@ -262,19 +368,14 @@ def chosen_cells_from_occupancy(
     max resolution the occ test drops. Replaces a distinct() collect
     over the assignment output wherever the occupancy map is already
     driver-resident (e.g. the TileAnnIndex build)."""
-    cap = max_occupancy
-    chosen: set[int] = set()
-    for key, n in cmap.items():
-        r = key >> 32
-        if r < max_resolution and n > cap:
-            continue
-        m = key & 0xFFFFFFFF
-        if all(
-            cmap.get((rp << 32) + (m >> (2 * (r - rp))), 0) > cap
-            for rp in range(base_resolution, r)
-        ):
-            chosen.add(key)
-    return chosen
+    closed = _over_cap(cmap, max_occupancy)
+    keys = sorted_keys(list(cmap))
+    res, m = keys >> 32, keys & 0xFFFFFFFF
+    chosen = (res >= max_resolution) | ~in_sorted(closed, keys)
+    for rp in range(base_resolution, max_resolution):
+        ancestor = (rp << 32) + (m >> (2 * np.maximum(res - rp, 0)))
+        chosen &= (res <= rp) | in_sorted(closed, ancestor)
+    return {int(k) for k in keys[chosen]}
 
 
 def adaptive_tile_assignments_join(
@@ -363,52 +464,24 @@ def adaptive_tile_assignments(
         )
     pts = df.select(id_col, "x", "y")
     cmap = occupancy_map or cell_occupancy_map(pts, base_resolution, max_resolution)
-    spark = df.sparkSession
-    b_cmap = spark.sparkContext.broadcast(cmap)
-    cap = max_occupancy
-    base_r, max_r = base_resolution, max_resolution
+    b_closed = df.sparkSession.sparkContext.broadcast(_over_cap(cmap, max_occupancy))
 
     # pass 2: vectorized per-point pick of the coarsest under-cap cell
-    import numpy as np
-    import pandas as pd
-
     def pick(it):
-        cm = b_cmap.value
-        get = cm.get
+        closed = b_closed.value
         for pdf in it:
             if not len(pdf):
                 continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            x = pdf["x"].to_numpy(dtype=np.float64)
-            y = pdf["y"].to_numpy(dtype=np.float64)
-            res_out = np.full(len(ids), max_r, dtype=np.int32)
-            key_out = np.zeros(len(ids), dtype=np.int64)
-            undecided = np.ones(len(ids), dtype=bool)
-            for r in range(base_r, max_r + 1):
-                n = 1 << (r + 1)
-                ix = np.clip(((x + 1.0) / 2.0 * n).astype(np.int64), 0, n - 1)
-                iy = np.clip(((y + 1.0) / 2.0 * n).astype(np.int64), 0, n - 1)
-                m = np.zeros(len(ids), dtype=np.int64)
-                for i in range(r + 1):
-                    m += ((ix >> i) & 1) << (2 * i)
-                    m += ((iy >> i) & 1) << (2 * i + 1)
-                key = (r << 32) + m
-                if r == max_r:
-                    sel = undecided
-                else:
-                    occ = np.fromiter((get(int(k), 0) for k in key), dtype=np.int64)
-                    sel = undecided & (occ <= cap)
-                res_out[sel] = r
-                key_out[sel] = key[sel]
-                undecided &= ~sel
-                if not undecided.any():
-                    break
+            res, key = pick_open_cells(
+                pdf["x"].to_numpy(dtype=np.float64),
+                pdf["y"].to_numpy(dtype=np.float64),
+                base_resolution, max_resolution, closed,
+            )
             yield pd.DataFrame(
-                {id_col: ids, "resolution": res_out, "cell_key": key_out}
+                {id_col: pdf[id_col].to_numpy(dtype=np.int64), "resolution": res, "cell_key": key}
             )
 
-    out = pts.mapInPandas(pick, f"{id_col} long, resolution int, cell_key long")
-    return out
+    return pts.mapInPandas(pick, f"{id_col} long, resolution int, cell_key long")
 
 
 def neighbor_cells(resolution: int, ring: int, ix_col: str = "ix", iy_col: str = "iy"):

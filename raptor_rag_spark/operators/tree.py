@@ -43,8 +43,10 @@ from raptor_rag_spark.operators.embed import embed_texts
 from raptor_rag_spark.operators.tile import (
     cell_id_col,
     cell_key_col,
+    pick_open_cells,
     quadkey,
     reduce_2d,
+    sorted_keys,
     tile,
 )
 from raptor_rag_spark.tokenizer import DEFAULT_TOKENIZER
@@ -231,14 +233,13 @@ def _assign_cells_with_cap(
     if not plan_is_bare_scan(nodes):
         nodes = nodes.localCheckpoint(eager=False)
     # ONE skinny aggregation (map-side combine) of the exploded ladder
-    # -> the splittable (res, cell) set, collected (bounded above).
-    # Morton long keys, no per-row strings in the shuffle.
+    # -> the splittable (res, cell) keys, collected (bounded above) as a
+    # sorted array. Morton long keys, no per-row strings in the shuffle.
     keys_arr = F.array(
         *[cell_key_col(F.col("x"), F.col("y"), r) for r in resolutions[:-1]]
     )
-    splittable = {
-        int(r["_k"])
-        for r in nodes.select(F.col("n_tokens"), F.explode(keys_arr).alias("_k"))
+    rows = (
+        nodes.select(F.col("n_tokens"), F.explode(keys_arr).alias("_k"))
         .groupBy("_k")
         .agg(F.sum("n_tokens").alias("_sum"), F.count("*").alias("_n"))
         .filter(
@@ -246,8 +247,9 @@ def _assign_cells_with_cap(
         )
         .select("_k")
         .collect()
-    }
-    if not splittable:
+    )
+    splittable = sorted_keys([int(r["_k"]) for r in rows])
+    if not len(splittable):
         # nothing over the cap: every node stays at start_res — pure
         # JVM tiling, zero Python and zero further shuffles (the common
         # case for upper tree levels, whose token mass shrinks fast)
@@ -255,8 +257,7 @@ def _assign_cells_with_cap(
     # map-side pick of each node's first non-splittable ancestor — no
     # join back, no per-node shuffle; the wide row never leaves the JVM
     # (the kernel sees only x, y)
-    spark = nodes.sparkSession
-    b_split = spark.sparkContext.broadcast(splittable)
+    b_split = nodes.sparkSession.sparkContext.broadcast(splittable)
     base_r, max_r = resolutions[0], resolutions[-1]
 
     import numpy as np
@@ -265,28 +266,11 @@ def _assign_cells_with_cap(
     def pick_res(it: "Iterator[tuple[pd.Series, pd.Series]]") -> "Iterator[pd.Series]":
         sp = b_split.value
         for xs, ys in it:
-            x = xs.to_numpy(dtype=np.float64)
-            y = ys.to_numpy(dtype=np.float64)
-            n_pts = len(x)
-            res_out = np.full(n_pts, max_r, dtype=np.int32)
-            undecided = np.ones(n_pts, dtype=bool)
-            for r in range(base_r, max_r):
-                n = 1 << (r + 1)
-                ix = np.clip(((x + 1.0) / 2.0 * n).astype(np.int64), 0, n - 1)
-                iy = np.clip(((y + 1.0) / 2.0 * n).astype(np.int64), 0, n - 1)
-                m = np.zeros(n_pts, dtype=np.int64)
-                for i in range(r + 1):
-                    m += ((ix >> i) & 1) << (2 * i)
-                    m += ((iy >> i) & 1) << (2 * i + 1)
-                key = (r << 32) + m
-                sel = undecided & np.fromiter(
-                    (int(k) not in sp for k in key), dtype=bool, count=n_pts
-                )
-                res_out[sel] = r
-                undecided &= ~sel
-                if not undecided.any():
-                    break
-            yield pd.Series(res_out)
+            res, _ = pick_open_cells(
+                xs.to_numpy(dtype=np.float64), ys.to_numpy(dtype=np.float64),
+                base_r, max_r, sp,
+            )
+            yield pd.Series(res)
 
     out = nodes.withColumn("resolution", pick_res(F.col("x"), F.col("y")))
     cell = F.coalesce(
@@ -511,8 +495,9 @@ def write_level(
     }
     if start_resolution is not None:
         manifest["start_resolution"] = int(start_resolution)
-    with open(_manifest_path(base, layer), "w") as f:
-        json.dump(manifest, f, indent=1)
+    from raptor_rag_spark.operators.maintenance import write_meta_atomic
+
+    write_meta_atomic(_manifest_path(base, layer), manifest)
     return manifest
 
 
@@ -589,8 +574,9 @@ def update_manifest_delta(
             "written_at_epoch": int(time.time()),
         }
     )
-    with open(_manifest_path(base, layer), "w") as f:
-        json.dump(manifest, f, indent=1)
+    from raptor_rag_spark.operators.maintenance import write_meta_atomic
+
+    write_meta_atomic(_manifest_path(base, layer), manifest)
     return manifest
 
 

@@ -50,10 +50,9 @@ class SnapshotTable:
             return json.load(fh)
 
     def _store(self, meta: dict) -> None:
-        tmp = self._meta_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh, indent=1)
-        os.replace(tmp, self._meta_path)  # atomic commit, Iceberg-style
+        from raptor_rag_spark.operators.maintenance import write_meta_atomic
+
+        write_meta_atomic(self._meta_path, meta)  # atomic commit, Iceberg-style
 
     def exists(self) -> bool:
         return os.path.exists(self._meta_path)

@@ -163,11 +163,11 @@ def append_level(
     MUST pass a stable content-derived ``append_id``
     (incremental_update derives one from the delta's node_ids AND
     content columns via functions.staging.content_append_id)."""
-    import json as _json
     import time as _time
     import uuid as _uuid
 
     from raptor_rag_spark.functions.staging import stage_parquet_append
+    from raptor_rag_spark.operators.maintenance import write_meta_atomic
     from raptor_rag_spark.operators.tree import (
         _level_path,
         _manifest_path,
@@ -196,8 +196,7 @@ def append_level(
             "wall_sec": round(_time.time() - t0, 3),
         }
     )
-    with open(_manifest_path(base, layer), "w") as fh:
-        _json.dump(manifest, fh, indent=1)
+    write_meta_atomic(_manifest_path(base, layer), manifest)
     return manifest
 
 

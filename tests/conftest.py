@@ -93,3 +93,20 @@ def spark():
 
     s = get_spark("tests", cores=8, shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(group, fn)`` -> (fn(), number of Spark jobs fn ran),
+    counted on a job group through the status tracker."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

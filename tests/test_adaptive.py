@@ -619,3 +619,19 @@ def test_ann_index_save_crash_between_table_swaps(spark, points, tmp_path):
     loaded = TileAnnIndex.load(spark, p)  # rolls nodes back
     assert loaded.nodes.count() == committed_count
     assert not os.path.exists(nodes_dir + ".compact-old")
+
+
+def test_adaptive_knn_job_count_pinned(points, atiles, count_jobs):
+    """One tile_knn_adaptive call (auto membership, auto scoring)
+    evaluated under a job group."""
+    q = points.orderBy("node_id").limit(32).select(
+        F.col("node_id").alias("query_id"), F.col("embedding").alias("q_embedding"), "x", "y"
+    ).localCheckpoint(eager=True)
+    rows, n_jobs = count_jobs(
+        "pin-adaptive-knn",
+        lambda: tile_knn_adaptive(
+            q, points.select("node_id", "embedding"), atiles, k=10, ring=1, max_ring=8
+        ).collect(),
+    )
+    assert len(rows) == 32 * 10
+    assert n_jobs <= 14, n_jobs

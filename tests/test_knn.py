@@ -275,3 +275,28 @@ def test_null_and_ragged_embeddings_fail_loudly(spark, strategy):
         brute_force_knn(q, bad_null, k=2, strategy=strategy).collect()
     with pytest.raises(Exception, match="ragged|expected"):
         brute_force_knn(q, bad_ragged, k=2, strategy=strategy).collect()
+
+
+def test_tile_knn_multi_round_job_count_pinned(data, count_jobs):
+    """A tile_knn call whose first ring leaves queries short of k, so the
+    ring loop runs past its first round; evaluated under a job group."""
+    nodes, queries, _, _ = data
+    res = 3
+    # pinned inputs: the count covers the call, not the fixtures' compute
+    nodes.count()
+    tiles = tile_assignments(reduce_2d(nodes, dim=DIM), "node_id", [res]).localCheckpoint(
+        eager=True
+    )
+    queries_xy = (
+        reduce_2d(queries.withColumnRenamed("q_embedding", "embedding"), dim=DIM)
+        .withColumnRenamed("embedding", "q_embedding")
+        .localCheckpoint(eager=True)
+    )
+    rows, n_jobs = count_jobs(
+        "pin-tile-knn",
+        lambda: tile_knn(
+            queries_xy, nodes, tiles, resolution=res, k=K, ring=1, max_ring=1 << (res + 1)
+        ).collect(),
+    )
+    assert len(rows) == N_QUERIES * K
+    assert n_jobs <= 13, n_jobs

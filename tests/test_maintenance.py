@@ -22,6 +22,7 @@ from raptor_rag_spark.operators.tree import (
     _manifest_path,
     build_tree,
     read_manifest,
+    write_level,
 )
 from raptor_rag_spark.streaming.incremental import append_level, incremental_level0
 
@@ -340,3 +341,36 @@ def test_recover_save_windows(tmp_path):
     mkdir(f, "legacy")  # no token file
     shutil.rmtree(f + ".compact-old", ignore_errors=True)
     assert recover_save([f], None) == {}
+
+
+def test_append_level_torn_manifest_write_keeps_committed_manifest(
+    spark, tmp_path, monkeypatch
+):
+    """A crash in the middle of the manifest dump (a partial write, then
+    an error) must leave the level-0 manifest parseable and unchanged:
+    its appends ledger is what makes the retried append a no-op. The
+    retry then lands the batch exactly once."""
+    base = str(tmp_path / "tree")
+    write_level(_delta(spark, 31, 0), base, 0, {"input": "t"}, start_resolution=3)
+    with open(_manifest_path(base, 0)) as fh:
+        committed = fh.read()
+    delta = _delta(spark, 40, 9000)
+    real_dump = json.dump
+
+    def torn_dump(obj, fh, **kw):
+        fh.write(json.dumps(obj, **kw)[:40])
+        raise OSError("disk full mid-dump")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="mid-dump"):
+        append_level(delta, base, 0, {"input": "t"}, append_id="torn1")
+    monkeypatch.setattr(json, "dump", real_dump)
+
+    with open(_manifest_path(base, 0)) as fh:
+        after = fh.read()
+    assert after == committed
+    assert json.loads(after) == json.loads(committed)
+
+    m = append_level(delta, base, 0, {"input": "t"}, append_id="torn1")
+    assert m["rows"] == json.loads(committed)["rows"] + delta.count()
+    assert spark.read.parquet(_level_path(base, 0)).count() == m["rows"]

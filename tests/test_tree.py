@@ -232,3 +232,19 @@ def test_cap_split_join_twin_matches_broadcast(spark, leaves, monkeypatch):
     assert joined == broadcast
     assert len(broadcast) == nodes.count()
     assert any(res > 3 for _, res, _ in broadcast), "the cap must split some cell"
+
+
+def test_cap_split_job_count_pinned(spark, leaves, count_jobs):
+    """One cap-split pick with cells over the cap, evaluated: the
+    splittable-set collect plus the output collect, and no more."""
+    from raptor_rag_spark.operators import tree
+    from raptor_rag_spark.operators.tile import reduce_2d
+
+    cfg = EngineConfig(embedding_dim=32, max_resolution=6, max_tokens_in_cluster=200)
+    nodes = reduce_2d(leaves, dim=32, seed=cfg.seed).localCheckpoint(eager=True)
+    rows, n_jobs = count_jobs(
+        "pin-cap-split",
+        lambda: tree._assign_cells_with_cap(nodes, 3, cfg).collect(),
+    )
+    assert any(r["resolution"] > 3 for r in rows)
+    assert n_jobs <= 3, n_jobs
