@@ -28,9 +28,11 @@ from raptor_rag_spark.config import DEFAULT_CONFIG, EngineConfig
 from raptor_rag_spark.functions.localtab import local_df
 from raptor_rag_spark.operators.chunk import chunk_documents
 from raptor_rag_spark.operators.embed import embed_texts
+from raptor_rag_spark.operators.knn import BROADCAST_MAX_QUERIES
 from raptor_rag_spark.operators.tree import build_tree, last_complete_level
 from raptor_rag_spark.operators.retrieve import (
     embed_queries,
+    embed_query_texts,
     retrieve_collapsed,
     retrieve_traversal,
 )
@@ -74,14 +76,14 @@ class RaptorEngine:
             .withColumnRenamed("chunk_id", "node_id")
             .select("node_id", "text", "n_tokens", "embedding")
         )
-        self.nodes = build_tree(
+        self._set_nodes(build_tree(
             self.spark,
             leaves,
             self.base,
             self.cfg,
             start_resolution=self.start_resolution,
             embed_dim=self.dim,
-        ).cache()
+        ))
 
     def append_documents(
         self,
@@ -135,19 +137,19 @@ class RaptorEngine:
         )
         leaves = reduce_2d(leaves, dim=self.dim, seed=self.cfg.seed)
         if deferred:
-            self.nodes = incremental_update_planned(
+            self._set_nodes(incremental_update_planned(
                 self.spark, self.base, leaves, self.cfg, embed_dim=self.dim,
                 min_pending_per_cell=min_pending_per_cell,
                 min_pending_frac=min_pending_frac,
-            ).cache()
+            ))
         else:
             # on a tree that has ever deferred, incremental_update
             # itself settles the pending ledger (routes through the
             # planner with force_flush) — the invariant lives in the
             # streaming module, not at call sites
-            self.nodes = incremental_update(
+            self._set_nodes(incremental_update(
                 self.spark, self.base, leaves, self.cfg, embed_dim=self.dim
-            ).cache()
+            ))
 
     def flush_appends(self) -> None:
         """Force-flush every deferred append (see append_documents
@@ -159,13 +161,13 @@ class RaptorEngine:
 
         if self.nodes is None:
             raise ValueError("no tree built")
-        self.nodes = incremental_update_planned(
+        self._set_nodes(incremental_update_planned(
             self.spark, self.base, None, self.cfg, embed_dim=self.dim,
             force_flush=True,
-        ).cache()
+        ))
 
     def _load(self) -> None:
-        self.nodes = build_tree(
+        self._set_nodes(build_tree(
             self.spark,
             self.spark.createDataFrame([], "node_id long, text string, n_tokens int, embedding array<float>"),
             self.base,
@@ -173,17 +175,27 @@ class RaptorEngine:
             start_resolution=self.start_resolution,
             embed_dim=self.dim,
             resume=True,
-        ).cache()
+        ))
+
+    def _set_nodes(self, nodes: DataFrame) -> None:
+        """Cache ``nodes`` as the engine's node table. Every build,
+        append, flush and reload makes a new table: the one it replaces
+        is unpersisted (non-blocking) instead of staying cached."""
+        if self.nodes is not None:
+            self.nodes.unpersist(blocking=False)
+        self.nodes = nodes.cache()
 
     # -------------------------------------------------------- retrieve
 
     def _query_df(self, questions) -> DataFrame:
+        """Embedded questions. A str/list is embedded on the driver
+        (embed_query_texts: the same functions, no Python task); a
+        DataFrame stays distributed."""
         if isinstance(questions, str):
             questions = [questions]
         if isinstance(questions, list):
-            rows = [(i, q) for i, q in enumerate(questions)]
-            questions = local_df(self.spark, rows, "query_id long, text string")
-        return embed_queries(questions, dim=self.dim)
+            return embed_query_texts(self.spark, questions, self.dim, seed=self.cfg.seed)
+        return embed_queries(questions, dim=self.dim, seed=self.cfg.seed)
 
     def retrieve(
         self,
@@ -209,9 +221,14 @@ class RaptorEngine:
         as_dataframe = isinstance(questions, DataFrame)
         q = self._query_df(questions)
         if collapse_tree:
+            # a str/list batch has a known size: no strategy count() job
+            small = not as_dataframe and (
+                isinstance(questions, str) or len(questions) <= BROADCAST_MAX_QUERIES
+            )
+            scoring = "broadcast" if small else "auto"
             sel, ctx = retrieve_collapsed(
                 q, self.nodes, self.cfg, method=method, k=top_k,
-                max_tokens=max_tokens, allowed=allowed,
+                max_tokens=max_tokens, scoring=scoring, allowed=allowed,
             )
         else:
             if allowed is not None:

@@ -27,3 +27,21 @@ def plan_is_bare_scan(df: DataFrame) -> bool:
     cheap_leaf = ("LogicalRDD" in plan) or ("Relation" in plan)
     python_eval = any(node in plan for node in _PYTHON_EVAL_NODES)
     return cheap_leaf and not python_eval and len(lines) <= 3
+
+
+def coalesce_kernel_input(df: DataFrame) -> DataFrame:
+    """Narrow-``coalesce`` the input of a map-only Arrow kernel to
+    ``max(defaultParallelism, ceil(sizeInBytes / maxPartitionBytes))``
+    partitions, sized from the optimized plan's statistics (no job).
+
+    Every Python task pays a fixed worker round-trip, and a union of
+    small file scans (one per tree level) splits into several
+    partitions per scan, so a small kernel input otherwise runs in
+    several waves of near-empty tasks. Large inputs keep ~maxPartitionBytes
+    splits; a narrow coalesce never raises the partition count."""
+    spark = df.sparkSession
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    n = max(spark.sparkContext.defaultParallelism, -(-size // split))
+    # an unknown size estimates as Long.MaxValue: the coalesce is then a no-op
+    return df.coalesce(min(n, 2**31 - 1))

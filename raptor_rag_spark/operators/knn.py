@@ -27,6 +27,17 @@ one call per batch. Ordering ties break on
 node_id: np.argsort's default quicksort is NOT stable, so the
 reference's tie order is undefined; the engine pins (dist, node_id)
 total order (SURVEY.md §2.5 W1, documented deviation).
+
+The brute-force kernels cut each batch to a partial top-k that is
+exact under ties (``partial_topk``: every row at or below the batch's
+k-th distance survives), so the (dist, node_id) result does not depend
+on partitioning or Arrow batch composition, even with duplicated
+vectors. The broadcast kernel's node input is coalesced to at most one
+partition per core unless it is large
+(``planutil.coalesce_kernel_input``): each Python task has a fixed cost,
+and the collapsed node table is a union of small per-level scans. Its
+``carry`` columns ride through the kernel beside each hit, so a caller
+that needs node text for a context joins nothing back.
 """
 
 from __future__ import annotations
@@ -54,6 +65,23 @@ def _rank_and_take(
 ) -> DataFrame:
     w = Window.partitionBy(query_id).orderBy(F.col("dist").asc(), F.col(node_id).asc())
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def partial_topk(dists, k: int):
+    """(row, col) indices of a scoring kernel's partial top-k: every
+    entry of ``dists`` (queries x batch) not beyond its row's k-th
+    smallest distance. Keeping all rows tied at the k-th distance makes
+    the union of partials contain the global (dist, node_id) top-k
+    whatever the batch composition; an argpartition cut can drop the
+    smaller node_id of a tie. ``~(d > kth)`` also keeps NaN entries, and
+    a whole row when its k-th value is NaN (Spark ranks NaN last)."""
+    import numpy as np
+
+    take = min(k, dists.shape[1])
+    if take == 0:
+        return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
+    kth = np.partition(dists, take - 1, axis=1)[:, take - 1 : take]
+    return np.nonzero(~(dists > kth))
 
 
 # above this many queries the driver-collected broadcast matrix stops
@@ -173,7 +201,8 @@ def _brute_force_knn_join(
     into NB blocks; each query row is replicated to every node block and
     vice versa; one ``applyInPandas`` group per (qb, nb) block pair does
     a BLAS matmul and emits its per-query partial top-k. The global
-    window then sees at most NB*k rows per query — the union of partial
+    window then sees about NB*k rows per query (more only under ties at
+    the k-th distance, see partial_topk) — the union of partial
     top-ks always contains the global top-k. Shuffle volume is
     |Q|*NB + |N|*QB rows; block counts default from the cluster's
     parallelism so every core gets a block pair."""
@@ -225,10 +254,7 @@ def _brute_force_knn_join(
         q_mat = vec_matrix(pdf["_emb"][q_sel], q_emb, "_brute_force_knn_join")
         n_mat = vec_matrix(pdf["_emb"][n_sel], n_emb, "_brute_force_knn_join", expect_dim=q_mat.shape[1] if q_mat.size else None)
         dists = 1.0 - q_mat @ n_mat.T  # (nq, nn)
-        take = min(k, dists.shape[1])
-        part = np.argpartition(dists, take - 1, axis=1)[:, :take]
-        rows_q = np.repeat(np.arange(len(q_ids)), take)
-        cols = part.reshape(-1)
+        rows_q, cols = partial_topk(dists, k)
         return pd.DataFrame(
             {
                 query_id: q_ids[rows_q],
@@ -255,8 +281,9 @@ def brute_force_knn(
     n_emb: str = "embedding",
     strategy: str = "auto",
     allowed: DataFrame | None = None,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(query_id, node_id, dist, rank<=k). Exact at any batch size.
+    """(query_id, node_id, dist, rank<=k, *carry). Exact at any batch size.
 
     ``allowed``: optional one-column (node_id) allowlist for FILTERED
     kNN — rows of ``nodes`` outside it never reach the scoring kernel
@@ -265,62 +292,82 @@ def brute_force_knn(
     ``allowed=metadata.filter(pred).select("node_id")`` so the
     predicate is pushed down on the metadata table's own scan.
 
+    ``carry``: node columns returned beside each hit (e.g. the text and
+    token count a retrieval context needs), so the caller needs no join
+    back to ``nodes``. The broadcast kernel emits them with its partial
+    top-k; the join strategy joins them back after its top-k.
+
     strategy='broadcast' (small query batches): the query matrix is
     broadcast as numpy; each Arrow batch of NODES does one BLAS matmul
     against it and emits the per-batch top-k per query (map-side
-    partial top-k => the shuffle into the final window carries at most
+    partial top-k => the shuffle into the final window carries about
     parts*k rows per query, not |nodes|). The big side streams with
-    zero shuffle. A Catalyst zip_with/aggregate cosine is interpreted
-    (~0.27 ms/row measured) — 1000x slower than this path at scale.
+    zero shuffle, coalesced to at most one partition per core unless it
+    is large (planutil.coalesce_kernel_input). A Catalyst
+    zip_with/aggregate cosine is interpreted (~0.27 ms/row measured) —
+    1000x slower than this path at scale.
 
     strategy='join' (large query batches): two-sided blocked matmul,
     no driver collect of either side (_brute_force_knn_join). 'auto'
-    switches at BROADCAST_MAX_QUERIES.
+    switches at BROADCAST_MAX_QUERIES (one count() of the queries;
+    a caller that knows the batch size passes the strategy instead).
     """
     import numpy as np
     import pandas as pd
 
+    from pyspark.sql import types as T
+
+    from raptor_rag_spark.functions.planutil import coalesce_kernel_input
+
+    out_cols = [query_id, node_id, "dist", "rank", *carry]
     if allowed is not None:
         nodes = semi_filter_allowed(nodes, allowed, node_id)
     if _resolve_strategy(strategy, queries) == "join":
-        return _brute_force_knn_join(
+        ranked = _brute_force_knn_join(
             queries, nodes, k, query_id, node_id, q_emb, n_emb
         )
+        if carry:
+            ranked = ranked.join(nodes.select(node_id, *carry), node_id)
+        return ranked.select(*out_cols)
+    node_side = nodes.select(node_id, n_emb, *carry)
+    schema = T.StructType(
+        [
+            T.StructField(query_id, T.LongType()),
+            T.StructField(node_id, T.LongType()),
+            T.StructField("dist", T.DoubleType()),
+            *(node_side.schema[c] for c in carry),
+        ]
+    )
     q_ids, q_mat = _collect_query_matrix(queries, query_id, q_emb)
     spark = nodes.sparkSession
     if len(q_ids) == 0:
-        return spark.createDataFrame(
-            [], f"{query_id} long, {node_id} long, dist double, rank int"
-        )
+        ranked_schema = T.StructType([*schema.fields, T.StructField("rank", T.IntegerType())])
+        return spark.createDataFrame([], ranked_schema).select(*out_cols)
     b_ids = spark.sparkContext.broadcast(q_ids)
     b_mat = spark.sparkContext.broadcast(q_mat)
 
     def score(it):
         ids, mat = b_ids.value, b_mat.value
-        nq = len(ids)
         for pdf in it:
             if not len(pdf):
                 continue
             n_ids = pdf[node_id].to_numpy(dtype=np.int64)
             n_mat = vec_matrix(pdf[n_emb], n_emb, "brute_force_knn", expect_dim=mat.shape[1])
             dists = 1.0 - mat @ n_mat.T  # (nq, batch)
-            take = min(k, dists.shape[1])
-            # per-batch partial top-k (argpartition then exact sort later)
-            part = np.argpartition(dists, take - 1, axis=1)[:, :take]
-            rows_q = np.repeat(np.arange(nq), take)
-            cols = part.reshape(-1)
-            yield pd.DataFrame(
+            rows_q, cols = partial_topk(dists, k)
+            out = pd.DataFrame(
                 {
                     query_id: ids[rows_q],
                     node_id: n_ids[cols],
                     "dist": dists[rows_q, cols],
                 }
             )
+            for c in carry:
+                out[c] = pdf[c].to_numpy()[cols]
+            yield out
 
-    scored = nodes.select(node_id, n_emb).mapInPandas(
-        score, f"{query_id} long, {node_id} long, dist double"
-    )
-    return _rank_and_take(scored, k, query_id, node_id)
+    scored = coalesce_kernel_input(node_side).mapInPandas(score, schema)
+    return _rank_and_take(scored, k, query_id, node_id).select(*out_cols)
 
 
 def tile_knn_candidates(

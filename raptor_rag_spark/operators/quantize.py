@@ -95,9 +95,10 @@ def _brute_force_knn_join_quantized(
     the int8 vectors to float and forfeit the 4x shuffle win). Each
     (qb, nb) kernel dequantizes per block — one int8 materialization of
     block size, never of the corpus — and emits its per-query partial
-    top-k; the global window sees at most NB*k rows per query."""
+    top-k; the global window sees about NB*k rows per query."""
     from raptor_rag_spark.operators.knn import (
         _rank_and_take,
+        partial_topk,
         require_integral_id,
         vec_matrix,
     )
@@ -136,10 +137,7 @@ def _brute_force_knn_join_quantized(
         n_int = vec_matrix(npdf["q_vec"], "q_vec", "_brute_force_knn_join_quantized", expect_dim=q_mat.shape[1] if q_mat.size else None)
         scales = npdf["q_scale"].to_numpy(dtype=np.float64)
         dists = 1.0 - (q_mat @ n_int.T) * scales[None, :]
-        take = min(k, dists.shape[1])
-        part = np.argpartition(dists, take - 1, axis=1)[:, :take]
-        rows_q = np.repeat(np.arange(len(q_ids)), take)
-        cols = part.reshape(-1)
+        rows_q, cols = partial_topk(dists, k)
         return pd.DataFrame(
             {
                 query_id: q_ids[rows_q],
@@ -176,7 +174,12 @@ def brute_force_knn_quantized(
     (_brute_force_knn_join_quantized). 'auto' switches at
     knn.BROADCAST_MAX_QUERIES — so the 100 TB regime this module exists
     for (its docstring) never collects the query side."""
-    from raptor_rag_spark.operators.knn import _resolve_strategy, vec_matrix
+    from raptor_rag_spark.operators.knn import (
+        _rank_and_take,
+        _resolve_strategy,
+        partial_topk,
+        vec_matrix,
+    )
 
     if _resolve_strategy(strategy, queries) == "join":
         return _brute_force_knn_join_quantized(
@@ -191,7 +194,6 @@ def brute_force_knn_quantized(
 
     def score(it):
         ids, mat = b_ids.value, b_mat.value
-        nq = len(ids)
         for pdf_b in it:
             if not len(pdf_b):
                 continue
@@ -200,10 +202,7 @@ def brute_force_knn_quantized(
             scales = pdf_b["q_scale"].to_numpy(dtype=np.float64)
             # dequantized dot: (Q @ Nq^T) * scale_n  (queries stay float)
             dists = 1.0 - (mat @ n_mat.T) * scales[None, :]
-            take = min(k, dists.shape[1])
-            part = np.argpartition(dists, take - 1, axis=1)[:, :take]
-            rows_q = np.repeat(np.arange(nq), take)
-            cols = part.reshape(-1)
+            rows_q, cols = partial_topk(dists, k)
             yield pd.DataFrame(
                 {
                     query_id: ids[rows_q],
@@ -215,6 +214,4 @@ def brute_force_knn_quantized(
     scored = nodes_q.select(node_id, "q_vec", "q_scale").mapInPandas(
         score, f"{query_id} long, {node_id} long, dist double"
     )
-    from raptor_rag_spark.operators.knn import _rank_and_take
-
     return _rank_and_take(scored, k, query_id, node_id)

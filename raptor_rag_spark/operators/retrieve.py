@@ -18,11 +18,12 @@ side).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from raptor_rag_spark.config import DEFAULT_CONFIG, EngineConfig
-from raptor_rag_spark.operators.embed import embed_texts
+from raptor_rag_spark.functions.localtab import local_df
+from raptor_rag_spark.operators.embed import embed_texts, hash_embed_batch
 from raptor_rag_spark.operators.knn import (
     assemble_context,
     brute_force_knn,
@@ -30,13 +31,39 @@ from raptor_rag_spark.operators.knn import (
     tile_knn,
     token_budget_prefix,
 )
-from raptor_rag_spark.operators.tile import reduce_2d, tile_assignments
+from raptor_rag_spark.operators.tile import projection_matrix, reduce_2d, tile_assignments
 
 
-def embed_queries(queries: DataFrame, dim: int, text_col: str = "text") -> DataFrame:
+def embed_queries(
+    queries: DataFrame, dim: int, text_col: str = "text", seed: int = DEFAULT_CONFIG.seed
+) -> DataFrame:
+    """Adds q_embedding and the x, y projection. ``seed`` must be the
+    tree's ``cfg.seed``: the tiled path bins queries in the same 2-D
+    space as the node tiles."""
     q = embed_texts(queries, text_col=text_col, dim=dim)
-    q = reduce_2d(q, dim=dim)
+    q = reduce_2d(q, dim=dim, seed=seed)
     return q.withColumnRenamed("embedding", "q_embedding")
+
+
+def embed_query_texts(
+    spark: SparkSession, texts: list[str], dim: int, seed: int = DEFAULT_CONFIG.seed
+) -> DataFrame:
+    """Driver-side twin of :func:`embed_queries` for a short list of
+    question strings: (query_id = list position, text, q_embedding, x,
+    y) as a local table, with no Python task or job. It runs the same
+    pure functions as the Spark path (``hash_embed_batch``, then the
+    float64 ``reduce_2d`` matmul): q_embedding is bit-identical, and so
+    are x, y for a list that the Spark path scores as one Arrow batch
+    (BLAS rounding may move the last bit with the batch shape)."""
+    import numpy as np
+    import pandas as pd
+
+    emb = hash_embed_batch(pd.Series(texts, dtype=object), dim)
+    xy = np.asarray(emb, dtype=np.float64) @ projection_matrix(dim, seed).T
+    rows = [(i, t, e, x, y) for i, (t, e, (x, y)) in enumerate(zip(texts, emb, xy))]
+    return local_df(
+        spark, rows, "query_id long, text string, q_embedding array<float>, x double, y double"
+    )
 
 
 def retrieve_collapsed(
@@ -69,16 +96,18 @@ def retrieve_collapsed(
         from raptor_rag_spark.operators.knn import semi_filter_allowed
 
         nodes = semi_filter_allowed(nodes, allowed)
+    context_cols = ("text", "n_tokens", "layer")
     if method == "brute":
-        ranked = brute_force_knn(queries, nodes, k=k, strategy=scoring)
+        # the scoring kernel carries the context columns: no join back
+        ranked = brute_force_knn(queries, nodes, k=k, strategy=scoring, carry=context_cols)
     else:
         tiles = tile_assignments(nodes, "node_id", [resolution], cfg.soft_eps)
         grid_n = 1 << (resolution + 1)
         ranked = tile_knn(
             queries, nodes, tiles, resolution=resolution, k=k, ring=1,
             max_ring=grid_n, scoring=scoring,
-        )
-    sel = ranked.join(nodes.select("node_id", "text", "n_tokens", "layer"), "node_id")
+        ).join(nodes.select("node_id", *context_cols), "node_id")
+    sel = ranked.select("node_id", "query_id", "dist", "rank", *context_cols)
     kept = token_budget_prefix(sel, max_tokens=max_tokens)
     ctx = assemble_context(kept)
     return kept, ctx
@@ -122,8 +151,6 @@ def retrieve_traversal(
     q_ids, q_mat = _collect_query_matrix(queries, "query_id", "q_embedding")
     b_index = spark.sparkContext.broadcast({int(qid): i for i, qid in enumerate(q_ids)})
     b_mat = spark.sparkContext.broadcast(q_mat)
-    from raptor_rag_spark.functions.localtab import local_df
-
     ids_df = local_df(spark, [(int(qid),) for qid in q_ids], "query_id long")
 
     # per-layer candidate sets: start = all top-layer nodes for every query

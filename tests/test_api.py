@@ -367,3 +367,90 @@ def test_eager_append_after_deferred_settles_ledger(spark, tmp_path):
     assert sorted(map(tuple, eng.nodes.select(*cols).collect())) == sorted(
         map(tuple, eager.nodes.select(*cols).collect())
     )
+
+
+def test_single_string_collapsed_retrieve_runs_one_python_wave(spark, built, count_jobs):
+    """One single-string collapsed brute retrieve: the question is
+    embedded on the driver, the broadcast strategy needs no count(), the
+    context columns ride through the scoring kernel, and the kernel
+    input is coalesced to at most one partition per core."""
+    _, eng = built
+    eng.nodes.count()  # the cached node table is the call's input, not its work
+    sc = spark.sparkContext
+    (ctx, _), n_jobs = count_jobs(
+        "pin-collapsed-retrieve",
+        lambda: eng.retrieve("berber dukkani", top_k=3, return_layer_information=True),
+    )
+    assert list(ctx) == [0] and ctx[0].endswith("\n\n")
+    assert n_jobs <= 4, n_jobs
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(s).numTasks
+        for j in tracker.getJobIdsForGroup("pin-collapsed-retrieve")
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    # every stage, the Python scoring stage included
+    assert max(tasks) <= sc.defaultParallelism, tasks
+
+
+@pytest.fixture(scope="module")
+def seeded(spark, tmp_path_factory):
+    """A small tree built with a non-default projection seed."""
+    from raptor_rag_spark.datagen import synthetic_pages
+
+    cfg = EngineConfig(embedding_dim=32, min_level_nodes=4, seed=7)
+    eng = RaptorEngine(
+        spark, str(tmp_path_factory.mktemp("seed7_tree")), cfg, embed_dim=32, start_resolution=3
+    )
+    docs = synthetic_pages(spark, n=10, seed=5).select(F.col("page_id").alias("doc_id"), "text")
+    eng.add_documents(docs)
+    return eng
+
+
+def test_query_projection_uses_engine_seed(spark, seeded):
+    """Queries are projected with cfg.seed like every node, so the tiled
+    path bins them in the same 2-D space as the node tiles: a question
+    that is a stored chunk's text finds that chunk at rank 1 through
+    the tiled path exactly as through brute force."""
+    import numpy as np
+
+    from raptor_rag_spark.operators.tile import projection_matrix
+
+    eng = seeded
+    proj = projection_matrix(32, 7)
+    texts = [r["text"] for r in eng.nodes.filter("layer = 0").orderBy("node_id").limit(3).collect()]
+    qdf = spark.createDataFrame(list(enumerate(texts)), "query_id long, text string")
+    for q in (eng._query_df(texts), eng._query_df(qdf)):
+        rows = q.orderBy("query_id").collect()
+        emb = np.asarray([r["q_embedding"] for r in rows], dtype=np.float64)
+        xy = np.asarray([(r["x"], r["y"]) for r in rows])
+        # a projection seed other than cfg.seed is off by far more than rounding
+        assert np.allclose(xy, emb @ proj.T, rtol=0, atol=1e-12)
+    tiled = eng.retrieve(texts, top_k=1, method="tiled")
+    brute = eng.retrieve(texts, top_k=1, method="brute")
+    assert tiled == brute and len(brute) == len(texts)
+
+
+def test_append_unpersists_replaced_node_table(spark, tmp_path):
+    """The node table an append replaces is unpersisted, not left
+    cached beside the new one."""
+    from pyspark import StorageLevel
+
+    def docs(lo, hi):
+        return spark.createDataFrame(
+            [(i, f"alpha beta doc {i} " + "word " * (4 + i % 5)) for i in range(lo, hi)],
+            "doc_id long, text string",
+        )
+
+    cfg = EngineConfig(embedding_dim=32, min_level_nodes=4)
+    eng = RaptorEngine(spark, str(tmp_path / "t"), cfg, embed_dim=32, start_resolution=3)
+    eng.add_documents(docs(0, 3))  # <= min_level_nodes leaves: a one-level tree
+    before = eng.nodes
+    before.count()
+    assert before.storageLevel != StorageLevel.NONE
+    eng.append_documents(docs(3, 10))
+    # the grown tree reads a second level: a different plan, so a
+    # second cache entry unless the replaced one is unpersisted
+    assert eng.nodes.agg(F.max("layer")).first()[0] >= 1
+    assert before.storageLevel == StorageLevel.NONE
+    assert eng.nodes.storageLevel != StorageLevel.NONE

@@ -300,3 +300,89 @@ def test_tile_knn_multi_round_job_count_pinned(data, count_jobs):
     )
     assert len(rows) == N_QUERIES * K
     assert n_jobs <= 13, n_jobs
+
+
+@pytest.fixture(scope="module")
+def tied(spark):
+    """Nodes in groups of identical vectors (entries in multiples of
+    1/4, so every dot product is exact whatever the summation order),
+    node ids shuffled against row order: many exact ties sit at the
+    k-th distance of every query."""
+    rng = np.random.RandomState(7)
+    protos = rng.randint(-4, 5, size=(12, 8)) / 4.0
+    nv = np.repeat(protos, 20, axis=0)
+    ids = rng.permutation(10_000)[: len(nv)]
+    qv = rng.randint(-4, 5, size=(6, 8)) / 4.0
+    nodes = spark.createDataFrame(
+        [(int(i), [float(x) for x in v]) for i, v in zip(ids, nv)],
+        "node_id long, embedding array<float>",
+    )
+    queries = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(qv)],
+        "query_id long, q_embedding array<float>",
+    ).cache()
+    d = 1.0 - qv @ nv.T
+    oracle = {
+        qi: [(int(ids[j]), float(d[qi, j])) for j in np.lexsort((ids, d[qi]))[:K]]
+        for qi in range(len(qv))
+    }
+    return nodes, queries, oracle
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "join"])
+@pytest.mark.parametrize(
+    "layout",
+    [lambda df: df.repartition(1), lambda df: df.repartition(7), lambda df: df.coalesce(2)],
+    ids=["repartition1", "repartition7", "coalesce2"],
+)
+def test_brute_force_exact_under_ties_and_any_partitioning(tied, strategy, layout):
+    """The (dist, node_id) order holds under exact-duplicate vectors
+    whatever the partitioning: a partial top-k must keep every row tied
+    at its k-th distance, or the smaller node_id of a tie can be lost."""
+    nodes, queries, oracle = tied
+    got = _rows_by_query(
+        brute_force_knn(queries, layout(nodes), k=K, strategy=strategy).collect()
+    )
+    assert got == {
+        qi: [(rank, n, dist) for rank, (n, dist) in enumerate(rows, start=1)]
+        for qi, rows in oracle.items()
+    }
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "join"])
+def test_brute_force_carries_node_columns(data, strategy):
+    """``carry`` returns node columns beside each hit and leaves the kNN
+    columns as they are without it."""
+    nodes, queries, nv32, qv32 = data
+    nodes = nodes.withColumn("label", F.concat(F.lit("n"), F.col("node_id").cast("string")))
+    nodes = nodes.withColumn("n_tokens", (F.col("node_id") % 7).cast("int"))
+    carried = brute_force_knn(
+        queries, nodes, k=K, strategy=strategy, carry=("label", "n_tokens")
+    )
+    assert carried.columns == ["query_id", "node_id", "dist", "rank", "label", "n_tokens"]
+    assert carried.schema["n_tokens"].dataType.simpleString() == "int"
+    rows = carried.collect()
+    assert all(r["label"] == f"n{r['node_id']}" and r["n_tokens"] == r["node_id"] % 7 for r in rows)
+    oracle = numpy_topk(nv32, qv32, K)
+    assert {
+        qi: [n for _, n, _ in v] for qi, v in _rows_by_query(rows).items()
+    } == {qi: [j for j, _ in v] for qi, v in oracle.items()}
+
+
+def test_coalesce_kernel_input_sizes_from_plan_stats(spark):
+    """At most max(defaultParallelism, ceil(bytes / maxPartitionBytes))
+    partitions, never more than the input has."""
+    from raptor_rag_spark.functions.planutil import coalesce_kernel_input
+
+    par = spark.sparkContext.defaultParallelism
+    few = spark.range(0, 100, numPartitions=2)
+    assert coalesce_kernel_input(few).rdd.getNumPartitions() == 2
+    many = spark.range(0, 100_000, numPartitions=4 * par)  # 800 KB estimated
+    assert coalesce_kernel_input(many).rdd.getNumPartitions() == par
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(800_000 // (2 * par) + 1))
+    try:
+        assert coalesce_kernel_input(many).rdd.getNumPartitions() == 2 * par
+    finally:
+        spark.conf.set(key, old)
