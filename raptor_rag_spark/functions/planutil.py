@@ -29,6 +29,17 @@ def plan_is_bare_scan(df: DataFrame) -> bool:
     return cheap_leaf and not python_eval and len(lines) <= 3
 
 
+def plan_splits(df: DataFrame) -> int:
+    """``ceil(sizeInBytes / maxPartitionBytes)``, at least 1: the number
+    of ~maxPartitionBytes splits ``df`` fills, sized from the optimized
+    plan's statistics (no job). An unknown size estimates as
+    Long.MaxValue and returns the largest partition count."""
+    spark = df.sparkSession
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return min(max(1, -(-size // split)), 2**31 - 1)
+
+
 def coalesce_kernel_input(df: DataFrame) -> DataFrame:
     """Narrow-``coalesce`` the input of a map-only Arrow kernel to
     ``max(defaultParallelism, ceil(sizeInBytes / maxPartitionBytes))``
@@ -38,10 +49,6 @@ def coalesce_kernel_input(df: DataFrame) -> DataFrame:
     small file scans (one per tree level) splits into several
     partitions per scan, so a small kernel input otherwise runs in
     several waves of near-empty tasks. Large inputs keep ~maxPartitionBytes
-    splits; a narrow coalesce never raises the partition count."""
-    spark = df.sparkSession
-    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    n = max(spark.sparkContext.defaultParallelism, -(-size // split))
-    # an unknown size estimates as Long.MaxValue: the coalesce is then a no-op
-    return df.coalesce(min(n, 2**31 - 1))
+    splits; a narrow coalesce never raises the partition count (with an
+    unknown size it is a no-op)."""
+    return df.coalesce(max(df.sparkSession.sparkContext.defaultParallelism, plan_splits(df)))

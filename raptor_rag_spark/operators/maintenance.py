@@ -30,8 +30,14 @@ functions/staging.py:
 
 The level wrapper preserves the manifest's append ledger (retried
 appends must still no-op after their rows were compacted) and rewrites
-the per-partition counts; the ANN wrapper leaves meta.json's ledger
+the per-file counts; the ANN wrapper leaves meta.json's ledger
 untouched and records compaction stats.
+
+Whole-dir replacement with metadata as the commit point is the token'd
+save protocol below (``swap_live_dir(keep_old=True)`` +
+``write_save_token`` + ``recover_save``): persisted indexes save through
+it, and so does every tree level (tree.write_level — a build writes a
+level, an incremental flush rewrites each level >= 1 whole).
 """
 
 from __future__ import annotations
@@ -43,7 +49,6 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 # ~one comfortable in-memory parquet read per task; at 128 MiB this
 # matches spark.sql.files.maxPartitionBytes so a compacted file maps
@@ -364,26 +369,26 @@ def compact_level(
     target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
 ) -> dict:
     """Compact one tree-level checkpoint (the level-0 leaf store is the
-    append-accumulating one). Scrubs uncommitted append leftovers,
+    append-accumulating one; a level >= 1 holds at most one file per
+    write task of its last rewrite). Recovers the tree's crash windows
+    first (tree.recover_levels — a bare heal would discard a pending
+    rewrite's rollback dir), scrubs uncommitted append leftovers,
     verifies storage rows == manifest rows, rewrites sorted by cell_id
     (levels >=1; tile-range locality) or node_id (level 0), and updates
     the manifest IN PLACE — preserving the append ledger, since retried
     appends must keep no-opping against it after their rows moved into
-    compacted files.
-
-    Prefix-partitioned levels (cell_pfx dirs) are skipped: dynamic
-    partition overwrite already replaces whole partition dirs, so files
-    never accumulate there."""
+    compacted files."""
     from raptor_rag_spark.operators.tree import (
         _level_path,
         _manifest_path,
         read_manifest,
+        recover_levels,
+        storage_partition_counts,
     )
 
+    recover_levels(spark, base)
     manifest = read_manifest(base, layer)
     path = _level_path(base, layer)
-    if manifest.get("partition_prefix_len"):
-        return {"compacted": False, "reason": "prefix-partitioned level"}
     committed = {a["id"] for a in manifest.get("appends", [])}
     scrubbed = scrub_orphan_appends(path, "inflight", committed)
     report = compact_parquet_dir(
@@ -395,17 +400,10 @@ def compact_level(
     )
     report["scrubbed_orphan_appends"] = scrubbed
     if report["compacted"]:
-        # partition-id-keyed counts refer to the pre-compaction files;
-        # rebuild them from the new layout. Everything else — rows,
-        # lineage, and above all the appends ledger — carries over.
-        per_part = (
-            spark.read.parquet(path)
-            .groupBy(F.spark_partition_id().alias("_p"))
-            .agg(F.count("*").alias("n"))
-            .collect()
-        )
-        manifest["partitions"] = {str(r["_p"]): int(r["n"]) for r in per_part}
-        manifest["partitions_by"] = "partition_id"
+        # per-file counts refer to the pre-compaction files; re-read
+        # them from the new footers. Everything else — rows, lineage,
+        # and above all the appends ledger — carries over.
+        manifest["partitions"] = storage_partition_counts(path)
         manifest.setdefault("compactions", []).append(
             {k: report[k] for k in ("files_before", "files_after", "rows", "wall_sec")}
         )

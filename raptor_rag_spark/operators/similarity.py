@@ -162,8 +162,7 @@ class TileAnnIndex:
         bounded by the base grid size) — the base cell is the closed
         recompute unit of incremental maintenance, so
         :meth:`append_persisted` can replace ONLY affected partition
-        directories (dynamic partition overwrite), exactly like the
-        tree's prefix-partitioned level checkpoints.
+        directories (dynamic partition overwrite).
 
         Safe over a LIVE path (re-save after in-memory append()s), and
         crash-atomic ACROSS tables: a loaded index's nodes/xy/atiles
@@ -407,10 +406,8 @@ class TileAnnIndex:
         read (partition pruning on ``_bk``) and replaced (dynamic
         partition overwrite); untouched partition files are never read
         or written (pytest: byte-identical). New node rows append as
-        immutable files. This mirrors the tree's prefix-partitioned
-        level checkpoints (streaming/incremental.py), so a 10^12-node
-        persisted index absorbs a batch at O(affected-cells) I/O
-        instead of a full rewrite.
+        immutable files, so a 10^12-node persisted index absorbs a
+        batch at O(affected-cells) I/O instead of a full rewrite.
 
         Requires a ``save(partition_by_base=True)`` layout (the
         default). The in-memory views are re-pointed at the updated

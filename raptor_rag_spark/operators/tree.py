@@ -31,6 +31,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from collections.abc import Callable, Iterator
 
 import pandas as pd
@@ -38,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from raptor_rag_spark.config import DEFAULT_CONFIG, EngineConfig
+from raptor_rag_spark.operators import maintenance
 from raptor_rag_spark.operators.chunk import split_text
 from raptor_rag_spark.operators.embed import embed_texts
 from raptor_rag_spark.operators.tile import (
@@ -444,175 +446,112 @@ def write_level(
     df: DataFrame,
     base: str,
     layer: int,
-    lineage: dict,
-    partition_prefix_len: int | None = None,
+    lineage: dict | Callable[[int], dict],
     start_resolution: int | None = None,
 ) -> dict:
-    """Atomic level checkpoint: parquet + manifest with per-partition
-    row counts, lineage and timings. The manifest is written AFTER the
-    parquet commit — its presence marks the level complete.
+    """Atomic level checkpoint, the same for every layer: the rows go to
+    a ``nodes.parquet.compacting`` sibling stamped with a fresh save
+    token, which replaces the live dir whole (the replaced dir is kept
+    as rollback material), and the manifest — per-file row counts from
+    the parquet footers, lineage, timings and the token — is committed
+    LAST. Its presence marks the level complete; until it names the new
+    token, :func:`recover_levels` rolls the swap back (the token'd save
+    protocol of operators/maintenance.py).
 
-    ``partition_prefix_len``: physically partition the level by the
-    first N quadkey digits of cell_id (``cell_pfx=...`` dirs). N =
-    level_resolution+1 makes each start-resolution cell its own
-    partition — exactly the closed recompute unit of incremental
-    maintenance, so an append overwrites ONLY affected partitions
-    (dynamic partition overwrite) instead of rewriting the level.
-    Per-partition counts come from the parquet footers (see
-    storage_partition_counts; no data re-scan) and are keyed by
-    cell_pfx on such levels, so incremental maintenance can later
-    update them ARITHMETICALLY (update_manifest_delta).
-
+    ``lineage`` is a dict, or a function of the written row count that
+    returns one (a rewrite records how many of its rows it recomputed).
     ``start_resolution`` (build_tree passes it at level 0) is recorded
     in the manifest; see :func:`tree_start_resolution`."""
     t0 = time.time()
     path = _level_path(base, layer)
-    if partition_prefix_len and "cell_id" in df.columns:
-        (
-            df.withColumn(
-                "cell_pfx",
-                F.coalesce(
-                    F.substring("cell_id", 1, partition_prefix_len), F.lit("_")
-                ),
-            )
-            .write.mode("overwrite")
-            .partitionBy("cell_pfx")
-            .parquet(path)
-        )
-    else:
-        partition_prefix_len = None
-        df.write.mode("overwrite").parquet(path)
-    per_part = storage_partition_counts(path, bool(partition_prefix_len))
+    token = uuid.uuid4().hex
+    df.write.mode("overwrite").parquet(path + maintenance._SWAP_NEW)
+    maintenance.write_save_token(path + maintenance._SWAP_NEW, token)
+    maintenance.swap_live_dir(path, keep_old=True)
+    per_part = storage_partition_counts(path)
+    rows = int(sum(per_part.values()))
     manifest = {
         "layer": layer,
-        "rows": int(sum(per_part.values())),
-        "partitions": {k: int(v) for k, v in per_part.items()},
-        "partitions_by": "cell_pfx" if partition_prefix_len else "partition_id",
-        "partition_prefix_len": partition_prefix_len,
-        "lineage": lineage,
+        "rows": rows,
+        "partitions": per_part,
+        "lineage": lineage(rows) if callable(lineage) else lineage,
         "wall_sec": round(time.time() - t0, 3),
         "written_at_epoch": int(time.time()),
+        "save_token": token,
     }
     if start_resolution is not None:
         manifest["start_resolution"] = int(start_resolution)
-    from raptor_rag_spark.operators.maintenance import write_meta_atomic
-
-    write_meta_atomic(_manifest_path(base, layer), manifest)
+    maintenance.write_meta_atomic(_manifest_path(base, layer), manifest)
+    maintenance.recover_save([path], token)  # drop the rollback dir
+    # the renames bypass Spark's writer: drop its cached listing
+    df.sparkSession.catalog.refreshByPath(path)
     return manifest
 
 
-def storage_partition_counts(path: str, by_cell_pfx: bool) -> dict[str, int]:
-    """Per-partition row counts straight from the parquet FOOTERS of a
+def recover_levels(spark: SparkSession, base: str) -> None:
+    """Bring every committed level to the state its manifest names
+    (maintenance.recover_save against the manifest's save token): a
+    rewrite that crashed after its swap but before its manifest commit
+    is rolled back, and a commit whose cleanup crashed is finished. Tree
+    writers run this on entry, before anything reads a level. A level
+    whose manifest carries no token was never rewritten through the
+    swap, so a token'd live dir there is uncommitted too."""
+    layer = 0
+    while os.path.exists(_manifest_path(base, layer)):
+        path = _level_path(base, layer)
+        token = read_manifest(base, layer).get("save_token", "")
+        if maintenance.recover_save([path], token):
+            spark.catalog.refreshByPath(path)
+        layer += 1
+
+
+def storage_partition_counts(path: str) -> dict[str, int]:
+    """Per-file row counts straight from the parquet FOOTERS of a
     just-written level — a driver-side metadata walk, no Spark job.
-    The previous formulation re-read the whole level through a Spark
-    count (full scan + scheduling); the footer walk reads O(files)
-    metadata pages, which is strictly cheaper at every scale (the scan
-    had to list the same files before reading any data). Keys: the
-    ``cell_pfx=`` dir value for prefix-partitioned levels (what
-    update_manifest_delta needs), else the write-task index parsed
-    from the part file name. Zero-row files are skipped, matching the
-    old groupBy (which emitted no row for an empty partition)."""
+    Keys are the write-task index parsed from the part file name.
+    Zero-row files are skipped."""
     import pyarrow.parquet as pq
 
     counts: dict[str, int] = {}
-    if by_cell_pfx:
-        for entry in sorted(os.listdir(path)):
-            if not entry.startswith("cell_pfx="):
-                continue
-            n = 0
-            d = os.path.join(path, entry)
-            for fn in sorted(os.listdir(d)):
-                if fn.startswith("part-") and not fn.endswith(".crc"):
-                    n += pq.ParquetFile(os.path.join(d, fn)).metadata.num_rows
-            if n:
-                counts[entry.split("=", 1)[1]] = n
-    else:
-        for fn in sorted(os.listdir(path)):
-            if not fn.startswith("part-") or fn.endswith(".crc"):
-                continue
-            n = pq.ParquetFile(os.path.join(path, fn)).metadata.num_rows
-            if n:
-                # part-00042-<uuid>... -> write task 42
-                try:
-                    key = str(int(fn.split("-")[1]))
-                except (IndexError, ValueError):
-                    key = fn
-                counts[key] = counts.get(key, 0) + n
+    for fn in sorted(os.listdir(path)):
+        if not fn.startswith("part-") or fn.endswith(".crc"):
+            continue
+        n = pq.ParquetFile(os.path.join(path, fn)).metadata.num_rows
+        if n:
+            # part-00042-<uuid>... -> write task 42
+            try:
+                key = str(int(fn.split("-")[1]))
+            except (IndexError, ValueError):
+                key = fn
+            counts[key] = counts.get(key, 0) + n
     return counts
 
 
-def update_manifest_delta(
-    base: str,
-    layer: int,
-    replaced_counts: dict[str, int] | list[str],
-    recomputed_counts: dict[str, int],
-    lineage: dict,
-    t0: float | None = None,
-) -> dict:
-    """Arithmetic manifest update after a dynamic-partition-overwrite:
-    drop the affected cell_pfx entries, insert the recomputed counts,
-    re-derive the row total — NO storage scan (the 100 TB path: an
-    append's manifest cost is O(affected partitions), not O(level)).
-    Requires a manifest with partitions keyed by cell_pfx."""
-    t0 = time.time() if t0 is None else t0
-    manifest = read_manifest(base, layer)
-    if manifest.get("partitions_by") != "cell_pfx":
-        raise ValueError(
-            f"level {layer} manifest partitions keyed by "
-            f"{manifest.get('partitions_by')!r}, need 'cell_pfx'"
-        )
-    parts = dict(manifest["partitions"])
-    for pfx in replaced_counts:
-        parts.pop(pfx, None)
-    parts.update({k: int(v) for k, v in recomputed_counts.items()})
-    manifest.update(
-        {
-            "rows": int(sum(parts.values())),
-            "partitions": parts,
-            "lineage": lineage,
-            "wall_sec": round(time.time() - t0, 3),
-            "written_at_epoch": int(time.time()),
-        }
-    )
-    from raptor_rag_spark.operators.maintenance import write_meta_atomic
-
-    write_meta_atomic(_manifest_path(base, layer), manifest)
-    return manifest
-
-
-# levels >= 1 on disk: NODES_SCHEMA plus the physical partition column,
-# read as a STRING — default partition-type inference parses the
-# quadkey prefix '01230' as the integer 1230 (the round-5 manifest drift)
+# levels >= 1 written before the flat layout are partitioned into
+# ``cell_pfx=`` dirs: the column is read as a STRING (default partition-
+# type inference parses the quadkey prefix '01230' as the integer 1230)
+# and dropped, so such a tree reads like any other until its first
+# rewrite replaces the dir
 _LEVEL_READ_SCHEMA = NODES_SCHEMA + ", cell_pfx string"
 
 
 def read_level(spark: SparkSession, base: str, layer: int) -> DataFrame:
-    """Level checkpoint reader, without the physical partition column.
-    Levels >= 1 are read through the fixed NODES_SCHEMA: no schema-
-    inference job, only the file listing. Level 0 keeps inference — its
-    leaf columns come from the caller."""
+    """Level checkpoint reader. Levels >= 1 are read through the fixed
+    NODES_SCHEMA: no schema-inference job, only the file listing. Level
+    0 keeps inference — its leaf columns come from the caller."""
     path = _level_path(base, layer)
     if layer == 0:
         return spark.read.parquet(path)
     return spark.read.schema(_LEVEL_READ_SCHEMA).parquet(path).drop("cell_pfx")
 
 
-def read_level_pruned(
-    spark: SparkSession, base: str, layer: int, prefixes: list[str]
-) -> DataFrame:
-    """Partition-pruned read of a level >= 1: only the ``cell_pfx=``
-    directories equal to one of ``prefixes`` are read — the O(affected)
-    I/O path of incremental maintenance. The predicate is on the
-    partition column only, so Catalyst evaluates it against directory
-    values during listing (PartitionFilters in the scan — no data files
-    outside the affected dirs are opened). Returns the level WITHOUT
-    cell_pfx, like read_level."""
-    return (
-        spark.read.schema(_LEVEL_READ_SCHEMA)
-        .parquet(_level_path(base, layer))
-        .filter(F.col("cell_pfx").isin(list(prefixes)))
-        .drop("cell_pfx")
-    )
+def read_collapsed(spark: SparkSession, base: str) -> DataFrame:
+    """The collapsed-tree node table: the union of every complete level
+    (node_id, layer, cell_id, text, children, n_tokens, embedding, x, y)."""
+    out = read_level(spark, base, 0)
+    for layer in range(1, last_complete_level(base) + 1):
+        out = out.unionByName(read_level(spark, base, layer))
+    return out
 
 
 def read_manifest(base: str, layer: int) -> dict:
@@ -630,20 +569,12 @@ def last_complete_level(base: str) -> int:
 
 def tree_start_resolution(base: str) -> int | None:
     """The start resolution the tree under ``base`` was built with —
-    level L >= 1 groups at resolution start - (L-1) and is partitioned
-    by cell prefixes one digit longer. build_tree records it in the
-    level-0 manifest; a tree written before that is read off level 1's
-    partition key. None when neither exists."""
+    level L >= 1 groups at resolution start - (L-1). build_tree records
+    it in the level-0 manifest; None when that records none."""
     if not os.path.exists(_manifest_path(base, 0)):
         return None
     recorded = read_manifest(base, 0).get("start_resolution")
-    if recorded is not None:
-        return int(recorded)
-    if os.path.exists(_manifest_path(base, 1)):
-        pfx_len = read_manifest(base, 1).get("partition_prefix_len")
-        if pfx_len:
-            return int(pfx_len) - 1
-    return None
+    return None if recorded is None else int(recorded)
 
 
 def build_tree(
@@ -669,12 +600,13 @@ def build_tree(
     """
     dim = embed_dim or cfg.embedding_dim
     os.makedirs(checkpoint_base, exist_ok=True)
+    recover_levels(spark, checkpoint_base)
 
     done = last_complete_level(checkpoint_base) if resume else -1
     if done >= 0:
-        # growing a tree at another resolution would break the layout
-        # incremental maintenance relies on (one partition per recompute
-        # unit) — refuse instead
+        # growing a tree at another resolution would break the cell
+        # nesting incremental maintenance relies on (each parent cell
+        # inside one start-resolution cell) — refuse instead
         recorded = tree_start_resolution(checkpoint_base)
         if recorded is not None and recorded != start_resolution:
             raise ValueError(
@@ -721,7 +653,6 @@ def build_tree(
             checkpoint_base,
             layer + 1,
             {"input": _level_path(checkpoint_base, layer), "resolution": res},
-            partition_prefix_len=res + 1,
         )
         n_parents = manifest["rows"]
         if n_parents >= n_current:
@@ -735,12 +666,4 @@ def build_tree(
         if n_parents <= cfg.min_level_nodes:
             break
 
-    levels = []
-    lvl = 0
-    while os.path.exists(_manifest_path(checkpoint_base, lvl)):
-        levels.append(read_level(spark, checkpoint_base, lvl))
-        lvl += 1
-    out = levels[0]
-    for more in levels[1:]:
-        out = out.unionByName(more)
-    return out
+    return read_collapsed(spark, checkpoint_base)

@@ -8,8 +8,9 @@ its cell at the level's start resolution, so the start-res cell is a
 closed recomputation unit — the parents of a start-res cell depend
 only on the child nodes inside it. An append therefore recomputes, per
 level, ONLY the start-res cells that contain new/changed nodes; every
-other parent row is carried over untouched (pytest: touched cells <
-total cells AND result == from-scratch build)."""
+other parent row is carried over as it was into the level's whole
+rewrite (pytest: touched cells < total cells AND result ==
+from-scratch build)."""
 
 from __future__ import annotations
 
@@ -209,8 +210,7 @@ def _require_start_resolution(base: str) -> int:
     if res is None:
         raise ValueError(
             f"tree at {base!r} records no start resolution (no level-0 "
-            "start_resolution and no prefix-partitioned level 1); rebuild "
-            "it with build_tree"
+            "start_resolution); rebuild it with build_tree"
         )
     return res
 
@@ -227,57 +227,43 @@ def _propagate_affected(
     """Shared affected-cells propagation for levels 1..top (the loop
     both incremental_update and the append planner run): per level,
     recompute the start-res cells containing changed children, carry
-    every other parent over untouched, and feed the changed parents
-    into the next level. Layer 1's affected set comes from ``delta``
-    (today's changed level-0 rows) unless ``affected_l1`` overrides it
-    — the planner flushes DUE cells covering several days' pending
-    leaves, not just today's batch. Returns aggregate stats
-    {recomputed_parents, replaced_parents, affected_cells_l1}.
+    every other parent over, and feed the changed parents into the next
+    level. Layer 1's affected set comes from ``delta`` (today's changed
+    level-0 rows) unless ``affected_l1`` overrides it — the planner
+    flushes DUE cells covering several days' pending leaves, not just
+    today's batch. Returns aggregate stats {recomputed_parents,
+    replaced_parents, affected_cells_l1}.
 
-    Every level is partitioned by its start-res cell (build_tree's
-    layout, checked against the manifest), so the affected cells ARE
-    partitions: the recomputed level is written ONCE with dynamic
-    partition overwrite — kept rows are never read or written — and
-    read BACK (partition-pruned to the affected dirs) where its rows
-    are needed again. The affected-cell set is a DRIVER LIST, so
-    membership tests compile to map-side ``isin`` filters; per-partition
-    counts come from the written files' parquet footers and the
-    manifest (no counting job)."""
+    A parent belongs to the start-res cell its cell_id starts with, so
+    each level is rewritten WHOLE through tree.write_level: the kept
+    parents (cell prefix not affected) plus the recomputed ones, behind
+    the manifest commit. An affected cell whose children are all gone
+    thus loses its old parent too. The replaced parents are collected
+    before the rewrite (as many rows as affected parents, which also
+    counts them), and the recomputed count is the rewritten level's
+    footer rows minus the kept ones: no counting job. The affected-cell
+    set is a DRIVER LIST, so membership tests compile to map-side
+    ``isin`` filters."""
     from pyspark.sql import functions as F
 
+    from raptor_rag_spark.functions.localtab import local_df
+    from raptor_rag_spark.functions.planutil import plan_splits
     from raptor_rag_spark.operators.tile import tile
     from raptor_rag_spark.operators.tree import (
-        _level_path,
         build_level,
         read_level,
-        read_level_pruned,
         read_manifest,
-        storage_partition_counts,
-        update_manifest_delta,
+        write_level,
     )
 
     start_resolution = _require_start_resolution(checkpoint_base)
     stats = {"recomputed_parents": 0, "replaced_parents": 0, "affected_cells_l1": 0}
     for layer in range(1, top + 1):
         res = max(start_resolution - (layer - 1), 0)
-        old_manifest = read_manifest(checkpoint_base, layer)
-        layout = (
-            old_manifest.get("partitions_by"),
-            old_manifest.get("partition_prefix_len"),
-        )
-        if layout != ("cell_pfx", res + 1):
-            raise ValueError(
-                f"level {layer} of tree {checkpoint_base!r} is partitioned by "
-                f"{layout[0]!r} with prefix length {layout[1]!r}; incremental "
-                f"maintenance needs 'cell_pfx' with prefix length {res + 1} "
-                f"(one partition per resolution-{res} cell) — rebuild the "
-                "tree with build_tree"
-            )
         if layer == 1 and affected_l1 is not None:
             affected = sorted(affected_l1)
         else:
-            # bounded by the cell universe at this resolution — the same
-            # list the manifest delta has always collected
+            # bounded by the cell universe at this resolution
             affected = sorted(
                 r["cell_id"]
                 for r in tile(delta, res).select("cell_id").distinct().collect()
@@ -286,12 +272,7 @@ def _propagate_affected(
             stats["affected_cells_l1"] = len(affected)
         # child rows in affected cells — selected by the CHILD's OWN
         # x,y at this resolution (tile), which is what the next level
-        # groups on. NOTE: this cannot be partition-pruned on the child
-        # level's cell_pfx: a child's partition key derives from its
-        # cell_id (its own children's region), while its x,y come from
-        # its summary embedding — the two can disagree, and pruning on
-        # cell_pfx drops legitimate members (caught by the
-        # incremental==scratch pytest when tried).
+        # groups on
         child = read_level(spark, checkpoint_base, layer - 1)
         child_in = (
             tile(child, res)
@@ -304,57 +285,42 @@ def _propagate_affected(
             "node_id", "layer", "cell_id", "text", "children", "n_tokens",
             "embedding", "x", "y",
         )
-        # pinned BEFORE the overwrite below: this plan reads the very
-        # files being replaced
-        replaced = (
-            read_level_pruned(spark, checkpoint_base, layer, affected)
-            .select("node_id", "x", "y")
-            .localCheckpoint(eager=True)
-        )
-        # manifest partition counts are exact (footer-derived and
-        # append-free at levels >= 1): the replaced-parents count is
-        # plain arithmetic, no counting job
-        parts = old_manifest.get("partitions", {})
-        n_replaced = int(sum(int(parts.get(c, 0)) for c in affected))
+        # a parent's start-res cell is its cell_id prefix; '_' keeps a
+        # null cell_id out of every affected set
+        in_affected = F.coalesce(
+            F.substring("cell_id", 1, res + 1), F.lit("_")
+        ).isin(affected)
+        old = read_level(spark, checkpoint_base, layer)
+        replaced = [
+            tuple(r) for r in old.filter(in_affected).select("node_id", "x", "y").collect()
+        ]
+        n_kept = int(read_manifest(checkpoint_base, layer)["rows"]) - len(replaced)
+        # the kept side is a bare scan, coalesced to its size so the
+        # level's file count stays bounded across rewrites (the
+        # recomputed side keeps the summarizer's partitions)
+        kept = old.filter(~in_affected)
         lineage = {
             "input": "incremental",
             "resolution": res,
             "affected_cells": len(affected),
-            "write": "dynamic-partition-overwrite",
+            "replaced_parents": len(replaced),
         }
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                recomputed.withColumn("cell_pfx", F.substring("cell_id", 1, res + 1))
-                .write.mode("overwrite")
-                .partitionBy("cell_pfx")
-                .parquet(_level_path(checkpoint_base, layer))
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        # O(affected) footer walk of the just-written dirs — the
-        # recomputed counts without a counting job
-        all_counts = storage_partition_counts(_level_path(checkpoint_base, layer), True)
-        rec_counts = {c: all_counts.get(c, 0) for c in affected}
-        n_recomputed = int(sum(rec_counts.values()))
-        lineage["recomputed_parents"] = n_recomputed
-        lineage["replaced_parents"] = n_replaced
-        # O(affected) manifest update — no level rescan
-        update_manifest_delta(
-            checkpoint_base, layer, affected,
-            {k: v for k, v in rec_counts.items() if v}, lineage,
+        manifest = write_level(
+            kept.coalesce(plan_splits(kept)).unionByName(recomputed),
+            checkpoint_base,
+            layer,
+            lambda rows: {**lineage, "recomputed_parents": rows - n_kept},
         )
-        # the written partitions ARE the recomputed rows: read them back
-        # partition-pruned for the next level's delta instead of holding
-        # a checkpoint
-        recomputed_rb = read_level_pruned(
-            spark, checkpoint_base, layer, affected
-        ).select("node_id", "x", "y")
-        stats["recomputed_parents"] += n_recomputed
-        stats["replaced_parents"] += n_replaced
-        # both the new and the vanished/updated parents perturb level+1
-        delta = recomputed_rb.unionByName(replaced)
+        stats["recomputed_parents"] += manifest["lineage"]["recomputed_parents"]
+        stats["replaced_parents"] += len(replaced)
+        # both the new and the vanished/updated parents perturb level+1;
+        # the recomputed rows are read back from the rewritten level
+        delta = (
+            read_level(spark, checkpoint_base, layer)
+            .filter(in_affected)
+            .select("node_id", "x", "y")
+            .unionByName(local_df(spark, replaced, "node_id long, x double, y double"))
+        )
     return stats
 
 
@@ -383,14 +349,13 @@ def incremental_update(
     4. the changed-parent set becomes the next level's delta.
 
     Level 0 is an APPEND (immutable data files + manifest delta).
-    Levels >= 1 are partitioned by their res_L cell, so step 3 is
-    physical: a dynamic partition overwrite rewrites ONLY the affected
-    ``cell_pfx=`` dirs and the manifest is updated arithmetically —
-    kept parents are never read or written, and the summarize/embed
-    work (the expensive part) runs only on affected cells. A level
-    with any other layout raises ValueError. Finishes with a resumed
-    build_tree to extend the top if the append pushed the top level
-    back over min_level_nodes; returns the collapsed node table.
+    Each level >= 1 is rewritten whole (kept parents plus recomputed
+    ones) behind its manifest commit; the summarize/embed work (the
+    expensive part) runs only on affected cells. A crash before a
+    level's manifest commit leaves that level as it was (the next
+    writer's tree.recover_levels rolls the swap back). Finishes with a
+    resumed build_tree to extend the top if the append pushed the top
+    level back over min_level_nodes; returns the collapsed node table.
     Result equals a from-scratch build over the merged leaves
     (pytest-asserted).
 
@@ -404,9 +369,11 @@ def incremental_update(
         build_tree,
         last_complete_level,
         read_level,
+        recover_levels,
     )
 
     dim = embed_dim or cfg.embedding_dim
+    recover_levels(spark, checkpoint_base)
     top = last_complete_level(checkpoint_base)
     if top < 0:
         raise ValueError(f"no complete levels under {checkpoint_base}; build first")
@@ -521,16 +488,6 @@ def has_pending_ledger(base: str) -> bool:
     return os.path.exists(_pending_path(base))
 
 
-def _read_collapsed(spark: SparkSession, base: str, top: int) -> DataFrame:
-    """The collapsed node table: union of every checkpointed level."""
-    from raptor_rag_spark.operators.tree import read_level
-
-    out = read_level(spark, base, 0)
-    for layer in range(1, top + 1):
-        out = out.unionByName(read_level(spark, base, layer))
-    return out
-
-
 def read_pending(base: str) -> dict:
     """The append planner's ledger: per-base-cell pending-leaf counts
     (leaves already in level 0 whose parents have NOT been recomputed),
@@ -616,7 +573,9 @@ def incremental_update_planned(
     from raptor_rag_spark.operators.tree import (
         build_tree,
         last_complete_level,
+        read_collapsed,
         read_level,
+        recover_levels,
     )
 
     if min_pending_per_cell < 1:
@@ -624,6 +583,7 @@ def incremental_update_planned(
     if not 0.0 <= min_pending_frac <= 1.0:
         raise ValueError(f"min_pending_frac must be in [0, 1], got {min_pending_frac}")
     dim = embed_dim or cfg.embedding_dim
+    recover_levels(spark, checkpoint_base)
     top = last_complete_level(checkpoint_base)
     if top < 0:
         raise ValueError(f"no complete levels under {checkpoint_base}; build first")
@@ -637,7 +597,7 @@ def incremental_update_planned(
             # seeding scan (a defensive flush_appends() on an engine
             # that never deferred must not pay an O(level-0) job) and
             # return the collapsed table as-is
-            return _read_collapsed(spark, checkpoint_base, top)
+            return read_collapsed(spark, checkpoint_base)
         ledger["resolution"] = int(start_resolution)
         # one-time size seed: per-base-cell leaf counts of the existing
         # level 0 (bounded by the base-cell universe; incremented per
@@ -695,7 +655,7 @@ def incremental_update_planned(
     if not due:
         # no flush: collapsed table with up-to-date leaves and
         # bounded-stale parents
-        return _read_collapsed(spark, checkpoint_base, top)
+        return read_collapsed(spark, checkpoint_base)
 
     stats = _propagate_affected(
         spark, checkpoint_base, cfg, top, dim, affected_l1=list(due)

@@ -399,8 +399,7 @@ def test_ann_index_quantized_append_equals_rebuild(spark):
 def test_ann_index_append_persisted_partial_io(spark, points, tmp_path):
     """Persisted incremental maintenance: append_persisted replaces
     ONLY affected base-cell partition directories (untouched partition
-    files byte-identical — the same discipline as the tree's
-    prefix-partitioned levels) and the reloaded index equals a
+    files byte-identical) and the reloaded index equals a
     from-scratch build over the merged corpus."""
     import glob
     import hashlib

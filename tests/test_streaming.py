@@ -945,13 +945,11 @@ def _copy_tree(src, tmp_path):
 def test_tree_records_start_resolution_and_refuses_another(
     spark, small_tree, tmp_path
 ):
-    """build_tree records its start resolution in the level-0 manifest
-    (a tree written before that is read off level 1's partition key),
+    """build_tree records its start resolution in the level-0 manifest,
     and resuming — directly or by reopening an engine — with another
     value raises a named error instead of growing levels at another
     resolution."""
     import json
-    import os
 
     from raptor_rag_spark.api import RaptorEngine
     from raptor_rag_spark.config import DEFAULT_CONFIG
@@ -973,21 +971,17 @@ def test_tree_records_start_resolution_and_refuses_another(
     with pytest.raises(ValueError, match="start_resolution=3, got start_resolution=4"):
         RaptorEngine(spark, base, DEFAULT_CONFIG)
 
-    # a tree written before the field existed
+    # a tree written before the field existed records none
     m0 = read_manifest(base, 0)
     del m0["start_resolution"]
     with open(_manifest_path(base, 0), "w") as fh:
         json.dump(m0, fh)
-    assert tree_start_resolution(base) == 3
-    os.remove(_manifest_path(base, 1))
     assert tree_start_resolution(base) is None
 
 
 def test_append_on_foreign_layout_raises_named_error(spark, small_tree, tmp_path):
-    """Incremental maintenance refuses a level whose partition key is
-    not its start-resolution cell (a named ValueError, not the NameError
-    the removed merge branch died with), and a tree that records no
-    start resolution at all."""
+    """Incremental maintenance refuses a tree that records no start
+    resolution with a named ValueError."""
     import json
 
     from raptor_rag_spark.config import DEFAULT_CONFIG
@@ -995,26 +989,15 @@ def test_append_on_foreign_layout_raises_named_error(spark, small_tree, tmp_path
     from raptor_rag_spark.streaming.incremental import incremental_update
 
     base = _copy_tree(small_tree, tmp_path)
-    m1 = read_manifest(base, 1)
-    assert m1["partition_prefix_len"] == 4
-    m1["partition_prefix_len"] = 5
-    with open(_manifest_path(base, 1), "w") as fh:
-        json.dump(m1, fh)
     delta = incremental_level0(
         synthetic_pages(spark, n=4, seed=23).withColumn(
             "page_id", F.col("page_id") + 8000
         )
     )
-    with pytest.raises(ValueError, match="level 1 .* prefix length 5.*prefix length 4"):
-        incremental_update(spark, base, delta, DEFAULT_CONFIG)
-
     m0 = read_manifest(base, 0)
     del m0["start_resolution"]
     with open(_manifest_path(base, 0), "w") as fh:
         json.dump(m0, fh)
-    m1["partition_prefix_len"] = None
-    with open(_manifest_path(base, 1), "w") as fh:
-        json.dump(m1, fh)
     with pytest.raises(ValueError, match="records no start resolution"):
         incremental_update(spark, base, delta, DEFAULT_CONFIG)
 
@@ -1025,12 +1008,7 @@ def test_level_reads_run_at_most_one_job(spark, small_tree):
     job), and the rows are the level's, quadkey prefixes intact. The
     listing is forced onto the cluster, as on a level with many
     partitions, so a schema-inference job would show up as a second."""
-    from raptor_rag_spark.operators.tree import (
-        _level_path,
-        read_level,
-        read_level_pruned,
-        read_manifest,
-    )
+    from raptor_rag_spark.operators.tree import _level_path, read_level
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -1048,15 +1026,10 @@ def test_level_reads_run_at_most_one_job(spark, small_tree):
             spark.conf.set(listing, prev)
         return df, len(tracker.getJobIdsForGroup(group))
 
-    prefixes = sorted(read_manifest(small_tree, 1)["partitions"])[:2]
-    pruned, n_pruned = jobs_to_build(
-        "layout-read-pruned",
-        lambda: read_level_pruned(spark, small_tree, 1, prefixes),
-    )
     full, n_full = jobs_to_build(
         "layout-read-level", lambda: read_level(spark, small_tree, 1)
     )
-    assert n_pruned <= 1 and n_full <= 1, (n_pruned, n_full)
+    assert n_full <= 1, n_full
 
     on_disk = spark.read.parquet(_level_path(small_tree, 1)).drop("cell_pfx")
     assert full.schema.simpleString() == on_disk.schema.simpleString()
@@ -1064,6 +1037,173 @@ def test_level_reads_run_at_most_one_job(spark, small_tree):
     assert sorted(map(tuple, full.select(*cols).collect())) == sorted(
         map(tuple, on_disk.select(*cols).collect())
     )
-    got = pruned.select("cell_id").collect()
-    assert len(got) == sum(read_manifest(small_tree, 1)["partitions"][p] for p in prefixes)
-    assert {r["cell_id"][:4] for r in got} == set(prefixes)
+
+
+# ---------------------------------------------- one flat upper level
+
+
+def _deferred_day(spark, base, tag):
+    """Land one 6-page day on ``base`` without flushing any cell."""
+    from raptor_rag_spark.config import DEFAULT_CONFIG
+    from raptor_rag_spark.streaming.incremental import incremental_update_planned
+
+    day = incremental_level0(
+        synthetic_pages(spark, n=6, seed=77)
+        .withColumn("page_id", F.col("page_id") + 50_000)
+        .withColumn("url", F.concat(F.lit(f"https://{tag}.test/"), F.col("page_id")))
+    ).localCheckpoint(eager=True)
+    incremental_update_planned(
+        spark, base, day, DEFAULT_CONFIG, min_pending_per_cell=10**6
+    )
+
+
+def _levels(spark, base):
+    from raptor_rag_spark.operators.tree import last_complete_level, read_level
+
+    return [
+        sorted(
+            (r["node_id"], r["cell_id"], r["text"], tuple(sorted(r["children"])))
+            for r in read_level(spark, base, k).collect()
+        )
+        for k in range(last_complete_level(base) + 1)
+    ]
+
+
+def test_flush_drops_parent_of_emptied_cell(spark, small_tree, tmp_path):
+    """A recomputed start-resolution cell with no children left loses
+    its old parent: with level 0 rewritten without one cell's leaves,
+    propagating that cell leaves level 1 equal to a from-scratch build
+    over the same level 0."""
+    from raptor_rag_spark.config import DEFAULT_CONFIG
+    from raptor_rag_spark.operators.tile import tile
+    from raptor_rag_spark.operators.tree import build_tree, read_level, write_level
+    from raptor_rag_spark.streaming.incremental import _propagate_affected
+
+    base = _copy_tree(small_tree, tmp_path)
+    lvl0 = read_level(spark, base, 0)
+    cells = tile(lvl0, 3).select("node_id", "cell_id")
+    gone = min(r["cell_id"] for r in cells.select("cell_id").distinct().collect())
+    rest = lvl0.join(
+        cells.filter(F.col("cell_id") != gone).select("node_id"), "node_id"
+    ).localCheckpoint(eager=True)
+    write_level(rest, base, 0, {"input": "test"}, start_resolution=3)
+    _propagate_affected(
+        spark, base, DEFAULT_CONFIG, 1, DEFAULT_CONFIG.embedding_dim,
+        affected_l1=[gone],
+    )
+
+    scratch = str(tmp_path / "scratch")
+    build_tree(
+        spark, rest.select("node_id", "text", "n_tokens", "embedding"), scratch,
+        DEFAULT_CONFIG, start_resolution=3, resume=False,
+    )
+    assert not [r for r in _levels(spark, base)[1] if r[1].startswith(gone)]
+    assert _levels(spark, base)[1] == _levels(spark, scratch)[1]
+
+
+def test_flush_crash_before_manifest_commit_keeps_old_level(
+    spark, small_tree, tmp_path, monkeypatch
+):
+    """A flush that dies after swapping level 1's rewrite in, but before
+    committing its manifest, applies nothing: reopening the tree brings
+    back level 1's pre-flush rows with no swap sibling left and
+    manifest == storage, and the retried flush gives the same tree as
+    an uncrashed one."""
+    import glob
+    import shutil
+
+    from raptor_rag_spark.config import DEFAULT_CONFIG
+    from raptor_rag_spark.operators import maintenance
+    from raptor_rag_spark.operators.tree import (
+        _manifest_path,
+        build_tree,
+        last_complete_level,
+        read_level,
+        read_manifest,
+    )
+    from raptor_rag_spark.streaming.incremental import incremental_update_planned
+
+    base = _copy_tree(small_tree, tmp_path)
+    _deferred_day(spark, base, "crash")
+    clean = str(tmp_path / "clean")
+    shutil.copytree(base, clean)
+    before = _levels(spark, base)
+
+    real = maintenance.write_meta_atomic
+    level1 = _manifest_path(base, 1)
+
+    def crash(path, meta):
+        if path == level1:
+            raise OSError("crash before the level-1 manifest commit")
+        real(path, meta)
+
+    monkeypatch.setattr(maintenance, "write_meta_atomic", crash)
+    with pytest.raises(OSError, match="level-1 manifest"):
+        incremental_update_planned(spark, base, None, DEFAULT_CONFIG, force_flush=True)
+    monkeypatch.setattr(maintenance, "write_meta_atomic", real)
+
+    empty = spark.createDataFrame(
+        [], "node_id long, text string, n_tokens int, embedding array<float>"
+    )
+    build_tree(spark, empty, base, DEFAULT_CONFIG, start_resolution=3, resume=True)
+    assert _levels(spark, base) == before
+    assert not glob.glob(f"{base}/level=*/nodes.parquet.*")
+    for k in range(last_complete_level(base) + 1):
+        assert read_manifest(base, k)["rows"] == read_level(spark, base, k).count()
+
+    incremental_update_planned(spark, base, None, DEFAULT_CONFIG, force_flush=True)
+    incremental_update_planned(spark, clean, None, DEFAULT_CONFIG, force_flush=True)
+    assert _levels(spark, base) == _levels(spark, clean)
+    assert _levels(spark, base)[1] != before[1]
+
+
+def _assert_flat_upper_levels(spark, base):
+    import glob
+    import os
+
+    from raptor_rag_spark.operators.tree import _level_path, last_complete_level
+
+    par = spark.sparkContext.defaultParallelism
+    for k in range(1, last_complete_level(base) + 1):
+        path = _level_path(base, k)
+        assert not [e for e in os.listdir(path) if os.path.isdir(os.path.join(path, e))]
+        assert 1 <= len(glob.glob(os.path.join(path, "part-*.parquet"))) <= par + 1
+
+
+def test_flush_and_build_job_counts_pinned(spark, tmp_path, count_jobs):
+    """Jobs of a 48-page build and of a forced flush of one deferred
+    day, with partition discovery forced onto the cluster as on a level
+    with more cells than the discovery threshold (32; level 1 of a
+    1,500-page tree has 56 start-resolution cells). One partition dir
+    per cell cost a listing job per read of an upper level: 8 build and
+    17 flush jobs; flat levels take 7 and 12. After both, every level
+    >= 1 is one flat dir of at most defaultParallelism + 1 part files."""
+    from raptor_rag_spark.config import DEFAULT_CONFIG
+    from raptor_rag_spark.operators.tree import build_tree
+    from raptor_rag_spark.streaming.incremental import incremental_update_planned
+
+    listing = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    prev = spark.conf.get(listing)
+    spark.conf.set(listing, "1")
+    try:
+        leaves = incremental_level0(synthetic_pages(spark, n=48, seed=21)).localCheckpoint(
+            eager=True
+        )
+        base = str(tmp_path / "tree")
+        _, n_build = count_jobs(
+            "pin-build",
+            lambda: build_tree(spark, leaves, base, DEFAULT_CONFIG, start_resolution=3),
+        )
+        _assert_flat_upper_levels(spark, base)
+        _deferred_day(spark, base, "pin")
+        _, n_flush = count_jobs(
+            "pin-flush",
+            lambda: incremental_update_planned(
+                spark, base, None, DEFAULT_CONFIG, force_flush=True
+            ),
+        )
+        _assert_flat_upper_levels(spark, base)
+    finally:
+        spark.conf.set(listing, prev)
+    assert n_build <= 7, n_build
+    assert n_flush <= 12, n_flush

@@ -143,53 +143,44 @@ def test_incremental_update_matches_scratch(spark, leaves, tmp_path_factory):
     assert man0.get("appends") and man0["appends"][0]["rows"] > 0
 
 
-def test_incremental_partial_partition_overwrite(spark, leaves, tmp_path_factory):
-    """Prefix-partitioned levels + dynamic partition overwrite: an
-    append must physically rewrite ONLY the affected cell_pfx
-    directories — untouched partitions keep the same files (same
-    names, sizes, mtimes). This is the 100 TB maintenance invariant:
-    kept rows are never read or written."""
+def test_incremental_update_rewrites_upper_levels_whole(spark, leaves, tmp_path_factory):
+    """Every level >= 1 is one flat parquet dir, rewritten whole by an
+    append behind its manifest: no partition subdirectory, at most one
+    file per write task plus one for the kept rows, the manifest names
+    the live dir's save token and agrees with storage, no swap sibling
+    is left, and the parents of unaffected cells are carried over."""
     import glob
 
     from raptor_rag_spark.operators.tile import reduce_2d
+    from raptor_rag_spark.operators.tree import _level_path, read_level, read_manifest
     from raptor_rag_spark.streaming.incremental import incremental_update
 
-    base = str(tmp_path_factory.mktemp("tree_ppo"))
+    base = str(tmp_path_factory.mktemp("tree_flat"))
     old = leaves.filter(F.col("node_id") % 5 != 0)
     new = leaves.filter(F.col("node_id") % 5 == 0).limit(3)
     build_tree(spark, old, base, CFG, start_resolution=3, embed_dim=32)
+    cols = ["node_id", "cell_id", "text"]
+    before = set(map(tuple, read_level(spark, base, 1).select(*cols).collect()))
+    incremental_update(spark, base, reduce_2d(new, dim=32, seed=CFG.seed), CFG, embed_dim=32)
 
-    def snapshot(level):
-        out = {}
-        for d in glob.glob(
-            os.path.join(base, f"level={level}", "nodes.parquet", "cell_pfx=*")
-        ):
-            out[os.path.basename(d)] = {
-                os.path.basename(f): (os.path.getsize(f), os.path.getmtime(f))
-                for f in glob.glob(os.path.join(d, "*.parquet"))
-            }
-        return out
+    par = spark.sparkContext.defaultParallelism
+    for layer in range(1, last_complete_level(base) + 1):
+        path = _level_path(base, layer)
+        assert not [e for e in os.listdir(path) if os.path.isdir(os.path.join(path, e))]
+        assert 1 <= len(glob.glob(os.path.join(path, "part-*.parquet"))) <= par + 1
+        man = read_manifest(base, layer)
+        with open(os.path.join(path, "_savetoken")) as fh:
+            assert fh.read() == man["save_token"]
+        assert man["rows"] == read_level(spark, base, layer).count()
+        assert sum(man["partitions"].values()) == man["rows"]
+    assert not glob.glob(os.path.join(base, "level=*", "nodes.parquet.*"))
 
-    assert snapshot(1), "level 1 should be prefix-partitioned"
-    before = snapshot(1)
-    new_xy = reduce_2d(new, dim=32, seed=CFG.seed)
-    incremental_update(spark, base, new_xy, CFG, embed_dim=32)
-    after = snapshot(1)
-    untouched = [p for p in before if after.get(p) == before[p]]
-    changed = [p for p in after if after[p] != before.get(p)]
-    assert changed, "the append must touch at least one partition"
-    assert untouched, "some partition must be carried over physically"
-    # manifest records the dynamic-overwrite path
-    import json as _json
-
-    with open(os.path.join(base, "level=1", "_MANIFEST.json")) as fh:
-        man = _json.load(fh)
-    assert man["lineage"].get("write") == "dynamic-partition-overwrite"
-    # arithmetic (no-rescan) manifest update must agree with storage
-    assert man.get("partitions_by") == "cell_pfx"
-    actual = spark.read.parquet(os.path.join(base, "level=1", "nodes.parquet")).count()
-    assert man["rows"] == actual
-    assert sum(man["partitions"].values()) == actual
+    man = read_manifest(base, 1)
+    assert man["lineage"]["input"] == "incremental"
+    n_rec = man["lineage"]["recomputed_parents"]
+    assert 0 < n_rec < man["rows"]
+    after = set(map(tuple, read_level(spark, base, 1).select(*cols).collect()))
+    assert len(before & after) >= man["rows"] - n_rec
 
 
 def test_cap_assign_start_res_beyond_max_resolution(spark):
