@@ -26,10 +26,8 @@ from pyspark.sql import functions as F
 
 from raptor_rag_spark.config import DEFAULT_CONFIG, EngineConfig
 from raptor_rag_spark.functions.localtab import local_df
-from raptor_rag_spark.operators.chunk import chunk_documents
-from raptor_rag_spark.operators.embed import embed_texts
 from raptor_rag_spark.operators.knn import BROADCAST_MAX_QUERIES
-from raptor_rag_spark.operators.tree import build_tree, last_complete_level
+from raptor_rag_spark.operators.tree import build_tree, last_complete_level, leaves_from_docs
 from raptor_rag_spark.operators.retrieve import (
     embed_queries,
     embed_query_texts,
@@ -66,19 +64,9 @@ class RaptorEngine:
         is resumable instead)."""
         if isinstance(docs, str):
             docs = local_df(self.spark, [(0, docs)], f"{id_col} long, {text_col} string")
-        chunks = chunk_documents(
-            docs, id_col=id_col, text_col=text_col,
-            max_tokens=self.cfg.max_tokens,
-            tokenizer_factory=self.cfg.tokenizer_factory,
-        )
-        leaves = (
-            embed_texts(chunks, dim=self.dim)
-            .withColumnRenamed("chunk_id", "node_id")
-            .select("node_id", "text", "n_tokens", "embedding")
-        )
         self._set_nodes(build_tree(
             self.spark,
-            leaves,
+            leaves_from_docs(docs, self.cfg, self.dim, id_col=id_col, text_col=text_col),
             self.base,
             self.cfg,
             start_resolution=self.start_resolution,
@@ -112,7 +100,6 @@ class RaptorEngine:
         scattered daily crawl batches (recompute fraction ~0.15 vs
         0.62 eager at a uniform 1%/day drip). Call flush_appends() to
         force exactness before an evaluation/export."""
-        from raptor_rag_spark.operators.tile import reduce_2d
         from raptor_rag_spark.streaming.incremental import (
             incremental_update,
             incremental_update_planned,
@@ -125,17 +112,9 @@ class RaptorEngine:
             docs = local_df(
                 self.spark, [(docs,)], f"{text_col} string"
             ).select(F.xxhash64(F.col(text_col)).alias(id_col), text_col)
-        chunks = chunk_documents(
-            docs, id_col=id_col, text_col=text_col,
-            max_tokens=self.cfg.max_tokens, id_scheme="hash",
-            tokenizer_factory=self.cfg.tokenizer_factory,
+        leaves = leaves_from_docs(
+            docs, self.cfg, self.dim, id_col=id_col, text_col=text_col, id_scheme="hash"
         )
-        leaves = (
-            embed_texts(chunks, dim=self.dim)
-            .withColumnRenamed("chunk_id", "node_id")
-            .select("node_id", "text", "n_tokens", "embedding")
-        )
-        leaves = reduce_2d(leaves, dim=self.dim, seed=self.cfg.seed)
         if deferred:
             self._set_nodes(incremental_update_planned(
                 self.spark, self.base, leaves, self.cfg, embed_dim=self.dim,
@@ -169,12 +148,11 @@ class RaptorEngine:
     def _load(self) -> None:
         self._set_nodes(build_tree(
             self.spark,
-            self.spark.createDataFrame([], "node_id long, text string, n_tokens int, embedding array<float>"),
+            None,
             self.base,
             self.cfg,
             start_resolution=self.start_resolution,
             embed_dim=self.dim,
-            resume=True,
         ))
 
     def _set_nodes(self, nodes: DataFrame) -> None:

@@ -16,7 +16,6 @@ from dataclasses import dataclass
 class EngineConfig:
     # chunking (reference: tree_builder.py:31 max_tokens=100)
     max_tokens: int = 100
-    chunk_overlap: int = 0
 
     # embedding (tests use 64-dim; reference e5-large is 1024-dim,
     # embedding_service/production_test_report.json:66)
@@ -45,10 +44,6 @@ class EngineConfig:
 
     # determinism
     seed: int = 224  # reference RANDOM_SEED, cluster_utils.py:19
-
-    # scale knobs
-    shuffle_partitions: int = 32
-    broadcast_node_limit: int = 2_000_000  # rows under which the node side broadcasts
 
     # summarizer seam (reference SummarizationModels.py:17-44): a
     # ``(texts: list[str], max_tokens: int) -> str`` callable used by

@@ -60,7 +60,8 @@ def embed_query_texts(
 
     emb = hash_embed_batch(pd.Series(texts, dtype=object), dim)
     xy = np.asarray(emb, dtype=np.float64) @ projection_matrix(dim, seed).T
-    rows = [(i, t, e, x, y) for i, (t, e, (x, y)) in enumerate(zip(texts, emb, xy))]
+    # plain floats (exact): non-Arrow createDataFrame rejects numpy float32
+    rows = [(i, t, e.tolist(), x, y) for i, (t, e, (x, y)) in enumerate(zip(texts, emb, xy))]
     return local_df(
         spark, rows, "query_id long, text string, q_embedding array<float>, x double, y double"
     )

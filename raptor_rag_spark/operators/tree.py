@@ -37,10 +37,11 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from raptor_rag_spark.config import DEFAULT_CONFIG, EngineConfig
 from raptor_rag_spark.operators import maintenance
-from raptor_rag_spark.operators.chunk import split_text
+from raptor_rag_spark.operators.chunk import chunk_documents, split_text
 from raptor_rag_spark.operators.embed import embed_texts
 from raptor_rag_spark.operators.tile import (
     cell_id_col,
@@ -53,8 +54,9 @@ from raptor_rag_spark.operators.tile import (
 )
 from raptor_rag_spark.tokenizer import DEFAULT_TOKENIZER
 
-# the columns of every level >= 1 (what build_level(with_embedding=True)
-# emits): levels are read through this fixed schema, never inferred
+# the columns of every level (level0_rows shapes level 0 into it, and
+# build_level(with_embedding=True) emits it): every level is written in
+# this schema and read through it, never inferred
 NODES_SCHEMA = (
     "node_id long, layer int, cell_id string, text string, "
     "children array<long>, n_tokens int, embedding array<float>, x double, y double"
@@ -173,6 +175,45 @@ def node_id_for_cell(layer: int):
         ).alias("node_id")
 
     return col
+
+
+# ----------------------------------------------------------- level 0
+
+
+def leaves_from_docs(
+    docs: DataFrame,
+    cfg: EngineConfig,
+    dim: int,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    id_scheme: str = "arith",
+) -> DataFrame:
+    """Documents -> leaves (node_id, text, n_tokens, embedding): chunked
+    at ``cfg.max_tokens`` in the ``cfg.tokenizer_factory`` dialect (the
+    one parents count in), then hash-embedded at ``dim``."""
+    chunks = chunk_documents(
+        docs, id_col=id_col, text_col=text_col, max_tokens=cfg.max_tokens,
+        tokenizer_factory=cfg.tokenizer_factory, id_scheme=id_scheme,
+    )
+    return (
+        embed_texts(chunks, dim=dim)
+        .withColumnRenamed("chunk_id", "node_id")
+        .select("node_id", "text", "n_tokens", "embedding")
+    )
+
+
+def level0_rows(leaves: DataFrame, cfg: EngineConfig, dim: int) -> DataFrame:
+    """Leaves -> level-0 rows: layer 0, no cell, no children, x, y
+    projected with reduce_2d(dim, cfg.seed) unless the leaves carry them,
+    and every column cast to NODES_SCHEMA, so level 0 reads back through
+    it (an n_tokens long would write an INT64 the int schema can't read)."""
+    if not {"x", "y"} <= set(leaves.columns):
+        leaves = reduce_2d(leaves, dim=dim, seed=cfg.seed)
+    shaped = {"layer": F.lit(0), "cell_id": F.lit(None), "children": F.array().cast("array<long>")}
+    return leaves.select(*[
+        shaped.get(f.name, F.col(f.name)).cast(f.dataType).alias(f.name)
+        for f in StructType.fromDDL(NODES_SCHEMA)
+    ])
 
 
 # -------------------------------------------------------- level step
@@ -536,12 +577,10 @@ _LEVEL_READ_SCHEMA = NODES_SCHEMA + ", cell_pfx string"
 
 
 def read_level(spark: SparkSession, base: str, layer: int) -> DataFrame:
-    """Level checkpoint reader. Levels >= 1 are read through the fixed
-    NODES_SCHEMA: no schema-inference job, only the file listing. Level
-    0 keeps inference — its leaf columns come from the caller."""
+    """Level checkpoint reader: every level is read through the fixed
+    NODES_SCHEMA, so building the DataFrame runs no schema-inference
+    job, only the file listing."""
     path = _level_path(base, layer)
-    if layer == 0:
-        return spark.read.parquet(path)
     return spark.read.schema(_LEVEL_READ_SCHEMA).parquet(path).drop("cell_pfx")
 
 
@@ -579,7 +618,7 @@ def tree_start_resolution(base: str) -> int | None:
 
 def build_tree(
     spark: SparkSession,
-    leaves: DataFrame,
+    leaves: DataFrame | None,
     checkpoint_base: str,
     cfg: EngineConfig = DEFAULT_CONFIG,
     start_resolution: int = 4,
@@ -588,8 +627,11 @@ def build_tree(
     resume: bool = True,
     summarize_fn: Callable[[list[str], int], str] | None = None,
 ) -> DataFrame:
-    """Full tree: leaves (node_id, text, n_tokens, embedding) -> all
-    levels, checkpointed per level, resumable mid-build.
+    """Full tree: leaves (node_id, text, n_tokens, embedding, optionally
+    x, y) -> all levels, checkpointed per level, resumable mid-build.
+
+    ``leaves`` become level 0 (:func:`level0_rows`) and are read only
+    when no level 0 is committed; resuming a tree takes ``leaves=None``.
 
     ``summarize_fn`` threads through to every :func:`build_level` call
     (e.g. :func:`http_summarize_fn` for a live LLM endpoint); default
@@ -613,17 +655,11 @@ def build_tree(
                 f"tree at {checkpoint_base!r} was built with start_resolution="
                 f"{recorded}, got start_resolution={start_resolution}"
             )
-    if done < 0:
-        lvl0 = (
-            leaves.withColumn("layer", F.lit(0))
-            .withColumn("cell_id", F.lit(None).cast("string"))
-            .withColumn("children", F.array().cast("array<long>"))
-        )
-        lvl0 = reduce_2d(lvl0, dim=dim, seed=cfg.seed)
+    elif leaves is None:
+        raise ValueError(f"no level 0 under {checkpoint_base!r} to resume and no leaves given")
+    else:
         write_level(
-            lvl0.select(
-                "node_id", "layer", "cell_id", "text", "children", "n_tokens", "embedding", "x", "y"
-            ),
+            level0_rows(leaves, cfg, dim),
             checkpoint_base,
             0,
             {"input": "leaves"},

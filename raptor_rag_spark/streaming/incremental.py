@@ -17,8 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from raptor_rag_spark.config import DEFAULT_CONFIG, EngineConfig
-from raptor_rag_spark.operators.chunk import chunk_documents
-from raptor_rag_spark.operators.embed import embed_texts
 from raptor_rag_spark.operators.extract import extract_pages
 from raptor_rag_spark.operators.tile import reduce_2d
 
@@ -28,14 +26,16 @@ def incremental_level0(
     cfg: EngineConfig = DEFAULT_CONFIG,
     dim: int | None = None,
 ) -> DataFrame:
-    """New pages batch -> level-0 node rows (extract -> chunk -> embed
-    -> reduce). Pure function of the batch; append to the level-0
-    checkpoint and re-aggregate touched cells upstream."""
+    """New pages batch -> leaves with x, y (extract -> tree.leaves_from_docs
+    -> reduce_2d). Pure function of the batch; incremental_update appends
+    it to level 0 and re-aggregates the touched cells upstream."""
+    from pyspark.sql import functions as F
+
+    from raptor_rag_spark.operators.tree import leaves_from_docs
+
     dim = dim or cfg.embedding_dim
     txt = extract_pages(pages)
     # stable doc id: page_id when present, else a 64-bit url hash
-    from pyspark.sql import functions as F
-
     if "page_id" in pages.columns:
         txt = txt.join(pages.select("url", "page_id"), "url")
         docs = txt.withColumn("doc_id", F.col("page_id"))
@@ -45,13 +45,8 @@ def incremental_level0(
         # overflow (ANSI crash) — use the hashed scheme
         docs = txt.withColumn("doc_id", F.xxhash64("url"))
         id_scheme = "hash"
-    chunks = chunk_documents(docs, max_tokens=cfg.max_tokens, id_scheme=id_scheme)
-    nodes = (
-        embed_texts(chunks, dim=dim)
-        .withColumnRenamed("chunk_id", "node_id")
-        .select("node_id", "text", "n_tokens", "embedding")
-    )
-    return reduce_2d(nodes, dim=dim, seed=cfg.seed)
+    leaves = leaves_from_docs(docs, cfg, dim, id_scheme=id_scheme)
+    return reduce_2d(leaves, dim=dim, seed=cfg.seed)
 
 
 def _epoch_sink(out_dir: str, cfg: EngineConfig, namespace: str = "default"):
@@ -332,9 +327,11 @@ def incremental_update(
     max_layers: int = 8,
     embed_dim: int | None = None,
 ) -> DataFrame:
-    """Append ``new_leaves`` (node_id, text, n_tokens, embedding, x, y —
-    e.g. incremental_level0 output; node_ids must be fresh) to a
-    checkpointed tree and re-run ONLY the affected cells of each level.
+    """Append ``new_leaves`` (node_id, text, n_tokens, embedding and
+    optionally x, y — e.g. incremental_level0 output or
+    tree.leaves_from_docs; node_ids must be fresh) to a checkpointed
+    tree and re-run ONLY the affected cells of each level. Leaves
+    without x, y are projected (tree.level0_rows) before staging.
 
     The start resolution is the tree's own (recorded by build_tree,
     see tree.tree_start_resolution) — never a parameter, so an update
@@ -355,7 +352,8 @@ def incremental_update(
     level's manifest commit leaves that level as it was (the next
     writer's tree.recover_levels rolls the swap back). Finishes with a
     resumed build_tree to extend the top if the append pushed the top
-    level back over min_level_nodes; returns the collapsed node table.
+    level back over min_level_nodes (it resumes from the committed
+    levels and reads no leaves); returns the collapsed node table.
     Result equals a from-scratch build over the merged leaves
     (pytest-asserted).
 
@@ -368,7 +366,6 @@ def incremental_update(
     from raptor_rag_spark.operators.tree import (
         build_tree,
         last_complete_level,
-        read_level,
         recover_levels,
     )
 
@@ -394,7 +391,7 @@ def incremental_update(
         )
 
     start_resolution = _require_start_resolution(checkpoint_base)
-    lvl0_delta, _aid = _stage_level0_append(new_leaves, checkpoint_base)
+    lvl0_delta, _aid = _stage_level0_append(new_leaves, checkpoint_base, cfg, dim)
 
     # changed rows at the current child level: (node_id, x, y) —
     # lvl0_delta is already checkpointed by the staging
@@ -403,19 +400,20 @@ def incremental_update(
     # extend the top if the append pushed it back over min_level_nodes
     return build_tree(
         spark,
-        read_level(spark, checkpoint_base, 0),
+        None,
         checkpoint_base,
         cfg,
         start_resolution=start_resolution,
         max_layers=max_layers,
         embed_dim=dim,
-        resume=True,
     )
 
 
-def _stage_level0_append(new_leaves: DataFrame, checkpoint_base: str):
-    """Shape ``new_leaves`` into level-0 rows and append them exactly
-    once. Returns (lvl0_delta, append_id).
+def _stage_level0_append(
+    new_leaves: DataFrame, checkpoint_base: str, cfg: EngineConfig, dim: int
+):
+    """Shape ``new_leaves`` into level-0 rows (tree.level0_rows) and
+    append them exactly once. Returns (lvl0_delta, append_id).
 
     The append id is content-derived: a retried update (crash anywhere
     downstream) re-presents the same delta and must not duplicate
@@ -432,20 +430,10 @@ def _stage_level0_append(new_leaves: DataFrame, checkpoint_base: str):
     DIFFERENT x,y — ledger counts attributed to cells other than the
     ones the written rows actually land in, breaking force_flush
     exactness. One materialization, every consumer reads it."""
-    from pyspark.sql import functions as F
-
     from raptor_rag_spark.functions.staging import content_append_stats
+    from raptor_rag_spark.operators.tree import level0_rows
 
-    lvl0_delta = (
-        new_leaves.withColumn("layer", F.lit(0))
-        .withColumn("cell_id", F.lit(None).cast("string"))
-        .withColumn("children", F.array().cast("array<long>"))
-        .select(
-            "node_id", "layer", "cell_id", "text", "children", "n_tokens",
-            "embedding", "x", "y",
-        )
-        .localCheckpoint(eager=True)
-    )
+    lvl0_delta = level0_rows(new_leaves, cfg, dim).localCheckpoint(eager=True)
     append_id, n_rows = content_append_stats(
         lvl0_delta, ["node_id", "text", "n_tokens", "embedding"]
     )
@@ -625,7 +613,7 @@ def incremental_update_planned(
         )
 
     if new_leaves is not None:
-        lvl0_delta, append_id = _stage_level0_append(new_leaves, checkpoint_base)
+        lvl0_delta, append_id = _stage_level0_append(new_leaves, checkpoint_base, cfg, dim)
         if append_id not in ledger["applied"]:
             counts = (
                 tile(lvl0_delta.select("node_id", "x", "y"), start_resolution)
@@ -690,13 +678,12 @@ def incremental_update_planned(
     # extend the top if the flushed cells pushed it over min_level_nodes
     return build_tree(
         spark,
-        read_level(spark, checkpoint_base, 0),
+        None,
         checkpoint_base,
         cfg,
         start_resolution=start_resolution,
         max_layers=max_layers,
         embed_dim=dim,
-        resume=True,
     )
 
 

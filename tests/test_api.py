@@ -393,6 +393,30 @@ def test_single_string_collapsed_retrieve_runs_one_python_wave(spark, built, cou
     assert max(tasks) <= sc.defaultParallelism, tasks
 
 
+def test_retrieve_with_arrow_conversion_off(spark, built):
+    """str and list questions retrieve on a session with Arrow
+    conversion off (Spark's default): the driver-embedded questions
+    reach Spark as plain Python values, and the contexts equal the
+    Arrow session's."""
+    _, eng = built
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+
+    def ask():
+        return (
+            eng.retrieve("berber dukkani", top_k=3),
+            eng.retrieve(["berber dukkani", "veri isleme"], top_k=3),
+        )
+
+    want = ask()
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        got = ask()
+    finally:
+        spark.conf.set(conf, prev)
+    assert got == want
+
+
 @pytest.fixture(scope="module")
 def seeded(spark, tmp_path_factory):
     """A small tree built with a non-default projection seed."""

@@ -205,6 +205,23 @@ def test_engine_tokenizer_seam_end_to_end(spark, toy_vocab_file, tmp_path):
             f"layer {r['layer']} node counts in the wrong tokenizer dialect"
         )
 
+    # the page-ingest leaves (incremental appends, stream_pages) chunk
+    # and count in the same dialect
+    from raptor_rag_spark.datagen import synthetic_pages
+    from raptor_rag_spark.operators.chunk import split_text
+    from raptor_rag_spark.operators.extract import extract_pages
+    from raptor_rag_spark.streaming import incremental_level0
+
+    pages = synthetic_pages(spark, n=4, seed=3)
+    leaves = incremental_level0(pages, cfg).collect()
+    want = sorted(
+        c for p in extract_pages(pages).collect()
+        for c in split_text(p["text"], tok, max_tokens=cfg.max_tokens)
+    )
+    assert sorted(r["text"] for r in leaves) == want
+    for r in leaves:
+        assert r["n_tokens"] == len(tok.encode(r["text"]))
+
 
 # --------------------------------------------------- heap-merge (large pieces)
 def test_heap_merge_matches_naive_scan():

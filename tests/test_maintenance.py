@@ -21,6 +21,7 @@ from raptor_rag_spark.operators.tree import (
     _level_path,
     _manifest_path,
     build_tree,
+    level0_rows,
     read_manifest,
     write_level,
 )
@@ -28,21 +29,15 @@ from raptor_rag_spark.streaming.incremental import append_level, incremental_lev
 
 
 def _delta(spark, seed, shift):
-    return (
+    return level0_rows(
         incremental_level0(
             synthetic_pages(spark, n=6, seed=seed).withColumn(
                 "page_id", F.col("page_id") + shift
             )
-        )
-        .withColumn("layer", F.lit(0))
-        .withColumn("cell_id", F.lit(None).cast("string"))
-        .withColumn("children", F.array().cast("array<long>"))
-        .select(
-            "node_id", "layer", "cell_id", "text", "children", "n_tokens",
-            "embedding", "x", "y",
-        )
-        .localCheckpoint(eager=True)
-    )
+        ),
+        DEFAULT_CONFIG,
+        DEFAULT_CONFIG.embedding_dim,
+    ).localCheckpoint(eager=True)
 
 
 @pytest.fixture()

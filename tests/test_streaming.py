@@ -1002,13 +1002,23 @@ def test_append_on_foreign_layout_raises_named_error(spark, small_tree, tmp_path
         incremental_update(spark, base, delta, DEFAULT_CONFIG)
 
 
-def test_level_reads_run_at_most_one_job(spark, small_tree):
-    """Levels >= 1 are read through the fixed level schema: building the
+def test_level_reads_run_at_most_one_job(spark, small_tree, tmp_path):
+    """Every level is read through the fixed level schema: building the
     DataFrame costs at most the partition listing (no schema-inference
     job), and the rows are the level's, quadkey prefixes intact. The
     listing is forced onto the cluster, as on a level with many
-    partitions, so a schema-inference job would show up as a second."""
-    from raptor_rag_spark.operators.tree import _level_path, read_level
+    partitions, so a schema-inference job would show up as a second.
+    Level 0 is one flat dir and runs no job at all. Leaves that arrive
+    with other numeric types (n_tokens long, embedding array<double>)
+    are written in the level schema, so their level 0 reads back
+    through it."""
+    from raptor_rag_spark.config import DEFAULT_CONFIG
+    from raptor_rag_spark.operators.tree import (
+        NODES_SCHEMA,
+        _level_path,
+        build_tree,
+        read_level,
+    )
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -1038,8 +1048,39 @@ def test_level_reads_run_at_most_one_job(spark, small_tree):
         map(tuple, on_disk.select(*cols).collect())
     )
 
+    lvl0, n_lvl0 = jobs_to_build(
+        "layout-read-level0", lambda: read_level(spark, small_tree, 0)
+    )
+    assert n_lvl0 == 0, n_lvl0
+    nodes_struct = spark.createDataFrame([], NODES_SCHEMA).schema.simpleString()
+    assert lvl0.schema.simpleString() == nodes_struct
+
+    wide = lvl0.select(
+        "node_id",
+        "text",
+        F.col("n_tokens").cast("long").alias("n_tokens"),
+        F.col("embedding").cast("array<double>").alias("embedding"),
+    )
+    base = str(tmp_path / "wide")
+    build_tree(spark, wide, base, DEFAULT_CONFIG, start_resolution=3, max_layers=0)
+    got = read_level(spark, base, 0)
+    assert got.schema.simpleString() == nodes_struct
+    cols = ["node_id", "n_tokens", "embedding"]
+    assert sorted(map(tuple, got.select(*cols).collect())) == sorted(
+        map(tuple, lvl0.select(*cols).collect())
+    )
+
 
 # ---------------------------------------------- one flat upper level
+
+
+def _day_leaves(spark, tag):
+    """The leaves of one 6-page day, pinned."""
+    return incremental_level0(
+        synthetic_pages(spark, n=6, seed=77)
+        .withColumn("page_id", F.col("page_id") + 50_000)
+        .withColumn("url", F.concat(F.lit(f"https://{tag}.test/"), F.col("page_id")))
+    ).localCheckpoint(eager=True)
 
 
 def _deferred_day(spark, base, tag):
@@ -1047,13 +1088,8 @@ def _deferred_day(spark, base, tag):
     from raptor_rag_spark.config import DEFAULT_CONFIG
     from raptor_rag_spark.streaming.incremental import incremental_update_planned
 
-    day = incremental_level0(
-        synthetic_pages(spark, n=6, seed=77)
-        .withColumn("page_id", F.col("page_id") + 50_000)
-        .withColumn("url", F.concat(F.lit(f"https://{tag}.test/"), F.col("page_id")))
-    ).localCheckpoint(eager=True)
     incremental_update_planned(
-        spark, base, day, DEFAULT_CONFIG, min_pending_per_cell=10**6
+        spark, base, _day_leaves(spark, tag), DEFAULT_CONFIG, min_pending_per_cell=10**6
     )
 
 
@@ -1171,13 +1207,17 @@ def _assert_flat_upper_levels(spark, base):
 
 
 def test_flush_and_build_job_counts_pinned(spark, tmp_path, count_jobs):
-    """Jobs of a 48-page build and of a forced flush of one deferred
-    day, with partition discovery forced onto the cluster as on a level
-    with more cells than the discovery threshold (32; level 1 of a
-    1,500-page tree has 56 start-resolution cells). One partition dir
-    per cell cost a listing job per read of an upper level: 8 build and
-    17 flush jobs; flat levels take 7 and 12. After both, every level
-    >= 1 is one flat dir of at most defaultParallelism + 1 part files."""
+    """Jobs of a 48-page build, of one deferred day that flushes no cell
+    and of a forced flush of that day, with partition discovery forced
+    onto the cluster as on a level with more cells than the discovery
+    threshold (32; level 1 of a 1,500-page tree has 56 start-resolution
+    cells). One partition dir per cell cost a listing job per read of an
+    upper level: 8 build and 17 flush jobs; flat levels took 7 and 12.
+    Reading level 0 through the level schema (no inference job) and
+    resuming without leaves cut the build, the day and the flush from
+    7, 10 and 12 jobs to 5, 8 and 9. After the build and the flush,
+    every level >= 1 is one flat dir of at most defaultParallelism + 1
+    part files."""
     from raptor_rag_spark.config import DEFAULT_CONFIG
     from raptor_rag_spark.operators.tree import build_tree
     from raptor_rag_spark.streaming.incremental import incremental_update_planned
@@ -1195,7 +1235,13 @@ def test_flush_and_build_job_counts_pinned(spark, tmp_path, count_jobs):
             lambda: build_tree(spark, leaves, base, DEFAULT_CONFIG, start_resolution=3),
         )
         _assert_flat_upper_levels(spark, base)
-        _deferred_day(spark, base, "pin")
+        day = _day_leaves(spark, "pin")
+        _, n_day = count_jobs(
+            "pin-day",
+            lambda: incremental_update_planned(
+                spark, base, day, DEFAULT_CONFIG, min_pending_per_cell=10**6
+            ),
+        )
         _, n_flush = count_jobs(
             "pin-flush",
             lambda: incremental_update_planned(
@@ -1205,5 +1251,6 @@ def test_flush_and_build_job_counts_pinned(spark, tmp_path, count_jobs):
         _assert_flat_upper_levels(spark, base)
     finally:
         spark.conf.set(listing, prev)
-    assert n_build <= 7, n_build
-    assert n_flush <= 12, n_flush
+    assert n_build <= 5, n_build
+    assert n_day <= 8, n_day
+    assert n_flush <= 9, n_flush

@@ -99,6 +99,16 @@ def test_resume_mid_build_identical(spark, leaves, tmp_path_factory):
     assert a == b
 
 
+def test_resume_without_level0_raises(spark, tmp_path):
+    """Resuming without leaves needs a committed level 0: on a base that
+    has none, build_tree raises a ValueError naming the base and writes
+    nothing."""
+    base = str(tmp_path / "no_tree")
+    with pytest.raises(ValueError, match="no level 0 under .*no_tree"):
+        build_tree(spark, None, base, CFG)
+    assert os.listdir(base) == []
+
+
 def test_node_ids_unique(spark, leaves, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("tree_ids"))
     nodes = build_tree(spark, leaves, base, CFG, start_resolution=3, embed_dim=32)

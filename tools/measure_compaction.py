@@ -21,7 +21,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from raptor_rag_spark.config import DEFAULT_CONFIG  # noqa: E402
 from raptor_rag_spark.datagen import synthetic_pages  # noqa: E402
 from raptor_rag_spark.operators.maintenance import _dir_stats, compact_level  # noqa: E402
-from raptor_rag_spark.operators.tree import _level_path, build_tree  # noqa: E402
+from raptor_rag_spark.operators.tree import _level_path, build_tree, level0_rows  # noqa: E402
 from raptor_rag_spark.session import get_spark  # noqa: E402
 from raptor_rag_spark.streaming.incremental import (  # noqa: E402
     append_level,
@@ -58,19 +58,14 @@ def main() -> None:
     leaves = incremental_level0(synthetic_pages(spark, n=400, seed=1))
     build_tree(spark, leaves, base, DEFAULT_CONFIG, start_resolution=3)
     for i in range(n_appends):
-        delta = (
+        delta = level0_rows(
             incremental_level0(
                 synthetic_pages(spark, n=40, seed=100 + i).withColumn(
                     "page_id", F.col("page_id") + 10_000 * (i + 1)
                 )
-            )
-            .withColumn("layer", F.lit(0))
-            .withColumn("cell_id", F.lit(None).cast("string"))
-            .withColumn("children", F.array().cast("array<long>"))
-            .select(
-                "node_id", "layer", "cell_id", "text", "children", "n_tokens",
-                "embedding", "x", "y",
-            )
+            ),
+            DEFAULT_CONFIG,
+            DEFAULT_CONFIG.embedding_dim,
         )
         append_level(delta, base, 0, {"input": f"micro-{i}"}, append_id=f"mb{i}")
 
