@@ -1229,20 +1229,50 @@ def main() -> None:
     full_path = os.path.join(out_dir, "bench_latest_full.json")
     with open(full_path, "w") as fh:
         json.dump(result, fh, indent=1)
-    print(json.dumps(_final_line(result, os.path.relpath(full_path, os.getcwd()))))
+    print(_line_text(_final_line(result, os.path.relpath(full_path, os.getcwd()))))
+
+
+def _short_keys(names) -> dict[str, str]:
+    """Each name -> a short key: the first letter of each ``_`` word (a
+    word led by a digit kept whole), taking more letters of every word
+    until the key is unused, over the names in sorted order
+    (``incremental_append_planned_5days`` -> ``iap5days``). A pure
+    function of the name set, so a reader of the final line rebuilds
+    the map from the slot names of the full result."""
+    out: dict[str, str] = {}
+    used: set[str] = set()
+    for name in sorted(names):
+        words = name.split("_")
+        key = name
+        for n in range(1, max(map(len, words)) + 1):
+            short = "".join(w if w[:1].isdigit() else w[:n] for w in words)
+            if short not in used:
+                key = short
+                break
+        out[name] = key
+        used.add(key)
+    return out
+
+
+def _line_text(line: dict) -> str:
+    """The final line as printed: compact JSON, no padding spaces."""
+    return json.dumps(line, separators=(",", ":"))
 
 
 def _final_line(result: dict, full_path: str, limit: int = 1900) -> dict:
     """Summary for the single final stdout line. The driver keeps only
     the LAST ~2000 bytes of stdout and json-parses the final line;
     rounds 3-4 recorded ``parsed: null`` with a mid-line fragment
-    because the full result outgrew that buffer. This line is
-    guaranteed <= ``limit`` bytes: both scaling pairs WITHOUT the
-    raw-run lists, every headline throughput/recall field, and as many
-    of the slowest per-query timings as fit (``queries_omitted`` says
-    how many were dropped); the complete result incl. all 80+ query
-    timings and raw scaling runs is at ``full_result``."""
+    because the full result outgrew that buffer. This line, as printed
+    by :func:`_line_text`, is guaranteed <= ``limit`` bytes: both
+    scaling pairs WITHOUT the raw-run lists, every headline throughput
+    field, and the per-slot timings rounded to 0.1 s, the throughput
+    fields and the slots keyed by :func:`_short_keys`. A 90-slot suite
+    fits whole; past the limit the fastest slots are shed first
+    (``queries_omitted`` says how many). The complete result incl. raw
+    scaling runs is at ``full_result``."""
     env = result.get("env", {})
+    tkeys = _short_keys(result["throughput"])
     out = {
         "metric": result["metric"],
         "value": result["value"],
@@ -1251,20 +1281,23 @@ def _final_line(result: dict, full_path: str, limit: int = 1900) -> dict:
         "full_result": full_path,
         "n_queries": len(result["queries"]),
         "cpu_steal_frac": env.get("cpu_steal_frac"),
-        "throughput": result["throughput"],
+        "throughput": {tkeys[k]: v for k, v in result["throughput"].items()},
     }
     scaling = result.get("scaling")
     if scaling:
-        s = {k: v for k, v in scaling.items() if k != "all_runs_sec"}
+        # the raw runs are the bulk; the rates are docs / elapsed
+        dropped = ("all_runs_sec", "docs_per_sec_small", "docs_per_sec_large")
+        s = {k: v for k, v in scaling.items() if k not in dropped}
         sec = s.get("secondary_2v8")
         if sec:
             s["secondary_2v8"] = {k: v for k, v in sec.items() if k != "all_runs_sec"}
         out["scaling"] = s
+    qkeys = _short_keys(result["queries"])
     ordered = sorted(result["queries"].items(), key=lambda kv: -kv[1])
     for keep in range(len(ordered), -1, -1):
-        out["queries"] = dict(sorted(ordered[:keep]))
+        out["queries"] = {qkeys[k]: round(v, 1) for k, v in sorted(ordered[:keep])}
         out["queries_omitted"] = len(ordered) - keep
-        if len(json.dumps(out)) <= limit:
+        if len(_line_text(out)) <= limit:
             return out
     # unreachable in practice: even queries={} leaves ~1 KiB of fixed
     # fields; shed the throughput block as the final fallback

@@ -65,19 +65,3 @@ def fnv1a_64_batch(strs: list[str]) -> np.ndarray:
     out = np.empty(n, dtype=np.uint64)
     out[order] = h
     return out
-
-
-def hash_family(values: list[str], n_hashes: int) -> np.ndarray:
-    """n_hashes independent 64-bit hashes per value, shape (len, n_hashes).
-
-    h_i(x) = (a_i * base(x) + b_i) mod 2^31-1 — a standard universal
-    family over one strong base hash; vectorized in numpy. The prime
-    is kept at 2^31-1 so a*base fits in uint64 without wraparound.
-    """
-    p = (1 << 31) - 1
-    rng = np.random.RandomState(1234)
-    a = rng.randint(1, p, size=n_hashes).astype(np.uint64)
-    b = rng.randint(0, p, size=n_hashes).astype(np.uint64)
-    base = np.array([fnv1a_64_str(v) for v in values], dtype=np.uint64) % p
-    out = (base[:, None] * a[None, :] + b[None, :]) % p
-    return out

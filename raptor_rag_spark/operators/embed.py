@@ -210,20 +210,3 @@ def select_embedding_model(
     175-179). Column pruning still drops the map when only the
     projected vector is used downstream."""
     return df.withColumn(out_col, F.col(map_col).getItem(model))
-
-
-def normalize_embeddings(df: DataFrame, col: str = "embedding") -> DataFrame:
-    """L2-normalize array<float> JVM-side (no Python): v / sqrt(sum v^2).
-
-    Mirrors the reference's normalization check
-    (embedding_service/mean_pooling_bug_test.py:147-148).
-    """
-    norm = F.sqrt(
-        F.aggregate(
-            F.col(col), F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
-    )
-    return df.withColumn(
-        col,
-        F.transform(F.col(col), lambda x: (x.cast("double") / norm).cast("float")),
-    )

@@ -379,7 +379,7 @@ def compact_level(
     appends must keep no-opping against it after their rows moved into
     compacted files."""
     from raptor_rag_spark.operators.tree import (
-        _level_path,
+        _flat_level_path,
         _manifest_path,
         read_manifest,
         recover_levels,
@@ -388,7 +388,7 @@ def compact_level(
 
     recover_levels(spark, base)
     manifest = read_manifest(base, layer)
-    path = _level_path(base, layer)
+    path = _flat_level_path(base, layer)
     committed = {a["id"] for a in manifest.get("appends", [])}
     scrubbed = scrub_orphan_appends(path, "inflight", committed)
     report = compact_parquet_dir(

@@ -1,7 +1,7 @@
 """Approximate-nearest-neighbor similarity search over an embedding
-column — brute-force cosine top-k as the exact baseline, the tile
-(quadkey-bucket) pruned variant as the scale path (IVF/LSH analog:
-the cell grid is the coarse quantizer, the ring join is the probe).
+column: the multi-projection tile index (IVF/LSH analog: the cell grid
+is the coarse quantizer, the ring join is the probe), measured against
+knn.brute_force_knn, and tile-bucketed near-duplicate pairs.
 """
 
 from __future__ import annotations
@@ -14,14 +14,12 @@ from raptor_rag_spark.operators.knn import (
     _score_candidates,
     adaptive_candidates,
     brute_force_knn,
-    tile_knn,
 )
 from raptor_rag_spark.operators.tile import (
     adaptive_tile_assignments,
     cell_key_col,
     chosen_cells_from_occupancy,
     reduce_2d,
-    tile_assignments,
 )
 
 
@@ -615,38 +613,6 @@ class TileAnnIndex:
                 cands.join(self.nodes, "node_id"), q, strategy=scoring
             )
         return _rank_and_take(scored, k)
-
-
-def cosine_topk(
-    queries: DataFrame,
-    items: DataFrame,
-    k: int = 10,
-    method: str = "brute",
-    resolution: int = 3,
-    query_id: str = "query_id",
-    item_id: str = "node_id",
-    dim: int | None = None,
-) -> DataFrame:
-    """(query_id, node_id, dist, rank) top-k cosine neighbors.
-
-    method='brute': exact; method='tiled': tile-pruned with ring
-    expansion until k hits (exact within the explored region — recall
-    is measured, not assumed; see bench.py).
-    """
-    items = items.withColumnRenamed(item_id, "node_id") if item_id != "node_id" else items
-    if method == "brute":
-        return brute_force_knn(queries, items, k=k, query_id=query_id)
-    if dim is None:
-        dim = len(items.select("embedding").first()[0])
-    items_xy = reduce_2d(items, dim=dim)
-    tiles = tile_assignments(items_xy, "node_id", [resolution])
-    q_xy = reduce_2d(
-        queries.withColumnRenamed("q_embedding", "embedding"), dim=dim
-    ).withColumnRenamed("embedding", "q_embedding")
-    grid_n = 1 << (resolution + 1)
-    return tile_knn(
-        q_xy, items, tiles, resolution=resolution, k=k, ring=1, max_ring=grid_n, query_id=query_id
-    )
 
 
 def self_similarity_pairs(

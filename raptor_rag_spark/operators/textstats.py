@@ -46,14 +46,6 @@ def stopword_hits(col: Column, lang: str) -> Column:
     return F.size(F.filter(words_col(col), lambda w: F.array_contains(stops, w)))
 
 
-def lang_scores(col: Column) -> Column:
-    """map<lang, hits> over all stopword lists."""
-    entries = []
-    for lang in sorted(STOPWORDS):
-        entries.extend([F.lit(lang), stopword_hits(col, lang)])
-    return F.create_map(*entries)
-
-
 def lang_id(col: Column) -> Column:
     """argmax language by stopword hits; 'und' (undetermined) when all
     zero. Deterministic tie-break: lexicographically smallest lang."""

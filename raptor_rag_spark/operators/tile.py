@@ -166,6 +166,20 @@ def np_cell_keys(
     return ix, iy, np_morton_keys(ix, iy, resolution)
 
 
+def np_quadkeys(keys: np.ndarray) -> np.ndarray:
+    """Morton keys (each carrying its own resolution) -> cell_id_col's
+    quadkey strings: the interleave read as r+1 base-4 digits."""
+    keys = np.asarray(keys, dtype=np.int64)
+    res, m = keys >> 32, keys & 0xFFFFFFFF
+    out = np.empty(len(keys), dtype=object)
+    for r in np.unique(res):
+        sel = res == r
+        shifts = 2 * np.arange(r, -1, -1, dtype=np.int64)
+        digits = ((m[sel, None] >> shifts) & 3).astype(np.uint8) + ord("0")
+        out[sel] = np.ascontiguousarray(digits).view(f"S{r + 1}")[:, 0].astype(str)
+    return out
+
+
 def sorted_keys(keys) -> np.ndarray:
     """A driver-side key set (or array) as the sorted unique int64
     array :func:`in_sorted` searches — built once per call, before it is

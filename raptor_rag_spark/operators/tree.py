@@ -7,17 +7,27 @@ Recasts the reference layer loop
   a per-layer resolution (coarser each layer up the tree);
 - oversized-cluster recursion (token sum > 3500 re-clusters,
   cluster_utils.py:166-181) -> cells over the token cap re-tile their
-  members one resolution finer (driver fixed-point loop, bounded by
-  max_resolution) — this same cap bounds every pandas group size;
+  members one resolution finer (bounded by max_resolution) — this same
+  cap bounds every per-cell group size;
 - cluster summarization (LLM, cluster_tree_builder.py:66-85) -> a
-  deterministic extractive summarizer (applyInPandas; an LLM endpoint
-  drops into ``summarize_fn``);
+  deterministic extractive summarizer (an LLM endpoint drops into
+  ``summarize_fn``), applied per cell by one kernel,
+  :func:`summarize_cell`. Where it runs is chosen by size: a level
+  whose child level fits the driver (planutil.fits_driver on the
+  child's manifest rows) is read with pyarrow and summarized by a
+  pandas groupby on the driver, then written with one Spark job; a
+  larger one runs the same kernel in ``applyInPandas``
+  (:func:`build_level`);
 - termination: new layer has <= min_level_nodes nodes or no reduction
   (reference cluster_tree_builder.py:95-100);
 - every level checkpoints to parquet with a manifest carrying
   per-partition row counts, input lineage and timings (north_rule:
   resume mid-build) — ``build_tree`` restarts from the last complete
   level.
+
+One level loop, :func:`rebuild_levels`, writes every level >= 1: a
+build is a rebuild of every cell, and an incremental flush a rebuild
+of the affected cells, under the same stop rules.
 
 Node ids are allocated WITHOUT any global sort or driver round-trip:
 a parent node's id encodes (layer, resolution, quadkey-as-int), which
@@ -33,21 +43,26 @@ import os
 import time
 import uuid
 from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from raptor_rag_spark.config import DEFAULT_CONFIG, EngineConfig
+from raptor_rag_spark.functions.planutil import fits_driver, plan_is_bare_scan, plan_splits
 from raptor_rag_spark.operators import maintenance
 from raptor_rag_spark.operators.chunk import chunk_documents, split_text
-from raptor_rag_spark.operators.embed import embed_texts
+from raptor_rag_spark.operators.embed import embed_texts, hash_embed_batch
 from raptor_rag_spark.operators.tile import (
     cell_id_col,
     cell_key_col,
+    np_cell_keys,
+    np_quadkeys,
     pick_open_cells,
-    quadkey,
+    projection_matrix,
     reduce_2d,
     sorted_keys,
     tile,
@@ -55,12 +70,13 @@ from raptor_rag_spark.operators.tile import (
 from raptor_rag_spark.tokenizer import DEFAULT_TOKENIZER
 
 # the columns of every level (level0_rows shapes level 0 into it, and
-# build_level(with_embedding=True) emits it): every level is written in
-# this schema and read through it, never inferred
+# both level steps emit it): every level is written in this schema and
+# read through it, never inferred
 NODES_SCHEMA = (
     "node_id long, layer int, cell_id string, text string, "
     "children array<long>, n_tokens int, embedding array<float>, x double, y double"
 )
+NODES_COLUMNS = [field.split()[0] for field in NODES_SCHEMA.split(", ")]
 
 
 # ------------------------------------------------------- summarizer
@@ -122,9 +138,10 @@ def http_summarize_fn(
     Transport (retry/4xx/backoff discipline) is the shared
     :func:`raptor_rag_spark.functions.httpclient.post_json_with_retries`
     — one implementation for both model seams. Stdlib-only (urllib);
-    runs inside the applyInPandas worker, one HTTP call per cell.
-    Returns the plug-in ``(texts, max_tokens) -> str`` callable
-    ``build_level`` expects."""
+    runs where the level step runs (an applyInPandas worker, or a
+    driver thread of build_level_local), one HTTP call per cell.
+    Returns the plug-in ``(texts, max_tokens) -> str`` callable the
+    level steps expect."""
     from raptor_rag_spark.functions.httpclient import post_json_with_retries
 
     if max_retries < 1:
@@ -159,6 +176,62 @@ def http_summarize_fn(
         return out
 
     return fn
+
+
+def _summarizer(cfg: EngineConfig, summarize_fn=None):
+    """(summarize, tokenizer factory) of a level step: ``summarize_fn``,
+    else ``cfg.summarize_fn``, else the extractive summarizer. Parent
+    n_tokens (and the extractive token budget) count in the dialect the
+    leaves were chunked with, ``cfg.tokenizer_factory`` — a BPE-chunked
+    tree with regex parent counts would mix dialects in every token
+    budget downstream. The factory runs where the kernel runs (per
+    worker cached for BPE); the default is the regex tokenizer."""
+    tok_factory = cfg.tokenizer_factory or (lambda: DEFAULT_TOKENIZER)
+    summarize = (
+        summarize_fn
+        or cfg.summarize_fn
+        or (lambda texts, mt: extractive_summary(texts, mt, tokenizer=tok_factory()))
+    )
+    return summarize, tok_factory
+
+
+def summarize_cell(
+    key,
+    pdf: pd.DataFrame,
+    summarize: Callable[[list[str], int], str],
+    tok_factory: Callable[[], object],
+    max_tokens: int,
+    dim: int | None = None,
+    proj: np.ndarray | None = None,
+) -> pd.DataFrame:
+    """One cell's parent row (cell_id, resolution, text, children,
+    n_tokens) from its members (node_id, resolution, text): the member
+    texts in node_id order are summarized, the children are the member
+    ids. Both level steps run it: ``applyInPandas`` per cell group in
+    :func:`build_level`, a pandas groupby on the driver in
+    :func:`build_level_local`.
+
+    With ``dim`` the row also carries the parent's hash embedding and
+    its x, y: the (1, dim) @ proj.T float64 product reduce_2d runs (a
+    batched (n, dim) product can differ in the last ulp)."""
+    pdf = pdf.sort_values("node_id")
+    text = summarize(list(pdf["text"]), max_tokens)
+    out = pd.DataFrame(
+        {
+            "cell_id": [key[0]],
+            "resolution": [int(pdf["resolution"].iloc[0])],
+            "text": [text],
+            "children": [[int(v) for v in pdf["node_id"]]],
+            "n_tokens": [len(tok_factory().encode(text))],
+        }
+    )
+    if dim is not None:
+        emb = hash_embed_batch(pd.Series([text]), dim)  # (1, dim) f32
+        xy = emb.astype("float64") @ proj.T  # = reduce_2d's matmul
+        out["embedding"] = list(emb)
+        out["x"] = xy[:, 0]
+        out["y"] = xy[:, 1]
+    return out
 
 
 def node_id_for_cell(layer: int):
@@ -271,8 +344,6 @@ def _assign_cells_with_cap(
     # chunk/embed pipeline), pin it once so the upstream plan does not
     # evaluate twice; cheap re-scans (level files, checkpoints) are
     # left alone
-    from raptor_rag_spark.functions.planutil import plan_is_bare_scan
-
     if not plan_is_bare_scan(nodes):
         nodes = nodes.localCheckpoint(eager=False)
     # ONE skinny aggregation (map-side combine) of the exploded ladder
@@ -302,8 +373,6 @@ def _assign_cells_with_cap(
     # (the kernel sees only x, y)
     b_split = nodes.sparkSession.sparkContext.broadcast(splittable)
     base_r, max_r = resolutions[0], resolutions[-1]
-
-    import numpy as np
 
     @F.pandas_udf("integer")
     def pick_res(it: "Iterator[tuple[pd.Series, pd.Series]]") -> "Iterator[pd.Series]":
@@ -387,8 +456,11 @@ def build_level(
     with_embedding: bool = False,
     embed_dim: int | None = None,
 ) -> DataFrame:
-    """One layer step: tile current nodes -> per-cell summarize ->
-    parent nodes (node_id, layer, cell_id, text, children, n_tokens).
+    """One layer step in Spark: tile current nodes -> per-cell
+    summarize (:func:`summarize_cell` in ``applyInPandas``) -> parent
+    nodes (node_id, layer, cell_id, text, children, n_tokens). The tree
+    loop runs it for levels whose child level does not fit the driver
+    (:func:`build_level_local` is its driver twin).
 
     Input needs: node_id, text, n_tokens, x, y.
 
@@ -401,50 +473,19 @@ def build_level(
     projection is the same float64 matmul reduce_2d runs). The tree
     build paths use this; the bare parent surface stays the default.
     """
-    # tokenizer seam: parent n_tokens (and the extractive fallback's
-    # token budget) must count in the SAME dialect the leaves were
-    # chunked with — a BPE-chunked tree with regex parent counts would
-    # silently mix dialects in every downstream token budget. The
-    # factory runs inside the worker (per-worker cached for BPE);
-    # default is the oracle-green regex tokenizer, unchanged.
-    tok_factory = cfg.tokenizer_factory or (lambda: DEFAULT_TOKENIZER)
-    summ = (
-        summarize_fn
-        or cfg.summarize_fn
-        or (lambda texts, mt: extractive_summary(texts, mt, tokenizer=tok_factory()))
-    )
+    summarize, tok_factory = _summarizer(cfg, summarize_fn)
     assigned = _assign_cells_with_cap(nodes, resolution, cfg)
 
     out_schema = "cell_id string, resolution int, text string, children array<long>, n_tokens int"
     max_summary = cfg.summary_max_tokens
+    dim = proj = None
     if with_embedding:
-        from raptor_rag_spark.operators.embed import hash_embed_batch
-        from raptor_rag_spark.operators.tile import projection_matrix
-
         dim = embed_dim or cfg.embedding_dim
         proj = projection_matrix(dim, cfg.seed)  # small, ships in closure
         out_schema += ", embedding array<float>, x double, y double"
 
-    def summarize_cell(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("node_id")
-        texts = list(pdf["text"])
-        text = summ(texts, max_summary)
-        out = pd.DataFrame(
-            {
-                "cell_id": [key[0]],
-                "resolution": [int(pdf["resolution"].iloc[0])],
-                "text": [text],
-                "children": [[int(v) for v in pdf["node_id"]]],
-                "n_tokens": [len(tok_factory().encode(text))],
-            }
-        )
-        if with_embedding:
-            emb = hash_embed_batch(pd.Series([text]), dim)  # (1, dim) f32
-            xy = emb.astype("float64") @ proj.T  # = reduce_2d's matmul
-            out["embedding"] = list(emb)
-            out["x"] = xy[:, 0]
-            out["y"] = xy[:, 1]
-        return out
+    def kernel(key, pdf):
+        return summarize_cell(key, pdf, summarize, tok_factory, max_summary, dim, proj)
 
     # explicit hash repartition BEFORE the grouped UDF: the summarizer
     # is CPU-bound Python, but its shuffle input is small in BYTES, so
@@ -455,9 +496,7 @@ def build_level(
     par = nodes.sparkSession.sparkContext.defaultParallelism
     parents = assigned.select(
         "cell_id", "resolution", "node_id", "text", "n_tokens"
-    ).repartition(par, "cell_id").groupBy("cell_id").applyInPandas(
-        summarize_cell, out_schema
-    )
+    ).repartition(par, "cell_id").groupBy("cell_id").applyInPandas(kernel, out_schema)
 
     mk_id = node_id_for_cell(layer)
     extra = ("embedding", "x", "y") if with_embedding else ()
@@ -470,6 +509,68 @@ def build_level(
         "n_tokens",
         *extra,
     )
+
+
+def _pick_cells_local(x: np.ndarray, y: np.ndarray, n_tokens: np.ndarray,
+                      start_res: int, cfg: EngineConfig) -> np.ndarray:
+    """The cap-split pick of :func:`_assign_cells_with_cap` on driver
+    arrays: per-cell (token sum, count) over the sub-max ladder from
+    the numpy cell keys, the splittable cells (sum over the cap, more
+    than one member), and each point's first non-splittable ancestor
+    by the same tile.pick_open_cells. Returns each point's cell key."""
+    if cfg.max_resolution <= start_res:
+        return np_cell_keys(x, y, start_res)[2]
+    ladder = [np_cell_keys(x, y, r)[2] for r in range(start_res, cfg.max_resolution)]
+    keys, inv = np.unique(np.concatenate(ladder), return_inverse=True)
+    sums = np.bincount(inv, weights=np.tile(n_tokens.astype(np.float64), len(ladder)))
+    splittable = keys[(sums > cfg.max_tokens_in_cluster) & (np.bincount(inv) > 1)]
+    return pick_open_cells(x, y, start_res, cfg.max_resolution, splittable)[1]
+
+
+def build_level_local(
+    nodes: pd.DataFrame,
+    layer: int,
+    resolution: int,
+    cfg: EngineConfig,
+    dim: int,
+    summarize_fn: Callable[[list[str], int], str] | None = None,
+    threads: int = 1,
+) -> pd.DataFrame:
+    """Driver twin of ``build_level(with_embedding=True)`` over a pandas
+    frame of child rows (node_id, text, n_tokens, x, y): the same
+    cap-split rule on numpy cell keys, the same :func:`summarize_cell`
+    per cell through a pandas groupby, the same node-id rule. Returns
+    the parents in NODES_COLUMNS.
+
+    Cells are summarized on ``threads`` threads (map keeps cell order),
+    so a live summarizer such as :func:`http_summarize_fn` keeps the
+    concurrency of the Spark step."""
+    summarize, tok_factory = _summarizer(cfg, summarize_fn)
+    proj = projection_matrix(dim, cfg.seed)
+    keys = _pick_cells_local(
+        nodes["x"].to_numpy(np.float64), nodes["y"].to_numpy(np.float64),
+        nodes["n_tokens"].to_numpy(), resolution, cfg,
+    )
+    members = nodes.assign(resolution=(keys >> 32).astype(np.int32), cell_id=np_quadkeys(keys))
+
+    def one(cell):
+        key, pdf = cell
+        return summarize_cell(
+            (key,), pdf, summarize, tok_factory, cfg.summary_max_tokens, dim, proj
+        )
+
+    with ThreadPoolExecutor(max(1, threads)) as pool:
+        parts = list(pool.map(one, members.groupby("cell_id", sort=True)))
+    if not parts:
+        return pd.DataFrame(columns=NODES_COLUMNS)
+    parents = pd.concat(parts, ignore_index=True)
+    # node_id_for_cell: layer<<48 | res<<40 | cell-as-int
+    parents["node_id"] = [
+        (layer << 48) + (int(r) << 40) + int(c, 4)
+        for c, r in zip(parents["cell_id"], parents["resolution"])
+    ]
+    parents["layer"] = layer
+    return parents[NODES_COLUMNS]
 
 
 # ------------------------------------------------- checkpointed build
@@ -568,20 +669,51 @@ def storage_partition_counts(path: str) -> dict[str, int]:
     return counts
 
 
-# levels >= 1 written before the flat layout are partitioned into
-# ``cell_pfx=`` dirs: the column is read as a STRING (default partition-
-# type inference parses the quadkey prefix '01230' as the integer 1230)
-# and dropped, so such a tree reads like any other until its first
-# rewrite replaces the dir
-_LEVEL_READ_SCHEMA = NODES_SCHEMA + ", cell_pfx string"
+# the on-disk level layout this code reads and writes: every level is
+# one flat parquet dir. Caches of built trees key on it
+LEVEL_LAYOUT_VERSION = "flat1"
+
+
+class LevelLayoutError(ValueError):
+    """A level dir in the ``cell_pfx=`` partition layout that levels >= 1
+    were written in before the flat layout; no reader takes it."""
+
+
+def _flat_level_path(base: str, layer: int) -> str:
+    """The level's dir, checked to be flat (LevelLayoutError if not)."""
+    path = _level_path(base, layer)
+    if os.path.isdir(path) and any(e.startswith("cell_pfx=") for e in os.listdir(path)):
+        raise LevelLayoutError(
+            f"level {layer} under {base!r} is in the cell_pfx= partition layout "
+            "of trees written before the flat levels; rebuild the tree from its leaves"
+        )
+    return path
 
 
 def read_level(spark: SparkSession, base: str, layer: int) -> DataFrame:
     """Level checkpoint reader: every level is read through the fixed
     NODES_SCHEMA, so building the DataFrame runs no schema-inference
     job, only the file listing."""
-    path = _level_path(base, layer)
-    return spark.read.schema(_LEVEL_READ_SCHEMA).parquet(path).drop("cell_pfx")
+    return spark.read.schema(NODES_SCHEMA).parquet(_flat_level_path(base, layer))
+
+
+def read_level_local(
+    base: str, layer: int, columns: list[str] | None = None
+) -> pd.DataFrame:
+    """The level's rows (``columns`` of NODES_SCHEMA, default all) as a
+    pandas frame read on the driver with pyarrow — no Spark job. Like
+    Spark, files whose names start with ``_`` or ``.`` are skipped (the
+    ``_inflight_*`` staging dirs, ``_savetoken``, checksums)."""
+    import pyarrow.dataset as ds
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    dataset = ds.dataset(
+        _flat_level_path(base, layer),
+        schema=to_arrow_schema(StructType.fromDDL(NODES_SCHEMA)),
+        format="parquet",
+        ignore_prefixes=["_", "."],
+    )
+    return dataset.to_table(columns=columns).to_pandas()
 
 
 def read_collapsed(spark: SparkSession, base: str) -> DataFrame:
@@ -616,6 +748,210 @@ def tree_start_resolution(base: str) -> int | None:
     return None if recorded is None else int(recorded)
 
 
+def _require_start_resolution(base: str) -> int:
+    """The tree's start resolution (:func:`tree_start_resolution`);
+    raises ValueError naming the base when the tree records none."""
+    res = tree_start_resolution(base)
+    if res is None:
+        raise ValueError(
+            f"tree at {base!r} records no start resolution (no level-0 "
+            "start_resolution); rebuild it with build_tree"
+        )
+    return res
+
+
+def _cells_at(xy: np.ndarray, res: int) -> set[str]:
+    """The distinct resolution-``res`` cell ids of the (x, y) rows."""
+    return set(np_quadkeys(np.unique(np_cell_keys(xy[:, 0], xy[:, 1], res)[2])))
+
+
+def _lineage(base: str, layer: int, res: int, affected: set[str] | None,
+             n_replaced: int, n_kept: int):
+    """A level's manifest lineage: its input level when every cell was
+    built, else the incremental counts (recomputed = written - kept)."""
+    if affected is None:
+        return {"input": _level_path(base, layer - 1), "resolution": res}
+    info = {
+        "input": "incremental",
+        "resolution": res,
+        "affected_cells": len(affected),
+        "replaced_parents": n_replaced,
+    }
+    return lambda rows: {**info, "recomputed_parents": rows - n_kept}
+
+
+def _rebuild_level_spark(spark, base, layer, res, affected, cfg, dim, summarize_fn,
+                         n_child, track):
+    """Level step for a child level too large for the driver: the
+    affected cells' children through :func:`build_level`, the kept
+    parents as a bare scan, one rewrite. The replaced parents' x, y are
+    collected before it, the recomputed ones' after it when ``track``
+    (the next level exists and needs its affected set). Returns
+    (manifest, replaced count, changed x, y)."""
+    child = read_level(spark, base, layer - 1)
+    if affected is not None:
+        # children selected by their OWN x, y at this resolution, which
+        # is what the level groups on
+        child = (
+            tile(child, res)
+            .drop("ix", "iy", "resolution")
+            .filter(F.col("cell_id").isin(sorted(affected)))
+        )
+    parents = build_level(
+        child, layer, res, cfg, summarize_fn=summarize_fn, with_embedding=True,
+        embed_dim=dim,
+    ).select(*NODES_COLUMNS)
+    if affected is None:
+        return write_level(parents, base, layer, _lineage(base, layer, res, None, 0, 0)), 0, None
+    # a parent's start-res cell is its cell_id prefix; '_' keeps a null
+    # cell_id out of every affected set
+    in_affected = F.coalesce(F.substring("cell_id", 1, res + 1), F.lit("_")).isin(
+        sorted(affected)
+    )
+    old = read_level(spark, base, layer)
+    replaced = np.array(old.filter(in_affected).select("x", "y").collect(), np.float64)
+    replaced = replaced.reshape(-1, 2)
+    n_kept = int(read_manifest(base, layer)["rows"]) - len(replaced)
+    # the kept side is a bare scan, coalesced to its size so the level's
+    # file count stays bounded across rewrites
+    kept = old.filter(~in_affected)
+    manifest = write_level(
+        kept.coalesce(plan_splits(kept)).unionByName(parents), base, layer,
+        _lineage(base, layer, res, affected, len(replaced), n_kept),
+    )
+    changed = replaced
+    if track:
+        new = read_level(spark, base, layer).filter(in_affected).select("x", "y").collect()
+        changed = np.concatenate([replaced, np.array(new, np.float64).reshape(-1, 2)])
+    return manifest, len(replaced), changed
+
+
+def _rebuild_level_local(spark, base, layer, res, affected, cfg, dim, summarize_fn,
+                         n_child, track):
+    """Level step for a child level that fits the driver: the child
+    level read with pyarrow (no job), :func:`build_level_local` over
+    the affected cells' children, the kept parents from a pyarrow read
+    of the level, and one ``write_level(local_df(...))`` job. Returns
+    (manifest, replaced count, changed x, y); ``track`` is moot, the
+    changed rows are at hand."""
+    from raptor_rag_spark.functions.localtab import local_df
+
+    child = read_level_local(base, layer - 1, ["node_id", "text", "n_tokens", "x", "y"])
+    if affected is not None:
+        cells = np_quadkeys(np_cell_keys(child["x"].to_numpy(), child["y"].to_numpy(), res)[2])
+        child = child[np.isin(cells, list(affected))]
+    parents = build_level_local(
+        child, layer, res, cfg, dim, summarize_fn, spark.sparkContext.defaultParallelism
+    )
+    rows, n_replaced, n_kept = parents, 0, 0
+    changed = parents[["x", "y"]].to_numpy(np.float64)
+    if affected is not None:
+        old = read_level_local(base, layer)
+        hit = old["cell_id"].str[: res + 1].isin(affected).to_numpy()
+        n_replaced, n_kept = int(hit.sum()), int((~hit).sum())
+        parts = [part for part in (old[~hit], parents) if len(part)]
+        rows = pd.concat(parts, ignore_index=True) if parts else parents
+        changed = np.concatenate([old.loc[hit, ["x", "y"]].to_numpy(np.float64), changed])
+    # plain Python values: the rows convert with Arrow conversion on or off
+    values = zip(
+        rows["node_id"].tolist(), rows["layer"].tolist(), rows["cell_id"].tolist(),
+        rows["text"].tolist(), [[int(c) for c in v] for v in rows["children"]],
+        rows["n_tokens"].tolist(), [np.asarray(v, np.float32).tolist() for v in rows["embedding"]],
+        rows["x"].tolist(), rows["y"].tolist(),
+    )
+    manifest = write_level(
+        local_df(spark, values, NODES_SCHEMA).coalesce(1), base, layer,
+        _lineage(base, layer, res, affected, n_replaced, n_kept),
+    )
+    return manifest, n_replaced, changed
+
+
+def _drop_levels_above(base: str, layer: int) -> None:
+    """Remove the manifests of every level above ``layer``, top first,
+    so the levels stay contiguous at every step: without its manifest a
+    level does not exist (its dir stays until the next write)."""
+    for k in range(last_complete_level(base), layer, -1):
+        os.remove(_manifest_path(base, k))
+
+
+def rebuild_levels(
+    spark: SparkSession,
+    base: str,
+    cfg: EngineConfig = DEFAULT_CONFIG,
+    dim: int | None = None,
+    affected_l1=None,
+    max_layers: int = 8,
+    summarize_fn: Callable[[list[str], int], str] | None = None,
+) -> dict:
+    """The one level loop: (re)write levels 1.. of the tree under
+    ``base`` over its committed level 0. A build rebuilds every cell;
+    an incremental flush rebuilds the start-resolution cells whose
+    children changed; both apply the build's stop rules.
+
+    ``affected_l1`` is the level-1 cells (resolution-start cell ids) to
+    rebuild; None means every cell. Per level L (resolution start -
+    (L-1)), the parents of the affected cells are recomputed from all
+    their children (a cell's parents depend only on the children inside
+    it, by the quadkey prefix property) and the other parents are kept,
+    in one whole rewrite behind the level's manifest (write_level). A
+    level that does not exist yet, or whose every cell is affected,
+    keeps none. The next level's affected cells are those containing a
+    recomputed or a replaced parent; a level with none is left as it is.
+
+    Stop rules, as the reference's loop (cluster_tree_builder.py:95-100):
+    no level above one with <= ``cfg.min_level_nodes`` rows or above
+    ``max_layers``, and a level that does not reduce its child level is
+    retracted. A stop at a level this call wrote (level 0 counts as
+    written unless ``affected_l1`` is empty) removes the manifests of
+    the levels above it; a stop at an unchanged level removes nothing,
+    so resuming a tree under other stop settings keeps its levels.
+
+    Each level runs on the driver when its child level's manifest rows
+    fit the driver (planutil.fits_driver), else in Spark; levels shrink
+    going up, so the loop switches at most once. Callers recover the
+    tree first (:func:`recover_levels`). Returns {recomputed_parents,
+    replaced_parents, affected_cells_l1}."""
+    dim = dim or cfg.embedding_dim
+    start = _require_start_resolution(base)
+    affected = None if affected_l1 is None else set(affected_l1)
+    stats = {
+        "recomputed_parents": 0,
+        "replaced_parents": 0,
+        "affected_cells_l1": 0 if affected is None else len(affected),
+    }
+    layer, n_child = 0, int(read_manifest(base, 0)["rows"])
+    # whether this call (or, for level 0, its caller) wrote the level
+    # the loop stands on: only a written level may stop the tree below
+    # its committed top, so a pure resume never removes a level
+    wrote = affected is None or bool(affected)
+    while layer < max_layers and n_child > cfg.min_level_nodes:
+        lvl = layer + 1
+        res = max(start - layer, 0)
+        if not os.path.exists(_manifest_path(base, lvl)):
+            affected = None  # a new level: every cell
+        wrote = affected is None or bool(affected)
+        if not wrote:
+            n_lvl = int(read_manifest(base, lvl)["rows"])  # unchanged
+        else:
+            step = _rebuild_level_local if fits_driver(n_child) else _rebuild_level_spark
+            track = affected is not None and os.path.exists(_manifest_path(base, lvl + 1))
+            manifest, n_replaced, changed = step(
+                spark, base, lvl, res, affected, cfg, dim, summarize_fn, n_child, track
+            )
+            n_lvl = manifest["rows"]
+            lineage = manifest["lineage"]
+            stats["recomputed_parents"] += lineage.get("recomputed_parents", n_lvl)
+            stats["replaced_parents"] += n_replaced
+            if affected is not None:
+                affected = _cells_at(changed, max(start - lvl, 0)) if track else None
+        if n_lvl >= n_child:
+            break  # no reduction: the level is retracted below
+        layer, n_child = lvl, n_lvl
+    if wrote:
+        _drop_levels_above(base, layer)
+    return stats
+
+
 def build_tree(
     spark: SparkSession,
     leaves: DataFrame | None,
@@ -633,9 +969,10 @@ def build_tree(
     ``leaves`` become level 0 (:func:`level0_rows`) and are read only
     when no level 0 is committed; resuming a tree takes ``leaves=None``.
 
-    ``summarize_fn`` threads through to every :func:`build_level` call
-    (e.g. :func:`http_summarize_fn` for a live LLM endpoint); default
-    is the deterministic extractive summarizer.
+    Levels >= 1 are written by :func:`rebuild_levels`.
+    ``summarize_fn`` threads through to every level step (e.g.
+    :func:`http_summarize_fn` for a live LLM endpoint); default is the
+    deterministic extractive summarizer.
 
     Returns the union of all levels (the collapsed-tree node table:
     node_id, layer, cell_id, text, children, n_tokens, embedding, x, y).
@@ -644,8 +981,8 @@ def build_tree(
     os.makedirs(checkpoint_base, exist_ok=True)
     recover_levels(spark, checkpoint_base)
 
-    done = last_complete_level(checkpoint_base) if resume else -1
-    if done >= 0:
+    resumed = resume and last_complete_level(checkpoint_base) >= 0
+    if resumed:
         # growing a tree at another resolution would break the cell
         # nesting incremental maintenance relies on (each parent cell
         # inside one start-resolution cell) — refuse instead
@@ -665,41 +1002,12 @@ def build_tree(
             {"input": "leaves"},
             start_resolution=start_resolution,
         )
-        done = 0
 
-    layer = done
-    # level row counts come from the manifests — never a separate
-    # count() action (each used to re-execute the whole level pipeline;
-    # measured as ~2 extra actions per layer in the tree-build bench)
-    n_current = read_manifest(checkpoint_base, layer)["rows"]
-    while layer < max_layers:
-        if n_current <= cfg.min_level_nodes:
-            break
-        current = read_level(spark, checkpoint_base, layer)
-        res = max(start_resolution - layer, 0)
-        parents = build_level(
-            current, layer + 1, res, cfg, summarize_fn=summarize_fn,
-            with_embedding=True, embed_dim=dim,
-        )
-        parents = parents.select(
-            "node_id", "layer", "cell_id", "text", "children", "n_tokens", "embedding", "x", "y"
-        )
-        manifest = write_level(
-            parents,
-            checkpoint_base,
-            layer + 1,
-            {"input": _level_path(checkpoint_base, layer), "resolution": res},
-        )
-        n_parents = manifest["rows"]
-        if n_parents >= n_current:
-            # no reduction — retract the identity layer and stop
-            # (avoids infinite identity layers; the parquet dir stays,
-            # but without a manifest the level does not exist)
-            os.remove(_manifest_path(checkpoint_base, layer + 1))
-            break
-        layer += 1
-        n_current = n_parents
-        if n_parents <= cfg.min_level_nodes:
-            break
-
+    # resuming changes no cell of a committed level: only the levels
+    # missing above them are built
+    rebuild_levels(
+        spark, checkpoint_base, cfg, dim,
+        affected_l1=set() if resumed else None,
+        max_layers=max_layers, summarize_fn=summarize_fn,
+    )
     return read_collapsed(spark, checkpoint_base)

@@ -786,12 +786,20 @@ def q_traversal_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from raptor_rag_spark.operators.retrieve import embed_queries, retrieve_traversal
-    from raptor_rag_spark.operators.tree import build_tree, last_complete_level
+    from raptor_rag_spark.operators.tree import (
+        LEVEL_LAYOUT_VERSION,
+        build_tree,
+        last_complete_level,
+    )
     from raptor_rag_spark.sources.tables import source_fingerprint
 
     leaves = _leaf_nodes(spark, sf_dir)
     tag = source_fingerprint(sf_dir)
-    base = _os.path.join(tempfile.gettempdir(), f"rrs_trav_tree_{tag}")
+    # keyed by the level layout too: a tree cached in an older layout
+    # is rebuilt next to it instead of failing its read
+    base = _os.path.join(
+        tempfile.gettempdir(), f"rrs_trav_tree_{LEVEL_LAYOUT_VERSION}_{tag}"
+    )
     nodes = build_tree(
         spark, leaves, base, CFG, start_resolution=2, max_layers=2, embed_dim=DIM, resume=True
     )

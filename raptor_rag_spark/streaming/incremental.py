@@ -28,22 +28,27 @@ def incremental_level0(
 ) -> DataFrame:
     """New pages batch -> leaves with x, y (extract -> tree.leaves_from_docs
     -> reduce_2d). Pure function of the batch; incremental_update appends
-    it to level 0 and re-aggregates the touched cells upstream."""
+    it to level 0 and re-aggregates the touched cells upstream.
+
+    The doc id is the page's ``page_id``, carried through the extract
+    kernel, so a url that repeats in the batch keeps each page's own
+    leaves. A batch without ``page_id`` is keyed by a 64-bit url hash:
+    there each url must appear once (run :func:`dedup_stream` first),
+    or two pages share one doc id and hence their chunk ids."""
     from pyspark.sql import functions as F
 
     from raptor_rag_spark.operators.tree import leaves_from_docs
 
     dim = dim or cfg.embedding_dim
-    txt = extract_pages(pages)
-    # stable doc id: page_id when present, else a 64-bit url hash
     if "page_id" in pages.columns:
-        txt = txt.join(pages.select("url", "page_id"), "url")
-        docs = txt.withColumn("doc_id", F.col("page_id"))
+        docs = extract_pages(pages, passthrough=("page_id",)).withColumnRenamed(
+            "page_id", "doc_id"
+        )
         id_scheme = "arith"
     else:
         # full-range 64-bit url hash: the arith chunk_id scheme would
         # overflow (ANSI crash) — use the hashed scheme
-        docs = txt.withColumn("doc_id", F.xxhash64("url"))
+        docs = extract_pages(pages).withColumn("doc_id", F.xxhash64("url"))
         id_scheme = "hash"
     leaves = leaves_from_docs(docs, cfg, dim, id_scheme=id_scheme)
     return reduce_2d(leaves, dim=dim, seed=cfg.seed)
@@ -196,129 +201,6 @@ def append_level(
     return manifest
 
 
-def _require_start_resolution(base: str) -> int:
-    """The tree's start resolution (tree.tree_start_resolution); raises
-    ValueError naming the base when the tree records none."""
-    from raptor_rag_spark.operators.tree import tree_start_resolution
-
-    res = tree_start_resolution(base)
-    if res is None:
-        raise ValueError(
-            f"tree at {base!r} records no start resolution (no level-0 "
-            "start_resolution); rebuild it with build_tree"
-        )
-    return res
-
-
-def _propagate_affected(
-    spark: SparkSession,
-    checkpoint_base: str,
-    cfg: EngineConfig,
-    top: int,
-    dim: int,
-    delta: DataFrame | None = None,
-    affected_l1: list[str] | None = None,
-) -> dict:
-    """Shared affected-cells propagation for levels 1..top (the loop
-    both incremental_update and the append planner run): per level,
-    recompute the start-res cells containing changed children, carry
-    every other parent over, and feed the changed parents into the next
-    level. Layer 1's affected set comes from ``delta`` (today's changed
-    level-0 rows) unless ``affected_l1`` overrides it — the planner
-    flushes DUE cells covering several days' pending leaves, not just
-    today's batch. Returns aggregate stats {recomputed_parents,
-    replaced_parents, affected_cells_l1}.
-
-    A parent belongs to the start-res cell its cell_id starts with, so
-    each level is rewritten WHOLE through tree.write_level: the kept
-    parents (cell prefix not affected) plus the recomputed ones, behind
-    the manifest commit. An affected cell whose children are all gone
-    thus loses its old parent too. The replaced parents are collected
-    before the rewrite (as many rows as affected parents, which also
-    counts them), and the recomputed count is the rewritten level's
-    footer rows minus the kept ones: no counting job. The affected-cell
-    set is a DRIVER LIST, so membership tests compile to map-side
-    ``isin`` filters."""
-    from pyspark.sql import functions as F
-
-    from raptor_rag_spark.functions.localtab import local_df
-    from raptor_rag_spark.functions.planutil import plan_splits
-    from raptor_rag_spark.operators.tile import tile
-    from raptor_rag_spark.operators.tree import (
-        build_level,
-        read_level,
-        read_manifest,
-        write_level,
-    )
-
-    start_resolution = _require_start_resolution(checkpoint_base)
-    stats = {"recomputed_parents": 0, "replaced_parents": 0, "affected_cells_l1": 0}
-    for layer in range(1, top + 1):
-        res = max(start_resolution - (layer - 1), 0)
-        if layer == 1 and affected_l1 is not None:
-            affected = sorted(affected_l1)
-        else:
-            # bounded by the cell universe at this resolution
-            affected = sorted(
-                r["cell_id"]
-                for r in tile(delta, res).select("cell_id").distinct().collect()
-            )
-        if layer == 1:
-            stats["affected_cells_l1"] = len(affected)
-        # child rows in affected cells — selected by the CHILD's OWN
-        # x,y at this resolution (tile), which is what the next level
-        # groups on
-        child = read_level(spark, checkpoint_base, layer - 1)
-        child_in = (
-            tile(child, res)
-            .drop("ix", "iy", "resolution")
-            .filter(F.col("cell_id").isin(affected))
-        )
-        recomputed = build_level(
-            child_in, layer, res, cfg, with_embedding=True, embed_dim=dim
-        ).select(
-            "node_id", "layer", "cell_id", "text", "children", "n_tokens",
-            "embedding", "x", "y",
-        )
-        # a parent's start-res cell is its cell_id prefix; '_' keeps a
-        # null cell_id out of every affected set
-        in_affected = F.coalesce(
-            F.substring("cell_id", 1, res + 1), F.lit("_")
-        ).isin(affected)
-        old = read_level(spark, checkpoint_base, layer)
-        replaced = [
-            tuple(r) for r in old.filter(in_affected).select("node_id", "x", "y").collect()
-        ]
-        n_kept = int(read_manifest(checkpoint_base, layer)["rows"]) - len(replaced)
-        # the kept side is a bare scan, coalesced to its size so the
-        # level's file count stays bounded across rewrites (the
-        # recomputed side keeps the summarizer's partitions)
-        kept = old.filter(~in_affected)
-        lineage = {
-            "input": "incremental",
-            "resolution": res,
-            "affected_cells": len(affected),
-            "replaced_parents": len(replaced),
-        }
-        manifest = write_level(
-            kept.coalesce(plan_splits(kept)).unionByName(recomputed),
-            checkpoint_base,
-            layer,
-            lambda rows: {**lineage, "recomputed_parents": rows - n_kept},
-        )
-        stats["recomputed_parents"] += manifest["lineage"]["recomputed_parents"]
-        stats["replaced_parents"] += len(replaced)
-        # both the new and the vanished/updated parents perturb level+1;
-        # the recomputed rows are read back from the rewritten level
-        delta = (
-            read_level(spark, checkpoint_base, layer)
-            .filter(in_affected)
-            .select("node_id", "x", "y")
-            .unionByName(local_df(spark, replaced, "node_id long, x double, y double"))
-        )
-    return stats
-
-
 def incremental_update(
     spark: SparkSession,
     checkpoint_base: str,
@@ -340,22 +222,22 @@ def incremental_update(
     1. affected = distinct res_L cells containing any changed child
        node (new leaves at level 0; recomputed OR replaced parents at
        higher levels — a vanished parent changes the next level too);
-    2. recompute build_level over ALL child nodes in affected cells
+    2. recompute the level step over ALL child nodes in affected cells
        (closed under cap-splitting by the prefix property);
     3. carry over every parent whose cell_id prefix is unaffected;
     4. the changed-parent set becomes the next level's delta.
 
     Level 0 is an APPEND (immutable data files + manifest delta).
-    Each level >= 1 is rewritten whole (kept parents plus recomputed
-    ones) behind its manifest commit; the summarize/embed work (the
-    expensive part) runs only on affected cells. A crash before a
-    level's manifest commit leaves that level as it was (the next
-    writer's tree.recover_levels rolls the swap back). Finishes with a
-    resumed build_tree to extend the top if the append pushed the top
-    level back over min_level_nodes (it resumes from the committed
-    levels and reads no leaves); returns the collapsed node table.
-    Result equals a from-scratch build over the merged leaves
-    (pytest-asserted).
+    Levels >= 1 go through tree.rebuild_levels, the build's own level
+    loop: each is rewritten whole (kept parents plus recomputed ones)
+    behind its manifest commit, the summarize/embed work (the expensive
+    part) runs only on affected cells, and the build's stop rules
+    apply — levels missing above the top are built, levels the append
+    made redundant are dropped. A crash before a level's manifest
+    commit leaves that level as it was (the next writer's
+    tree.recover_levels rolls the swap back). Returns the collapsed
+    node table. Result equals a from-scratch build over the merged
+    leaves (pytest-asserted).
 
     On a tree that has ever taken a deferred append (a planner ledger
     exists — :func:`has_pending_ledger`), the call routes through
@@ -363,16 +245,18 @@ def incremental_update(
     ledger is settled rather than bypassed; exactness is preserved
     (stronger: the whole tree equals a from-scratch build).
     """
+    from raptor_rag_spark.operators.tile import tile
     from raptor_rag_spark.operators.tree import (
-        build_tree,
+        _require_start_resolution,
         last_complete_level,
+        read_collapsed,
+        rebuild_levels,
         recover_levels,
     )
 
     dim = embed_dim or cfg.embedding_dim
     recover_levels(spark, checkpoint_base)
-    top = last_complete_level(checkpoint_base)
-    if top < 0:
+    if last_complete_level(checkpoint_base) < 0:
         raise ValueError(f"no complete levels under {checkpoint_base}; build first")
 
     if has_pending_ledger(checkpoint_base):
@@ -392,21 +276,17 @@ def incremental_update(
 
     start_resolution = _require_start_resolution(checkpoint_base)
     lvl0_delta, _aid = _stage_level0_append(new_leaves, checkpoint_base, cfg, dim)
-
-    # changed rows at the current child level: (node_id, x, y) —
-    # lvl0_delta is already checkpointed by the staging
-    delta = lvl0_delta.select("node_id", "x", "y")
-    _propagate_affected(spark, checkpoint_base, cfg, top, dim, delta=delta)
-    # extend the top if the append pushed it back over min_level_nodes
-    return build_tree(
-        spark,
-        None,
-        checkpoint_base,
-        cfg,
-        start_resolution=start_resolution,
-        max_layers=max_layers,
-        embed_dim=dim,
+    # the level-1 cells the new leaves land in (bounded by the cell
+    # universe at the start resolution); lvl0_delta is checkpointed
+    affected = [
+        r["cell_id"]
+        for r in tile(lvl0_delta.select("x", "y"), start_resolution)
+        .select("cell_id").distinct().collect()
+    ]
+    rebuild_levels(
+        spark, checkpoint_base, cfg, dim, affected_l1=affected, max_layers=max_layers
     )
+    return read_collapsed(spark, checkpoint_base)
 
 
 def _stage_level0_append(
@@ -559,10 +439,11 @@ def incremental_update_planned(
     from raptor_rag_spark.operators.maintenance import write_meta_atomic
     from raptor_rag_spark.operators.tile import tile
     from raptor_rag_spark.operators.tree import (
-        build_tree,
+        _require_start_resolution,
         last_complete_level,
         read_collapsed,
         read_level,
+        rebuild_levels,
         recover_levels,
     )
 
@@ -572,8 +453,7 @@ def incremental_update_planned(
         raise ValueError(f"min_pending_frac must be in [0, 1], got {min_pending_frac}")
     dim = embed_dim or cfg.embedding_dim
     recover_levels(spark, checkpoint_base)
-    top = last_complete_level(checkpoint_base)
-    if top < 0:
+    if last_complete_level(checkpoint_base) < 0:
         raise ValueError(f"no complete levels under {checkpoint_base}; build first")
     start_resolution = _require_start_resolution(checkpoint_base)
 
@@ -645,8 +525,8 @@ def incremental_update_planned(
         # bounded-stale parents
         return read_collapsed(spark, checkpoint_base)
 
-    stats = _propagate_affected(
-        spark, checkpoint_base, cfg, top, dim, affected_l1=list(due)
+    stats = rebuild_levels(
+        spark, checkpoint_base, cfg, dim, affected_l1=due, max_layers=max_layers
     )
     for c in due:
         ledger["cells"].pop(c, None)
@@ -675,16 +555,7 @@ def incremental_update_planned(
         ]
     )[-_PENDING_FLUSHES_KEEP:]
     write_meta_atomic(_pending_path(checkpoint_base), ledger)
-    # extend the top if the flushed cells pushed it over min_level_nodes
-    return build_tree(
-        spark,
-        None,
-        checkpoint_base,
-        cfg,
-        start_resolution=start_resolution,
-        max_layers=max_layers,
-        embed_dim=dim,
-    )
+    return read_collapsed(spark, checkpoint_base)
 
 
 def dedup_stream(

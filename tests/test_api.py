@@ -57,6 +57,32 @@ def test_reopen_resumes_from_checkpoint(spark, built):
     assert a == b
 
 
+def test_reopen_under_other_stop_settings_keeps_every_level(spark, tmp_path_factory):
+    """Opening a tree resumes it and writes nothing: a tree built with
+    min_level_nodes=4, opened under the default config (whose stop rule
+    would end it lower), keeps every level and every manifest."""
+    from raptor_rag_spark.datagen import synthetic_pages
+    from raptor_rag_spark.operators.tree import last_complete_level, read_manifest
+
+    base = str(tmp_path_factory.mktemp("api_reopen"))
+    eng = RaptorEngine(spark, base, CFG, embed_dim=32, start_resolution=3)
+    eng.add_documents(
+        synthetic_pages(spark, n=80, seed=42).select(F.col("page_id").alias("doc_id"), "text")
+    )
+    top = last_complete_level(base)
+    manifests = [read_manifest(base, k) for k in range(top + 1)]
+    default = EngineConfig(embedding_dim=32)
+    # the default stop rule would end the tree below its committed top
+    assert any(m["rows"] <= default.min_level_nodes for m in manifests[:-1])
+
+    reopened = RaptorEngine(spark, base, default, embed_dim=32, start_resolution=3)
+    assert last_complete_level(base) == top
+    assert [read_manifest(base, k) for k in range(top + 1)] == manifests
+    a = sorted(r["node_id"] for r in eng.nodes.select("node_id").collect())
+    b = sorted(r["node_id"] for r in reopened.nodes.select("node_id").collect())
+    assert a == b
+
+
 def test_retrieve_before_build_raises(spark, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("api_empty"))
     eng = RaptorEngine(spark, base, CFG, embed_dim=32)

@@ -2,10 +2,10 @@
 json-parses the FINAL line; rounds 3-4 recorded ``parsed: null``
 because the full result outgrew that buffer (VERDICT r4 item 2).
 ``bench._final_line`` is the guarantee that BENCH_r{N}.json carries
-real content: pin the size bound and that the load-bearing fields
-(both scaling pairs, the full throughput block) always survive the
-shedding order (slowest-queries first, throughput only as a last
-resort)."""
+real content: pin the size bound, that a 90-slot suite reaches the
+line whole, and that the load-bearing fields (both scaling pairs, the
+full throughput block) always survive the shedding order (fastest
+slots first, throughput only as a last resort)."""
 
 import json
 import sys
@@ -13,7 +13,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from bench import _final_line  # noqa: E402
+from bench import _final_line, _line_text, _short_keys  # noqa: E402
 
 
 def _fat_result(n_queries: int = 120) -> dict:
@@ -46,10 +46,70 @@ def _fat_result(n_queries: int = 120) -> dict:
     }
 
 
+# the suite's 90 slots at the time the line was compacted
+_SLOTS = (
+    "ann_index_build_2proj ann_index_search ann_index_search_2proj_1000q "
+    "ann_index_search_2proj_200q approx_distinct asof_join budget_select build_pipeline "
+    "c4_filters cap_domains catalog_snapshots cell_rollup cell_summary chunks "
+    "collapsed_retrieval corpus_materialize decontam dedup_clusters dedup_exact "
+    "density_raster doc_stats embed_norm embedding_neardup fingerprint "
+    "incremental_append_1pct incremental_append_clustered incremental_append_planned_5days "
+    "ivf_build ivf_build_quantized ivf_save_both_stores ivf_search_1000q ivf_search_200q "
+    "ivf_search_quantized_1000q ivf_search_quantized_200q join_agg knn_brute "
+    "knn_brute_1000q knn_brute_quantized_1000q knn_quantized knn_recall_measure knn_tiled "
+    "knn_tiled_1000q knn_tiled_1000q_join_scoring knn_tiled_200q lang_id lm_score minhash "
+    "minhash_store_build minhash_store_ingest multimodal_features ngram_jaccard "
+    "pack_sequences pages_month para_dedup percentiles pii pip pricing_summary quality "
+    "quantize_corpus range_join raster_vectorize repetition rollup_cube running_budget "
+    "salted_rollup sample_mixture sessionize set_ops simhash skew_build_hot "
+    "skew_build_uniform skew_corpus_hot skew_corpus_uniform skew_dedup_hot "
+    "skew_dedup_uniform skew_knn_hot skew_knn_uniform skew_task_balance "
+    "span_dedup_exactsubstr stratified_sample text_normalize tile_assign tile_soft "
+    "top_terms topk training_export traversal_retrieval tree_build_full tumbling_window"
+).split()
+
+# the throughput block's 28 fields at the same time
+_THROUGHPUT = (
+    "build_docs_per_sec build_chunks_per_sec tree_build_docs_per_sec knn_queries_per_sec "
+    "knn_recall_at_10_vs_exact knn_recall_at_10_multiproj multiproj_queries_per_sec "
+    "knn_recall_at_10_ivf ivf_queries_per_sec knn_recall_at_10_ivf_quantized "
+    "ivf_quantized_queries_per_sec ivf_store_bytes_int8_over_float "
+    "incremental_scattered_recompute_frac incremental_clustered_recompute_frac "
+    "incremental_planned_recompute_frac incremental_planned_days incremental_planned_flushes "
+    "export_docs_per_sec pack_chunks_per_sec span_dedup_docs_per_sec mixture_rows_per_sec "
+    "budget_select_docs_per_sec incremental_fuzzy_dedup_docs_per_sec "
+    "incremental_clustered_rows skew_ratio_build skew_ratio_dedup skew_ratio_knn "
+    "skew_task_rows_max_over_median"
+).split()
+
+
 def test_final_line_fits_driver_buffer():
     result = _fat_result()
     line = _final_line(result, "bench_out/bench_latest_full.json")
-    assert len(json.dumps(line)) <= 1900
+    assert len(_line_text(line)) <= 1900
+
+
+def test_final_line_keeps_every_slot_of_the_suite():
+    """The suite's 90 slots, with times up to 30 s as at sf0.1, and the
+    real throughput fields reach the line whole: no slot is dropped,
+    each under its short key at 0.1 s, within the byte bound."""
+    result = _fat_result()
+    result["queries"] = {name: 0.37 + 0.33 * i for i, name in enumerate(_SLOTS)}
+    result["throughput"] = {name: round(0.5 + 131.7 * i, 2) for i, name in enumerate(_THROUGHPUT)}
+    line = _final_line(result, "bench_out/bench_latest_full.json")
+    assert len(_line_text(line)) <= 1900
+    assert line["queries_omitted"] == 0
+    keys = _short_keys(result["queries"])
+    assert line["queries"] == {keys[k]: round(v, 1) for k, v in result["queries"].items()}
+    assert len(line["throughput"]) == len(_THROUGHPUT)
+
+
+def test_short_keys_are_distinct():
+    names = _SLOTS + ["a_bc", "ab_c", "pi_i"]
+    keys = _short_keys(names)
+    assert len(set(keys.values())) == len(names)
+    assert keys["incremental_append_planned_5days"] == "iap5days"
+    assert _short_keys(reversed(names)) == keys
 
 
 def test_final_line_keeps_scaling_pairs_and_throughput():
@@ -61,13 +121,16 @@ def test_final_line_keeps_scaling_pairs_and_throughput():
     assert "all_runs_sec" not in line["scaling"]
     assert "all_runs_sec" not in line["scaling"]["secondary_2v8"]
     # the full throughput block survives ahead of query timings
-    assert line["throughput"] == result["throughput"]
+    tkeys = _short_keys(result["throughput"])
+    assert line["throughput"] == {tkeys[k]: v for k, v in result["throughput"].items()}
     # shedding is accounted for, slowest-first retained
     assert line["queries_omitted"] == len(result["queries"]) - len(line["queries"])
-    if line["queries"]:
-        kept_min = min(line["queries"].values())
-        dropped = [v for k, v in result["queries"].items() if k not in line["queries"]]
-        assert all(v <= kept_min for v in dropped)
+    qkeys = _short_keys(result["queries"])
+    kept = [v for k, v in result["queries"].items() if qkeys[k] in line["queries"]]
+    dropped = [v for k, v in result["queries"].items() if qkeys[k] not in line["queries"]]
+    assert len(kept) == len(line["queries"])
+    if kept:
+        assert all(v <= min(kept) for v in dropped)
     # the pointer to the complete result is present
     assert line["full_result"] == "x.json"
     assert line["n_queries"] == len(result["queries"])
@@ -77,7 +140,7 @@ def test_final_line_small_result_passes_through_all_queries():
     result = _fat_result(n_queries=5)
     line = _final_line(result, "x.json")
     assert line["queries_omitted"] == 0
-    assert set(line["queries"]) == set(result["queries"])
+    assert set(line["queries"]) == set(_short_keys(result["queries"]).values())
 
 
 def test_final_line_input_not_mutated():

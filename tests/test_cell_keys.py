@@ -7,11 +7,13 @@ from pyspark.sql import functions as F
 
 from raptor_rag_spark.functions.localtab import local_df
 from raptor_rag_spark.operators.tile import (
+    cell_id_col,
     cell_key_col,
     chosen_cells_from_occupancy,
     grid_index,
     in_sorted,
     np_cell_keys,
+    np_quadkeys,
     pick_open_cells,
     sorted_keys,
 )
@@ -48,6 +50,29 @@ def test_np_cell_keys_match_jvm(spark):
         assert iy.tolist() == [row[f"iy{r}"] for row in rows], r
         assert key.tolist() == [row[f"k{r}"] for row in rows], r
         assert (key >> 32 == r).all()
+
+
+def test_np_quadkeys_match_cell_id_col(spark):
+    """The numpy quadkey strings equal cell_id_col's at every
+    resolution, also for keys of mixed resolutions in one array."""
+    pts = local_df(
+        spark, [(x, y) for x in _COORDS for y in _COORDS], "x double, y double"
+    )
+    rows = pts.select(
+        "x", "y",
+        *[cell_id_col(F.col("x"), F.col("y"), r).alias(f"c{r}") for r in range(MAX_RES + 1)],
+    ).collect()
+    x = np.array([row["x"] for row in rows])
+    y = np.array([row["y"] for row in rows])
+    mixed_keys, mixed_want = [], []
+    for r in range(MAX_RES + 1):
+        keys = np_cell_keys(x, y, r)[2]
+        want = [row[f"c{r}"] for row in rows]
+        assert np_quadkeys(keys).tolist() == want, r
+        mixed_keys.append(keys[r::MAX_RES + 1])
+        mixed_want += want[r::MAX_RES + 1]
+    assert np_quadkeys(np.concatenate(mixed_keys)).tolist() == mixed_want
+    assert np_quadkeys(np.zeros(0, dtype=np.int64)).tolist() == []
 
 
 def test_in_sorted_membership():

@@ -10,6 +10,7 @@ the S5 embedding seam."""
 
 import json
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
@@ -35,9 +36,22 @@ class _MockChat(BaseHTTPRequestHandler):
     payload GPT3TurboSummarizationModel sends, answers the exact shape
     it reads."""
 
-    state = {"requests": [], "fail_next": 0}
+    state = {"requests": [], "fail_next": 0, "delay": 0.0, "inflight": 0, "max_inflight": 0}
+    lock = threading.Lock()
 
     def do_POST(self):  # noqa: N802
+        st = _MockChat.state
+        with _MockChat.lock:
+            st["inflight"] += 1
+            st["max_inflight"] = max(st["max_inflight"], st["inflight"])
+        try:
+            time.sleep(st["delay"])
+            self._answer()
+        finally:
+            with _MockChat.lock:
+                st["inflight"] -= 1
+
+    def _answer(self):
         n = int(self.headers.get("Content-Length", 0))
         payload = json.loads(self.rfile.read(n))
         if _MockChat.state["fail_next"] > 0:
@@ -78,8 +92,7 @@ class _MockChat(BaseHTTPRequestHandler):
 
 @pytest.fixture()
 def mock_service():
-    _MockChat.state["requests"] = []
-    _MockChat.state["fail_next"] = 0
+    _MockChat.state.update(requests=[], fail_next=0, delay=0.0, inflight=0, max_inflight=0)
     srv = ThreadingHTTPServer(("127.0.0.1", 0), _MockChat)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     yield f"http://127.0.0.1:{srv.server_address[1]}"
@@ -199,6 +212,51 @@ def test_cfg_summarizer_threads_through_incremental_recompute(
     re_parents = got.filter("layer > 0").select("text").collect()
     assert re_parents and all(r["text"] == r["text"].upper() for r in re_parents)
     assert len(_MockChat.state["requests"]) > calls_before  # recompute hit the service
+
+
+def test_http_summarizer_driver_level_steps_match_spark(
+    spark, mock_service, tmp_path, monkeypatch
+):
+    """A build and an eager append with ``EngineConfig.summarize_fn`` set
+    to the live service write the same levels whether every level step
+    runs on the driver (the default bound, for this small tree) or in
+    Spark (bound 0), and the driver steps keep several requests in
+    flight at once."""
+    from pyspark.sql import functions as F
+
+    from raptor_rag_spark.datagen import synthetic_pages
+    from raptor_rag_spark.functions import planutil
+    from raptor_rag_spark.operators.tree import build_tree, last_complete_level, read_level
+    from raptor_rag_spark.streaming.incremental import incremental_level0, incremental_update
+
+    cfg = EngineConfig(
+        embedding_dim=32, min_level_nodes=4, summarize_fn=http_summarize_fn(mock_service)
+    )
+    leaves = incremental_level0(synthetic_pages(spark, n=40, seed=7), cfg).localCheckpoint(
+        eager=True
+    )
+    old = leaves.filter(F.col("node_id") % 5 != 0)
+    new = leaves.filter(F.col("node_id") % 5 == 0)
+    _MockChat.state["delay"] = 0.02
+
+    def tree(name):
+        base = str(tmp_path / name)
+        build_tree(spark, old, base, cfg, start_resolution=3, embed_dim=32)
+        incremental_update(spark, base, new, cfg, embed_dim=32)
+        return [
+            sorted(
+                (r["node_id"], r["cell_id"], r["text"], tuple(r["children"]), tuple(r["embedding"]))
+                for r in read_level(spark, base, k).collect()
+            )
+            for k in range(last_complete_level(base) + 1)
+        ]
+
+    on_driver = tree("driver")
+    assert _MockChat.state["max_inflight"] > 1
+    monkeypatch.setattr(planutil, "DRIVER_MAX_ROWS", 0)
+    in_spark = tree("spark")
+    assert len(on_driver) >= 2 and on_driver == in_spark
+    assert all(r[2] == r[2].upper() for level in on_driver[1:] for r in level)
 
 
 def test_http_summarizer_rejects_zero_retries():
