@@ -214,7 +214,9 @@ class RaptorEngine:
                     "allowed= filtering applies to collapsed retrieval; "
                     "traversal descends the full tree by construction"
                 )
-            sel, ctx = retrieve_traversal(q, self.nodes, self.cfg, k=top_k)
+            sel, ctx = retrieve_traversal(
+                q, self.nodes, self.cfg, k=top_k, start_layer=last_complete_level(self.base)
+            )
         if as_dataframe:
             return (ctx, sel) if return_layer_information else ctx
         contexts = {r["query_id"]: r["context"] for r in ctx.collect()}

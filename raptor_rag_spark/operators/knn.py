@@ -462,33 +462,18 @@ def _score_candidates(
     traffic of shipping both vectors, and no interpreted Catalyst
     higher-order functions in the hot path. strategy='join' switches to
     the distributed no-collect twin (_score_candidates_join)."""
+    import numpy as np
+
+    from pyspark.sql import types as T
+
     if strategy == "join":
         return _score_candidates_join(cand_with_emb, queries, query_id, q_emb)
     q_ids, q_mat = _collect_query_matrix(queries, query_id, q_emb)
     spark = cand_with_emb.sparkSession
     if len(q_ids) == 0:
         return spark.createDataFrame([], f"{query_id} long, node_id long, dist double")
-    index = {int(qid): i for i, qid in enumerate(q_ids)}
-    b_index = spark.sparkContext.broadcast(index)
+    b_index = spark.sparkContext.broadcast({int(qid): i for i, qid in enumerate(q_ids)})
     b_mat = spark.sparkContext.broadcast(q_mat)
-    return _score_with_broadcast(cand_with_emb, b_index, b_mat, query_id)
-
-
-def _score_with_broadcast(
-    cand_with_emb: DataFrame,
-    b_index,
-    b_mat,
-    query_id: str = "query_id",
-) -> DataFrame:
-    """Score candidates against an ALREADY-broadcast query matrix
-    (``b_index``: {query_id: row}, ``b_mat``: (n, d) float64). Lets a
-    driver loop — tree traversal visits the same queries once per layer
-    — collect and broadcast the query side ONCE instead of re-running
-    the query-embedding plan per layer (the collect was ~2 s/layer of
-    pure fixed overhead at sf0.1)."""
-    import numpy as np
-
-    from pyspark.sql import types as T
 
     in_df = cand_with_emb.select(query_id, "node_id", "embedding")
     out_schema = T.StructType(

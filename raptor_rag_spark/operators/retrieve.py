@@ -7,8 +7,9 @@ Reference: TreeRetriever (/root/reference/raptor/tree_retriever.py).
   either brute force or the tile-pruned join.
 - traversal (:319-363): start at the top layer, per layer select
   top-k/threshold, descend via children (J3 semi-join), accumulate.
-  The engine form is a driver loop of <= num_layers small joins; the
-  per-layer child dereference is explode(children) + broadcast join.
+  The engine form is one driver loop: per layer one filtered read of
+  the candidate rows (``node_id IN`` the selected rows' children),
+  scored and selected with numpy on the driver.
 
 Queries are rows — one query or 10^6 behave identically (the
 reference's batch endpoint reuses the node matrix across queries,
@@ -18,18 +19,19 @@ side).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from raptor_rag_spark.config import DEFAULT_CONFIG, EngineConfig
 from raptor_rag_spark.functions.localtab import local_df
 from raptor_rag_spark.operators.embed import embed_texts, hash_embed_batch
 from raptor_rag_spark.operators.knn import (
+    _collect_query_matrix,
     assemble_context,
     brute_force_knn,
-    threshold_select,
     tile_knn,
     token_budget_prefix,
+    vec_matrix,
 )
 from raptor_rag_spark.operators.tile import projection_matrix, reduce_2d, tile_assignments
 
@@ -130,88 +132,74 @@ def retrieve_traversal(
     form the next layer's candidate set (order-preserving dedup is
     subsumed by distinct node_ids per query — the engine re-scores, so
     first-occurrence order is irrelevant to the result set).
+
+    One driver loop: the question matrix is collected once; each layer
+    is one filtered read of ``nodes`` (below the top layer only the
+    candidates' node ids), scored with the kNN kernels' float64 einsum,
+    so driver memory grows with the candidates, not with the tree.
+    ``start_layer`` (the tree's top layer) saves a ``max(layer)`` job.
     """
-    from raptor_rag_spark.operators.knn import (
-        _collect_query_matrix,
-        _score_with_broadcast,
-    )
+    import numpy as np
+    import pandas as pd
 
     k = k or cfg.top_k
     threshold = threshold if threshold is not None else cfg.threshold
-    nodes = nodes.cache()
+    q_ids, q_mat = _collect_query_matrix(queries, "query_id", "q_embedding")
     top = start_layer if start_layer is not None else nodes.agg(F.max("layer")).first()[0]
 
-    # collect + broadcast the query matrix ONCE for the whole descent:
-    # the loop visits the same queries at every layer, and re-running
-    # the query-embedding plan per layer (the old per-layer
-    # _score_candidates collect) was ~2 s/layer of pure fixed overhead
-    # at sf0.1. Traversal queries are interactive batches (the
-    # reference's API shape), so the broadcast path is the right one;
-    # 10^5+-query batches should use retrieve_collapsed(scoring='join').
-    spark = nodes.sparkSession
-    q_ids, q_mat = _collect_query_matrix(queries, "query_id", "q_embedding")
-    b_index = spark.sparkContext.broadcast({int(qid): i for i, qid in enumerate(q_ids)})
-    b_mat = spark.sparkContext.broadcast(q_mat)
-    ids_df = local_df(spark, [(int(qid),) for qid in q_ids], "query_id long")
-
-    # per-layer candidate sets: start = all top-layer nodes for every query
-    cand = (
-        F.broadcast(ids_df)
-        .crossJoin(nodes.filter(F.col("layer") == top).select("node_id"))
-    )
-    selected = None
-    for layer in range(top, -1, -1):
-        layer_nodes = nodes.filter(F.col("layer") == layer).select(
-            "node_id", "embedding", "children", "text", "n_tokens"
-        )
-        # exact cosine via the broadcast-query-matrix einsum kernel —
-        # same discipline as the kNN hot path (a Catalyst zip_with/
-        # aggregate cosine is interpreted, ~0.27 ms/row measured)
-        scored = _score_with_broadcast(
-            cand.join(layer_nodes.select("node_id", "embedding"), "node_id"),
-            b_index,
-            b_mat,
-        )
-        if selection_mode == "top_k":
-            w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("node_id").asc())
-            picked = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    picked = []
+    cand = None  # (question row q, node_id) pairs; None = the whole layer
+    for layer in range(top if len(q_ids) else -1, -1, -1):
+        rows = nodes.filter(F.col("layer") == layer)
+        if cand is not None:
+            rows = rows.filter(F.col("node_id").isin(cand["node_id"].unique().tolist()))
+        pdf = rows.select("node_id", "embedding", "children", "text", "n_tokens").toPandas()
+        if pdf.empty:
+            break
+        if cand is None:
+            q_row = np.repeat(np.arange(len(q_ids)), len(pdf))
+            n_row = np.tile(np.arange(len(pdf)), len(q_ids))
         else:
-            picked = threshold_select(scored, threshold).withColumn("rank", F.lit(0))
-        # fetch text/children AFTER selection: the join input is k rows
-        # per query, not the whole candidate set
-        sel = picked.join(
-            layer_nodes.select("node_id", "text", "n_tokens", "children"), "node_id"
+            n_row = pd.Index(pdf["node_id"]).get_indexer(cand["node_id"])
+            q_row, n_row = cand["q"].to_numpy()[n_row >= 0], n_row[n_row >= 0]
+        n_mat = vec_matrix(pdf["embedding"], "embedding", "retrieve_traversal")
+        dist = 1.0 - np.einsum("ij,ij->i", q_mat[q_row], n_mat[n_row])
+        if selection_mode == "top_k":
+            order = np.lexsort((pdf["node_id"].to_numpy()[n_row], dist, q_row))
+            q_row, n_row, dist = q_row[order], n_row[order], dist[order]
+            rank = np.arange(len(q_row)) - np.searchsorted(q_row, q_row) + 1
+            keep = rank <= k
+        else:
+            # reference quirk: keeps DISTANCE above the threshold
+            rank, keep = np.zeros(len(q_row), dtype=np.int64), dist > threshold
+        q_row = q_row[keep]
+        sel = pdf.iloc[n_row[keep]].assign(
+            q=q_row, query_id=q_ids[q_row], dist=dist[keep], rank=rank[keep], sel_layer=layer
         )
-        sel = sel.select("query_id", "node_id", "dist", "rank", "text", "n_tokens", "children")
-        sel = sel.withColumn("sel_layer", F.lit(layer))
-        # lazy localCheckpoint — but only on layers that DESCEND: there
-        # sel has two consumers (the accumulated union and the next
-        # layer's candidate explode). With AQE even a lazy checkpoint
-        # materializes its stages (AdaptiveSparkPlan executes on
-        # toRdd), yet it still beats both the eager variant (extra
-        # blocking job per layer) and no-checkpoint (recompute + one
-        # giant final compile): measured ~3.5 s vs 4.4 s eager vs
-        # 4.2 s none for the sf0.1 slot. The bottom layer has a single
-        # consumer, so its checkpoint would be a pure extra
-        # stage-materialization round — skip it.
-        if layer > 0:
-            sel = sel.localCheckpoint(eager=False)
-        selected = sel if selected is None else selected.unionByName(sel)
-        if layer > 0:
-            cand = (
-                sel.select("query_id", F.explode("children").alias("node_id"))
-                .dropDuplicates(["query_id", "node_id"])
-            )
-    out = selected.drop("children")
+        picked.append(sel)
+        cand = (
+            sel[["q", "children"]].explode("children").dropna()
+            .rename(columns={"children": "node_id"})
+            .astype({"node_id": np.int64})
+            .drop_duplicates()
+        )
+        if cand.empty:
+            break
+
+    cols = ["query_id", "node_id", "dist", "rank", "text", "n_tokens", "sel_layer"]
+    out = pd.concat(picked) if picked else pd.DataFrame(columns=cols)
     # context in visit order (layers top-down, then rank) — the
     # reference accumulates selected_nodes in that order before get_text
-    ordered = out.withColumn(
-        "rank",
-        F.row_number().over(
-            Window.partitionBy("query_id").orderBy(
-                F.col("sel_layer").desc(), F.col("rank").asc(), F.col("node_id").asc()
-            )
-        ),
+    out = out.sort_values(
+        ["query_id", "sel_layer", "rank", "node_id"], ascending=[True, False, True, True]
     )
-    ctx = assemble_context(ordered)
-    return out, ctx
+    qid = out["query_id"].to_numpy()
+    out["visit"] = np.arange(len(out)) - np.searchsorted(qid, qid) + 1
+    table = local_df(
+        nodes.sparkSession,
+        out[cols + ["visit"]].itertuples(index=False),
+        "query_id long, node_id long, dist double, rank int, text string, "
+        "n_tokens int, sel_layer int, visit int",
+    )
+    ctx = assemble_context(table.select("query_id", F.col("visit").alias("rank"), "text"))
+    return table.drop("visit"), ctx

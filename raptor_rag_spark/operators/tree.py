@@ -630,6 +630,19 @@ def write_level(
     return manifest
 
 
+def require_local_base(base: str) -> None:
+    """Raise ValueError naming ``base`` unless it is a local path. The
+    level manifests, the append ledger and the level swap are
+    local-filesystem I/O: on a remote base (hdfs://, s3a://) Spark would
+    write the levels remotely while the manifests land in a local dir
+    of that name, and the footer row count would fail unnamed."""
+    if "://" in base:
+        raise ValueError(
+            f"tree checkpoint base {base!r} is not a local path: level "
+            "manifests and the append-planner ledger are local-filesystem sidecars"
+        )
+
+
 def recover_levels(spark: SparkSession, base: str) -> None:
     """Bring every committed level to the state its manifest names
     (maintenance.recover_save against the manifest's save token): a
@@ -638,6 +651,7 @@ def recover_levels(spark: SparkSession, base: str) -> None:
     writers run this on entry, before anything reads a level. A level
     whose manifest carries no token was never rewritten through the
     swap, so a token'd live dir there is uncommitted too."""
+    require_local_base(base)
     layer = 0
     while os.path.exists(_manifest_path(base, layer)):
         path = _level_path(base, layer)
@@ -978,8 +992,8 @@ def build_tree(
     node_id, layer, cell_id, text, children, n_tokens, embedding, x, y).
     """
     dim = embed_dim or cfg.embedding_dim
+    recover_levels(spark, checkpoint_base)  # fails on a remote base before any dir is made
     os.makedirs(checkpoint_base, exist_ok=True)
-    recover_levels(spark, checkpoint_base)
 
     resumed = resume and last_complete_level(checkpoint_base) >= 0
     if resumed:

@@ -776,30 +776,37 @@ def q_cell_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _traversal_tree_base(tag: str) -> str:
+    """The temp-dir base of the traversal oracle's tree for source
+    ``tag``, keyed by the level layout too: a tree cached in an older
+    layout is rebuilt instead of failing its read. Trees cached for the
+    tag under another layout version, or the unversioned
+    ``rrs_trav_tree_<tag>``, are removed first."""
+    import shutil
+    import tempfile
+
+    from raptor_rag_spark.operators.tree import LEVEL_LAYOUT_VERSION
+
+    tmp = tempfile.gettempdir()
+    name = f"rrs_trav_tree_{LEVEL_LAYOUT_VERSION}_{tag}"
+    for entry in os.listdir(tmp):
+        if entry.startswith("rrs_trav_tree_") and entry.endswith("_" + tag) and entry != name:
+            shutil.rmtree(os.path.join(tmp, entry), ignore_errors=True)
+    return os.path.join(tmp, name)
+
+
 def q_traversal_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tree-traversal retrieval over a 2-level built tree (pinned
     golden oracle: build uses the summarizer + hash embedder). The
     checkpoint base is keyed by the source-data fingerprint so repeat
     runs RESUME from the levels instead of rebuilding (identical tree
     either way — test_resume_mid_build_identical)."""
-    import os as _os
-    import tempfile
-
     from raptor_rag_spark.operators.retrieve import embed_queries, retrieve_traversal
-    from raptor_rag_spark.operators.tree import (
-        LEVEL_LAYOUT_VERSION,
-        build_tree,
-        last_complete_level,
-    )
+    from raptor_rag_spark.operators.tree import build_tree, last_complete_level
     from raptor_rag_spark.sources.tables import source_fingerprint
 
     leaves = _leaf_nodes(spark, sf_dir)
-    tag = source_fingerprint(sf_dir)
-    # keyed by the level layout too: a tree cached in an older layout
-    # is rebuilt next to it instead of failing its read
-    base = _os.path.join(
-        tempfile.gettempdir(), f"rrs_trav_tree_{LEVEL_LAYOUT_VERSION}_{tag}"
-    )
+    base = _traversal_tree_base(source_fingerprint(sf_dir))
     nodes = build_tree(
         spark, leaves, base, CFG, start_resolution=2, max_layers=2, embed_dim=DIM, resume=True
     )

@@ -347,12 +347,9 @@ def has_pending_ledger(base: str) -> bool:
     these json sidecars with a shared metadata store."""
     import os
 
-    if "://" in base:
-        raise ValueError(
-            f"tree checkpoint base {base!r} is not a local path — the "
-            "append-planner ledger and level manifests are local-FS "
-            "sidecars (see has_pending_ledger docstring)"
-        )
+    from raptor_rag_spark.operators.tree import require_local_base
+
+    require_local_base(base)
     return os.path.exists(_pending_path(base))
 
 

@@ -419,6 +419,24 @@ def test_single_string_collapsed_retrieve_runs_one_python_wave(spark, built, cou
     assert max(tasks) <= sc.defaultParallelism, tasks
 
 
+def test_single_string_traversal_job_count_pinned(spark, built, count_jobs):
+    """One single-string traversal, its context collect included, runs
+    the question-matrix collect, one filtered read per layer and the
+    context job(s): at most levels + 3 jobs (the per-layer Spark loop
+    it replaced ran 21)."""
+    from raptor_rag_spark.operators.tree import last_complete_level
+
+    base, eng = built
+    eng.nodes.count()  # the cached node table is the call's input, not its work
+    levels = last_complete_level(base) + 1
+    ctx, n_jobs = count_jobs(
+        "pin-traversal-retrieve", lambda: eng.retrieve("veri isleme", top_k=2, collapse_tree=False)
+    )
+    assert list(ctx) == [0] and ctx[0].endswith("\n\n")
+    assert n_jobs <= levels + 3, (n_jobs, levels)
+    assert n_jobs == 7, (n_jobs, levels)
+
+
 def test_retrieve_with_arrow_conversion_off(spark, built):
     """str and list questions retrieve on a session with Arrow
     conversion off (Spark's default): the driver-embedded questions
@@ -504,3 +522,14 @@ def test_append_unpersists_replaced_node_table(spark, tmp_path):
     assert eng.nodes.agg(F.max("layer")).first()[0] >= 1
     assert before.storageLevel == StorageLevel.NONE
     assert eng.nodes.storageLevel != StorageLevel.NONE
+
+
+def test_remote_base_fails_with_named_error(spark, tmp_path, monkeypatch):
+    """A non-local checkpoint base fails on entry with one ValueError
+    naming it, before any dir is made: no local ``s3a:`` dir appears
+    under the working directory."""
+    monkeypatch.chdir(tmp_path)
+    eng = RaptorEngine(spark, "s3a://bucket/t", CFG, embed_dim=32)
+    with pytest.raises(ValueError, match="'s3a://bucket/t' is not a local path"):
+        eng.add_documents("x")
+    assert list(tmp_path.iterdir()) == []

@@ -350,3 +350,30 @@ def test_plan_is_bare_scan_rejects_python_kernel(spark):
     plan = with_udf._jdf.queryExecution().optimizedPlan().toString()
     assert "ArrowEvalPython" in plan and len(plan.strip().splitlines()) == 3, plan
     assert not plan_is_bare_scan(with_udf)
+
+
+def test_traversal_oracle_cache_drops_stale_layout_siblings(tmp_path, monkeypatch):
+    """The traversal oracle's cached tree is keyed by level layout and
+    source tag: trees cached for the same tag under another layout
+    version, or under the unversioned key, are removed; the current
+    key and other tags' trees stay."""
+    import tempfile
+
+    from raptor_rag_spark.operators.tree import LEVEL_LAYOUT_VERSION
+    from raptor_rag_spark.plans.driver_queries import _traversal_tree_base
+
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    tag, other = "0123456789ab", "ba9876543210"
+    names = [
+        f"rrs_trav_tree_{tag}",
+        f"rrs_trav_tree_flat0_{tag}",
+        f"rrs_trav_tree_{LEVEL_LAYOUT_VERSION}_{tag}",
+        f"rrs_trav_tree_{other}",
+        f"rrs_trav_tree_flat0_{other}",
+        f"unrelated_{tag}",
+    ]
+    for name in names:
+        (tmp_path / name / "level_0").mkdir(parents=True)
+    base = _traversal_tree_base(tag)
+    assert base == str(tmp_path / f"rrs_trav_tree_{LEVEL_LAYOUT_VERSION}_{tag}")
+    assert sorted(p.name for p in tmp_path.iterdir()) == sorted(names[2:])

@@ -1,7 +1,14 @@
-"""Generate tests/goldens/golden.json — pinned tile assignments and
-kNN join output on the deterministic synthetic pages corpus (north_rule
-parity surface: "join output rows and tile assignments"). Run once;
-tests/test_goldens.py recomputes and asserts equality forever after.
+"""Generate the pinned goldens on the deterministic synthetic pages
+corpus; tests/test_goldens.py recomputes them and asserts equality.
+
+- tests/goldens/golden.json: tile assignments and kNN join output
+  (north_rule parity surface: "join output rows and tile assignments").
+- tests/goldens/traversal.json: tree-traversal rows (distances as
+  ``float.hex``) and context digests for str, list and DataFrame
+  questions, top_k at k=2 and k=5, and threshold mode.
+
+Usage: ``python tools/gen_goldens.py [golden|traversal]`` (default
+golden). Regenerate only for an intentional semantic change.
 """
 
 from __future__ import annotations
@@ -10,6 +17,7 @@ import hashlib
 import json
 import os
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -28,12 +36,15 @@ DIM = 32
 K = 5
 
 
-def build(spark):
+def corpus_docs(spark):
     pages = synthetic_pages(spark, n=N_PAGES, seed=42)
-    docs = extract_pages(pages, passthrough=("page_id",)).select(
+    return extract_pages(pages, passthrough=("page_id",)).select(
         F.col("page_id").alias("doc_id"), "text"
     )
-    chunks = chunk_documents(docs, max_tokens=60)
+
+
+def build(spark):
+    chunks = chunk_documents(corpus_docs(spark), max_tokens=60)
     nodes = (
         embed_texts(chunks, dim=DIM)
         .withColumnRenamed("chunk_id", "node_id")
@@ -70,12 +81,87 @@ def compute_goldens(spark) -> dict:
     }
 
 
-if __name__ == "__main__":
-    spark = get_spark("gen-goldens", cores=8)
-    g = compute_goldens(spark)
-    out = os.path.join(os.path.dirname(__file__), "..", "tests", "goldens", "golden.json")
+TRAVERSAL_QUESTIONS = [
+    "veri isleme",
+    "berber dukkani",
+    "data processing shuffle",
+    "table scan join",
+]
+TRAVERSAL_THRESHOLD = 1.05
+
+
+def _traversal_rows(sel) -> list:
+    return sorted(
+        [r["query_id"], r["node_id"], r["sel_layer"], r["rank"], float(r["dist"]).hex(),
+         r["text"], r["n_tokens"]]
+        for r in sel.collect()
+    )
+
+
+def _contexts(ctx) -> list:
+    """[query_id, sha256 of the context, its length] per question."""
+    pairs = ctx.items() if isinstance(ctx, dict) else ((r[0], r[1]) for r in ctx.collect())
+    return sorted([int(q), hashlib.sha256(c.encode()).hexdigest(), len(c)] for q, c in pairs)
+
+
+def compute_traversal_golden(spark, base: str) -> dict:
+    """Tree-traversal rows and contexts over a tree built under
+    ``base`` (an empty dir) from the golden corpus. top_k runs through
+    ``RaptorEngine.retrieve`` for str, list and DataFrame questions;
+    threshold mode, which the facade does not expose, calls
+    ``retrieve_traversal`` with DataFrame questions. Contexts are
+    recorded as their sha256 and length."""
+    from raptor_rag_spark.api import RaptorEngine
+    from raptor_rag_spark.config import EngineConfig
+    from raptor_rag_spark.functions.localtab import local_df
+    from raptor_rag_spark.operators.retrieve import embed_queries, retrieve_traversal
+    from raptor_rag_spark.operators.tree import last_complete_level, read_manifest
+
+    cfg = EngineConfig(embedding_dim=DIM)
+    eng = RaptorEngine(spark, base, cfg, embed_dim=DIM)
+    eng.add_documents(corpus_docs(spark))
+    qs = TRAVERSAL_QUESTIONS
+    qdf = local_df(spark, list(enumerate(qs)), "query_id long, text string")
+
+    out = {
+        "level_rows": [read_manifest(base, k)["rows"] for k in range(last_complete_level(base) + 1)],
+    }
+    for name, questions, k in (
+        ("str_k2", qs[0], 2),
+        ("list_k2", qs, 2),
+        ("list_k5", qs, 5),
+        ("df_k2", qdf, 2),
+        ("df_k5", qdf, 5),
+    ):
+        ctx, sel = eng.retrieve(
+            questions, top_k=k, collapse_tree=False, return_layer_information=True
+        )
+        out[name] = {"rows": _traversal_rows(sel), "contexts": _contexts(ctx)}
+    sel, ctx = retrieve_traversal(
+        embed_queries(qdf, dim=DIM, seed=cfg.seed), eng.nodes, cfg,
+        selection_mode="threshold", threshold=TRAVERSAL_THRESHOLD,
+    )
+    out["df_threshold"] = {"rows": _traversal_rows(sel), "contexts": _contexts(ctx)}
+    return out
+
+
+def _write(name: str, g: dict) -> str:
+    out = os.path.join(os.path.dirname(__file__), "..", "tests", "goldens", name)
     os.makedirs(os.path.dirname(out), exist_ok=True)
     with open(out, "w") as f:
         json.dump(g, f, indent=1)
-    print("wrote", out, "nodes:", g["n_nodes"], "tile rows:", g["n_tile_rows"])
+    return out
+
+
+if __name__ == "__main__":
+    which = sys.argv[1] if len(sys.argv) > 1 else "golden"
+    spark = get_spark("gen-goldens", cores=8)
+    if which == "traversal":
+        with tempfile.TemporaryDirectory() as base:
+            g = compute_traversal_golden(spark, base)
+        print("wrote", _write("traversal.json", g), "levels:", g["level_rows"])
+    else:
+        g = compute_goldens(spark)
+        print("wrote", _write("golden.json", g), "nodes:", g["n_nodes"],
+              "tile rows:", g["n_tile_rows"])
     spark.stop()
