@@ -867,9 +867,9 @@ def main() -> None:
     timed("quantize_corpus", _quantize_corpus)
 
     def _knn_brute_quantized():
-        from raptor_rag_spark.operators.quantize import brute_force_knn_quantized
+        from raptor_rag_spark.operators.knn import brute_force_knn
 
-        brute_force_knn_quantized(corpus["q1000"], corpus["nodes_q"], k=10).count()
+        brute_force_knn(corpus["q1000"], corpus["nodes_q"], k=10).count()
 
     timed("knn_brute_quantized_1000q", _knn_brute_quantized)
 

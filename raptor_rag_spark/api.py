@@ -816,7 +816,7 @@ class RaptorEngine:
     def quantize_corpus(self, nodes: DataFrame | None = None) -> DataFrame:
         """Int8-quantize the (node_id, embedding) corpus (4x memory/
         scan for retrieval at scale) — see operators/quantize.py; score
-        with quantize.brute_force_knn_quantized."""
+        with knn.brute_force_knn, which reads the int8 columns."""
         from raptor_rag_spark.operators.quantize import quantize_embeddings
 
         src = nodes if nodes is not None else self.nodes

@@ -23,8 +23,8 @@ query time). This module recasts that design Spark-first:
   same broadcast-matmul kernel (map-only on the query side, so 10^6+
   query batches probe without any driver collect), equi-joins the list
   table on list_id for candidates, then reuses the exact cosine re-rank
-  kernels from operators/knn.py (`_score_candidates`, broadcast/join
-  strategy auto-switch at BROADCAST_MAX_QUERIES).
+  kernel from operators/knn.py (`_score_candidates`, float or int8
+  lists, broadcast/join strategy auto-switch at BROADCAST_MAX_QUERIES).
 
 Scale notes (100 TB): the centroid matrix is nlist x dim floats
 (4096 x 1024 x 8B = 32 MB) — a legitimate broadcast, like the tile
@@ -49,11 +49,13 @@ from raptor_rag_spark.operators.knn import (
     _rank_and_take,
     _resolve_strategy,
     _score_candidates,
-    brute_force_knn,
+    node_vector_cols,
     require_integral_id,
     semi_filter_allowed,
     vec_matrix,
 )
+from raptor_rag_spark.operators.quantize import quantized_nodes
+from raptor_rag_spark.operators.similarity import measure_index_recall
 
 
 _FOREIGN_QUANTIZER_MSG = (
@@ -229,8 +231,8 @@ class IvfIndex:
         _skip_build: bool = False,
     ) -> None:
         """``quantized=True`` stores the inverted lists as int8
-        (q_vec array<tinyint> + q_scale, operators/quantize.py) with NO
-        float copy — ~4x smaller resident/persisted lists and 4x fewer
+        (array<tinyint> + one scale per vector, operators/quantize.py)
+        with NO float copy — ~4x smaller resident/persisted lists and 4x fewer
         bytes per probed partition (compounds with the persisted
         store's partition pruning). Training and list assignment run on
         the float input BEFORE quantization, so the coarse quantizer
@@ -265,21 +267,11 @@ class IvfIndex:
             flt, nlist, "node_id", "embedding", seed, train_sample, n_iters
         )
         self.lists = assign_lists(flt, self.centroids).localCheckpoint(eager=True)
-        self.nodes = self._quantize(flt) if quantized else flt
-
-    @staticmethod
-    def _quantize(flt: DataFrame) -> DataFrame:
-        from raptor_rag_spark.operators.quantize import quantize_embeddings
-
-        return (
-            quantize_embeddings(flt)
-            .select("node_id", "q_vec", "q_scale")
-            .localCheckpoint(eager=True)
-        )
+        self.nodes = quantized_nodes(flt) if quantized else flt
 
     @property
     def _val_cols(self) -> tuple:
-        return ("q_vec", "q_scale") if self.quantized else ("embedding",)
+        return node_vector_cols(self.nodes)
 
     def list_sizes(self) -> DataFrame:
         """(list_id, n) occupancy per inverted list — the skew
@@ -371,12 +363,7 @@ class IvfIndex:
             cands = semi_filter_allowed(cands, allowed)
         if self.store is None:
             cands = cands.join(self.nodes, "node_id")
-        if self.quantized:
-            from raptor_rag_spark.operators.knn import _score_candidates_quantized
-
-            scored = _score_candidates_quantized(cands, q, strategy=scoring)
-        else:
-            scored = _score_candidates(cands, q, strategy=scoring)
+        scored = _score_candidates(cands, q, strategy=scoring)
         return _rank_and_take(scored, k)
 
     def append(self, new_nodes: DataFrame) -> dict:
@@ -414,7 +401,7 @@ class IvfIndex:
             )
         new = new.localCheckpoint(eager=True)
         new_lists = assign_lists(new, self.centroids).localCheckpoint(eager=True)
-        stored = self._quantize(new) if self.quantized else new
+        stored = quantized_nodes(new) if self.quantized else new
         self.nodes = self.nodes.unionByName(stored).localCheckpoint(eager=True)
         self.lists = self.lists.unionByName(new_lists).localCheckpoint(eager=True)
         return {"appended": new.count()}
@@ -522,7 +509,7 @@ class IvfIndex:
                 "in the index — appends must be new rows (dedup upstream)"
             )
         new_lists = assign_lists(new, self.centroids)
-        stored = self._quantize(new) if self.quantized else new
+        stored = quantized_nodes(new) if self.quantized else new
         rows = (
             stored.join(new_lists, "node_id")
             .select("list_id", "node_id", *self._val_cols)
@@ -546,7 +533,7 @@ class IvfIndex:
         spark.catalog.refreshByPath(store_path)
         fresh = spark.read.parquet(store_path)
         self.store = fresh
-        self.nodes = fresh.select("node_id", *self._val_cols)
+        self.nodes = fresh.select("node_id", *node_vector_cols(fresh))
         self.lists = fresh.select("node_id", "list_id")
         self.applied_appends = list(appends)
 
@@ -558,21 +545,8 @@ class IvfIndex:
         exact_nodes: DataFrame | None = None,
     ) -> float:
         """recall@k vs exact brute force — offline drift check, same
-        contract as TileAnnIndex.measure_recall. A quantized index
-        stores no float corpus, so the exact baseline must be passed in
-        (``exact_nodes`` = (node_id, embedding))."""
-        if exact_nodes is None:
-            if self.quantized:
-                raise ValueError(
-                    "quantized index stores no float corpus — pass "
-                    "exact_nodes=(node_id, embedding) for the exact baseline"
-                )
-            exact_nodes = self.nodes
-        approx = self.search(queries, k=k, nprobe=nprobe).select("query_id", "node_id")
-        exact = brute_force_knn(queries, exact_nodes, k=k).select("query_id", "node_id")
-        hit = approx.join(exact, ["query_id", "node_id"], "inner").count()
-        total = exact.count()
-        return hit / total if total else 1.0
+        contract as TileAnnIndex.measure_recall (measure_index_recall)."""
+        return measure_index_recall(self, queries, k, exact_nodes, nprobe=nprobe)
 
     def save(self, path: str, recall: float | None = None) -> None:
         """Persist the index with the inverted lists AS PARQUET
@@ -703,7 +677,7 @@ class IvfIndex:
         )
         store = spark.read.parquet(os.path.join(path, "store.parquet"))
         idx.store = store
-        idx.nodes = store.select("node_id", *idx._val_cols)
+        idx.nodes = store.select("node_id", *node_vector_cols(store))
         idx.lists = store.select("node_id", "list_id")
         # driver-side sidecar read (bounded by nlist) — no Spark job
         idx.centroids = _read_centroid_sidecar(

@@ -5,13 +5,14 @@ Replaces the reference's brute-force scipy loop
 tree_retriever.py:199-224) and its FAISS IndexFlatIP search
 (/root/reference/raptor/FaissRetriever.py:187-202,:259-273).
 
-Two physical strategies over identical semantics:
+Two operators over identical semantics:
 
-1. ``brute_force_knn`` — queries x nodes cross join + cosine distance
-   + per-query top-k window. The node side is the build side shared by
-   all queries (the batch-retrieval reuse at tree_retriever.py:502-504
-   is just "the join build side" here). Correct at any selectivity;
-   O(|Q| * |N|).
+1. ``brute_force_knn`` — every query scored against every node by a
+   blocked BLAS matmul (a broadcast query matrix against each Arrow
+   batch of nodes, or cogrouped query/node blocks) + per-query top-k
+   window. The node side is scanned once for all queries (the
+   batch-retrieval reuse at tree_retriever.py:502-504). Correct at any
+   selectivity; O(|Q| * |N|).
 
 2. ``tile_knn`` — tile-pruned candidate generation: equi-join query
    cells against the node tile table on cell_id (with a neighbor ring
@@ -23,7 +24,11 @@ Two physical strategies over identical semantics:
 
 Distances: embeddings are unit-norm, so cosine distance = 1 - dot.
 Scoring runs as float64 BLAS (matmul / einsum) inside Arrow kernels,
-one call per batch. Ordering ties break on
+one call per batch. Node vectors come in two formats, read from the
+node frame's columns (``node_vector_cols``): float vectors, or int8
+vectors with one scale each (operators/quantize.py), whose distance is
+1 - dot * scale. Every kernel decodes both through ``decode_vectors``,
+so both formats take every strategy. Ordering ties break on
 node_id: np.argsort's default quicksort is NOT stable, so the
 reference's tie order is undefined; the engine pins (dist, node_id)
 total order (SURVEY.md §2.5 W1, documented deviation).
@@ -141,6 +146,50 @@ def vec_matrix(values, col: str, where: str, expect_dim: int | None = None):
     return mat
 
 
+def node_vector_cols(df: DataFrame, n_emb: str = "embedding") -> tuple[str, ...]:
+    """The node-vector format of ``df``, read from its columns:
+    ``(n_emb,)`` for float vectors, ``("q_vec", "q_scale")`` for int8
+    vectors with one scale each (quantize.quantize_embeddings:
+    v ~= q_vec * q_scale). A frame with neither is rejected here, before
+    any kernel runs."""
+    if n_emb in df.columns:
+        return (n_emb,)
+    if "q_vec" in df.columns and "q_scale" in df.columns:
+        return ("q_vec", "q_scale")
+    raise ValueError(
+        f"no node vectors: expected a float vector column {n_emb!r} or the "
+        f"int8 columns 'q_vec' and 'q_scale'; got columns {df.columns}"
+    )
+
+
+def decode_vectors(pdf, cols: tuple[str, ...], where: str, expect_dim: int | None = None):
+    """One Arrow batch's node vectors in the format ``cols``
+    (node_vector_cols) -> (float64 matrix, per-row scales or None).
+    int8 vectors stay unscaled: the kernels apply the scale to the dot
+    product (``cosine_dist``)."""
+    import numpy as np
+
+    mat = vec_matrix(pdf[cols[0]], cols[0], where, expect_dim)
+    if len(cols) == 1:
+        return mat, None
+    return mat, pdf[cols[1]].to_numpy(dtype=np.float64)
+
+
+def cosine_dist(dots, scales):
+    """Cosine distance of unit-norm vectors from their dot products;
+    ``scales`` (int8 nodes) rescale each dot along the last axis."""
+    return 1.0 - dots if scales is None else 1.0 - dots * scales
+
+
+def _block_topk(q_mat, npdf, cols: tuple[str, ...], k: int, where: str):
+    """Partial top-k of a query matrix against one batch of nodes:
+    (query rows, node rows, distances)."""
+    n_mat, scales = decode_vectors(npdf, cols, where, expect_dim=q_mat.shape[1])
+    dists = cosine_dist(q_mat @ n_mat.T, scales)  # (nq, batch)
+    rows_q, cols_n = partial_topk(dists, k)
+    return rows_q, cols_n, dists[rows_q, cols_n]
+
+
 def require_integral_id(df: DataFrame, col: str, where: str) -> None:
     """The join-path kernels cast ids with cast('long') / numpy int64: a
     non-integral id column would silently become NULL, collapse every
@@ -181,94 +230,74 @@ def _resolve_strategy(strategy: str, queries: DataFrame) -> str:
     return "broadcast" if queries.count() <= BROADCAST_MAX_QUERIES else "join"
 
 
-def _brute_force_knn_join(
+def _block_pair_scores(
     queries: DataFrame,
     nodes: DataFrame,
     k: int,
     query_id: str,
     node_id: str,
     q_emb: str,
-    n_emb: str,
-    n_query_blocks: int | None = None,
-    n_node_blocks: int | None = None,
+    vec_cols: tuple[str, ...],
 ) -> DataFrame:
-    """Fully distributed brute-force kNN — NO driver collect of either
-    side, so 10^6+ query batches behave exactly like 10 (the batch
-    contract in retrieve.py).
+    """The join strategy of brute_force_knn: per-query partial top-ks
+    with NO driver collect of either side, so 10^6+ query batches behave
+    exactly like 10 (the batch contract in retrieve.py).
 
-    Physical strategy — two-sided blocked matmul (same shape as
+    Two-sided blocked matmul (same shape as
     dedup.embedding_neardup_pairs): queries hash into QB blocks, nodes
     into NB blocks; each query row is replicated to every node block and
-    vice versa; one ``applyInPandas`` group per (qb, nb) block pair does
-    a BLAS matmul and emits its per-query partial top-k. The global
-    window then sees about NB*k rows per query (more only under ties at
-    the k-th distance, see partial_topk) — the union of partial
-    top-ks always contains the global top-k. Shuffle volume is
-    |Q|*NB + |N|*QB rows; block counts default from the cluster's
-    parallelism so every core gets a block pair."""
+    vice versa; one cogroup per (qb, nb) block pair does a BLAS matmul
+    and emits its per-query partial top-k. The global window then sees
+    about NB*k rows per query (more only under ties at the k-th
+    distance, see partial_topk). ``cogroup`` keeps the two sides as
+    separate Arrow streams, so int8 node vectors shuffle as
+    array<tinyint> + one scale (a union would upcast them to the query
+    side's float). Shuffle volume is |Q|*NB + |N|*QB rows; block counts
+    follow the cluster's parallelism so every core gets a block pair."""
     import numpy as np
     import pandas as pd
 
-    require_integral_id(queries, query_id, "_brute_force_knn_join")
-    require_integral_id(nodes, node_id, "_brute_force_knn_join")
-    spark = nodes.sparkSession
-    par = spark.sparkContext.defaultParallelism
+    require_integral_id(queries, query_id, "brute_force_knn")
+    require_integral_id(nodes, node_id, "brute_force_knn")
+    par = nodes.sparkSession.sparkContext.defaultParallelism
     # qb*nb ~ 2*parallelism: measured 5.2 s vs 24.2 s (120k q x 5k nodes,
     # 32 cores) for sqrt(2*par) vs sqrt(par) blocks — one wave of
     # par-ish groups straggles on the skewiest block pair, two waves of
     # smaller groups load-balance; shuffle volume grows only as
     # sqrt(par) * (|Q| + |N|)
-    default_b = max(2, int((2 * par) ** 0.5))
-    qb = int(n_query_blocks) if n_query_blocks else default_b
-    nb = int(n_node_blocks) if n_node_blocks else default_b
+    nb = qb = max(2, int((2 * par) ** 0.5))
 
     qrep = (
-        queries.select(
-            F.lit(0).alias("_side"),
-            F.col(query_id).cast("long").alias("_id"),
-            F.col(q_emb).alias("_emb"),
-        )
+        queries.select(F.col(query_id).cast("long").alias("_id"), F.col(q_emb).alias("_emb"))
         .withColumn("_qb", F.pmod(F.xxhash64("_id"), F.lit(qb)).cast("int"))
         .withColumn("_nb", F.explode(F.array(*[F.lit(i) for i in range(nb)])))
     )
     nrep = (
-        nodes.select(
-            F.lit(1).alias("_side"),
-            F.col(node_id).cast("long").alias("_id"),
-            F.col(n_emb).alias("_emb"),
-        )
+        nodes.select(F.col(node_id).cast("long").alias("_id"), *vec_cols)
         .withColumn("_nb", F.pmod(F.xxhash64("_id"), F.lit(nb)).cast("int"))
         .withColumn("_qb", F.explode(F.array(*[F.lit(i) for i in range(qb)])))
     )
 
-    def block_kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        side = pdf["_side"].to_numpy()
-        q_sel = side == 0
-        n_sel = ~q_sel
-        if not q_sel.any() or not n_sel.any():
+    def block_kernel(qpdf: pd.DataFrame, npdf: pd.DataFrame) -> pd.DataFrame:
+        if not len(qpdf) or not len(npdf):
             return pd.DataFrame({query_id: [], node_id: [], "dist": []}).astype(
                 {query_id: "int64", node_id: "int64", "dist": "float64"}
             )
-        q_ids = pdf["_id"].to_numpy(dtype=np.int64)[q_sel]
-        n_ids = pdf["_id"].to_numpy(dtype=np.int64)[n_sel]
-        q_mat = vec_matrix(pdf["_emb"][q_sel], q_emb, "_brute_force_knn_join")
-        n_mat = vec_matrix(pdf["_emb"][n_sel], n_emb, "_brute_force_knn_join", expect_dim=q_mat.shape[1] if q_mat.size else None)
-        dists = 1.0 - q_mat @ n_mat.T  # (nq, nn)
-        rows_q, cols = partial_topk(dists, k)
+        q_mat = vec_matrix(qpdf["_emb"], q_emb, "brute_force_knn")
+        rows_q, cols, dists = _block_topk(q_mat, npdf, vec_cols, k, "brute_force_knn")
         return pd.DataFrame(
             {
-                query_id: q_ids[rows_q],
-                node_id: n_ids[cols],
-                "dist": dists[rows_q, cols],
+                query_id: qpdf["_id"].to_numpy(dtype=np.int64)[rows_q],
+                node_id: npdf["_id"].to_numpy(dtype=np.int64)[cols],
+                "dist": dists,
             }
         )
 
-    scored = (
-        qrep.unionByName(nrep)
-        .groupBy("_qb", "_nb")
+    return (
+        qrep.groupBy("_qb", "_nb")
+        .cogroup(nrep.groupBy("_qb", "_nb"))
         .applyInPandas(block_kernel, f"{query_id} long, {node_id} long, dist double")
     )
-    return _rank_and_take(scored, k, query_id, node_id)
 
 
 def brute_force_knn(
@@ -284,6 +313,10 @@ def brute_force_knn(
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """(query_id, node_id, dist, rank<=k, *carry). Exact at any batch size.
+
+    ``nodes`` carries float vectors in ``n_emb`` or int8 vectors in
+    ``q_vec``/``q_scale`` (node_vector_cols); both formats take either
+    strategy.
 
     ``allowed``: optional one-column (node_id) allowlist for FILTERED
     kNN — rows of ``nodes`` outside it never reach the scoring kernel
@@ -307,10 +340,11 @@ def brute_force_knn(
     zip_with/aggregate cosine is interpreted (~0.27 ms/row measured) —
     1000x slower than this path at scale.
 
-    strategy='join' (large query batches): two-sided blocked matmul,
-    no driver collect of either side (_brute_force_knn_join). 'auto'
-    switches at BROADCAST_MAX_QUERIES (one count() of the queries;
-    a caller that knows the batch size passes the strategy instead).
+    strategy='join' (large query batches): two-sided blocked cogroup
+    matmul, no driver collect of either side (_block_pair_scores).
+    'auto' switches at BROADCAST_MAX_QUERIES (one count() of the
+    queries; a caller that knows the batch size passes the strategy
+    instead).
     """
     import numpy as np
     import pandas as pd
@@ -319,17 +353,17 @@ def brute_force_knn(
 
     from raptor_rag_spark.functions.planutil import coalesce_kernel_input
 
+    vec_cols = node_vector_cols(nodes, n_emb)
     out_cols = [query_id, node_id, "dist", "rank", *carry]
     if allowed is not None:
         nodes = semi_filter_allowed(nodes, allowed, node_id)
     if _resolve_strategy(strategy, queries) == "join":
-        ranked = _brute_force_knn_join(
-            queries, nodes, k, query_id, node_id, q_emb, n_emb
-        )
+        scored = _block_pair_scores(queries, nodes, k, query_id, node_id, q_emb, vec_cols)
+        ranked = _rank_and_take(scored, k, query_id, node_id)
         if carry:
             ranked = ranked.join(nodes.select(node_id, *carry), node_id)
         return ranked.select(*out_cols)
-    node_side = nodes.select(node_id, n_emb, *carry)
+    node_side = nodes.select(node_id, *vec_cols, *carry)
     schema = T.StructType(
         [
             T.StructField(query_id, T.LongType()),
@@ -351,15 +385,12 @@ def brute_force_knn(
         for pdf in it:
             if not len(pdf):
                 continue
-            n_ids = pdf[node_id].to_numpy(dtype=np.int64)
-            n_mat = vec_matrix(pdf[n_emb], n_emb, "brute_force_knn", expect_dim=mat.shape[1])
-            dists = 1.0 - mat @ n_mat.T  # (nq, batch)
-            rows_q, cols = partial_topk(dists, k)
+            rows_q, cols, dists = _block_topk(mat, pdf, vec_cols, k, "brute_force_knn")
             out = pd.DataFrame(
                 {
                     query_id: ids[rows_q],
-                    node_id: n_ids[cols],
-                    "dist": dists[rows_q, cols],
+                    node_id: pdf[node_id].to_numpy(dtype=np.int64)[cols],
+                    "dist": dists,
                 }
             )
             for c in carry:
@@ -408,164 +439,66 @@ def tile_knn_candidates(
     )
 
 
-def _score_candidates_join(
-    cand_with_emb: DataFrame,
-    queries: DataFrame,
-    query_id: str = "query_id",
-    q_emb: str = "q_embedding",
-) -> DataFrame:
-    """Join-based twin of :func:`_score_candidates` for query batches
-    past the broadcast bound: candidates equi-join the query-embedding
-    table on query_id (shuffle-hash or broadcast, AQE's call), then one
-    Arrow kernel computes the row-wise dot per batch. The query vector
-    travels with each candidate row — double the Arrow traffic of the
-    broadcast lookup, but NO driver-resident state, so 10^6+ query
-    batches score exactly like 10 (pytest-asserted parity)."""
-    import numpy as np
-    import pandas as pd
-
-    require_integral_id(queries, query_id, "_score_candidates_join")
-    require_integral_id(cand_with_emb, "node_id", "_score_candidates_join")
-    joined = cand_with_emb.select(query_id, "node_id", "embedding").join(
-        queries.select(query_id, q_emb), query_id
-    )
-
-    def score(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            q_mat = vec_matrix(pdf[q_emb], q_emb, "_score_candidates_join")
-            n_mat = vec_matrix(pdf["embedding"], "embedding", "_score_candidates_join", expect_dim=q_mat.shape[1])
-            dists = 1.0 - np.einsum("ij,ij->i", q_mat, n_mat)
-            yield pd.DataFrame(
-                {
-                    query_id: pdf[query_id].to_numpy(dtype=np.int64),
-                    "node_id": pdf["node_id"].to_numpy(dtype=np.int64),
-                    "dist": dists,
-                }
-            )
-
-    return joined.mapInPandas(score, f"{query_id} long, node_id long, dist double")
-
-
 def _score_candidates(
-    cand_with_emb: DataFrame,
+    cands: DataFrame,
     queries: DataFrame,
     query_id: str = "query_id",
     q_emb: str = "q_embedding",
     strategy: str = "broadcast",
 ) -> DataFrame:
-    """(query_id, node_id, embedding) candidates -> exact cosine dist,
-    via a broadcast query matrix + per-Arrow-batch vectorized lookup
-    matmul (einsum). Only the node embedding travels with the row; the
-    query vector is looked up from the broadcast — half the Arrow
-    traffic of shipping both vectors, and no interpreted Catalyst
-    higher-order functions in the hot path. strategy='join' switches to
-    the distributed no-collect twin (_score_candidates_join)."""
+    """(query_id, node_id, node vectors) candidates -> (query_id,
+    node_id, dist): the exact cosine of each candidate row, computed by
+    one row-wise einsum per Arrow batch for either node format
+    (node_vector_cols) — no interpreted Catalyst higher-order functions
+    in the hot path.
+
+    strategy='broadcast': each row's query vector is looked up in a
+    driver-collected query matrix broadcast to the tasks, so only the
+    node vector travels with the row. strategy='join': candidates
+    equi-join the query-embedding table on query_id (shuffle-hash or
+    broadcast, AQE's call) and the query vector travels with each row —
+    double the Arrow traffic, but NO driver-resident state, so 10^6+
+    query batches score exactly like 10."""
     import numpy as np
 
     from pyspark.sql import types as T
 
-    if strategy == "join":
-        return _score_candidates_join(cand_with_emb, queries, query_id, q_emb)
-    q_ids, q_mat = _collect_query_matrix(queries, query_id, q_emb)
-    spark = cand_with_emb.sparkSession
-    if len(q_ids) == 0:
-        return spark.createDataFrame([], f"{query_id} long, node_id long, dist double")
-    b_index = spark.sparkContext.broadcast({int(qid): i for i, qid in enumerate(q_ids)})
-    b_mat = spark.sparkContext.broadcast(q_mat)
-
-    in_df = cand_with_emb.select(query_id, "node_id", "embedding")
+    vec_cols = node_vector_cols(cands)
+    in_df = cands.select(query_id, "node_id", *vec_cols)
     out_schema = T.StructType(
-        [f for f in in_df.schema.fields if f.name != "embedding"]
-        + [T.StructField("dist", T.DoubleType())]
+        [in_df.schema[query_id], in_df.schema["node_id"], T.StructField("dist", T.DoubleType())]
     )
+    if strategy == "join":
+        require_integral_id(queries, query_id, "_score_candidates")
+        require_integral_id(cands, "node_id", "_score_candidates")
+        in_df = in_df.join(queries.select(query_id, q_emb), query_id)
+
+        def query_rows(pdf):
+            return vec_matrix(pdf[q_emb], q_emb, "_score_candidates")
+
+    else:
+        q_ids, q_mat = _collect_query_matrix(queries, query_id, q_emb)
+        spark = cands.sparkSession
+        if len(q_ids) == 0:
+            return spark.createDataFrame([], out_schema)
+        b_index = spark.sparkContext.broadcast({int(qid): i for i, qid in enumerate(q_ids)})
+        b_mat = spark.sparkContext.broadcast(q_mat)
+
+        def query_rows(pdf):
+            return b_mat.value[pdf[query_id].map(b_index.value).to_numpy(dtype=np.int64)]
 
     def score(it):
-        idx, mat = b_index.value, b_mat.value
         for pdf in it:
             if not len(pdf):
                 continue
-            rows = pdf[query_id].map(idx).to_numpy(dtype=np.int64)
-            n_mat = vec_matrix(pdf["embedding"], "embedding", "_score_candidates", expect_dim=mat.shape[1])
-            dists = 1.0 - np.einsum("ij,ij->i", mat[rows], n_mat)
-            out = pdf.drop(columns=["embedding"])
-            out["dist"] = dists
-            yield out
+            q_rows = query_rows(pdf)
+            n_mat, scales = decode_vectors(
+                pdf, vec_cols, "_score_candidates", expect_dim=q_rows.shape[1]
+            )
+            dists = cosine_dist(np.einsum("ij,ij->i", q_rows, n_mat), scales)
+            yield pdf[[query_id, "node_id"]].assign(dist=dists)
 
     return in_df.mapInPandas(score, out_schema)
-
-
-def _score_candidates_quantized(
-    cand_with_q: DataFrame,
-    queries: DataFrame,
-    query_id: str = "query_id",
-    q_emb: str = "q_embedding",
-    strategy: str = "broadcast",
-) -> DataFrame:
-    """Quantized twin of :func:`_score_candidates`: candidates carry
-    (q_vec array<tinyint>, q_scale float) instead of the float
-    embedding — 4x less Arrow traffic and executor memory on the
-    corpus side; the kernel dequantizes per batch (int8 matrix ->
-    float64 once per Arrow batch, never per corpus). Same two physical
-    strategies: broadcast query matrix below the bound, query-embedding
-    equi-join above it (no driver collect)."""
-    import numpy as np
-    import pandas as pd
-
-    if strategy == "join":
-        require_integral_id(queries, query_id, "_score_candidates_quantized")
-        require_integral_id(cand_with_q, "node_id", "_score_candidates_quantized")
-        joined = cand_with_q.select(query_id, "node_id", "q_vec", "q_scale").join(
-            queries.select(query_id, q_emb), query_id
-        )
-
-        def score_join(it):
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                q_mat = vec_matrix(pdf[q_emb], q_emb, "_score_candidates_quantized(join)")
-                n_mat = vec_matrix(pdf["q_vec"], "q_vec", "_score_candidates_quantized(join)", expect_dim=q_mat.shape[1])
-                scales = pdf["q_scale"].to_numpy(dtype=np.float64)
-                dists = 1.0 - np.einsum("ij,ij->i", q_mat, n_mat) * scales
-                yield pd.DataFrame(
-                    {
-                        query_id: pdf[query_id].to_numpy(dtype=np.int64),
-                        "node_id": pdf["node_id"].to_numpy(dtype=np.int64),
-                        "dist": dists,
-                    }
-                )
-
-        return joined.mapInPandas(score_join, f"{query_id} long, node_id long, dist double")
-
-    q_ids, q_mat = _collect_query_matrix(queries, query_id, q_emb)
-    spark = cand_with_q.sparkSession
-    if len(q_ids) == 0:
-        return spark.createDataFrame([], f"{query_id} long, node_id long, dist double")
-    index = {int(qid): i for i, qid in enumerate(q_ids)}
-    b_index = spark.sparkContext.broadcast(index)
-    b_mat = spark.sparkContext.broadcast(q_mat)
-
-    def score(it):
-        idx, mat = b_index.value, b_mat.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            rows = pdf[query_id].map(idx).to_numpy(dtype=np.int64)
-            n_mat = vec_matrix(pdf["q_vec"], "q_vec", "_score_candidates_quantized(broadcast)", expect_dim=mat.shape[1])
-            scales = pdf["q_scale"].to_numpy(dtype=np.float64)
-            dists = 1.0 - np.einsum("ij,ij->i", mat[rows], n_mat) * scales
-            yield pd.DataFrame(
-                {
-                    query_id: pdf[query_id].to_numpy(dtype=np.int64),
-                    "node_id": pdf["node_id"].to_numpy(dtype=np.int64),
-                    "dist": dists,
-                }
-            )
-
-    return cand_with_q.select(query_id, "node_id", "q_vec", "q_scale").mapInPandas(
-        score, f"{query_id} long, node_id long, dist double"
-    )
 
 
 def _ring_knn(
@@ -604,7 +537,7 @@ def _ring_knn(
     for round_i, r in enumerate(schedule):
         cand = candidates(remaining, r, scoring == "broadcast")
         scored = _score_candidates(
-            cand.join(nodes.select("node_id", "embedding"), "node_id"),
+            cand.join(nodes.select("node_id", *node_vector_cols(nodes)), "node_id"),
             remaining,
             query_id,
             q_emb,

@@ -15,6 +15,7 @@ from raptor_rag_spark.operators.knn import (
     adaptive_candidates,
     brute_force_knn,
 )
+from raptor_rag_spark.operators.quantize import quantized_nodes
 from raptor_rag_spark.operators.tile import (
     adaptive_tile_assignments,
     cell_key_col,
@@ -86,7 +87,7 @@ class TileAnnIndex:
         flt = nodes.select(F.col(id_col).alias("node_id"), "embedding").localCheckpoint(
             eager=True
         )
-        self.nodes = self._quantize_nodes(flt) if quantized else flt
+        self.nodes = quantized_nodes(flt) if quantized else flt
 
         def build_view(seed: int):
             from raptor_rag_spark.operators.tile import cell_occupancy_map
@@ -128,16 +129,6 @@ class TileAnnIndex:
                 self.views = list(pool.map(build_view, seeds))
         else:
             self.views = [build_view(s) for s in seeds]
-
-    @staticmethod
-    def _quantize_nodes(flt: DataFrame) -> DataFrame:
-        from raptor_rag_spark.operators.quantize import quantize_embeddings
-
-        return (
-            quantize_embeddings(flt)
-            .select("node_id", "q_vec", "q_scale")
-            .localCheckpoint(eager=True)
-        )
 
     def _bk_col(self):
         return cell_key_col(F.col("x"), F.col("y"), self.base_resolution).alias("_bk")
@@ -393,7 +384,7 @@ class TileAnnIndex:
             }
             new_views.append((seed, xy2, atiles2, pop2))
         self.views = new_views
-        stored = self._quantize_nodes(add) if self.quantized else add
+        stored = quantized_nodes(add) if self.quantized else add
         self.nodes = self.nodes.unionByName(stored).localCheckpoint(eager=True)
         return stats
 
@@ -519,7 +510,7 @@ class TileAnnIndex:
                 }
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        stored = self._quantize_nodes(add) if self.quantized else add
+        stored = quantized_nodes(add) if self.quantized else add
         # exact-once node-row append (shared staging discipline with the
         # tree's append_level — functions/staging.py): commit meta LAST
         from raptor_rag_spark.functions.staging import stage_parquet_append
@@ -543,22 +534,9 @@ class TileAnnIndex:
         exact_nodes: DataFrame | None = None,
     ) -> float:
         """recall@k of this index's search vs exact brute force over the
-        same queries — the number save() embeds for drift detection.
-        Offline check: runs a full exact kNN over the corpus per call.
-        A quantized index stores no float corpus, so the exact baseline
-        must be passed in (``exact_nodes`` = (node_id, embedding))."""
-        if exact_nodes is None:
-            if self.quantized:
-                raise ValueError(
-                    "quantized index stores no float corpus — pass "
-                    "exact_nodes=(node_id, embedding) for the exact baseline"
-                )
-            exact_nodes = self.nodes
-        approx = self.search(queries, k=k, ring=ring).select("query_id", "node_id")
-        exact = brute_force_knn(queries, exact_nodes, k=k).select("query_id", "node_id")
-        hit = approx.join(exact, ["query_id", "node_id"], "inner").count()
-        total = exact.count()
-        return hit / total if total else 1.0
+        same queries — the number save() embeds for drift detection
+        (measure_index_recall)."""
+        return measure_index_recall(self, queries, k, exact_nodes, ring=ring)
 
     def search(
         self,
@@ -602,17 +580,31 @@ class TileAnnIndex:
             from raptor_rag_spark.operators.knn import semi_filter_allowed
 
             cands = semi_filter_allowed(cands, allowed)
-        if self.quantized:
-            from raptor_rag_spark.operators.knn import _score_candidates_quantized
-
-            scored = _score_candidates_quantized(
-                cands.join(self.nodes, "node_id"), q, strategy=scoring
-            )
-        else:
-            scored = _score_candidates(
-                cands.join(self.nodes, "node_id"), q, strategy=scoring
-            )
+        scored = _score_candidates(cands.join(self.nodes, "node_id"), q, strategy=scoring)
         return _rank_and_take(scored, k)
+
+
+def measure_index_recall(
+    index, queries: DataFrame, k: int, exact_nodes: DataFrame | None, **search_kw
+) -> float:
+    """recall@k of ``index.search(queries, k=k, **search_kw)`` vs exact
+    brute force over the same queries — the offline drift check of
+    TileAnnIndex and IvfIndex; it runs a full exact kNN over the corpus
+    per call. A quantized index stores no float corpus, so the exact
+    baseline must be passed in (``exact_nodes`` = (node_id,
+    embedding))."""
+    if exact_nodes is None:
+        if index.quantized:
+            raise ValueError(
+                "quantized index stores no float corpus — pass "
+                "exact_nodes=(node_id, embedding) for the exact baseline"
+            )
+        exact_nodes = index.nodes
+    approx = index.search(queries, k=k, **search_kw).select("query_id", "node_id")
+    exact = brute_force_knn(queries, exact_nodes, k=k).select("query_id", "node_id")
+    hit = approx.join(exact, ["query_id", "node_id"], "inner").count()
+    total = exact.count()
+    return hit / total if total else 1.0
 
 
 def self_similarity_pairs(

@@ -417,10 +417,7 @@ def q_knn_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rank-1 hit for each query is itself (quantization preserves the
     self-match), and ranks vs the float path drift only where distances
     tie within the quantization error."""
-    from raptor_rag_spark.operators.quantize import (
-        brute_force_knn_quantized,
-        quantize_embeddings,
-    )
+    from raptor_rag_spark.operators.quantize import quantize_embeddings
 
     emb = _t(spark, sf_dir, "embeddings")
     nodes = emb.select(F.col("vec_id").alias("node_id"), "embedding")
@@ -428,7 +425,7 @@ def q_knn_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
     )
-    out = brute_force_knn_quantized(queries, nodes_q, k=K + RANK_MARGIN)
+    out = knn_ops.brute_force_knn(queries, nodes_q, k=K + RANK_MARGIN)
     return _rerank_rounded(out, K)
 
 

@@ -36,3 +36,26 @@ def test_golden_traversal_rows_and_contexts(spark, tmp_path):
     assert got.keys() == want.keys()
     for case in want:
         assert got[case] == want[case], case
+
+
+KNN_KERNELS = os.path.join(os.path.dirname(__file__), "goldens", "knn_kernels.json")
+
+
+def test_golden_knn_kernels(spark):
+    """Every exact-scoring path (brute force, tile_knn, TileAnnIndex and
+    IvfIndex search; float and int8 nodes; broadcast and join) returns
+    the pinned (query_id, node_id, rank) rows. Broadcast distances are
+    bit-equal; join-path distances may differ in the last bits (BLAS
+    blocks the matmul by the block sizes) and are held within 1e-12."""
+    with open(KNN_KERNELS) as f:
+        want = json.load(f)
+    got = gg.compute_knn_golden(spark)
+    assert got.keys() == want.keys()
+    for case, rows in want.items():
+        assert [r[:3] for r in got[case]] == [r[:3] for r in rows], case
+        got_d = [float.fromhex(r[3]) for r in got[case]]
+        want_d = [float.fromhex(r[3]) for r in rows]
+        if case.endswith("_join"):
+            assert max(abs(a - b) for a, b in zip(got_d, want_d)) <= 1e-12, case
+        else:
+            assert got_d == want_d, case

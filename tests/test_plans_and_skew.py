@@ -303,7 +303,7 @@ def test_join_scoring_plan_has_no_broadcast_of_queries(spark):
     plan = _plan(out)
     assert "BroadcastExchange" not in plan, plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
-    assert "FlatMapGroupsInPandas" in plan, plan  # the block-pair matmul
+    assert "FlatMapCoGroupsInPandas" in plan, plan  # the block-pair matmul
 
 
 def test_score_candidates_join_plans_hash_join(spark):

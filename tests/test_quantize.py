@@ -4,10 +4,8 @@ recall parity vs the exact float path on real testdata embeddings."""
 import numpy as np
 from pyspark.sql import functions as F
 
-from raptor_rag_spark.operators.quantize import (
-    brute_force_knn_quantized,
-    quantize_embeddings,
-)
+from raptor_rag_spark.operators.knn import brute_force_knn
+from raptor_rag_spark.operators.quantize import quantize_embeddings
 
 
 def test_quantize_roundtrip_error_bound(spark):
@@ -24,8 +22,6 @@ def test_quantize_roundtrip_error_bound(spark):
 
 
 def test_quantized_knn_recall_vs_exact(spark):
-    from raptor_rag_spark.operators.knn import brute_force_knn
-
     emb = (
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         .select(F.col("vec_id").alias("node_id"), "embedding")
@@ -40,7 +36,7 @@ def test_quantized_knn_recall_vs_exact(spark):
         )
     )
     exact = brute_force_knn(queries, emb, k=10, strategy="broadcast")
-    quant = brute_force_knn_quantized(queries, nodes_q, k=10)
+    quant = brute_force_knn(queries, nodes_q, k=10)
     inter = exact.select("query_id", "node_id").intersect(
         quant.select("query_id", "node_id")
     )
@@ -79,8 +75,8 @@ def test_quantized_join_strategy_matches_broadcast(spark):
     strategies — the int8 dequantized matmul is the same arithmetic in
     both kernels."""
     _, nodes_q, queries = _corpus(spark)
-    a = brute_force_knn_quantized(queries, nodes_q, k=10, strategy="broadcast")
-    b = brute_force_knn_quantized(queries, nodes_q, k=10, strategy="join")
+    a = brute_force_knn(queries, nodes_q, k=10, strategy="broadcast")
+    b = brute_force_knn(queries, nodes_q, k=10, strategy="join")
     ra = {(r["query_id"], r["rank"]): (r["node_id"], r["dist"]) for r in a.collect()}
     rb = {(r["query_id"], r["rank"]): (r["node_id"], r["dist"]) for r in b.collect()}
     assert ra.keys() == rb.keys() and len(ra) == 200
@@ -97,7 +93,7 @@ def test_quantized_join_never_collects_to_driver(spark, monkeypatch):
     import pyspark.sql
 
     _, nodes_q, queries = _corpus(spark)
-    out = brute_force_knn_quantized(queries, nodes_q, k=10, strategy="join")
+    out = brute_force_knn(queries, nodes_q, k=10, strategy="join")
 
     def _boom(self):
         raise AssertionError("driver collect in quantized join-strategy plan")
@@ -120,7 +116,7 @@ def test_quantized_auto_switches_on_query_count(spark, monkeypatch):
         raise AssertionError("broadcast path taken above the threshold")
 
     monkeypatch.setattr(pyspark.sql.DataFrame, "toPandas", _boom)
-    rows = brute_force_knn_quantized(queries, nodes_q, k=10, strategy="auto").collect()
+    rows = brute_force_knn(queries, nodes_q, k=10, strategy="auto").collect()
     assert len(rows) == 200
 
 
@@ -132,7 +128,7 @@ def test_quantized_join_rejects_non_integral_ids(spark):
         [("a", [0.1] * 64)], "query_id string, q_embedding array<float>"
     )
     with pytest.raises(TypeError, match="integral id"):
-        brute_force_knn_quantized(bad_q, nodes_q, k=5, strategy="join")
+        brute_force_knn(bad_q, nodes_q, k=5, strategy="join")
 
 
 def test_quantize_null_and_zero_vectors(spark):
@@ -161,7 +157,7 @@ def test_quantized_join_plan_is_cogroup_no_broadcast(spark):
     the two block-hashed sides, NO BroadcastExchange and no cartesian —
     the corpus side stays its own (int8) Arrow stream."""
     _, nodes_q, queries = _corpus(spark)
-    out = brute_force_knn_quantized(queries, nodes_q, k=5, strategy="join")
+    out = brute_force_knn(queries, nodes_q, k=5, strategy="join")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapCoGroupsInPandas" in plan
     assert "BroadcastExchange" not in plan
@@ -170,3 +166,36 @@ def test_quantized_join_plan_is_cogroup_no_broadcast(spark):
     assert dict(out.sparkSession.createDataFrame([], nodes_q.schema).dtypes)[
         "q_vec"
     ] == "array<tinyint>"
+
+
+def test_empty_query_batch_over_int8_nodes(spark):
+    """An empty query batch over int8 nodes returns 0 rows with the
+    ranked schema on both strategies, as it does over float nodes."""
+    _, nodes_q, queries = _corpus(spark)
+    for strategy in ("broadcast", "join"):
+        out = brute_force_knn(queries.limit(0), nodes_q, k=5, strategy=strategy)
+        assert out.dtypes == [
+            ("query_id", "bigint"), ("node_id", "bigint"), ("dist", "double"), ("rank", "int")
+        ], strategy
+        assert out.collect() == [], strategy
+
+
+def test_nodes_without_vectors_raise_named_error(spark):
+    import pytest
+
+    _, nodes_q, queries = _corpus(spark)
+    with pytest.raises(ValueError, match="'embedding'.*'q_vec' and 'q_scale'"):
+        brute_force_knn(queries, nodes_q.drop("q_scale"), k=5)
+
+
+def test_only_knn_and_quantize_name_the_int8_columns():
+    """The int8 format is read in knn.py (node_vector_cols) and written
+    in quantize.py; no other operator branches on it."""
+    import pathlib
+    import re
+
+    ops = pathlib.Path(__file__).resolve().parent.parent / "raptor_rag_spark" / "operators"
+    naming = sorted(
+        p.name for p in ops.glob("*.py") if re.search(r"\bq_(vec|scale)\b", p.read_text())
+    )
+    assert naming == ["knn.py", "quantize.py"], naming

@@ -6,8 +6,12 @@ corpus; tests/test_goldens.py recomputes them and asserts equality.
 - tests/goldens/traversal.json: tree-traversal rows (distances as
   ``float.hex``) and context digests for str, list and DataFrame
   questions, top_k at k=2 and k=5, and threshold mode.
+- tests/goldens/knn_kernels.json: exact-kNN rows (distances as
+  ``float.hex``) of every scoring path over the sf0.001 embeddings:
+  brute force and the tile/IVF index searches, float and int8 nodes,
+  broadcast and join strategies.
 
-Usage: ``python tools/gen_goldens.py [golden|traversal]`` (default
+Usage: ``python tools/gen_goldens.py [golden|traversal|knn]`` (default
 golden). Regenerate only for an intentional semantic change.
 """
 
@@ -145,6 +149,71 @@ def compute_traversal_golden(spark, base: str) -> dict:
     return out
 
 
+KNN_EMBEDDINGS = "/root/testdata/sf0.001/embeddings.parquet"
+KNN_QUERIES = 20
+KNN_K = 10
+
+
+def _knn_rows(ranked) -> list:
+    return sorted(
+        [r["query_id"], r["node_id"], r["rank"], float(r["dist"]).hex()]
+        for r in ranked.collect()
+    )
+
+
+def compute_knn_golden(spark) -> dict:
+    """Ranked rows of every exact-scoring path, keyed
+    ``<path>_<format>_<strategy>``: brute force over float and int8
+    nodes, ``tile_knn`` over float nodes, and ``TileAnnIndex`` /
+    ``IvfIndex`` search over float and int8 stores, each with broadcast
+    and join scoring. The first ``KNN_QUERIES`` embeddings (by id) are
+    the queries."""
+    from raptor_rag_spark.operators.ivf import IvfIndex
+    from raptor_rag_spark.operators.knn import tile_knn
+    from raptor_rag_spark.operators.quantize import quantize_embeddings
+    from raptor_rag_spark.operators.similarity import TileAnnIndex
+
+    emb = spark.read.parquet(KNN_EMBEDDINGS).select(
+        F.col("vec_id").alias("node_id"), "embedding"
+    )
+    dim = len(emb.first()["embedding"])
+    nodes = reduce_2d(emb, dim=dim).localCheckpoint(eager=True)
+    corpus = {
+        "float": nodes.select("node_id", "embedding"),
+        "int8": quantize_embeddings(nodes.select("node_id", "embedding"))
+        .select("node_id", "q_vec", "q_scale")
+        .localCheckpoint(eager=True),
+    }
+    queries_xy = (
+        nodes.orderBy("node_id")
+        .limit(KNN_QUERIES)
+        .select(F.col("node_id").alias("query_id"), F.col("embedding").alias("q_embedding"), "x", "y")
+        .localCheckpoint(eager=True)
+    )
+    queries = queries_xy.select("query_id", "q_embedding")
+    tiles = tile_assignments(nodes, "node_id", [3])
+    out = {}
+    for fmt, store in corpus.items():
+        tile_idx = TileAnnIndex(corpus["float"], dim=dim, quantized=fmt == "int8")
+        ivf_idx = IvfIndex(corpus["float"], dim=dim, nlist=16, quantized=fmt == "int8")
+        for strategy in ("broadcast", "join"):
+            out[f"brute_{fmt}_{strategy}"] = _knn_rows(
+                brute_force_knn(queries, store, k=KNN_K, strategy=strategy)
+            )
+            if fmt == "float":
+                out[f"tile_knn_{fmt}_{strategy}"] = _knn_rows(
+                    tile_knn(queries_xy, store, tiles, resolution=3, k=KNN_K,
+                             ring=1, max_ring=4, scoring=strategy)
+                )
+            out[f"tile_ann_{fmt}_{strategy}"] = _knn_rows(
+                tile_idx.search(queries, k=KNN_K, ring=2, scoring=strategy)
+            )
+            out[f"ivf_{fmt}_{strategy}"] = _knn_rows(
+                ivf_idx.search(queries, k=KNN_K, nprobe=4, scoring=strategy)
+            )
+    return out
+
+
 def _write(name: str, g: dict) -> str:
     out = os.path.join(os.path.dirname(__file__), "..", "tests", "goldens", name)
     os.makedirs(os.path.dirname(out), exist_ok=True)
@@ -160,6 +229,10 @@ if __name__ == "__main__":
         with tempfile.TemporaryDirectory() as base:
             g = compute_traversal_golden(spark, base)
         print("wrote", _write("traversal.json", g), "levels:", g["level_rows"])
+    elif which == "knn":
+        g = compute_knn_golden(spark)
+        print("wrote", _write("knn_kernels.json", g), "rows:",
+              {case: len(rows) for case, rows in g.items()})
     else:
         g = compute_goldens(spark)
         print("wrote", _write("golden.json", g), "nodes:", g["n_nodes"],
