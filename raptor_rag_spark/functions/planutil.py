@@ -44,6 +44,13 @@ def plan_is_bare_scan(df: DataFrame) -> bool:
     return cheap_leaf and not python_eval and len(lines) <= 3
 
 
+def plan_is_local(df: DataFrame) -> bool:
+    """True when ``df``'s optimized plan is one LocalRelation (rows held
+    in the plan, e.g. a local_df table): ``collect()`` then reads them on
+    the driver without a job, where ``toPandas()`` runs one."""
+    return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() == "LocalRelation"
+
+
 def plan_splits(df: DataFrame) -> int:
     """``ceil(sizeInBytes / maxPartitionBytes)``, at least 1: the number
     of ~maxPartitionBytes splits ``df`` fills, sized from the optimized

@@ -13,22 +13,30 @@ import os
 import shutil
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def content_append_stats(df: DataFrame, cols: Sequence[str]) -> tuple[str, int]:
-    """(content id, row count) from ONE tiny aggregation — the id
-    derivation counts the rows anyway, so callers that also need the
-    count (ledger/manifest updates) take it from here instead of a
-    second count() job."""
-    agg = df.agg(
+def content_append_stats(
+    df: DataFrame, cols: Sequence[str], by: Column | None = None
+) -> tuple[str, dict]:
+    """(content id, row count per value of ``by``) from ONE tiny
+    aggregation — the id derivation counts the rows anyway, so callers
+    that also need counts (ledger/manifest updates, the cells an append
+    lands in) take them from here instead of further count jobs. The id
+    sums the per-group sums, so it does not depend on ``by``; without
+    ``by`` the one count is keyed None."""
+    keys = [by.alias("_key")] if by is not None else []
+    rows = df.groupBy(*keys).agg(
         F.count("*").alias("n"),
         F.sum(
             F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(1 << 31))
         ).alias("h"),
-    ).first()
-    return f"n{agg['n']}h{agg['h'] or 0}", int(agg["n"])
+    ).collect()
+    n = sum(int(r["n"]) for r in rows)
+    h = sum(int(r["h"] or 0) for r in rows)
+    counts = {(r["_key"] if by is not None else None): int(r["n"]) for r in rows}
+    return f"n{n}h{h}", counts
 
 
 def content_append_id(df: DataFrame, cols: Sequence[str]) -> str:

@@ -16,11 +16,11 @@ itself:
 - chunks joined with a single space (utils.py:73,:81,:85,:98)
 
 This is a stateful per-document scan (running total resets at cut
-points), NOT expressible as a window function — so it runs as an
-``applyInPandas`` grouped by document, one group per doc. Group size
-is bounded by document length (web pages), so pandas memory per group
-is bounded; at 10^12-doc scale the groupBy key (url/doc_id) is unique
-per doc => no skew beyond the largest single document.
+points), NOT expressible as a window function — so it runs in a
+``mapInPandas`` over whole-document rows (:func:`chunk_source`), one
+Python call per document; memory per call is bounded by document
+length (web pages), and there is no shuffle and no skew beyond the
+largest single document.
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ import re
 from collections.abc import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from raptor_rag_spark.tokenizer import DEFAULT_TOKENIZER
@@ -94,6 +94,57 @@ def split_text(
 
 
 CHUNK_SCHEMA = "doc_id long, chunk_idx int, text string, n_tokens int"
+CHUNK_COLUMNS = ["doc_id", "chunk_idx", "text", "n_tokens"]
+
+
+def chunk_rows(doc_ids, texts, tokenizer, max_tokens: int, overlap: int = 0) -> pd.DataFrame:
+    """The per-document chunk loop of every chunking kernel: one
+    (doc_id, chunk_idx, text, n_tokens) row per :func:`split_text` chunk
+    of each non-null text, in document then chunk order."""
+    out: list[tuple[int, int, str, int]] = []
+    for doc_id, text in zip(doc_ids, texts):
+        if text is None:
+            continue
+        for idx, chunk in enumerate(
+            split_text(text, tokenizer, max_tokens=max_tokens, overlap=overlap)
+        ):
+            out.append((int(doc_id), idx, chunk, len(tokenizer.encode(chunk))))
+    return pd.DataFrame(out, columns=CHUNK_COLUMNS)
+
+
+def chunk_id_col(id_scheme: str = "arith") -> Column:
+    """The global chunk id of a (doc_id, chunk_idx) row, computed in the
+    JVM: see :func:`chunk_documents` for the two schemes."""
+    if id_scheme == "hash":
+        return F.xxhash64(F.col("doc_id"), F.col("chunk_idx"))
+    if id_scheme == "arith":
+        bound = 1 << 43
+        return F.when(
+            (F.col("doc_id") > F.lit(-bound)) & (F.col("doc_id") < F.lit(bound)),
+            (F.col("doc_id") * F.lit(1 << 20) + F.col("chunk_idx")).cast("long"),
+        ).otherwise(
+            F.raise_error(
+                F.lit(
+                    "chunk_id arith scheme needs |doc_id| < 2^43; "
+                    "use id_scheme='hash' for hashed doc ids"
+                )
+            ).cast("long")
+        )
+    raise ValueError(f"unknown id_scheme {id_scheme!r} (use 'arith' or 'hash')")
+
+
+def chunk_source(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """The (long id, text) input of a chunking kernel. A document is ONE
+    row (text is the whole doc), so the stateful packing never crosses
+    rows: the kernel is a mapInPandas, zero shuffle (a groupBy +
+    applyInPandas costs a shuffle AND lets AQE coalesce the CPU-bound
+    stage to a handful of partitions — measured 4x loss). A source with
+    fewer partitions than cores is repartitioned to one per core."""
+    src = df.select(F.col(id_col).cast("long").alias(id_col), text_col)
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    if src.rdd.getNumPartitions() < parallelism:
+        src = src.repartition(parallelism)
+    return src
 
 
 def chunk_documents(
@@ -123,46 +174,14 @@ def chunk_documents(
       64-bit url hash, streaming/incremental ingest). Not dense.
     """
     factory = tokenizer_factory or (lambda: DEFAULT_TOKENIZER)
+    cid = chunk_id_col(id_scheme)
 
     def chunk_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tok = factory()
         for pdf in it:
-            out: list[tuple[int, int, str, int]] = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                for idx, chunk in enumerate(
-                    split_text(text, tok, max_tokens=max_tokens, overlap=overlap)
-                ):
-                    out.append((int(doc_id), idx, chunk, len(tok.encode(chunk))))
-            yield pd.DataFrame(out, columns=["doc_id", "chunk_idx", "text", "n_tokens"])
+            yield chunk_rows(pdf[id_col], pdf[text_col], tok, max_tokens, overlap)
 
-    # a document is ONE row (text is the whole doc), so the stateful
-    # packing never crosses rows: mapInPandas, zero shuffle. (A groupBy
-    # + applyInPandas here costs a shuffle AND lets AQE coalesce this
-    # CPU-bound stage to a handful of partitions — measured 4x loss.)
-    src = df.select(F.col(id_col).cast("long").alias(id_col), text_col)
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < parallelism:
-        src = src.repartition(parallelism)
-    chunks = src.mapInPandas(chunk_batches, schema=CHUNK_SCHEMA)
-    if id_scheme == "hash":
-        cid = F.xxhash64(F.col("doc_id"), F.col("chunk_idx"))
-    elif id_scheme == "arith":
-        bound = 1 << 43
-        cid = F.when(
-            (F.col("doc_id") > F.lit(-bound)) & (F.col("doc_id") < F.lit(bound)),
-            (F.col("doc_id") * F.lit(1 << 20) + F.col("chunk_idx")).cast("long"),
-        ).otherwise(
-            F.raise_error(
-                F.lit(
-                    "chunk_id arith scheme needs |doc_id| < 2^43; "
-                    "use id_scheme='hash' for hashed doc ids"
-                )
-            ).cast("long")
-        )
-    else:
-        raise ValueError(f"unknown id_scheme {id_scheme!r} (use 'arith' or 'hash')")
+    chunks = chunk_source(df, id_col, text_col).mapInPandas(chunk_batches, schema=CHUNK_SCHEMA)
     return chunks.withColumn("chunk_id", cid)
 
 

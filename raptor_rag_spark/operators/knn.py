@@ -98,13 +98,21 @@ BROADCAST_MAX_QUERIES = 100_000
 def _collect_query_matrix(queries: DataFrame, query_id: str, q_emb: str):
     """Query side -> (ids ndarray, float64 matrix). Broadcast-path build
     side for small query batches; large batches take the join path
-    (see BROADCAST_MAX_QUERIES / strategy='join')."""
+    (see BROADCAST_MAX_QUERIES / strategy='join'). A local table (the
+    driver-embedded questions of embed_query_texts) is read without a
+    job."""
     import numpy as np
 
-    pdf = queries.select(query_id, q_emb).toPandas()
-    ids = pdf[query_id].to_numpy(dtype=np.int64)
-    mat = vec_matrix(pdf[q_emb], q_emb, "_collect_query_matrix")
-    return ids, mat
+    from raptor_rag_spark.functions.planutil import plan_is_local
+
+    side = queries.select(query_id, q_emb)
+    if plan_is_local(side):
+        rows = side.collect()
+        ids, vecs = np.array([r[0] for r in rows], dtype=np.int64), [r[1] for r in rows]
+    else:
+        pdf = side.toPandas()
+        ids, vecs = pdf[query_id].to_numpy(dtype=np.int64), pdf[q_emb]
+    return ids, vec_matrix(vecs, q_emb, "_collect_query_matrix")
 
 
 def vec_matrix(values, col: str, where: str, expect_dim: int | None = None):

@@ -54,8 +54,8 @@ from pyspark.sql.types import StructType
 from raptor_rag_spark.config import DEFAULT_CONFIG, EngineConfig
 from raptor_rag_spark.functions.planutil import fits_driver, plan_is_bare_scan, plan_splits
 from raptor_rag_spark.operators import maintenance
-from raptor_rag_spark.operators.chunk import chunk_documents, split_text
-from raptor_rag_spark.operators.embed import embed_texts, hash_embed_batch
+from raptor_rag_spark.operators.chunk import chunk_id_col, chunk_rows, chunk_source, split_text
+from raptor_rag_spark.operators.embed import hash_embed_batch
 from raptor_rag_spark.operators.tile import (
     cell_id_col,
     cell_key_col,
@@ -253,6 +253,12 @@ def node_id_for_cell(layer: int):
 # ----------------------------------------------------------- level 0
 
 
+LEAF_SCHEMA = (
+    "doc_id long, chunk_idx int, text string, n_tokens int, "
+    "embedding array<float>, x double, y double"
+)
+
+
 def leaves_from_docs(
     docs: DataFrame,
     cfg: EngineConfig,
@@ -261,25 +267,48 @@ def leaves_from_docs(
     text_col: str = "text",
     id_scheme: str = "arith",
 ) -> DataFrame:
-    """Documents -> leaves (node_id, text, n_tokens, embedding): chunked
-    at ``cfg.max_tokens`` in the ``cfg.tokenizer_factory`` dialect (the
-    one parents count in), then hash-embedded at ``dim``."""
-    chunks = chunk_documents(
-        docs, id_col=id_col, text_col=text_col, max_tokens=cfg.max_tokens,
-        tokenizer_factory=cfg.tokenizer_factory, id_scheme=id_scheme,
-    )
+    """Documents -> leaves (node_id, text, n_tokens, embedding, x, y) in
+    one ``mapInPandas`` pass: per Arrow batch of documents, the chunks
+    of :func:`chunk_rows` at ``cfg.max_tokens`` in the
+    ``cfg.tokenizer_factory`` dialect (the one parents count in; the
+    tokenizer is built once per task), their hash embeddings at ``dim``
+    and the float64 ``emb @ projection_matrix(dim, cfg.seed).T`` that
+    reduce_2d runs. The data crosses the JVM/Python boundary once, where
+    chunk_documents -> embed_texts -> reduce_2d crossed it three times.
+    The node id is :func:`chunk_id_col` of ``id_scheme``, computed in
+    the JVM; the source is :func:`chunk_source`, as chunk_documents'."""
+    factory = cfg.tokenizer_factory or (lambda: DEFAULT_TOKENIZER)
+    max_tokens = cfg.max_tokens
+    proj = projection_matrix(dim, cfg.seed)  # small, ships in the closure
+    node_id = chunk_id_col(id_scheme)
+
+    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        tok = factory()
+        for pdf in it:
+            out = chunk_rows(pdf[id_col], pdf[text_col], tok, max_tokens)
+            emb = hash_embed_batch(out["text"], dim)
+            # one (n, dim) product over the batch's chunks, as reduce_2d
+            # runs it over an Arrow batch of embeddings
+            xy = emb.astype(np.float64) @ proj.T
+            out["embedding"] = pd.Series(list(emb), dtype=object)  # typed when empty
+            out["x"] = xy[:, 0]
+            out["y"] = xy[:, 1]
+            yield out
+
     return (
-        embed_texts(chunks, dim=dim)
-        .withColumnRenamed("chunk_id", "node_id")
-        .select("node_id", "text", "n_tokens", "embedding")
+        chunk_source(docs, id_col, text_col)
+        .mapInPandas(kernel, schema=LEAF_SCHEMA)
+        .select(node_id.alias("node_id"), "text", "n_tokens", "embedding", "x", "y")
     )
 
 
 def level0_rows(leaves: DataFrame, cfg: EngineConfig, dim: int) -> DataFrame:
-    """Leaves -> level-0 rows: layer 0, no cell, no children, x, y
-    projected with reduce_2d(dim, cfg.seed) unless the leaves carry them,
-    and every column cast to NODES_SCHEMA, so level 0 reads back through
-    it (an n_tokens long would write an INT64 the int schema can't read)."""
+    """Leaves -> level-0 rows: layer 0, no cell, no children, and every
+    column cast to NODES_SCHEMA, so level 0 reads back through it (an
+    n_tokens long would write an INT64 the int schema can't read). The
+    leaves' own x, y are kept (leaves_from_docs computes them); leaves
+    built elsewhere without them are projected with reduce_2d(dim,
+    cfg.seed)."""
     if not {"x", "y"} <= set(leaves.columns):
         leaves = reduce_2d(leaves, dim=dim, seed=cfg.seed)
     shaped = {"layer": F.lit(0), "cell_id": F.lit(None), "children": F.array().cast("array<long>")}
@@ -590,6 +619,7 @@ def write_level(
     layer: int,
     lineage: dict | Callable[[int], dict],
     start_resolution: int | None = None,
+    started: float | None = None,
 ) -> dict:
     """Atomic level checkpoint, the same for every layer: the rows go to
     a ``nodes.parquet.compacting`` sibling stamped with a fresh save
@@ -603,8 +633,10 @@ def write_level(
     ``lineage`` is a dict, or a function of the written row count that
     returns one (a rewrite records how many of its rows it recomputed).
     ``start_resolution`` (build_tree passes it at level 0) is recorded
-    in the manifest; see :func:`tree_start_resolution`."""
-    t0 = time.time()
+    in the manifest; see :func:`tree_start_resolution`. The manifest's
+    ``wall_sec`` runs from ``started`` (a ``time.time()`` the caller
+    took when its level step began), default the call itself."""
+    t0 = started or time.time()
     path = _level_path(base, layer)
     token = uuid.uuid4().hex
     df.write.mode("overwrite").parquet(path + maintenance._SWAP_NEW)
@@ -802,6 +834,7 @@ def _rebuild_level_spark(spark, base, layer, res, affected, cfg, dim, summarize_
     collected before it, the recomputed ones' after it when ``track``
     (the next level exists and needs its affected set). Returns
     (manifest, replaced count, changed x, y)."""
+    t0 = time.time()
     child = read_level(spark, base, layer - 1)
     if affected is not None:
         # children selected by their OWN x, y at this resolution, which
@@ -816,7 +849,8 @@ def _rebuild_level_spark(spark, base, layer, res, affected, cfg, dim, summarize_
         embed_dim=dim,
     ).select(*NODES_COLUMNS)
     if affected is None:
-        return write_level(parents, base, layer, _lineage(base, layer, res, None, 0, 0)), 0, None
+        lineage = _lineage(base, layer, res, None, 0, 0)
+        return write_level(parents, base, layer, lineage, started=t0), 0, None
     # a parent's start-res cell is its cell_id prefix; '_' keeps a null
     # cell_id out of every affected set
     in_affected = F.coalesce(F.substring("cell_id", 1, res + 1), F.lit("_")).isin(
@@ -831,7 +865,7 @@ def _rebuild_level_spark(spark, base, layer, res, affected, cfg, dim, summarize_
     kept = old.filter(~in_affected)
     manifest = write_level(
         kept.coalesce(plan_splits(kept)).unionByName(parents), base, layer,
-        _lineage(base, layer, res, affected, len(replaced), n_kept),
+        _lineage(base, layer, res, affected, len(replaced), n_kept), started=t0,
     )
     changed = replaced
     if track:
@@ -847,9 +881,11 @@ def _rebuild_level_local(spark, base, layer, res, affected, cfg, dim, summarize_
     the affected cells' children, the kept parents from a pyarrow read
     of the level, and one ``write_level(local_df(...))`` job. Returns
     (manifest, replaced count, changed x, y); ``track`` is moot, the
-    changed rows are at hand."""
+    changed rows are at hand. The manifest's ``wall_sec`` covers the
+    whole step, the driver-side summarize included."""
     from raptor_rag_spark.functions.localtab import local_df
 
+    t0 = time.time()
     child = read_level_local(base, layer - 1, ["node_id", "text", "n_tokens", "x", "y"])
     if affected is not None:
         cells = np_quadkeys(np_cell_keys(child["x"].to_numpy(), child["y"].to_numpy(), res)[2])
@@ -875,7 +911,7 @@ def _rebuild_level_local(spark, base, layer, res, affected, cfg, dim, summarize_
     )
     manifest = write_level(
         local_df(spark, values, NODES_SCHEMA).coalesce(1), base, layer,
-        _lineage(base, layer, res, affected, n_replaced, n_kept),
+        _lineage(base, layer, res, affected, n_replaced, n_kept), started=t0,
     )
     return manifest, n_replaced, changed
 

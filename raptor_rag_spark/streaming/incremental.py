@@ -15,10 +15,10 @@ from-scratch build)."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from raptor_rag_spark.config import DEFAULT_CONFIG, EngineConfig
 from raptor_rag_spark.operators.extract import extract_pages
-from raptor_rag_spark.operators.tile import reduce_2d
 
 
 def incremental_level0(
@@ -26,17 +26,17 @@ def incremental_level0(
     cfg: EngineConfig = DEFAULT_CONFIG,
     dim: int | None = None,
 ) -> DataFrame:
-    """New pages batch -> leaves with x, y (extract -> tree.leaves_from_docs
-    -> reduce_2d). Pure function of the batch; incremental_update appends
-    it to level 0 and re-aggregates the touched cells upstream.
+    """New pages batch -> leaves (node_id, text, n_tokens, embedding, x,
+    y): the extract kernel, then the one leaf kernel of
+    tree.leaves_from_docs (chunk, embed and project in one pass). Pure
+    function of the batch; incremental_update appends it to level 0 and
+    re-aggregates the touched cells upstream.
 
     The doc id is the page's ``page_id``, carried through the extract
     kernel, so a url that repeats in the batch keeps each page's own
     leaves. A batch without ``page_id`` is keyed by a 64-bit url hash:
     there each url must appear once (run :func:`dedup_stream` first),
     or two pages share one doc id and hence their chunk ids."""
-    from pyspark.sql import functions as F
-
     from raptor_rag_spark.operators.tree import leaves_from_docs
 
     dim = dim or cfg.embedding_dim
@@ -50,8 +50,7 @@ def incremental_level0(
         # overflow (ANSI crash) — use the hashed scheme
         docs = extract_pages(pages).withColumn("doc_id", F.xxhash64("url"))
         id_scheme = "hash"
-    leaves = leaves_from_docs(docs, cfg, dim, id_scheme=id_scheme)
-    return reduce_2d(leaves, dim=dim, seed=cfg.seed)
+    return leaves_from_docs(docs, cfg, dim, id_scheme=id_scheme)
 
 
 def _epoch_sink(out_dir: str, cfg: EngineConfig, namespace: str = "default"):
@@ -81,8 +80,6 @@ def _epoch_sink(out_dir: str, cfg: EngineConfig, namespace: str = "default"):
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if not batch_df.take(1):
             return
-        from pyspark.sql import functions as F
-
         sp = batch_df.sparkSession
         out = incremental_level0(batch_df, cfg).withColumn(
             "_epoch", F.lit(f"{namespace}-{int(epoch_id)}")
@@ -161,9 +158,12 @@ def append_level(
     (b) first deletes any ``part-inflight-<id>-*`` leftovers (crash
     mid-rename or pre-commit) — so the appended rows land exactly once
     no matter where a previous attempt died. Callers that may retry
-    MUST pass a stable content-derived ``append_id``
-    (incremental_update derives one from the delta's node_ids AND
-    content columns via functions.staging.content_append_id)."""
+    MUST pass a stable content-derived ``append_id``: the level-0
+    staging of both update paths (:func:`_stage_level0_append`) derives
+    it from the delta's node_ids AND content columns, together with the
+    delta's per-cell row counts, in one aggregation
+    (functions.staging.content_append_stats), and passes their sum as
+    ``rows_hint`` over the checkpointed delta (``assume_pinned``)."""
     import time as _time
     import uuid as _uuid
 
@@ -184,7 +184,7 @@ def append_level(
     aid = append_id or _uuid.uuid4().hex
     # count + write, one execution. ``assume_pinned`` callers already
     # hold a checkpointed delta; ``rows_hint`` callers already counted
-    # it (content_append_stats) — both skip a redundant job.
+    # it — both skip a redundant job.
     pinned = df if assume_pinned else df.localCheckpoint(eager=True)
     delta_rows = rows_hint if rows_hint is not None else pinned.count()
     stage_parquet_append(pinned, _level_path(base, layer), aid, part_prefix="inflight")
@@ -245,7 +245,6 @@ def incremental_update(
     ledger is settled rather than bypassed; exactness is preserved
     (stronger: the whole tree equals a from-scratch build).
     """
-    from raptor_rag_spark.operators.tile import tile
     from raptor_rag_spark.operators.tree import (
         _require_start_resolution,
         last_complete_level,
@@ -275,53 +274,56 @@ def incremental_update(
         )
 
     start_resolution = _require_start_resolution(checkpoint_base)
-    lvl0_delta, _aid = _stage_level0_append(new_leaves, checkpoint_base, cfg, dim)
     # the level-1 cells the new leaves land in (bounded by the cell
-    # universe at the start resolution); lvl0_delta is checkpointed
-    affected = [
-        r["cell_id"]
-        for r in tile(lvl0_delta.select("x", "y"), start_resolution)
-        .select("cell_id").distinct().collect()
-    ]
+    # universe at the start resolution)
+    _aid, counts = _stage_level0_append(
+        new_leaves, checkpoint_base, cfg, dim, start_resolution
+    )
     rebuild_levels(
-        spark, checkpoint_base, cfg, dim, affected_l1=affected, max_layers=max_layers
+        spark, checkpoint_base, cfg, dim, affected_l1=set(counts), max_layers=max_layers
     )
     return read_collapsed(spark, checkpoint_base)
 
 
 def _stage_level0_append(
-    new_leaves: DataFrame, checkpoint_base: str, cfg: EngineConfig, dim: int
-):
-    """Shape ``new_leaves`` into level-0 rows (tree.level0_rows) and
-    append them exactly once. Returns (lvl0_delta, append_id).
+    new_leaves: DataFrame, checkpoint_base: str, cfg: EngineConfig, dim: int,
+    start_resolution: int,
+) -> tuple[str, dict]:
+    """Shape ``new_leaves`` into level-0 rows (tree.level0_rows), append
+    them exactly once, and count them per start-resolution cell. Returns
+    (append_id, {cell_id: appended rows}).
 
-    The append id is content-derived: a retried update (crash anywhere
-    downstream) re-presents the same delta and must not duplicate
-    level-0 rows — append_level dedups on this id. The id covers
+    The delta is checkpointed eagerly, then read by ONE aggregation
+    grouped by start-resolution cell (functions.staging
+    .content_append_stats): the per-cell row counts, and the append id
+    ``n{rows}h{sum of pmod(xxhash64(node_id, text, n_tokens, embedding),
+    2^31)}``. The id is content-derived: a retried update (crash
+    anywhere downstream) re-presents the same delta and must not
+    duplicate level-0 rows — append_level dedups on this id. It covers
     text/tokens/embedding too, so a repair batch with the SAME node_ids
-    but different content is a new append, not a silent no-op.
+    but different content is a new append, not a silent no-op. The
+    per-cell counts are the eager path's affected cells and the
+    planner's ledger counts.
 
-    The delta is checkpointed eagerly BEFORE anything reads it: the
-    append id, the parquet write, the affected-cell delta, and the
-    planner's ledger counts are all consumers, and re-executing the
-    caller's plan per consumer would (a) run the expensive
-    chunk→embed→reduce pipeline up to 3×, and (b) with a
-    NONDETERMINISTIC embed_fn (a live service) let each consumer see
-    DIFFERENT x,y — ledger counts attributed to cells other than the
-    ones the written rows actually land in, breaking force_flush
-    exactness. One materialization, every consumer reads it."""
+    Both the aggregation and the parquet write read the checkpoint, so
+    the caller's plan (the leaf kernel, for leaves_from_docs input) runs
+    once: with a NONDETERMINISTIC embed_fn (a live service) a second run
+    could give other x, y, and the ledger would count cells other than
+    the ones the written rows land in, breaking force_flush exactness."""
     from raptor_rag_spark.functions.staging import content_append_stats
+    from raptor_rag_spark.operators.tile import cell_id_col
     from raptor_rag_spark.operators.tree import level0_rows
 
     lvl0_delta = level0_rows(new_leaves, cfg, dim).localCheckpoint(eager=True)
-    append_id, n_rows = content_append_stats(
-        lvl0_delta, ["node_id", "text", "n_tokens", "embedding"]
+    append_id, counts = content_append_stats(
+        lvl0_delta, ["node_id", "text", "n_tokens", "embedding"],
+        by=cell_id_col(F.col("x"), F.col("y"), start_resolution),
     )
     append_level(
         lvl0_delta, checkpoint_base, 0, {"input": "incremental append"},
-        append_id=append_id, rows_hint=n_rows, assume_pinned=True,
+        append_id=append_id, rows_hint=sum(counts.values()), assume_pinned=True,
     )
-    return lvl0_delta, append_id
+    return append_id, counts
 
 
 _PENDING_LEDGER = "pending_appends.json"
@@ -431,8 +433,6 @@ def incremental_update_planned(
     the same level-0 state).
 
     Returns the collapsed node table (all levels)."""
-    from pyspark.sql import functions as F
-
     from raptor_rag_spark.operators.maintenance import write_meta_atomic
     from raptor_rag_spark.operators.tile import tile
     from raptor_rag_spark.operators.tree import (
@@ -490,18 +490,14 @@ def incremental_update_planned(
         )
 
     if new_leaves is not None:
-        lvl0_delta, append_id = _stage_level0_append(new_leaves, checkpoint_base, cfg, dim)
+        # per-cell counts bounded by the base-cell universe (4^res), not by rows
+        append_id, counts = _stage_level0_append(
+            new_leaves, checkpoint_base, cfg, dim, start_resolution
+        )
         if append_id not in ledger["applied"]:
-            counts = (
-                tile(lvl0_delta.select("node_id", "x", "y"), start_resolution)
-                .groupBy("cell_id")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            )  # bounded by the base-cell universe (4^res), not by rows
-            for r in counts:
-                c = r["cell_id"]
-                ledger["cells"][c] = int(ledger["cells"].get(c, 0)) + int(r["n"])
-                ledger["sizes"][c] = int(ledger["sizes"].get(c, 0)) + int(r["n"])
+            for c, n in counts.items():
+                ledger["cells"][c] = int(ledger["cells"].get(c, 0)) + n
+                ledger["sizes"][c] = int(ledger["sizes"].get(c, 0)) + n
             ledger["applied"] = (ledger["applied"] + [append_id])[
                 -_PENDING_APPLIED_KEEP:
             ]

@@ -1,7 +1,8 @@
 """End-to-end golden pins (SURVEY §5 item 3): the deterministic
 synthetic corpus must produce byte-identical tile assignments and kNN
 join output rows across sessions, machines and refactors. Regenerate
-ONLY for intentional semantic changes: python tools/gen_goldens.py."""
+ONLY for intentional semantic changes: python tools/gen_goldens.py
+[golden|traversal|knn|leaves]."""
 
 import json
 import os
@@ -59,3 +60,20 @@ def test_golden_knn_kernels(spark):
             assert max(abs(a - b) for a, b in zip(got_d, want_d)) <= 1e-12, case
         else:
             assert got_d == want_d, case
+
+
+LEAVES = os.path.join(os.path.dirname(__file__), "goldens", "leaves.json")
+
+
+def test_golden_leaves(spark, tmp_path):
+    """Level-0 rows of every leaf path — arith ids over a many-partition
+    and a 1-partition source, hash ids, add_documents and
+    append_documents of a string, null and empty texts — with their
+    text, n_tokens, embedding bits and x, y bits, pinned from the
+    chunk -> embed -> reduce_2d chain the one leaf kernel replaced."""
+    with open(LEAVES) as f:
+        want = json.load(f)
+    got = gg.compute_leaves_golden(spark, str(tmp_path / "tree"))
+    assert got.keys() == want.keys()
+    for case in want:
+        assert got[case] == want[case], case

@@ -1165,11 +1165,11 @@ def test_read_level_local_matches_read_level(spark, small_tree):
 # ---------------------------------------------- one flat upper level
 
 
-def _day_leaves(spark, tag):
+def _day_leaves(spark, tag, seed=77, first_id=50_000):
     """The leaves of one 6-page day, pinned."""
     return incremental_level0(
-        synthetic_pages(spark, n=6, seed=77)
-        .withColumn("page_id", F.col("page_id") + 50_000)
+        synthetic_pages(spark, n=6, seed=seed)
+        .withColumn("page_id", F.col("page_id") + first_id)
         .withColumn("url", F.concat(F.lit(f"https://{tag}.test/"), F.col("page_id")))
     ).localCheckpoint(eager=True)
 
@@ -1401,6 +1401,98 @@ def test_flush_crash_before_manifest_commit_keeps_old_level(
     assert _levels(spark, base)[1] != before[1]
 
 
+def _ledger_write_crash(monkeypatch, base, nth):
+    """Make the ``nth`` append-ledger write under ``base`` raise (other
+    sidecar writes, the level manifests among them, go through)."""
+    from raptor_rag_spark.operators import maintenance
+    from raptor_rag_spark.streaming.incremental import _pending_path
+
+    real, seen = maintenance.write_meta_atomic, {"n": 0}
+
+    def write(path, meta):
+        if path == _pending_path(base):
+            seen["n"] += 1
+            if seen["n"] == nth:
+                raise OSError(f"crash at ledger write {nth}")
+        real(path, meta)
+
+    monkeypatch.setattr(maintenance, "write_meta_atomic", write)
+
+
+def test_later_day_crash_before_count_merge_counts_the_batch_once(
+    spark, small_tree, tmp_path, monkeypatch
+):
+    """On a later deferred day, a crash after the level-0 append commits
+    but before the ledger's count merge leaves the ledger as it was; the
+    retried day appends nothing more and adds the day's per-cell counts
+    once, to both the pending cells and the cell sizes."""
+    from raptor_rag_spark.config import DEFAULT_CONFIG
+    from raptor_rag_spark.operators.tile import tile
+    from raptor_rag_spark.operators.tree import read_level
+    from raptor_rag_spark.streaming.incremental import incremental_update_planned, read_pending
+
+    base = _copy_tree(small_tree, tmp_path)
+    _deferred_day(spark, base, "first")
+    before, n_before = read_pending(base), read_level(spark, base, 0).count()
+    day = _day_leaves(spark, "later", seed=79, first_id=70_000)
+    per_cell = {r["cell_id"]: r["count"] for r in tile(day, 3).groupBy("cell_id").count().collect()}
+
+    def land():
+        incremental_update_planned(spark, base, day, DEFAULT_CONFIG, min_pending_per_cell=10**6)
+
+    _ledger_write_crash(monkeypatch, base, 1)
+    with pytest.raises(OSError, match="ledger write 1"):
+        land()
+    monkeypatch.undo()
+    assert read_level(spark, base, 0).count() == n_before + day.count()
+    assert read_pending(base) == before
+
+    land()
+    after = read_pending(base)
+    assert read_level(spark, base, 0).count() == n_before + day.count()
+    for key in ("cells", "sizes"):
+        want = dict(before[key])
+        for c, n in per_cell.items():
+            want[c] = want.get(c, 0) + n
+        assert after[key] == want, key
+    assert len(after["applied"]) == len(before["applied"]) + 1
+
+
+def test_later_day_crash_before_ledger_clear_reruns_to_scratch(
+    spark, small_tree, tmp_path, monkeypatch
+):
+    """On a later day that flushes, a crash after the flush commits its
+    levels but before the ledger clear leaves the day's cells pending;
+    rerunning the day empties the ledger, and every level then equals a
+    from-scratch build over the tree's level 0."""
+    from raptor_rag_spark.config import DEFAULT_CONFIG
+    from raptor_rag_spark.operators.tree import build_tree, read_level
+    from raptor_rag_spark.streaming.incremental import incremental_update_planned, read_pending
+
+    base = _copy_tree(small_tree, tmp_path)
+    _deferred_day(spark, base, "first")
+    day = _day_leaves(spark, "later", seed=79, first_id=70_000)
+
+    def flush_day():
+        incremental_update_planned(spark, base, day, DEFAULT_CONFIG, force_flush=True)
+
+    # write 1 merges the day's counts, write 2 clears the flushed cells
+    _ledger_write_crash(monkeypatch, base, 2)
+    with pytest.raises(OSError, match="ledger write 2"):
+        flush_day()
+    monkeypatch.undo()
+    assert read_pending(base)["cells"]
+
+    flush_day()
+    assert read_pending(base)["cells"] == {}
+    scratch = str(tmp_path / "scratch")
+    build_tree(
+        spark, read_level(spark, base, 0).drop("layer", "cell_id", "children"), scratch,
+        DEFAULT_CONFIG, start_resolution=3,
+    )
+    assert _full_levels(spark, base) == _full_levels(spark, scratch)
+
+
 def _assert_flat_upper_levels(spark, base):
     import glob
     import os
@@ -1415,8 +1507,8 @@ def _assert_flat_upper_levels(spark, base):
 
 
 def test_flush_and_build_job_counts_pinned(spark, tmp_path, count_jobs):
-    """Jobs of a 48-page build, of one deferred day that flushes no cell
-    and of a forced flush of that day, with partition discovery forced
+    """Jobs of a 48-page build, of two deferred days that flush no cell
+    and of a forced flush of those days, with partition discovery forced
     onto the cluster as on a level with more cells than the discovery
     threshold (32; level 1 of a 1,500-page tree has 56 start-resolution
     cells). One partition dir per cell cost a listing job per read of an
@@ -1426,9 +1518,12 @@ def test_flush_and_build_job_counts_pinned(spark, tmp_path, count_jobs):
     7, 10 and 12 jobs to 5, 8 and 9. Building levels that fit the
     driver there, one write job each, cut the build to level 0's write
     plus level 1's (2 jobs) and the flush to the rewrite of level 1 plus
-    the level 2 it grows (2 jobs). After the build and the flush, every
-    level >= 1 is one flat dir of at most defaultParallelism + 1 part
-    files."""
+    the level 2 it grows (2 jobs). Counting a day's delta per cell in
+    the aggregation that derives its append id cut the first day (which
+    also seeds the ledger's cell sizes) from 8 jobs to 6 and a later day
+    from 6 to 4: the checkpoint, the aggregation and the write. After
+    the build and the flush, every level >= 1 is one flat dir of at most
+    defaultParallelism + 1 part files."""
     from raptor_rag_spark.config import DEFAULT_CONFIG
     from raptor_rag_spark.operators.tree import build_tree
     from raptor_rag_spark.streaming.incremental import incremental_update_planned
@@ -1453,6 +1548,13 @@ def test_flush_and_build_job_counts_pinned(spark, tmp_path, count_jobs):
                 spark, base, day, DEFAULT_CONFIG, min_pending_per_cell=10**6
             ),
         )
+        day2 = _day_leaves(spark, "pin2", seed=78, first_id=60_000)
+        _, n_day2 = count_jobs(
+            "pin-day2",
+            lambda: incremental_update_planned(
+                spark, base, day2, DEFAULT_CONFIG, min_pending_per_cell=10**6
+            ),
+        )
         _, n_flush = count_jobs(
             "pin-flush",
             lambda: incremental_update_planned(
@@ -1463,5 +1565,6 @@ def test_flush_and_build_job_counts_pinned(spark, tmp_path, count_jobs):
     finally:
         spark.conf.set(listing, prev)
     assert n_build <= 2, n_build
-    assert n_day <= 8, n_day
+    assert n_day <= 6, n_day
+    assert n_day2 <= 4, n_day2
     assert n_flush <= 2, n_flush

@@ -249,3 +249,47 @@ def test_cap_split_job_count_pinned(spark, leaves, count_jobs):
     )
     assert any(r["resolution"] > 3 for r in rows)
     assert n_jobs <= 3, n_jobs
+
+
+def test_leaves_from_docs_is_one_python_node(spark, tmp_path):
+    """Chunk, embed and project run in one Arrow kernel: over a
+    non-Python source the optimized plan of leaves_from_docs holds one
+    Python node, for either id scheme, and page ingest adds only the
+    extract kernel before it."""
+    from raptor_rag_spark.functions.localtab import local_df
+    from raptor_rag_spark.functions.planutil import _PYTHON_EVAL_NODES
+    from raptor_rag_spark.operators.tree import leaves_from_docs
+    from raptor_rag_spark.streaming import incremental_level0
+
+    def python_nodes(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return [ln for ln in plan.splitlines() if any(n in ln for n in _PYTHON_EVAL_NODES)]
+
+    docs = local_df(spark, [(i, f"Doc {i}. Second line!") for i in range(8)], "doc_id long, text string")
+    for scheme in ("arith", "hash"):
+        nodes = python_nodes(leaves_from_docs(docs, CFG, 32, id_scheme=scheme))
+        assert len(nodes) == 1 and "MapInPandas" in nodes[0], nodes
+    src = str(tmp_path / "pages")
+    synthetic_pages(spark, n=4, seed=3).write.parquet(src)
+    assert len(python_nodes(incremental_level0(spark.read.parquet(src), CFG))) == 2
+
+
+def test_driver_level_manifest_times_the_whole_step(spark, leaves, tmp_path, monkeypatch):
+    """A level built on the driver records in its manifest's wall_sec the
+    whole level step, its summarize included, not only the write."""
+    import time
+
+    from raptor_rag_spark.operators import tree
+    from raptor_rag_spark.operators.tree import read_manifest
+
+    real = tree.build_level_local
+
+    def slow(*args, **kwargs):
+        time.sleep(0.5)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(tree, "build_level_local", slow)
+    base = str(tmp_path / "tree")
+    build_tree(spark, leaves, base, CFG, start_resolution=3, embed_dim=32)
+    for layer in range(1, last_complete_level(base) + 1):
+        assert read_manifest(base, layer)["wall_sec"] >= 0.5, layer

@@ -10,9 +10,14 @@ corpus; tests/test_goldens.py recomputes them and asserts equality.
   ``float.hex``) of every scoring path over the sf0.001 embeddings:
   brute force and the tile/IVF index searches, float and int8 nodes,
   broadcast and join strategies.
+- tests/goldens/leaves.json: level-0 rows (``float.hex`` x, y and
+  digests of the text and the embedding bits) of every leaf path:
+  arith ids over a many-partition and a 1-partition source, hash ids
+  (``incremental_level0`` without ``page_id``), ``add_documents`` and
+  ``append_documents`` of a string, and null and empty texts.
 
-Usage: ``python tools/gen_goldens.py [golden|traversal|knn]`` (default
-golden). Regenerate only for an intentional semantic change.
+Usage: ``python tools/gen_goldens.py [golden|traversal|knn|leaves]``
+(default golden). Regenerate only for an intentional semantic change.
 """
 
 from __future__ import annotations
@@ -214,6 +219,66 @@ def compute_knn_golden(spark) -> dict:
     return out
 
 
+LEAVES_PAGES = 24
+
+
+def _digest(data: bytes) -> str:
+    return hashlib.sha256(data).hexdigest()[:16]
+
+
+def _leaf_rows(rows) -> list:
+    """[node_id, text digest, n_tokens, embedding-bits digest, x hex,
+    y hex] per level-0 row, by node_id."""
+    import numpy as np
+
+    return sorted(
+        [int(r["node_id"]), _digest(r["text"].encode()), int(r["n_tokens"]),
+         _digest(np.asarray(r["embedding"], dtype=np.float32).tobytes()),
+         float(r["x"]).hex(), float(r["y"]).hex()]
+        for r in rows
+    )
+
+
+def compute_leaves_golden(spark, base: str) -> dict:
+    """Level-0 rows of every leaf path, keyed by case; ``base`` is an
+    empty dir for the string-built tree."""
+    from raptor_rag_spark.api import RaptorEngine
+    from raptor_rag_spark.config import EngineConfig
+    from raptor_rag_spark.functions.localtab import local_df
+    from raptor_rag_spark.operators.tree import leaves_from_docs, level0_rows, read_level
+    from raptor_rag_spark.streaming.incremental import incremental_level0
+
+    cfg = EngineConfig(embedding_dim=DIM)
+    pages = synthetic_pages(spark, n=LEAVES_PAGES, seed=7).localCheckpoint(eager=True)
+    docs = extract_pages(pages, passthrough=("page_id",)).select(
+        F.col("page_id").alias("doc_id"), "text"
+    ).localCheckpoint(eager=True)
+    # one partition per core: chunked where it lies, no repartition
+    assert docs.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+    texts = [r["text"] for r in docs.orderBy("doc_id").collect()]
+    odd = local_df(
+        spark,
+        [(1, None), (2, ""), (3, "  \n "), (4, "One short sentence. Another one!")],
+        "doc_id long, text string",
+    )
+
+    def level0(d, **kw):
+        return _leaf_rows(level0_rows(leaves_from_docs(d, cfg, DIM, **kw), cfg, DIM).collect())
+
+    out = {
+        "arith_partitioned": level0(docs),
+        "arith_one_partition": level0(docs.coalesce(1)),
+        "hash_incremental": _leaf_rows(incremental_level0(pages.drop("page_id"), cfg).collect()),
+        "null_and_empty": level0(odd),
+    }
+    eng = RaptorEngine(spark, base, cfg, embed_dim=DIM)
+    eng.add_documents("\n".join(texts[:12]))
+    out["add_documents_str"] = _leaf_rows(read_level(spark, base, 0).collect())
+    eng.append_documents("\n".join(texts[12:15]))
+    out["append_documents_str"] = _leaf_rows(read_level(spark, base, 0).collect())
+    return out
+
+
 def _write(name: str, g: dict) -> str:
     out = os.path.join(os.path.dirname(__file__), "..", "tests", "goldens", name)
     os.makedirs(os.path.dirname(out), exist_ok=True)
@@ -229,6 +294,11 @@ if __name__ == "__main__":
         with tempfile.TemporaryDirectory() as base:
             g = compute_traversal_golden(spark, base)
         print("wrote", _write("traversal.json", g), "levels:", g["level_rows"])
+    elif which == "leaves":
+        with tempfile.TemporaryDirectory() as base:
+            g = compute_leaves_golden(spark, base)
+        print("wrote", _write("leaves.json", g), "rows:",
+              {case: len(rows) for case, rows in g.items()})
     elif which == "knn":
         g = compute_knn_golden(spark)
         print("wrote", _write("knn_kernels.json", g), "rows:",
