@@ -6,11 +6,11 @@ from pyspark.sql import DataFrame
 
 # the driver-vs-distributed size bound of the tree's level step: a level
 # whose child level has at most this many rows is built on the driver,
-# past it in Spark. Set below the measured crossover on 4 cores: over an
-# 18,289-row child level the driver step took 3.0 s and the Spark step
-# 4.2-6.2 s (warm-cold); over 54,942 rows 5.7 s and 5.6-8.9 s, so the
-# warm Spark step already wins there and the interpolated crossover is
-# near 52k rows
+# past it in Spark. On 4 cores, over a 17,245-row child level the driver
+# step takes 0.65-0.77 s and the Spark step 3.4-6.1 s; over 52,370 rows
+# 2.0-2.3 s and 4.4-8.1 s. The driver step wins at the bound, so the
+# crossover lies above it; the bound stays until a workload with a child
+# level past it measures where
 DRIVER_MAX_ROWS = 50_000
 
 

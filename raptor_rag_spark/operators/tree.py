@@ -11,13 +11,13 @@ Recasts the reference layer loop
   cap bounds every per-cell group size;
 - cluster summarization (LLM, cluster_tree_builder.py:66-85) -> a
   deterministic extractive summarizer (an LLM endpoint drops into
-  ``summarize_fn``), applied per cell by one kernel,
-  :func:`summarize_cell`. Where it runs is chosen by size: a level
+  ``summarize_fn``), applied to the cells by one batched kernel,
+  :func:`summarize_cells`. Where it runs is chosen by size: a level
   whose child level fits the driver (planutil.fits_driver on the
-  child's manifest rows) is read with pyarrow and summarized by a
-  pandas groupby on the driver, then written with one Spark job; a
-  larger one runs the same kernel in ``applyInPandas``
-  (:func:`build_level`);
+  child's manifest rows) is read with pyarrow, summarized by one
+  kernel call over all its cells and written with pyarrow, with no
+  Spark job; a larger one runs the same kernel per cell group in
+  ``applyInPandas`` (:func:`build_level`);
 - termination: new layer has <= min_level_nodes nodes or no reduction
   (reference cluster_tree_builder.py:95-100);
 - every level checkpoints to parquet with a manifest carrying
@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from collections.abc import Callable, Iterator
@@ -139,7 +140,7 @@ def http_summarize_fn(
     :func:`raptor_rag_spark.functions.httpclient.post_json_with_retries`
     — one implementation for both model seams. Stdlib-only (urllib);
     runs where the level step runs (an applyInPandas worker, or a
-    driver thread of build_level_local), one HTTP call per cell.
+    driver thread of summarize_cells), one HTTP call per cell.
     Returns the plug-in ``(texts, max_tokens) -> str`` callable the
     level steps expect."""
     from raptor_rag_spark.functions.httpclient import post_json_with_retries
@@ -195,40 +196,58 @@ def _summarizer(cfg: EngineConfig, summarize_fn=None):
     return summarize, tok_factory
 
 
-def summarize_cell(
-    key,
-    pdf: pd.DataFrame,
+def summarize_cells(
+    members: pd.DataFrame,
     summarize: Callable[[list[str], int], str],
     tok_factory: Callable[[], object],
     max_tokens: int,
     dim: int | None = None,
     proj: np.ndarray | None = None,
+    threads: int = 1,
 ) -> pd.DataFrame:
-    """One cell's parent row (cell_id, resolution, text, children,
-    n_tokens) from its members (node_id, resolution, text): the member
-    texts in node_id order are summarized, the children are the member
-    ids. Both level steps run it: ``applyInPandas`` per cell group in
-    :func:`build_level`, a pandas groupby on the driver in
-    :func:`build_level_local`.
+    """The parent rows (cell_id, resolution, text, children, n_tokens)
+    of any number of cells, one per cell in cell_id order, from their
+    members (cell_id, resolution, node_id, text): each cell's member
+    texts in node_id order are summarized, its children are the member
+    ids. Both level steps run it: :func:`build_level_local` over every
+    cell of a level at once, :func:`build_level`'s ``applyInPandas``
+    over one cell group.
 
-    With ``dim`` the row also carries the parent's hash embedding and
-    its x, y: the (1, dim) @ proj.T float64 product reduce_2d runs (a
-    batched (n, dim) product can differ in the last ulp)."""
-    pdf = pdf.sort_values("node_id")
-    text = summarize(list(pdf["text"]), max_tokens)
+    The members are sorted once and sliced per cell as plain lists;
+    only the ``summarize`` calls run on ``threads`` threads (map keeps
+    cell order), so a live summarizer such as :func:`http_summarize_fn`
+    keeps requests in flight while the pure-Python work stays off a
+    contended GIL. n_tokens are counted by one tokenizer.
+
+    With ``dim`` the rows also carry the parents' hash embeddings, from
+    one hash_embed_batch (batch-order independent by construction), and
+    their x, y: per row the (1, dim) @ proj.T float64 product reduce_2d
+    runs (a batched (n, dim) product can differ in the last ulp)."""
+    members = members.sort_values(["cell_id", "node_id"])
+    cells, first = np.unique(members["cell_id"].to_numpy(), return_index=True)
+    bounds = list(zip(first, [*first[1:], len(members)]))
+    texts, ids = members["text"].tolist(), members["node_id"].tolist()
+    groups = [texts[a:b] for a, b in bounds]
+    if threads > 1:
+        with ThreadPoolExecutor(threads) as pool:
+            summaries = list(pool.map(summarize, groups, [max_tokens] * len(groups)))
+    else:
+        summaries = [summarize(group, max_tokens) for group in groups]
+    tok = tok_factory()
     out = pd.DataFrame(
-        {
-            "cell_id": [key[0]],
-            "resolution": [int(pdf["resolution"].iloc[0])],
-            "text": [text],
-            "children": [[int(v) for v in pdf["node_id"]]],
-            "n_tokens": [len(tok_factory().encode(text))],
+        {  # object columns stay typed when there is no cell
+            "cell_id": pd.Series(cells, dtype=object),
+            "resolution": members["resolution"].to_numpy(np.int32)[first],
+            "text": pd.Series(summaries, dtype=object),
+            "children": pd.Series([[int(v) for v in ids[a:b]] for a, b in bounds], dtype=object),
+            "n_tokens": [len(tok.encode(text)) for text in summaries],
         }
     )
     if dim is not None:
-        emb = hash_embed_batch(pd.Series([text]), dim)  # (1, dim) f32
-        xy = emb.astype("float64") @ proj.T  # = reduce_2d's matmul
-        out["embedding"] = list(emb)
+        emb = hash_embed_batch(pd.Series(summaries, dtype=object), dim)  # (n, dim) f32
+        # one (1, dim) row at a time: = reduce_2d's matmul of one parent
+        xy = np.array([e.astype(np.float64)[None, :] @ proj.T for e in emb]).reshape(-1, 2)
+        out["embedding"] = pd.Series(list(emb), dtype=object)
         out["x"] = xy[:, 0]
         out["y"] = xy[:, 1]
     return out
@@ -486,10 +505,11 @@ def build_level(
     embed_dim: int | None = None,
 ) -> DataFrame:
     """One layer step in Spark: tile current nodes -> per-cell
-    summarize (:func:`summarize_cell` in ``applyInPandas``) -> parent
-    nodes (node_id, layer, cell_id, text, children, n_tokens). The tree
-    loop runs it for levels whose child level does not fit the driver
-    (:func:`build_level_local` is its driver twin).
+    summarize (:func:`summarize_cells` of one cell group in
+    ``applyInPandas``) -> parent nodes (node_id, layer, cell_id, text,
+    children, n_tokens). The tree loop runs it for levels whose child
+    level does not fit the driver (:func:`build_level_local` is its
+    driver twin, over every cell in one call).
 
     Input needs: node_id, text, n_tokens, x, y.
 
@@ -513,8 +533,8 @@ def build_level(
         proj = projection_matrix(dim, cfg.seed)  # small, ships in closure
         out_schema += ", embedding array<float>, x double, y double"
 
-    def kernel(key, pdf):
-        return summarize_cell(key, pdf, summarize, tok_factory, max_summary, dim, proj)
+    def kernel(pdf):
+        return summarize_cells(pdf, summarize, tok_factory, max_summary, dim, proj)
 
     # explicit hash repartition BEFORE the grouped UDF: the summarizer
     # is CPU-bound Python, but its shuffle input is small in BYTES, so
@@ -567,32 +587,24 @@ def build_level_local(
 ) -> pd.DataFrame:
     """Driver twin of ``build_level(with_embedding=True)`` over a pandas
     frame of child rows (node_id, text, n_tokens, x, y): the same
-    cap-split rule on numpy cell keys, the same :func:`summarize_cell`
-    per cell through a pandas groupby, the same node-id rule. Returns
-    the parents in NODES_COLUMNS.
-
-    Cells are summarized on ``threads`` threads (map keeps cell order),
-    so a live summarizer such as :func:`http_summarize_fn` keeps the
-    concurrency of the Spark step."""
+    cap-split rule on numpy cell keys, one :func:`summarize_cells` call
+    over every cell (its summarize calls on ``threads`` threads), the
+    same node-id rule. Returns the parents in NODES_COLUMNS."""
     summarize, tok_factory = _summarizer(cfg, summarize_fn)
-    proj = projection_matrix(dim, cfg.seed)
     keys = _pick_cells_local(
         nodes["x"].to_numpy(np.float64), nodes["y"].to_numpy(np.float64),
         nodes["n_tokens"].to_numpy(), resolution, cfg,
     )
-    members = nodes.assign(resolution=(keys >> 32).astype(np.int32), cell_id=np_quadkeys(keys))
-
-    def one(cell):
-        key, pdf = cell
-        return summarize_cell(
-            (key,), pdf, summarize, tok_factory, cfg.summary_max_tokens, dim, proj
-        )
-
-    with ThreadPoolExecutor(max(1, threads)) as pool:
-        parts = list(pool.map(one, members.groupby("cell_id", sort=True)))
-    if not parts:
-        return pd.DataFrame(columns=NODES_COLUMNS)
-    parents = pd.concat(parts, ignore_index=True)
+    members = pd.DataFrame({
+        "cell_id": np_quadkeys(keys),
+        "resolution": (keys >> 32).astype(np.int32),
+        "node_id": nodes["node_id"].to_numpy(),
+        "text": nodes["text"].to_numpy(),
+    })
+    parents = summarize_cells(
+        members, summarize, tok_factory, cfg.summary_max_tokens, dim,
+        projection_matrix(dim, cfg.seed), threads,
+    )
     # node_id_for_cell: layer<<48 | res<<40 | cell-as-int
     parents["node_id"] = [
         (layer << 48) + (int(r) << 40) + int(c, 4)
@@ -614,7 +626,7 @@ def _level_path(base: str, layer: int) -> str:
 
 
 def write_level(
-    df: DataFrame,
+    df: DataFrame | pd.DataFrame,
     base: str,
     layer: int,
     lineage: dict | Callable[[int], dict],
@@ -630,6 +642,10 @@ def write_level(
     token, :func:`recover_levels` rolls the swap back (the token'd save
     protocol of operators/maintenance.py).
 
+    ``df`` is a Spark DataFrame, written by a Spark job, or a driver
+    pandas frame in NODES_COLUMNS (a level built on the driver), written
+    with pyarrow as one part file and no job (:func:`_write_rows_local`).
+
     ``lineage`` is a dict, or a function of the written row count that
     returns one (a rewrite records how many of its rows it recomputed).
     ``start_resolution`` (build_tree passes it at level 0) is recorded
@@ -639,7 +655,12 @@ def write_level(
     t0 = started or time.time()
     path = _level_path(base, layer)
     token = uuid.uuid4().hex
-    df.write.mode("overwrite").parquet(path + maintenance._SWAP_NEW)
+    if isinstance(df, pd.DataFrame):
+        _write_rows_local(df, path + maintenance._SWAP_NEW)
+        spark = SparkSession.active()
+    else:
+        df.write.mode("overwrite").parquet(path + maintenance._SWAP_NEW)
+        spark = df.sparkSession
     maintenance.write_save_token(path + maintenance._SWAP_NEW, token)
     maintenance.swap_live_dir(path, keep_old=True)
     per_part = storage_partition_counts(path)
@@ -658,8 +679,34 @@ def write_level(
     maintenance.write_meta_atomic(_manifest_path(base, layer), manifest)
     maintenance.recover_save([path], token)  # drop the rollback dir
     # the renames bypass Spark's writer: drop its cached listing
-    df.sparkSession.catalog.refreshByPath(path)
+    spark.catalog.refreshByPath(path)
     return manifest
+
+
+def _nodes_arrow_schema():
+    """NODES_SCHEMA as an Arrow schema."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(StructType.fromDDL(NODES_SCHEMA))
+
+
+def _write_rows_local(rows: pd.DataFrame, path: str) -> None:
+    """Write ``rows`` (NODES_COLUMNS) with pyarrow into a fresh dir at
+    ``path``, in NODES_SCHEMA's Arrow types, as one snappy part file
+    named as Spark's writer names task 0's (storage_partition_counts
+    keys it ``"0"``)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    shutil.rmtree(path, ignore_errors=True)  # a crashed earlier write
+    os.makedirs(path)
+    table = pa.Table.from_pandas(
+        rows[NODES_COLUMNS], schema=_nodes_arrow_schema(), preserve_index=False
+    )
+    pq.write_table(
+        table, os.path.join(path, f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"),
+        compression="snappy",
+    )
 
 
 def require_local_base(base: str) -> None:
@@ -751,11 +798,10 @@ def read_level_local(
     Spark, files whose names start with ``_`` or ``.`` are skipped (the
     ``_inflight_*`` staging dirs, ``_savetoken``, checksums)."""
     import pyarrow.dataset as ds
-    from pyspark.sql.pandas.types import to_arrow_schema
 
     dataset = ds.dataset(
         _flat_level_path(base, layer),
-        schema=to_arrow_schema(StructType.fromDDL(NODES_SCHEMA)),
+        schema=_nodes_arrow_schema(),
         format="parquet",
         ignore_prefixes=["_", "."],
     )
@@ -876,15 +922,14 @@ def _rebuild_level_spark(spark, base, layer, res, affected, cfg, dim, summarize_
 
 def _rebuild_level_local(spark, base, layer, res, affected, cfg, dim, summarize_fn,
                          n_child, track):
-    """Level step for a child level that fits the driver: the child
-    level read with pyarrow (no job), :func:`build_level_local` over
-    the affected cells' children, the kept parents from a pyarrow read
-    of the level, and one ``write_level(local_df(...))`` job. Returns
-    (manifest, replaced count, changed x, y); ``track`` is moot, the
-    changed rows are at hand. The manifest's ``wall_sec`` covers the
-    whole step, the driver-side summarize included."""
-    from raptor_rag_spark.functions.localtab import local_df
-
+    """Level step for a child level that fits the driver, with no Spark
+    job: the child level read with pyarrow, :func:`build_level_local`
+    over the affected cells' children, the kept parents from a pyarrow
+    read of the level, and one pyarrow write (``write_level`` of the
+    pandas rows). Returns (manifest, replaced count, changed x, y);
+    ``track`` is moot, the changed rows are at hand. The manifest's
+    ``wall_sec`` covers the whole step, the driver-side summarize
+    included."""
     t0 = time.time()
     child = read_level_local(base, layer - 1, ["node_id", "text", "n_tokens", "x", "y"])
     if affected is not None:
@@ -902,16 +947,8 @@ def _rebuild_level_local(spark, base, layer, res, affected, cfg, dim, summarize_
         parts = [part for part in (old[~hit], parents) if len(part)]
         rows = pd.concat(parts, ignore_index=True) if parts else parents
         changed = np.concatenate([old.loc[hit, ["x", "y"]].to_numpy(np.float64), changed])
-    # plain Python values: the rows convert with Arrow conversion on or off
-    values = zip(
-        rows["node_id"].tolist(), rows["layer"].tolist(), rows["cell_id"].tolist(),
-        rows["text"].tolist(), [[int(c) for c in v] for v in rows["children"]],
-        rows["n_tokens"].tolist(), [np.asarray(v, np.float32).tolist() for v in rows["embedding"]],
-        rows["x"].tolist(), rows["y"].tolist(),
-    )
     manifest = write_level(
-        local_df(spark, values, NODES_SCHEMA).coalesce(1), base, layer,
-        _lineage(base, layer, res, affected, n_replaced, n_kept), started=t0,
+        rows, base, layer, _lineage(base, layer, res, affected, n_replaced, n_kept), started=t0,
     )
     return manifest, n_replaced, changed
 

@@ -2,7 +2,7 @@
 synthetic corpus must produce byte-identical tile assignments and kNN
 join output rows across sessions, machines and refactors. Regenerate
 ONLY for intentional semantic changes: python tools/gen_goldens.py
-[golden|traversal|knn|leaves]."""
+[golden|traversal|knn|leaves|levels]."""
 
 import json
 import os
@@ -74,6 +74,24 @@ def test_golden_leaves(spark, tmp_path):
     with open(LEAVES) as f:
         want = json.load(f)
     got = gg.compute_leaves_golden(spark, str(tmp_path / "tree"))
+    assert got.keys() == want.keys()
+    for case in want:
+        assert got[case] == want[case], case
+
+
+LEVELS = os.path.join(os.path.dirname(__file__), "goldens", "levels.json")
+
+
+def test_golden_levels(spark, tmp_path):
+    """Every row of every level >= 1 — node id, cell id, text, children,
+    n_tokens, embedding bits and x, y bits — of a build on the driver
+    step and on the Spark step, of two deferred days and a forced
+    flush, of an eager incremental_update and of a build under a
+    non-default tokenizer_factory, pinned from the per-cell summarize
+    and Spark level write the batched parent kernel replaced."""
+    with open(LEVELS) as f:
+        want = json.load(f)
+    got = gg.compute_levels_golden(spark, str(tmp_path))
     assert got.keys() == want.keys()
     for case in want:
         assert got[case] == want[case], case

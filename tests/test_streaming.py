@@ -1345,6 +1345,78 @@ def test_driver_and_spark_level_steps_write_identical_levels(
     assert _full_levels(spark, base) == merged
 
 
+def test_driver_written_level_round_trips(spark, tmp_path, driver_bound_reference):
+    """A level written on the driver with pyarrow is a level like any
+    other: a build and a flush of two deferred days with Arrow
+    conversion off write the same levels as with it on; every level
+    reads back in NODES_SCHEMA, each level >= 1 is one part file keyed
+    as write task 0 whose footer rows equal the manifest's, and
+    maintenance.compact_level and read_level_local take it."""
+    from pyspark.sql.types import StructType
+
+    from raptor_rag_spark.config import DEFAULT_CONFIG
+    from raptor_rag_spark.operators.maintenance import compact_level
+    from raptor_rag_spark.operators.tree import (
+        NODES_COLUMNS,
+        NODES_SCHEMA,
+        _level_path,
+        build_tree,
+        last_complete_level,
+        read_level,
+        read_level_local,
+        read_manifest,
+        storage_partition_counts,
+    )
+    from raptor_rag_spark.streaming.incremental import incremental_update_planned
+
+    leaves, days, built, merged = driver_bound_reference
+    arrow = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(arrow)
+    spark.conf.set(arrow, "false")
+    try:
+        base = str(tmp_path / "tree")
+        build_tree(spark, leaves, base, DEFAULT_CONFIG, start_resolution=3)
+        assert _full_levels(spark, base) == built
+        for day in days:
+            incremental_update_planned(
+                spark, base, day, DEFAULT_CONFIG, min_pending_per_cell=10**6
+            )
+        incremental_update_planned(spark, base, None, DEFAULT_CONFIG, force_flush=True)
+    finally:
+        spark.conf.set(arrow, prev)
+    assert _full_levels(spark, base) == merged
+
+    top = last_complete_level(base)
+    assert top >= 2
+    for k in range(1, top + 1):
+        manifest = read_manifest(base, k)
+        level = read_level(spark, base, k)
+        assert level.schema == StructType.fromDDL(NODES_SCHEMA)
+        counts = storage_partition_counts(_level_path(base, k))
+        assert counts == {"0": manifest["rows"]} == manifest["partitions"], k
+        local = read_level_local(base, k)
+        assert list(local.columns) == NODES_COLUMNS
+        assert sorted(local["node_id"]) == sorted(r["node_id"] for r in level.collect())
+        report = compact_level(spark, base, k)
+        assert report["rows"] == manifest["rows"], k
+    assert _full_levels(spark, base) == merged
+
+
+def test_rebuild_levels_on_the_driver_runs_no_job(spark, small_tree, tmp_path, count_jobs):
+    """Rebuilding every level >= 1 of a tree whose levels fit the driver
+    reads, summarizes and writes them with pyarrow: no Spark job."""
+    from raptor_rag_spark.config import DEFAULT_CONFIG
+    from raptor_rag_spark.operators.tree import rebuild_levels
+
+    base = _copy_tree(small_tree, tmp_path)
+    before = _full_levels(spark, base)
+    _, n_jobs = count_jobs(
+        "rebuild-driver", lambda: rebuild_levels(spark, base, DEFAULT_CONFIG)
+    )
+    assert n_jobs == 0
+    assert _full_levels(spark, base) == before
+
+
 def test_flush_crash_before_manifest_commit_keeps_old_level(
     spark, small_tree, tmp_path, monkeypatch
 ):
@@ -1521,9 +1593,11 @@ def test_flush_and_build_job_counts_pinned(spark, tmp_path, count_jobs):
     the level 2 it grows (2 jobs). Counting a day's delta per cell in
     the aggregation that derives its append id cut the first day (which
     also seeds the ledger's cell sizes) from 8 jobs to 6 and a later day
-    from 6 to 4: the checkpoint, the aggregation and the write. After
-    the build and the flush, every level >= 1 is one flat dir of at most
-    defaultParallelism + 1 part files."""
+    from 6 to 4: the checkpoint, the aggregation and the write. Writing
+    the driver-built levels with pyarrow cut the build to level 0's
+    write (1 job) and the flush, whose every level fits the driver, to
+    none. After the build and the flush, every level >= 1 is one flat
+    dir of at most defaultParallelism + 1 part files."""
     from raptor_rag_spark.config import DEFAULT_CONFIG
     from raptor_rag_spark.operators.tree import build_tree
     from raptor_rag_spark.streaming.incremental import incremental_update_planned
@@ -1564,7 +1638,7 @@ def test_flush_and_build_job_counts_pinned(spark, tmp_path, count_jobs):
         _assert_flat_upper_levels(spark, base)
     finally:
         spark.conf.set(listing, prev)
-    assert n_build <= 2, n_build
+    assert n_build <= 1, n_build
     assert n_day <= 6, n_day
     assert n_day2 <= 4, n_day2
-    assert n_flush <= 2, n_flush
+    assert n_flush == 0, n_flush

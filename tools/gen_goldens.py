@@ -15,8 +15,14 @@ corpus; tests/test_goldens.py recomputes them and asserts equality.
   arith ids over a many-partition and a 1-partition source, hash ids
   (``incremental_level0`` without ``page_id``), ``add_documents`` and
   ``append_documents`` of a string, and null and empty texts.
+- tests/goldens/levels.json: the rows of every level >= 1 (node id,
+  cell id, digests of the text and the embedding bits, children,
+  n_tokens, ``float.hex`` x, y) of a build of the golden corpus on the
+  driver step and on the Spark step, of two deferred days and a forced
+  flush, of an eager ``incremental_update`` and of a build under a
+  non-default ``tokenizer_factory``.
 
-Usage: ``python tools/gen_goldens.py [golden|traversal|knn|leaves]``
+Usage: ``python tools/gen_goldens.py [golden|traversal|knn|leaves|levels]``
 (default golden). Regenerate only for an intentional semantic change.
 """
 
@@ -279,6 +285,98 @@ def compute_leaves_golden(spark, base: str) -> dict:
     return out
 
 
+def _level_rows(spark, base: str) -> list:
+    """Per level >= 1 of the tree under ``base``: [node_id, cell_id,
+    text digest, children, n_tokens, embedding-bits digest, x hex, y
+    hex] per row, by node_id."""
+    import numpy as np
+
+    from raptor_rag_spark.operators.tree import last_complete_level, read_level
+
+    return [
+        sorted(
+            [int(r["node_id"]), r["cell_id"], _digest(r["text"].encode()),
+             [int(c) for c in r["children"]], int(r["n_tokens"]),
+             _digest(np.asarray(r["embedding"], dtype=np.float32).tobytes()),
+             float(r["x"]).hex(), float(r["y"]).hex()]
+            for r in read_level(spark, base, k).collect()
+        )
+        for k in range(1, last_complete_level(base) + 1)
+    ]
+
+
+def _day_leaves(spark, cfg, d: int):
+    """The leaves of one 6-page day with fresh page ids and urls."""
+    from raptor_rag_spark.streaming.incremental import incremental_level0
+
+    pages = (
+        synthetic_pages(spark, n=6, seed=80 + d)
+        .withColumn("page_id", F.col("page_id") + 60_000 + 100 * d)
+        .withColumn("url", F.concat(F.lit(f"https://day{d}.test/"), F.col("page_id")))
+    )
+    return incremental_level0(pages, cfg).localCheckpoint(eager=True)
+
+
+def compute_levels_golden(spark, root: str) -> dict:
+    """Levels >= 1 of every level-step path, keyed by case; ``root``
+    is an empty dir for the trees. The golden corpus's leaves are built
+    once and pinned, so every case groups the same level 0."""
+    import shutil
+
+    from raptor_rag_spark.config import EngineConfig
+    from raptor_rag_spark.functions import planutil
+    from raptor_rag_spark.operators.tree import build_tree, leaves_from_docs
+    from raptor_rag_spark.streaming.incremental import (
+        incremental_update,
+        incremental_update_planned,
+    )
+
+    cfg = EngineConfig(embedding_dim=DIM)
+    docs = corpus_docs(spark).localCheckpoint(eager=True)
+    leaves = leaves_from_docs(docs, cfg, DIM).localCheckpoint(eager=True)
+    days = [_day_leaves(spark, cfg, d) for d in range(3)]
+
+    def path(name):
+        return os.path.join(root, name)
+
+    build_tree(spark, leaves, path("driver"), cfg, embed_dim=DIM)
+    out = {"driver_build": _level_rows(spark, path("driver"))}
+
+    bound = planutil.DRIVER_MAX_ROWS
+    planutil.DRIVER_MAX_ROWS = 0  # every level step in Spark
+    try:
+        build_tree(spark, leaves, path("spark"), cfg, embed_dim=DIM)
+    finally:
+        planutil.DRIVER_MAX_ROWS = bound
+    out["spark_build"] = _level_rows(spark, path("spark"))
+
+    shutil.copytree(path("driver"), path("deferred"))
+    for day in days[:2]:
+        incremental_update_planned(
+            spark, path("deferred"), day, cfg, embed_dim=DIM, min_pending_per_cell=10**6
+        )
+    incremental_update_planned(spark, path("deferred"), None, cfg, embed_dim=DIM, force_flush=True)
+    out["deferred_flush"] = _level_rows(spark, path("deferred"))
+
+    shutil.copytree(path("driver"), path("eager"))
+    incremental_update(spark, path("eager"), days[2], cfg, embed_dim=DIM)
+    out["eager_update"] = _level_rows(spark, path("eager"))
+
+    def words():
+        # whitespace words: a token dialect other than the default regex
+        class Words:
+            def encode(self, text):
+                return text.split()
+
+        return Words()
+
+    wcfg = EngineConfig(embedding_dim=DIM, tokenizer_factory=words)
+    wleaves = leaves_from_docs(docs, wcfg, DIM).localCheckpoint(eager=True)
+    build_tree(spark, wleaves, path("words"), wcfg, embed_dim=DIM)
+    out["tokenizer_factory_build"] = _level_rows(spark, path("words"))
+    return out
+
+
 def _write(name: str, g: dict) -> str:
     out = os.path.join(os.path.dirname(__file__), "..", "tests", "goldens", name)
     os.makedirs(os.path.dirname(out), exist_ok=True)
@@ -299,6 +397,11 @@ if __name__ == "__main__":
             g = compute_leaves_golden(spark, base)
         print("wrote", _write("leaves.json", g), "rows:",
               {case: len(rows) for case, rows in g.items()})
+    elif which == "levels":
+        with tempfile.TemporaryDirectory() as root:
+            g = compute_levels_golden(spark, root)
+        print("wrote", _write("levels.json", g), "rows:",
+              {case: [len(rows) for rows in levels] for case, levels in g.items()})
     elif which == "knn":
         g = compute_knn_golden(spark)
         print("wrote", _write("knn_kernels.json", g), "rows:",
