@@ -809,10 +809,12 @@ def main() -> None:
 
     # flagship retrieval with the distributed (no-driver-collect)
     # scoring path — the large-query-batch story; same candidates, the
-    # re-rank joins query embeddings instead of broadcasting them
+    # re-rank joins query embeddings instead of broadcasting them. The
+    # driver row bound is set below any batch to take that path
     def _knn_join_scoring():
         from pyspark.sql import functions as F
 
+        from raptor_rag_spark.functions import planutil
         from raptor_rag_spark.operators.knn import tile_knn_adaptive
 
         nodes, tiles = corpus["nodes"], corpus["tiles"]
@@ -826,10 +828,14 @@ def main() -> None:
                 "y",
             )
         )
-        tile_knn_adaptive(
-            q, nodes.select("node_id", "embedding"), tiles, k=10, ring=3,
-            max_ring=8, scoring="join",
-        ).count()
+        bound = planutil.DRIVER_MAX_ROWS
+        planutil.DRIVER_MAX_ROWS = -1
+        try:
+            tile_knn_adaptive(
+                q, nodes.select("node_id", "embedding"), tiles, k=10, ring=3, max_ring=8
+            ).count()
+        finally:
+            planutil.DRIVER_MAX_ROWS = bound
 
     timed("knn_tiled_1000q_join_scoring", _knn_join_scoring)
 

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from raptor_rag_spark.config import DEFAULT_CONFIG, EngineConfig
 from raptor_rag_spark.functions.localtab import local_df
-from raptor_rag_spark.operators.knn import BROADCAST_MAX_QUERIES
 from raptor_rag_spark.operators.tree import build_tree, last_complete_level, leaves_from_docs
 from raptor_rag_spark.operators.retrieve import (
     embed_queries,
@@ -199,14 +198,9 @@ class RaptorEngine:
         as_dataframe = isinstance(questions, DataFrame)
         q = self._query_df(questions)
         if collapse_tree:
-            # a str/list batch has a known size: no strategy count() job
-            small = not as_dataframe and (
-                isinstance(questions, str) or len(questions) <= BROADCAST_MAX_QUERIES
-            )
-            scoring = "broadcast" if small else "auto"
             sel, ctx = retrieve_collapsed(
                 q, self.nodes, self.cfg, method=method, k=top_k,
-                max_tokens=max_tokens, scoring=scoring, allowed=allowed,
+                max_tokens=max_tokens, allowed=allowed,
             )
         else:
             if allowed is not None:

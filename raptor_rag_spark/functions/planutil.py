@@ -1,22 +1,61 @@
-"""Driver-side plan inspection helpers (no jobs, no data)."""
+"""Driver-side plan inspection helpers (no jobs, no data), and the size
+bounds by which the engine picks every driver-or-distributed path.
+
+Each bound is read at call time, so setting one module attribute forces
+its path everywhere."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-# the driver-vs-distributed size bound of the tree's level step: a level
-# whose child level has at most this many rows is built on the driver,
-# past it in Spark. On 4 cores, over a 17,245-row child level the driver
-# step takes 0.65-0.77 s and the Spark step 3.4-6.1 s; over 52,370 rows
-# 2.0-2.3 s and 4.4-8.1 s. The driver step wins at the bound, so the
-# crossover lies above it; the bound stays until a workload with a child
-# level past it measures where
+# rows held on the driver: the child level of the tree's level step, and
+# the query matrix the kNN scorers broadcast. Past it the level is built
+# in Spark and queries are scored by a distributed join. On 4 cores, over
+# a 17,245-row child level the driver step takes 0.65-0.77 s and the
+# Spark step 3.4-6.1 s; over 52,370 rows 2.0-2.3 s and 4.4-8.1 s. The
+# driver step wins at the bound, so the crossover lies above it; the
+# bound stays until a workload past it measures where
 DRIVER_MAX_ROWS = 50_000
 
 
 def fits_driver(rows: int) -> bool:
     """True when ``rows`` rows are small enough to process on the driver."""
     return rows <= DRIVER_MAX_ROWS
+
+
+def rows_fit_driver(df: DataFrame) -> bool:
+    """``fits_driver`` over the rows of ``df``: the optimized plan's
+    rowCount statistic when it has one (a local table, a range, or a
+    checkpoint of either; no job), else one ``count()``."""
+    stat = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
+    return fits_driver(int(str(stat.get())) if stat.isDefined() else df.count())
+
+
+# finest tile resolution whose populated cell keys are held on the
+# driver (a sorted key array for probes, an occupancy map for adaptive
+# tiling); finer tilings keep them as a DataFrame. The key count grows
+# ~4x per resolution: 4^13 ~ 6.7e7 possible keys at 12
+DRIVER_MAX_RESOLUTION = 12
+
+
+def cells_fit_driver(max_resolution: int) -> bool:
+    """True when the cell keys of a tiling up to ``max_resolution`` are
+    held on the driver."""
+    return max_resolution <= DRIVER_MAX_RESOLUTION
+
+
+# cell universe (sum of 4^(r+1) over a ladder's sub-max resolutions)
+# under which the tree's cap split collects its splittable cells to the
+# driver; past it the cap split runs as a join. It stays apart from
+# DRIVER_MAX_RESOLUTION: at either value one bound would flip the other
+# path (TileAnnIndex's default max_resolution=9 spans 1.4M keys)
+DRIVER_MAX_SPLIT_UNIVERSE = 1 << 20
+
+
+def split_universe_fits_driver(universe: int) -> bool:
+    """True when a cap split over a ``universe``-cell ladder collects
+    its splittable cells to the driver."""
+    return universe <= DRIVER_MAX_SPLIT_UNIVERSE
 
 
 # optimized-plan nodes that run a Python kernel

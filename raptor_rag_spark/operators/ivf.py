@@ -24,7 +24,8 @@ query time). This module recasts that design Spark-first:
   query batches probe without any driver collect), equi-joins the list
   table on list_id for candidates, then reuses the exact cosine re-rank
   kernel from operators/knn.py (`_score_candidates`, float or int8
-  lists, broadcast/join strategy auto-switch at BROADCAST_MAX_QUERIES).
+  lists; broadcast while the queries fit the driver, else a join —
+  planutil.rows_fit_driver).
 
 Scale notes (100 TB): the centroid matrix is nlist x dim floats
 (4096 x 1024 x 8B = 32 MB) — a legitimate broadcast, like the tile
@@ -45,9 +46,9 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from raptor_rag_spark.functions.planutil import rows_fit_driver
 from raptor_rag_spark.operators.knn import (
     _rank_and_take,
-    _resolve_strategy,
     _score_candidates,
     node_vector_cols,
     require_integral_id,
@@ -319,11 +320,12 @@ class IvfIndex:
         queries: DataFrame,
         k: int = 10,
         nprobe: int = 8,
-        scoring: str = "auto",
         allowed: DataFrame | None = None,
     ) -> DataFrame:
         """queries(query_id, q_embedding) -> (query_id, node_id, dist,
-        rank<=k); exact cosine over the probed lists' members.
+        rank<=k); exact cosine over the probed lists' members, scored
+        by broadcast while the queries fit the driver
+        (planutil.rows_fit_driver), else by a distributed join.
 
         ``allowed``: one-column node allowlist (FILTERED ANN), applied
         before the embedding join so disallowed nodes never ship a
@@ -332,9 +334,9 @@ class IvfIndex:
         the tile index's ``ring``).
         """
         q = queries.localCheckpoint(eager=True)
-        scoring = _resolve_strategy(scoring, q)
+        broadcast = rows_fit_driver(q)
         pc = self._probe(q, nprobe)
-        if self.store is not None and scoring == "broadcast":
+        if self.store is not None and broadcast:
             # loaded partitioned store: the probed list ids become a
             # STATIC partition filter on the store scan, so only those
             # list_id directories are read — FAISS's inverted-list seek
@@ -344,8 +346,8 @@ class IvfIndex:
             # can't fire here (it needs a selective filter predicate on
             # the probe side, and a computed probe has none), so the
             # bounded static filter is the reliable route. On the join
-            # path (>100k queries) nearly every list is probed anyway —
-            # pruning buys nothing, skip the materialization.
+            # path (a batch past the driver bound) nearly every list is
+            # probed anyway — pruning buys nothing, skip the materialization.
             pc = pc.localCheckpoint(eager=True)
             probed = [r[0] for r in pc.select("list_id").distinct().collect()]
             store = self.store.filter(F.col("list_id").isin(probed))
@@ -357,13 +359,13 @@ class IvfIndex:
                 "query_id", "node_id", *self._val_cols
             )
         else:
-            probe = F.broadcast(pc) if scoring == "broadcast" else pc
+            probe = F.broadcast(pc) if broadcast else pc
             cands = probe.join(self.lists, "list_id").select("query_id", "node_id")
         if allowed is not None:
             cands = semi_filter_allowed(cands, allowed)
         if self.store is None:
             cands = cands.join(self.nodes, "node_id")
-        scored = _score_candidates(cands, q, strategy=scoring)
+        scored = _score_candidates(cands, q, broadcast=broadcast)
         return _rank_and_take(scored, k)
 
     def append(self, new_nodes: DataFrame) -> dict:

@@ -28,7 +28,7 @@ one call per batch. Node vectors come in two formats, read from the
 node frame's columns (``node_vector_cols``): float vectors, or int8
 vectors with one scale each (operators/quantize.py), whose distance is
 1 - dot * scale. Every kernel decodes both through ``decode_vectors``,
-so both formats take every strategy. Ordering ties break on
+so both formats take both paths. Ordering ties break on
 node_id: np.argsort's default quicksort is NOT stable, so the
 reference's tie order is undefined; the engine pins (dist, node_id)
 total order (SURVEY.md §2.5 W1, documented deviation).
@@ -53,8 +53,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from raptor_rag_spark.config import DEFAULT_CONFIG
+from raptor_rag_spark.functions import planutil
 from raptor_rag_spark.operators.tile import (
-    MAX_BROADCAST_RESOLUTION,
     cell_key_col,
     grid_index,
     in_sorted,
@@ -89,24 +89,16 @@ def partial_topk(dists, k: int):
     return np.nonzero(~(dists > kth))
 
 
-# above this many queries the driver-collected broadcast matrix stops
-# being a build side and starts being a driver OOM: strategy='auto'
-# switches to the join-based (fully distributed) scoring path there.
-BROADCAST_MAX_QUERIES = 100_000
-
-
 def _collect_query_matrix(queries: DataFrame, query_id: str, q_emb: str):
     """Query side -> (ids ndarray, float64 matrix). Broadcast-path build
-    side for small query batches; large batches take the join path
-    (see BROADCAST_MAX_QUERIES / strategy='join'). A local table (the
+    side for batches that fit the driver (planutil.rows_fit_driver);
+    larger batches take the join path. A local table (the
     driver-embedded questions of embed_query_texts) is read without a
     job."""
     import numpy as np
 
-    from raptor_rag_spark.functions.planutil import plan_is_local
-
     side = queries.select(query_id, q_emb)
-    if plan_is_local(side):
+    if planutil.plan_is_local(side):
         rows = side.collect()
         ids, vecs = np.array([r[0] for r in rows], dtype=np.int64), [r[1] for r in rows]
     else:
@@ -229,15 +221,6 @@ def semi_filter_allowed(
     )
 
 
-def _resolve_strategy(strategy: str, queries: DataFrame) -> str:
-    """'auto' -> 'broadcast' below BROADCAST_MAX_QUERIES else 'join'
-    (one count() on the query side, which the caller's batch endpoint
-    knows anyway)."""
-    if strategy != "auto":
-        return strategy
-    return "broadcast" if queries.count() <= BROADCAST_MAX_QUERIES else "join"
-
-
 def _block_pair_scores(
     queries: DataFrame,
     nodes: DataFrame,
@@ -247,7 +230,7 @@ def _block_pair_scores(
     q_emb: str,
     vec_cols: tuple[str, ...],
 ) -> DataFrame:
-    """The join strategy of brute_force_knn: per-query partial top-ks
+    """The join path of brute_force_knn: per-query partial top-ks
     with NO driver collect of either side, so 10^6+ query batches behave
     exactly like 10 (the batch contract in retrieve.py).
 
@@ -316,7 +299,6 @@ def brute_force_knn(
     node_id: str = "node_id",
     q_emb: str = "q_embedding",
     n_emb: str = "embedding",
-    strategy: str = "auto",
     allowed: DataFrame | None = None,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -324,7 +306,7 @@ def brute_force_knn(
 
     ``nodes`` carries float vectors in ``n_emb`` or int8 vectors in
     ``q_vec``/``q_scale`` (node_vector_cols); both formats take either
-    strategy.
+    path.
 
     ``allowed``: optional one-column (node_id) allowlist for FILTERED
     kNN — rows of ``nodes`` outside it never reach the scoring kernel
@@ -336,9 +318,12 @@ def brute_force_knn(
     ``carry``: node columns returned beside each hit (e.g. the text and
     token count a retrieval context needs), so the caller needs no join
     back to ``nodes``. The broadcast kernel emits them with its partial
-    top-k; the join strategy joins them back after its top-k.
+    top-k; the join path joins them back after its top-k.
 
-    strategy='broadcast' (small query batches): the query matrix is
+    The query count picks the path (planutil.rows_fit_driver: the
+    plan's row statistic, else one count()).
+
+    Broadcast (queries fit the driver): the query matrix is
     broadcast as numpy; each Arrow batch of NODES does one BLAS matmul
     against it and emits the per-batch top-k per query (map-side
     partial top-k => the shuffle into the final window carries about
@@ -348,24 +333,19 @@ def brute_force_knn(
     zip_with/aggregate cosine is interpreted (~0.27 ms/row measured) —
     1000x slower than this path at scale.
 
-    strategy='join' (large query batches): two-sided blocked cogroup
-    matmul, no driver collect of either side (_block_pair_scores).
-    'auto' switches at BROADCAST_MAX_QUERIES (one count() of the
-    queries; a caller that knows the batch size passes the strategy
-    instead).
+    Join (larger batches): two-sided blocked cogroup matmul, no driver
+    collect of either side (_block_pair_scores).
     """
     import numpy as np
     import pandas as pd
 
     from pyspark.sql import types as T
 
-    from raptor_rag_spark.functions.planutil import coalesce_kernel_input
-
     vec_cols = node_vector_cols(nodes, n_emb)
     out_cols = [query_id, node_id, "dist", "rank", *carry]
     if allowed is not None:
         nodes = semi_filter_allowed(nodes, allowed, node_id)
-    if _resolve_strategy(strategy, queries) == "join":
+    if not planutil.rows_fit_driver(queries):
         scored = _block_pair_scores(queries, nodes, k, query_id, node_id, q_emb, vec_cols)
         ranked = _rank_and_take(scored, k, query_id, node_id)
         if carry:
@@ -405,7 +385,7 @@ def brute_force_knn(
                 out[c] = pdf[c].to_numpy()[cols]
             yield out
 
-    scored = coalesce_kernel_input(node_side).mapInPandas(score, schema)
+    scored = planutil.coalesce_kernel_input(node_side).mapInPandas(score, schema)
     return _rank_and_take(scored, k, query_id, node_id).select(*out_cols)
 
 
@@ -452,7 +432,7 @@ def _score_candidates(
     queries: DataFrame,
     query_id: str = "query_id",
     q_emb: str = "q_embedding",
-    strategy: str = "broadcast",
+    broadcast: bool = True,
 ) -> DataFrame:
     """(query_id, node_id, node vectors) candidates -> (query_id,
     node_id, dist): the exact cosine of each candidate row, computed by
@@ -460,9 +440,9 @@ def _score_candidates(
     (node_vector_cols) — no interpreted Catalyst higher-order functions
     in the hot path.
 
-    strategy='broadcast': each row's query vector is looked up in a
+    ``broadcast``: each row's query vector is looked up in a
     driver-collected query matrix broadcast to the tasks, so only the
-    node vector travels with the row. strategy='join': candidates
+    node vector travels with the row. Else (the join path): candidates
     equi-join the query-embedding table on query_id (shuffle-hash or
     broadcast, AQE's call) and the query vector travels with each row —
     double the Arrow traffic, but NO driver-resident state, so 10^6+
@@ -476,7 +456,7 @@ def _score_candidates(
     out_schema = T.StructType(
         [in_df.schema[query_id], in_df.schema["node_id"], T.StructField("dist", T.DoubleType())]
     )
-    if strategy == "join":
+    if not broadcast:
         require_integral_id(queries, query_id, "_score_candidates")
         require_integral_id(cands, "node_id", "_score_candidates")
         in_df = in_df.join(queries.select(query_id, q_emb), query_id)
@@ -518,12 +498,12 @@ def _ring_knn(
     max_ring: int,
     query_id: str,
     q_emb: str,
-    scoring: str,
 ) -> DataFrame:
     """The ring-expansion loop of the tile kNN joins.
     ``candidates(remaining, ring, broadcast_probe)`` returns the
     (query_id, node_id) candidate pairs at one ring; each round scores
-    them exactly and ranks the top k.
+    them exactly and ranks the top k. The query count picks broadcast or
+    join scoring once, for every round (planutil.fits_driver).
 
     Queries with < k candidates are retried at wider rings on a SHORT
     fixed schedule: ring -> 4*ring -> max_ring (at most 3 passes; a long
@@ -536,20 +516,23 @@ def _ring_knn(
     # pin the (small) query side once: every round broadcasts it, and
     # without this the query-embedding pipeline re-executes per round
     remaining = queries.localCheckpoint(eager=True) if len(schedule) > 1 else queries
-    # one count resolves the scoring strategy AND the loop's early-exit
-    # arithmetic (cheap: the side is pinned above)
-    n_remaining = remaining.count() if (scoring == "auto" or len(schedule) > 1) else None
-    if scoring == "auto":
-        scoring = "broadcast" if n_remaining <= BROADCAST_MAX_QUERIES else "join"
+    # the loop's early-exit arithmetic needs the exact count (cheap: the
+    # side is pinned above); that count also picks the scoring path
+    n_remaining = remaining.count() if len(schedule) > 1 else None
+    broadcast = (
+        planutil.rows_fit_driver(remaining)
+        if n_remaining is None
+        else planutil.fits_driver(n_remaining)
+    )
     results: DataFrame | None = None
     for round_i, r in enumerate(schedule):
-        cand = candidates(remaining, r, scoring == "broadcast")
+        cand = candidates(remaining, r, broadcast)
         scored = _score_candidates(
             cand.join(nodes.select("node_id", *node_vector_cols(nodes)), "node_id"),
             remaining,
             query_id,
             q_emb,
-            strategy=scoring,
+            broadcast,
         )
         ranked = _rank_and_take(scored, k, query_id)
         if round_i == len(schedule) - 1:
@@ -586,14 +569,13 @@ def tile_knn(
     max_ring: int | None = None,
     query_id: str = "query_id",
     q_emb: str = "q_embedding",
-    scoring: str = "auto",
 ) -> DataFrame:
     """Tile-pruned kNN: candidates via cell equi-join, exact re-rank.
 
-    ``scoring`` picks the exact-re-rank physical path: 'broadcast'
-    (driver-collected query matrix, small batches), 'join' (fully
-    distributed, unbounded batches), 'auto' (switch on query count —
-    resolved ONCE here, not per ring round).
+    The exact re-rank broadcasts a driver-collected query matrix when
+    the queries fit the driver, else joins query vectors to the
+    candidates (fully distributed, unbounded batches); the choice is
+    made once per call, not per ring round.
 
     ``queries`` must carry x, y (from tile.reduce_2d on the query
     embedding). If ``max_ring`` > ring, queries with < k candidates are
@@ -606,7 +588,7 @@ def tile_knn(
             remaining, node_tiles, resolution, r, query_id, broadcast_probe=broadcast_probe
         )
 
-    return _ring_knn(queries, nodes, candidates, k, ring, max_ring, query_id, q_emb, scoring)
+    return _ring_knn(queries, nodes, candidates, k, ring, max_ring, query_id, q_emb)
 
 
 _FINE_RING_CAP = 4
@@ -757,6 +739,21 @@ def adaptive_candidates(
     )
 
 
+def driver_cell_keys(atiles: DataFrame):
+    """The sorted distinct cell keys of a tiling, from one collect.
+    The morton cell_key embeds its resolution (key >> 32), so the keys
+    also give the resolution ladder. A key finer than the driver bound
+    (planutil.DRIVER_MAX_RESOLUTION) collapses to one marker per
+    resolution, ``r << 32``: a tiling past the bound shows its
+    resolutions without landing its fine keys on the driver, and the
+    keys are exact only when every resolution fits."""
+    res = F.shiftright("cell_key", 32)
+    key = F.when(res <= planutil.DRIVER_MAX_RESOLUTION, F.col("cell_key")).otherwise(
+        F.shiftleft(res, 32)
+    )
+    return sorted_keys([int(r[0]) for r in atiles.select(key).distinct().collect()])
+
+
 def tile_knn_adaptive(
     queries: DataFrame,
     nodes: DataFrame,
@@ -766,23 +763,19 @@ def tile_knn_adaptive(
     max_ring: int = 8,
     query_id: str = "query_id",
     q_emb: str = "q_embedding",
-    membership: str = "auto",
     resolutions: list[int] | None = None,
-    scoring: str = "auto",
 ) -> DataFrame:
     """kNN join against adaptive quadtree tiles (the scale path for
-    skewed corpora). Same ring-expansion contract as tile_knn.
+    skewed corpora). Same ring-expansion contract as tile_knn, and the
+    same query-count choice of broadcast or join scoring.
 
-    ``membership`` picks how probe cells are checked against populated
-    cells: 'broadcast' collects the distinct cell keys into a driver
-    array (fast, bounded — fine while max resolution <= 12, ~10^7
-    cells); 'join' keeps them as a DataFrame and intersects via two
+    The finest resolution picks how probe cells are checked against
+    populated cells (planutil.cells_fit_driver): up to the driver bound
+    the distinct cell keys are collected into a driver array (fast,
+    bounded); past it they stay a DataFrame intersected via two
     broadcast joins (unbounded, two extra scans of the distinct-cells
-    table, never a collect of the keys); 'auto' switches on the finest
-    resolution present. ``scoring`` is the query-side twin of the same
-    bound: 'broadcast' collects the query matrix to the driver, 'join'
-    scores via a distributed equi-join (no collect), 'auto' switches on
-    query count."""
+    table, never a collect of the keys). ``resolutions`` (the tiling's
+    resolutions) saves finding them from the tiles."""
     # the tile table is consumed at least twice per call (the populated
     # cell/resolution collect + one candidate join per ring round): if
     # it is a lazy plan with real compute behind it (e.g. the adaptive
@@ -790,33 +783,17 @@ def tile_knn_adaptive(
     # once instead of re-running that compute per pass. Already-
     # materialized inputs (a checkpoint, a parquet/bucketed store scan)
     # are left alone — no duplicate storage.
-    from raptor_rag_spark.functions.planutil import plan_is_bare_scan
-
-    if not plan_is_bare_scan(atiles):
+    if not planutil.plan_is_bare_scan(atiles):
         atiles = atiles.localCheckpoint(eager=False)
 
-    def collect_keys():
-        return sorted_keys(
-            [int(r["cell_key"]) for r in atiles.select("cell_key").distinct().collect()]
-        )
-
     keys = None
-    if resolutions is None and membership != "join":
-        # the morton cell_key embeds its resolution (key >> 32), so ONE
-        # distinct-keys collect yields BOTH the populated keys and the
-        # resolution ladder
-        keys = collect_keys()
-        resolutions = sorted(set((keys >> 32).tolist()))
-    elif resolutions is None:
-        resolutions = sorted(
-            r["resolution"] for r in atiles.select("resolution").distinct().collect()
-        )
-    if membership == "auto":
-        membership = "broadcast" if max(resolutions) <= MAX_BROADCAST_RESOLUTION else "join"
-    if membership == "join":
-        populated = atiles.select("cell_key").distinct().localCheckpoint(eager=True)
+    if resolutions is None or planutil.cells_fit_driver(max(resolutions)):
+        keys = driver_cell_keys(atiles)
+        resolutions = resolutions or sorted(set((keys >> 32).tolist()))
+    if planutil.cells_fit_driver(max(resolutions)):
+        populated = keys
     else:
-        populated = collect_keys() if keys is None else keys
+        populated = atiles.select("cell_key").distinct().localCheckpoint(eager=True)
 
     def candidates(remaining: DataFrame, r: int, broadcast_probe: bool) -> DataFrame:
         return adaptive_candidates(
@@ -824,7 +801,7 @@ def tile_knn_adaptive(
             broadcast_probe=broadcast_probe,
         )
 
-    return _ring_knn(queries, nodes, candidates, k, ring, max_ring, query_id, q_emb, scoring)
+    return _ring_knn(queries, nodes, candidates, k, ring, max_ring, query_id, q_emb)
 
 
 def token_budget_prefix(

@@ -77,15 +77,14 @@ def retrieve_collapsed(
     resolution: int = 3,
     k: int | None = None,
     max_tokens: int | None = None,
-    scoring: str = "auto",
     allowed: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """(selected nodes with rank/dist/cum_tokens, per-query contexts).
 
     queries: (query_id, q_embedding, x, y); nodes: collapsed node table.
-    ``scoring='auto'`` keeps small batches on the broadcast-matrix fast
-    path and switches large ones to the fully distributed join path
-    (no driver collect) — one query or 10^6 give identical results.
+    Batches that fit the driver score on the broadcast-matrix fast path,
+    larger ones on the fully distributed join path (no driver collect;
+    planutil.rows_fit_driver) — one query or 10^6 give identical results.
 
     ``allowed``: optional one-column node_id allowlist (filtered
     retrieval — e.g. restrict to one language/domain/date range via
@@ -102,13 +101,13 @@ def retrieve_collapsed(
     context_cols = ("text", "n_tokens", "layer")
     if method == "brute":
         # the scoring kernel carries the context columns: no join back
-        ranked = brute_force_knn(queries, nodes, k=k, strategy=scoring, carry=context_cols)
+        ranked = brute_force_knn(queries, nodes, k=k, carry=context_cols)
     else:
         tiles = tile_assignments(nodes, "node_id", [resolution], cfg.soft_eps)
         grid_n = 1 << (resolution + 1)
         ranked = tile_knn(
             queries, nodes, tiles, resolution=resolution, k=k, ring=1,
-            max_ring=grid_n, scoring=scoring,
+            max_ring=grid_n,
         ).join(nodes.select("node_id", *context_cols), "node_id")
     sel = ranked.select("node_id", "query_id", "dist", "rank", *context_cols)
     kept = token_budget_prefix(sel, max_tokens=max_tokens)

@@ -9,11 +9,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from raptor_rag_spark.functions.planutil import cells_fit_driver, rows_fit_driver
 from raptor_rag_spark.operators.knn import (
     _rank_and_take,
     _score_candidates,
     adaptive_candidates,
     brute_force_knn,
+    semi_filter_allowed,
 )
 from raptor_rag_spark.operators.quantize import quantized_nodes
 from raptor_rag_spark.operators.tile import (
@@ -36,7 +38,9 @@ class TileAnnIndex:
 
     Build state is plain DataFrames (localCheckpoint'ed) + small
     broadcastable key sets — nothing driver-resident beyond that, so
-    the index scales with the cluster like any other table.
+    the index scales with the cluster like any other table. Past the
+    driver's cell bound (planutil.cells_fit_driver on
+    ``max_resolution``) the populated cells stay DataFrames too.
     """
 
     def __init__(
@@ -48,7 +52,6 @@ class TileAnnIndex:
         base_resolution: int = 3,
         max_occupancy: int = 256,
         max_resolution: int = 9,
-        membership: str = "auto",
         quantized: bool = False,
     ) -> None:
         """``quantized=True`` stores the corpus as int8 (array<tinyint>
@@ -60,17 +63,10 @@ class TileAnnIndex:
         are quantized. Search distances then carry the quantization
         error (recall measured, not assumed — measure_recall takes the
         float corpus explicitly in this mode)."""
-        from raptor_rag_spark.operators.tile import MAX_BROADCAST_RESOLUTION
-
         if dim is None:
             dim = len(nodes.select("embedding").first()[0])
-        if membership == "auto":
-            membership = (
-                "broadcast" if max_resolution <= MAX_BROADCAST_RESOLUTION else "join"
-            )
         self.dim = dim
         self.id_col = id_col
-        self.membership = membership
         self.quantized = quantized
         self.recall: float | None = None
         # append ids whose rows this index's view contains — persisted
@@ -93,10 +89,9 @@ class TileAnnIndex:
             from raptor_rag_spark.operators.tile import cell_occupancy_map
 
             xy = reduce_2d(flt, dim=dim, seed=seed).localCheckpoint(eager=True)
-            if membership == "join":
+            if not cells_fit_driver(max_resolution):
                 atiles = adaptive_tile_assignments(
-                    xy, "node_id", base_resolution, max_occupancy, max_resolution,
-                    strategy=membership,
+                    xy, "node_id", base_resolution, max_occupancy, max_resolution
                 ).localCheckpoint(eager=True)
                 # populated cells stay a DataFrame — nothing
                 # driver-resident, probes intersect it via join
@@ -112,7 +107,7 @@ class TileAnnIndex:
                 )
                 atiles = adaptive_tile_assignments(
                     xy, "node_id", base_resolution, max_occupancy, max_resolution,
-                    occupancy_map=cmap, strategy=membership,
+                    occupancy_map=cmap,
                 ).localCheckpoint(eager=True)
                 populated = chosen_cells_from_occupancy(
                     cmap, base_resolution, max_resolution, max_occupancy
@@ -138,13 +133,12 @@ class TileAnnIndex:
     ) -> None:
         """Persist the index: nodes + per-view tile tables as parquet,
         parameters as JSON — load() reconstructs WITHOUT recomputing
-        projections or occupancy (the build cost). With
-        membership='broadcast' the per-view populated-cell key lists go
-        into meta.json too (bounded by MAX_BROADCAST_RESOLUTION), so
-        load() runs NO Spark job to rebuild them. ``recall`` (e.g. from
-        measure_recall) is stored for drift detection: re-measure after
-        an append and compare. Layout: <path>/meta.json, nodes.parquet,
-        view-<seed>/{xy,atiles}.parquet.
+        projections or occupancy (the build cost). While the tiling fits
+        the driver's cell bound the per-view populated-cell key lists go
+        into meta.json too, so load() runs NO Spark job to rebuild them.
+        ``recall`` (e.g. from measure_recall) is stored for drift
+        detection: re-measure after an append and compare. Layout:
+        <path>/meta.json, nodes.parquet, view-<seed>/{xy,atiles}.parquet.
 
         ``partition_by_base`` (default) physically partitions each
         view's xy/atiles by the base-resolution cell key (``_bk`` dirs,
@@ -230,7 +224,6 @@ class TileAnnIndex:
                 "partitioned_by_base": partition_by_base,
                 "dim": self.dim,
                 "id_col": self.id_col,
-                "membership": self.membership,
                 "quantized": self.quantized,
                 "resolutions": self.resolutions,
                 "base_resolution": self.base_resolution,
@@ -260,8 +253,10 @@ class TileAnnIndex:
     @classmethod
     def load(cls, spark, path: str) -> "TileAnnIndex":
         """Reconstruct a saved index — no projection/occupancy rebuild,
-        and (broadcast membership) no collect(): key sets come straight
-        from meta.json."""
+        and (a tiling that fits the driver) no collect(): key sets come
+        straight from meta.json. A save without them (an index saved
+        past the cell bound, or before key sets were persisted) collects
+        them again when the tiling now fits."""
         import json
         import os
 
@@ -276,7 +271,6 @@ class TileAnnIndex:
         self.dim = meta["dim"]
         self.id_col = meta["id_col"]
         self.applied_appends = list(meta.get("appends", []))
-        self.membership = meta["membership"]
         self.quantized = meta.get("quantized", False)
         self.resolutions = meta["resolutions"]
         self.base_resolution = meta.get("base_resolution", meta["resolutions"][0])
@@ -294,11 +288,11 @@ class TileAnnIndex:
                 xy = xy.drop("_bk")
             if "_bk" in atiles.columns:
                 atiles = atiles.drop("_bk")
-            if self.membership == "join":
+            if not cells_fit_driver(self.max_resolution):
                 populated: set[int] | DataFrame = atiles.select("cell_key").distinct()
             elif str(seed) in saved_keys:
                 populated = {int(k) for k in saved_keys[str(seed)]}
-            else:  # pre-r3 save layout: fall back to recomputing
+            else:  # no saved key set: fall back to recomputing
                 populated = {
                     int(r["cell_key"])
                     for r in atiles.select("cell_key").distinct().collect()
@@ -324,7 +318,7 @@ class TileAnnIndex:
 
         All heavy steps are DataFrame plans (semi/anti joins on the
         base key); the only collects are the O(affected) dropped/added
-        key-set deltas for broadcast membership (bounded the same way
+        key-set deltas of driver-held key sets (bounded the same way
         the constructor's key set is). ``new_nodes`` must carry ids
         disjoint from the existing corpus (same contract as the tree's
         level-0 append). Returns per-view stats
@@ -352,7 +346,6 @@ class TileAnnIndex:
                 self.base_resolution,
                 self.max_occupancy,
                 self.max_resolution,
-                strategy=self.membership,
             ).localCheckpoint(eager=True)
             moved_ids = in_aff.select("node_id")
             kept = atiles.join(moved_ids, "node_id", "left_anti")
@@ -481,7 +474,6 @@ class TileAnnIndex:
                     self.base_resolution,
                     self.max_occupancy,
                     self.max_resolution,
-                    strategy=self.membership,
                 ).join(in_aff.select("node_id", "_bk"), "node_id").localCheckpoint(
                     eager=True
                 )
@@ -543,14 +535,13 @@ class TileAnnIndex:
         queries: DataFrame,
         k: int = 10,
         ring: int = 2,
-        scoring: str = "auto",
         allowed: DataFrame | None = None,
     ) -> DataFrame:
         """queries(query_id, q_embedding) -> (query_id, node_id, dist,
-        rank<=k). Exact cosine over the unioned candidate set.
-        ``scoring='auto'`` switches the re-rank (and the probe-join
-        hint) from the broadcast fast path to the fully distributed
-        join path above BROADCAST_MAX_QUERIES queries.
+        rank<=k). Exact cosine over the unioned candidate set. The
+        re-rank (and the probe-join hint) takes the broadcast fast path
+        while the queries fit the driver (planutil.rows_fit_driver), the
+        fully distributed join path past it.
 
         ``allowed``: one-column (node_id) allowlist — FILTERED ANN.
         Candidates are semi-joined against it BEFORE the embedding join
@@ -561,10 +552,8 @@ class TileAnnIndex:
         filter, fewer candidates survive per probe cell — raise
         ``ring`` to restore recall (the probe region, not the corpus
         tiling, is what bounds filtered recall)."""
-        from raptor_rag_spark.operators.knn import _resolve_strategy
-
         q = queries.localCheckpoint(eager=True)
-        scoring = _resolve_strategy(scoring, q)
+        broadcast = rows_fit_driver(q)
         cands = None
         for seed, _xy, atiles, populated in self.views:
             q_xy = reduce_2d(
@@ -572,15 +561,13 @@ class TileAnnIndex:
             ).select(F.col("query_id"), "x", "y")
             c = adaptive_candidates(
                 q_xy, atiles, populated, self.resolutions, ring,
-                broadcast_probe=(scoring == "broadcast"),
+                broadcast_probe=broadcast,
             )
             cands = c if cands is None else cands.unionByName(c)
         cands = cands.dropDuplicates(["query_id", "node_id"])
         if allowed is not None:
-            from raptor_rag_spark.operators.knn import semi_filter_allowed
-
             cands = semi_filter_allowed(cands, allowed)
-        scored = _score_candidates(cands.join(self.nodes, "node_id"), q, strategy=scoring)
+        scored = _score_candidates(cands.join(self.nodes, "node_id"), q, broadcast=broadcast)
         return _rank_and_take(scored, k)
 
 

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from raptor_rag_spark.config import DEFAULT_CONFIG
+from raptor_rag_spark.functions.planutil import cells_fit_driver
 
 
 def projection_matrix(dim: int, seed: int = DEFAULT_CONFIG.seed) -> np.ndarray:
@@ -359,11 +360,6 @@ def cell_occupancy_map(
     return {int(r["cell_key"]): int(r["_n"]) for r in counts.collect()}
 
 
-# above this resolution the populated-cell count (~N / occupancy) can
-# outgrow a driver-resident map/set — auto-switch to join-based paths
-MAX_BROADCAST_RESOLUTION = 12
-
-
 def _over_cap(cmap: dict[int, int], cap: int) -> np.ndarray:
     """The occupancy map's over-cap cell keys, sorted: for every
     populated key, occupancy <= cap holds exactly when it is absent."""
@@ -409,7 +405,7 @@ def adaptive_tile_assignments_join(
     -> join counts back -> keep levels under the cap (or max_res)
     -> min_by(resolution) per point. Two shuffles of long keys plus
     one per-point agg — more shuffle than the broadcast path, which
-    stays the default under MAX_BROADCAST_RESOLUTION.
+    runs while the tiling fits the driver (planutil.cells_fit_driver).
 
     Identical output to the broadcast path (pytest-asserted).
     """
@@ -446,7 +442,6 @@ def adaptive_tile_assignments(
     max_occupancy: int = 256,
     max_resolution: int = DEFAULT_CONFIG.max_resolution,
     occupancy_map: dict[int, int] | None = None,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Adaptive quadtree: every point lands in exactly ONE cell, at the
     coarsest resolution where its cell's occupancy <= max_occupancy
@@ -469,10 +464,13 @@ def adaptive_tile_assignments(
     shuffle), one (res, cell) count (map-side combine), one join back,
     one per-point min-res window — vs 2 shuffles per level for the
     loop (measured 75s -> ~10s at 147k points x 7 levels).
+
+    The occupancy map is collected to the driver while ``max_resolution``
+    fits it (planutil.cells_fit_driver), or passed in as
+    ``occupancy_map``; otherwise the join twin
+    (adaptive_tile_assignments_join) runs.
     """
-    if strategy == "auto":
-        strategy = "broadcast" if max_resolution <= MAX_BROADCAST_RESOLUTION else "join"
-    if strategy == "join" and occupancy_map is None:
+    if occupancy_map is None and not cells_fit_driver(max_resolution):
         return adaptive_tile_assignments_join(
             df, id_col, base_resolution, max_occupancy, max_resolution
         )

@@ -53,7 +53,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from raptor_rag_spark.config import DEFAULT_CONFIG, EngineConfig
-from raptor_rag_spark.functions.planutil import fits_driver, plan_is_bare_scan, plan_splits
+from raptor_rag_spark.functions.planutil import (
+    fits_driver,
+    plan_is_bare_scan,
+    plan_splits,
+    split_universe_fits_driver,
+)
 from raptor_rag_spark.operators import maintenance
 from raptor_rag_spark.operators.chunk import chunk_id_col, chunk_rows, chunk_source, split_text
 from raptor_rag_spark.operators.embed import hash_embed_batch
@@ -382,10 +387,9 @@ def _assign_cells_with_cap(
     resolutions = list(range(start_res, cfg.max_resolution + 1))
     # broadcast-vs-join switch: the splittable set is bounded by the
     # populated-cell universe of the ladder's sub-max levels; under the
-    # bound it lives on the driver (same discipline as
-    # tile.MAX_BROADCAST_RESOLUTION), past it the join twin runs
+    # bound it lives on the driver, past it the join twin runs
     universe = sum(4 ** (r + 1) for r in resolutions[:-1])
-    if universe > _MAX_SPLITTABLE_BROADCAST:
+    if not split_universe_fits_driver(universe):
         return _assign_cells_with_cap_join(nodes, resolutions, cfg)
     # the input feeds BOTH the splittable-stats collect and the final
     # map-side pick: if there is real compute behind it (an un-pinned
@@ -443,11 +447,6 @@ def _assign_cells_with_cap(
         ]
     )
     return out.withColumn("cell_id", cell)
-
-
-# splittable-set driver bound for _assign_cells_with_cap: past this
-# ladder universe the set may not fit the driver — use the join twin
-_MAX_SPLITTABLE_BROADCAST = 1 << 20
 
 
 def _assign_cells_with_cap_join(

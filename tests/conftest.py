@@ -110,3 +110,22 @@ def count_jobs(spark):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture
+def join_path(monkeypatch):
+    """``with join_path():`` runs its block with the driver row bound
+    below any batch, so the engine scores every query batch on its join
+    path; ``join_path(False)`` leaves the bound as it is."""
+    from contextlib import contextmanager
+
+    from raptor_rag_spark.functions import planutil
+
+    @contextmanager
+    def forced(on: bool = True):
+        with monkeypatch.context() as m:
+            if on:
+                m.setattr(planutil, "DRIVER_MAX_ROWS", -1)
+            yield
+
+    return forced

@@ -5,6 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from raptor_rag_spark.functions import planutil
 from raptor_rag_spark.operators.knn import brute_force_knn, tile_knn_adaptive
 from raptor_rag_spark.operators.tile import (
     adaptive_tile_assignments,
@@ -135,10 +136,11 @@ def test_multi_projection_index_recall(spark, points):
     assert recall >= 0.85, recall
 
 
-def test_join_membership_paths_match_broadcast(spark, points, atiles):
+def test_join_membership_paths_match_broadcast(spark, points, atiles, monkeypatch):
     """The join-based (no-driver-collect) formulations must be
     row-identical to the broadcast fast paths: adaptive assignment,
-    probe-cell generation, and the full adaptive kNN."""
+    probe-cell generation, and the full adaptive kNN (its join path
+    taken with the driver's resolution bound below the tiling's)."""
     from raptor_rag_spark.operators.knn import probe_cells, probe_cells_join
     from raptor_rag_spark.operators.tile import adaptive_tile_assignments_join
 
@@ -158,29 +160,66 @@ def test_join_membership_paths_match_broadcast(spark, points, atiles):
     qq = points.limit(12).select(
         F.col("node_id").alias("query_id"), F.col("embedding").alias("q_embedding"), "x", "y"
     )
-    kb = tile_knn_adaptive(qq, points, atiles, k=5, ring=2, max_ring=4, membership="broadcast")
-    kj = tile_knn_adaptive(qq, points, atiles, k=5, ring=2, max_ring=4, membership="join")
     key = lambda df: sorted((r["query_id"], r["node_id"], r["rank"]) for r in df.collect())  # noqa: E731
-    assert key(kb) == key(kj)
+    kb = key(tile_knn_adaptive(qq, points, atiles, k=5, ring=2, max_ring=4))
+    monkeypatch.setattr(planutil, "DRIVER_MAX_RESOLUTION", 1)
+    kj = key(tile_knn_adaptive(qq, points, atiles, k=5, ring=2, max_ring=4))
+    assert kb == kj
 
 
-def test_ann_index_join_membership_matches_broadcast(spark, points):
-    """TileAnnIndex built with membership='join' (no driver key sets)
-    returns the same top-k as the broadcast-membership index."""
+def test_adaptive_knn_past_the_bound_collects_no_fine_key(points, atiles, monkeypatch):
+    """With the driver's resolution bound below the tiling's finest
+    resolution, tile_knn_adaptive (no ``resolutions`` given) takes the
+    join path after one key collect in which every key finer than the
+    bound is one marker per resolution; its rows equal the broadcast
+    path's."""
+    from raptor_rag_spark.operators import knn as knn_mod
+
+    qq = points.limit(12).select(
+        F.col("node_id").alias("query_id"), F.col("embedding").alias("q_embedding"), "x", "y"
+    )
+    key = lambda df: sorted((r["query_id"], r["node_id"], r["rank"]) for r in df.collect())  # noqa: E731
+    want = key(tile_knn_adaptive(qq, points, atiles, k=5, ring=2, max_ring=4))
+    collected = []
+    real = knn_mod.driver_cell_keys
+
+    def spy(atiles):
+        collected.append(real(atiles))
+        return collected[-1]
+
+    monkeypatch.setattr(knn_mod, "driver_cell_keys", spy)
+    bound = 5
+    monkeypatch.setattr(planutil, "DRIVER_MAX_RESOLUTION", bound)
+    assert key(tile_knn_adaptive(qq, points, atiles, k=5, ring=2, max_ring=4)) == want
+    (keys,) = collected
+    finer = sorted(r["resolution"] for r in atiles.select("resolution").distinct().collect())
+    finer = [r for r in finer if r > bound]
+    assert finer, "the tiling must reach past the patched bound"
+    assert [int(k) for k in keys if k >> 32 > bound] == [r << 32 for r in finer]
+
+
+def test_ann_index_join_membership_matches_broadcast(spark, points, monkeypatch):
+    """TileAnnIndex built past the driver's resolution bound (no driver
+    key sets) returns the same top-k as the index that holds them."""
+    from pyspark.sql import DataFrame
+
     from raptor_rag_spark.operators.similarity import TileAnnIndex
 
     from pyspark.sql import functions as F  # noqa: F811
 
     kw = dict(dim=DIM, seeds=(224,), base_resolution=2, max_occupancy=64, max_resolution=7)
-    ib = TileAnnIndex(points, membership="broadcast", **kw)
-    ij = TileAnnIndex(points, membership="join", **kw)
     q = points.limit(10).select(
         F.col("node_id").alias("query_id"), F.col("embedding").alias("q_embedding")
     )
     key = lambda df: sorted(  # noqa: E731
         (r["query_id"], r["node_id"], r["rank"]) for r in df.collect()
     )
-    assert key(ib.search(q, k=5, ring=2)) == key(ij.search(q, k=5, ring=2))
+    ib = TileAnnIndex(points, **kw)
+    want = key(ib.search(q, k=5, ring=2))
+    monkeypatch.setattr(planutil, "DRIVER_MAX_RESOLUTION", 6)
+    ij = TileAnnIndex(points, **kw)
+    assert all(isinstance(pop, DataFrame) for *_, pop in ij.views)
+    assert key(ij.search(q, k=5, ring=2)) == want
 
 
 def test_ann_index_save_load_identical(spark, points, tmp_path):
@@ -207,7 +246,7 @@ def test_ann_index_save_load_identical(spark, points, tmp_path):
 
 
 def test_ann_index_load_runs_no_spark_job_for_keys(spark, points, tmp_path, monkeypatch):
-    """With membership='broadcast' the populated-cell key sets are
+    """While the tiling fits the driver the populated-cell key sets are
     persisted in meta.json — load() must run NO collect()/toPandas()
     to rebuild them (round-2 judge item: load re-collected every time)."""
     from pyspark.sql import DataFrame
@@ -216,7 +255,7 @@ def test_ann_index_load_runs_no_spark_job_for_keys(spark, points, tmp_path, monk
 
     idx = TileAnnIndex(
         points, dim=DIM, seeds=(224,), base_resolution=2, max_occupancy=64,
-        max_resolution=7, membership="broadcast",
+        max_resolution=7,
     )
     p = str(tmp_path / "ann_idx_nk")
     idx.save(p, recall=0.93)
@@ -231,6 +270,50 @@ def test_ann_index_load_runs_no_spark_job_for_keys(spark, points, tmp_path, monk
     assert all(isinstance(pop, set) and pop for _, _, _, pop in idx2.views)
     # the persisted key sets equal the in-memory build's
     assert [pop for *_, pop in idx2.views] == [pop for *_, pop in idx.views]
+
+
+def test_ann_index_loads_a_save_without_key_sets(spark, points, tmp_path):
+    """A meta.json with a ``membership`` key and no ``populated_keys``
+    (a save made with join membership, before the engine derived it)
+    loads by collecting the key sets again: search equals the in-memory
+    index, and so does it after append_persisted against the in-memory
+    append."""
+    import json
+    import os
+
+    from raptor_rag_spark.operators.similarity import TileAnnIndex
+
+    initial = points.filter(F.col("node_id") < 2700).localCheckpoint(eager=True)
+    extra = points.filter(F.col("node_id") >= 2700).select("node_id", "embedding")
+    idx = TileAnnIndex(
+        initial, dim=DIM, seeds=(224,), base_resolution=2, max_occupancy=64,
+        max_resolution=7,
+    )
+    p = str(tmp_path / "ann_idx_no_keys")
+    idx.save(p)
+    meta_path = os.path.join(p, "meta.json")
+    with open(meta_path) as fh:
+        meta = json.load(fh)
+    del meta["populated_keys"]
+    meta["membership"] = "join"
+    with open(meta_path, "w") as fh:
+        json.dump(meta, fh)
+    q = points.limit(12).select(
+        F.col("node_id").alias("query_id"), F.col("embedding").alias("q_embedding")
+    )
+    key = lambda df: sorted(  # noqa: E731
+        (r["query_id"], r["node_id"], r["rank"]) for r in df.collect()
+    )
+
+    loaded = TileAnnIndex.load(spark, p)
+    assert [pop for *_, pop in loaded.views] == [pop for *_, pop in idx.views]
+    assert key(loaded.search(q, k=5, ring=2)) == key(idx.search(q, k=5, ring=2))
+
+    loaded.append_persisted(p, extra)
+    idx.append(extra)
+    again = TileAnnIndex.load(spark, p)
+    assert [pop for *_, pop in again.views] == [pop for *_, pop in idx.views]
+    assert key(again.search(q, k=5, ring=2)) == key(idx.search(q, k=5, ring=2))
 
 
 def test_ann_index_append_equals_rebuild(spark, points):
@@ -621,8 +704,8 @@ def test_ann_index_save_crash_between_table_swaps(spark, points, tmp_path):
 
 
 def test_adaptive_knn_job_count_pinned(points, atiles, count_jobs):
-    """One tile_knn_adaptive call (auto membership, auto scoring)
-    evaluated under a job group."""
+    """One tile_knn_adaptive call (membership and scoring chosen by the
+    engine) evaluated under a job group."""
     q = points.orderBy("node_id").limit(32).select(
         F.col("node_id").alias("query_id"), F.col("embedding").alias("q_embedding"), "x", "y"
     ).localCheckpoint(eager=True)

@@ -398,7 +398,8 @@ def test_eager_append_after_deferred_settles_ledger(spark, tmp_path):
 def test_single_string_collapsed_retrieve_runs_one_python_wave(spark, built, count_jobs):
     """One single-string collapsed brute retrieve: the question is
     embedded on the driver and its matrix read from the local table
-    without a job, the broadcast strategy needs no count(), the context
+    without a job, the local table's row statistic picks the broadcast
+    path without a count(), the context
     columns ride through the scoring kernel, and the kernel input is
     coalesced to at most one partition per core."""
     _, eng = built
@@ -418,6 +419,30 @@ def test_single_string_collapsed_retrieve_runs_one_python_wave(spark, built, cou
     ]
     # every stage, the Python scoring stage included
     assert max(tasks) <= sc.defaultParallelism, tasks
+
+
+def test_retrieve_list_same_contexts_on_the_join_path(built, join_path, monkeypatch):
+    """A 3-question list retrieves the same contexts under the default
+    driver row bound (broadcast scoring) and with the bound at -1, where
+    the local table's row statistic sends it to the join path: no query
+    matrix is collected and no count() sizes the batch."""
+    from pyspark.sql import DataFrame
+
+    from raptor_rag_spark.operators import knn as knn_mod
+
+    _, eng = built
+    qs = ["berber dukkani", "data processing shuffle", "veri isleme"]
+    want = eng.retrieve(qs, top_k=3, max_tokens=300)
+
+    def _boom(*a, **k):
+        raise AssertionError("the join path neither collects nor counts the queries")
+
+    with join_path():
+        monkeypatch.setattr(knn_mod, "_collect_query_matrix", _boom)
+        monkeypatch.setattr(DataFrame, "count", _boom)
+        got = eng.retrieve(qs, top_k=3, max_tokens=300)
+    assert set(want) == {0, 1, 2}
+    assert got == want
 
 
 def test_single_string_traversal_job_count_pinned(spark, built, count_jobs):

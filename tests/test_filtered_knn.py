@@ -45,11 +45,12 @@ def test_brute_filtered_equals_prefiltered_corpus(corpus, queries):
     assert all(r["node_id"] % 3 == 0 for r in got.collect())
 
 
-def test_brute_filtered_join_strategy_parity(corpus, queries):
+def test_brute_filtered_join_strategy_parity(corpus, queries, join_path):
     allowed = corpus.filter(F.col("node_id") % 3 == 0).select("node_id")
-    b = brute_force_knn(queries, corpus, k=5, allowed=allowed, strategy="broadcast")
-    j = brute_force_knn(queries, corpus, k=5, allowed=allowed, strategy="join")
-    assert _key(b) == _key(j)
+    b = brute_force_knn(queries, corpus, k=5, allowed=allowed)
+    with join_path():
+        j = _key(brute_force_knn(queries, corpus, k=5, allowed=allowed))
+    assert _key(b) == j
 
 
 def test_brute_allowed_accepts_any_column_name(corpus, queries):

@@ -89,10 +89,11 @@ def test_filtered_search_equals_prefiltered_brute(emb, queries, idx):
     assert all(r["node_id"] % 3 == 0 for r in got.collect())
 
 
-def test_search_strategy_parity(queries, idx):
-    b = idx.search(queries, k=5, nprobe=8, scoring="broadcast")
-    j = idx.search(queries, k=5, nprobe=8, scoring="join")
-    assert _key(b) == _key(j)
+def test_search_strategy_parity(queries, idx, join_path):
+    b = idx.search(queries, k=5, nprobe=8)
+    with join_path():
+        j = _key(idx.search(queries, k=5, nprobe=8))
+    assert _key(b) == j
 
 
 def test_save_load_roundtrip(tmp_path, spark, queries, idx):
@@ -143,7 +144,7 @@ def test_append_rejects_duplicate_ids(emb):
         idx2.append(emb.limit(3))
 
 
-def test_persisted_store_prunes_partitions(tmp_path, spark, emb, queries, idx):
+def test_persisted_store_prunes_partitions(tmp_path, spark, emb, queries, idx, join_path):
     """A loaded index stores inverted lists as parquet partitions; a
     broadcast-path search reads ONLY the probed list_id directories —
     the scan's PartitionFilters carries the probed-id INSET (FAISS
@@ -167,7 +168,8 @@ def test_persisted_store_prunes_partitions(tmp_path, spark, emb, queries, idx):
     # both persisted strategies match the in-memory result
     want = _key(idx.search(queries, k=5, nprobe=4))
     assert _key(got) == want
-    assert _key(loaded.search(queries, k=5, nprobe=4, scoring="join")) == want
+    with join_path():
+        assert _key(loaded.search(queries, k=5, nprobe=4)) == want
 
 
 @pytest.fixture(scope="module")
@@ -186,7 +188,7 @@ def test_quantized_same_structure_as_float(idx, qidx):
     assert set(qidx.nodes.columns) == {"node_id", "q_vec", "q_scale"}
 
 
-def test_quantized_search_recall_and_strategy_parity(emb, queries, qidx):
+def test_quantized_search_recall_and_strategy_parity(emb, queries, qidx, join_path):
     """Full-probe quantized search vs exact float brute force: recall@10
     floor on the real testdata embeddings (neighbor gaps there exceed
     the ±3e-3 int8 rounding error for nearly all queries); broadcast
@@ -197,8 +199,9 @@ def test_quantized_search_recall_and_strategy_parity(emb, queries, qidx):
         want, ["query_id", "node_id"], "inner"
     ).count()
     assert hit / want.count() >= 0.95
-    j = qidx.search(queries, k=10, nprobe=len(qidx.centroids), scoring="join")
-    assert _key(got) == _key(j)
+    with join_path():
+        j = _key(qidx.search(queries, k=10, nprobe=len(qidx.centroids)))
+    assert _key(got) == j
 
 
 def test_quantized_measure_recall_requires_exact_baseline(emb, queries, qidx):
@@ -208,7 +211,7 @@ def test_quantized_measure_recall_requires_exact_baseline(emb, queries, qidx):
     assert r >= 0.8, r
 
 
-def test_quantized_save_load_roundtrip(tmp_path, spark, queries, qidx):
+def test_quantized_save_load_roundtrip(tmp_path, spark, queries, qidx, join_path):
     """The persisted store holds int8 columns (no float copy on disk);
     a loaded quantized index searches identically on both strategies,
     with partition pruning intact."""
@@ -220,7 +223,8 @@ def test_quantized_save_load_roundtrip(tmp_path, spark, queries, qidx):
     assert "embedding" not in store_cols
     assert {"q_vec", "q_scale"} <= store_cols
     assert _key(loaded.search(queries, k=5, nprobe=8)) == want
-    assert _key(loaded.search(queries, k=5, nprobe=8, scoring="join")) == want
+    with join_path():
+        assert _key(loaded.search(queries, k=5, nprobe=8)) == want
 
 
 def test_quantized_append_self_retrieval(emb):

@@ -191,10 +191,11 @@ def _rows_by_query(rows):
     return by_q
 
 
-def test_brute_force_join_strategy_matches_broadcast(data):
+def test_brute_force_join_strategy_matches_broadcast(data, join_path):
     nodes, queries, nv32, qv32 = data
-    a = _rows_by_query(brute_force_knn(queries, nodes, k=K, strategy="broadcast").collect())
-    b = _rows_by_query(brute_force_knn(queries, nodes, k=K, strategy="join").collect())
+    a = _rows_by_query(brute_force_knn(queries, nodes, k=K).collect())
+    with join_path():
+        b = _rows_by_query(brute_force_knn(queries, nodes, k=K).collect())
     assert set(a) == set(b) == set(range(N_QUERIES))
     for qi in a:
         assert [n for _, n, _ in a[qi]] == [n for _, n, _ in b[qi]]
@@ -202,7 +203,7 @@ def test_brute_force_join_strategy_matches_broadcast(data):
             assert abs(da - db) < 1e-9
 
 
-def test_tile_knn_join_scoring_matches_broadcast(data):
+def test_tile_knn_join_scoring_matches_broadcast(data, join_path):
     nodes, queries, nv32, qv32 = data
     res = 2
     nodes_xy = reduce_2d(nodes, dim=DIM)
@@ -211,24 +212,22 @@ def test_tile_knn_join_scoring_matches_broadcast(data):
         queries.withColumnRenamed("q_embedding", "embedding"), dim=DIM
     ).withColumnRenamed("embedding", "q_embedding")
     kw = dict(resolution=res, k=K, ring=1, max_ring=1 << (res + 1))
-    a = _rows_by_query(
-        tile_knn(queries_xy, nodes, tiles, scoring="broadcast", **kw).collect()
-    )
-    b = _rows_by_query(
-        tile_knn(queries_xy, nodes, tiles, scoring="join", **kw).collect()
-    )
+    a = _rows_by_query(tile_knn(queries_xy, nodes, tiles, **kw).collect())
+    with join_path():
+        b = _rows_by_query(tile_knn(queries_xy, nodes, tiles, **kw).collect())
     assert a.keys() == b.keys()
     for qi in a:
         assert [n for _, n, _ in a[qi]] == [n for _, n, _ in b[qi]]
 
 
-def test_join_strategy_never_collects_to_driver(data, monkeypatch):
-    """The whole point of strategy='join': NO .toPandas()/.collect() of
+def test_join_strategy_never_collects_to_driver(data, monkeypatch, join_path):
+    """The whole point of the join path: NO .toPandas()/.collect() of
     the query side. Poison toPandas and run the full plan."""
     import pyspark.sql
 
     nodes, queries, nv32, qv32 = data
-    out = brute_force_knn(queries, nodes, k=K, strategy="join")
+    with join_path():
+        out = brute_force_knn(queries, nodes, k=K)
 
     def _boom(self):
         raise AssertionError("driver collect in join-strategy plan")
@@ -239,25 +238,26 @@ def test_join_strategy_never_collects_to_driver(data, monkeypatch):
 
 
 def test_auto_strategy_switches_on_query_count(data, monkeypatch):
-    """Above BROADCAST_MAX_QUERIES, strategy='auto' must take the join
-    path — provable by poisoning toPandas BEFORE building the plan."""
+    """Above the driver row bound the engine must take the join path —
+    provable by poisoning toPandas BEFORE building the plan. The cached
+    query frame has no row statistic, so one count() sizes it."""
     import pyspark.sql
 
-    from raptor_rag_spark.operators import knn as knn_mod
+    from raptor_rag_spark.functions import planutil
 
     nodes, queries, nv32, qv32 = data
-    monkeypatch.setattr(knn_mod, "BROADCAST_MAX_QUERIES", N_QUERIES - 1)
+    monkeypatch.setattr(planutil, "DRIVER_MAX_ROWS", N_QUERIES - 1)
 
     def _boom(self):
         raise AssertionError("broadcast path taken above the threshold")
 
     monkeypatch.setattr(pyspark.sql.DataFrame, "toPandas", _boom)
-    rows = brute_force_knn(queries, nodes, k=K, strategy="auto").collect()
+    rows = brute_force_knn(queries, nodes, k=K).collect()
     assert len(rows) == N_QUERIES * K
 
 
 @pytest.mark.parametrize("strategy", ["broadcast", "join"])
-def test_null_and_ragged_embeddings_fail_loudly(spark, strategy):
+def test_null_and_ragged_embeddings_fail_loudly(spark, strategy, join_path):
     """A NULL or wrong-length embedding must raise a ValueError naming
     the column — np.array on such input builds a ragged object array
     whose matmul dies with a cryptic gufunc error (or, for rows split
@@ -271,10 +271,11 @@ def test_null_and_ragged_embeddings_fail_loudly(spark, strategy):
     bad_ragged = spark.createDataFrame(
         [(1, [0.6, 0.8]), (2, [1.0])], "node_id long, embedding array<float>"
     )
-    with pytest.raises(Exception, match="NULL vector in column"):
-        brute_force_knn(q, bad_null, k=2, strategy=strategy).collect()
-    with pytest.raises(Exception, match="ragged|expected"):
-        brute_force_knn(q, bad_ragged, k=2, strategy=strategy).collect()
+    with join_path(strategy == "join"):
+        with pytest.raises(Exception, match="NULL vector in column"):
+            brute_force_knn(q, bad_null, k=2).collect()
+        with pytest.raises(Exception, match="ragged|expected"):
+            brute_force_knn(q, bad_ragged, k=2).collect()
 
 
 def test_tile_knn_multi_round_job_count_pinned(data, count_jobs):
@@ -300,6 +301,26 @@ def test_tile_knn_multi_round_job_count_pinned(data, count_jobs):
     )
     assert len(rows) == N_QUERIES * K
     assert n_jobs <= 13, n_jobs
+
+
+def test_no_path_options_on_the_public_surface():
+    """The engine picks every broadcast-or-join path from the data: no
+    public kNN operator or index method takes a strategy, scoring or
+    membership option."""
+    import inspect
+
+    from raptor_rag_spark.operators.ivf import IvfIndex
+    from raptor_rag_spark.operators.knn import tile_knn_adaptive
+    from raptor_rag_spark.operators.retrieve import retrieve_collapsed
+    from raptor_rag_spark.operators.similarity import TileAnnIndex
+    from raptor_rag_spark.operators.tile import adaptive_tile_assignments
+
+    for fn in (
+        brute_force_knn, tile_knn, tile_knn_adaptive, adaptive_tile_assignments,
+        retrieve_collapsed, TileAnnIndex, TileAnnIndex.search, IvfIndex.search,
+    ):
+        params = set(inspect.signature(fn).parameters)
+        assert not params & {"strategy", "scoring", "membership"}, fn
 
 
 @pytest.fixture(scope="module")
@@ -335,14 +356,13 @@ def tied(spark):
     [lambda df: df.repartition(1), lambda df: df.repartition(7), lambda df: df.coalesce(2)],
     ids=["repartition1", "repartition7", "coalesce2"],
 )
-def test_brute_force_exact_under_ties_and_any_partitioning(tied, strategy, layout):
+def test_brute_force_exact_under_ties_and_any_partitioning(tied, strategy, layout, join_path):
     """The (dist, node_id) order holds under exact-duplicate vectors
     whatever the partitioning: a partial top-k must keep every row tied
     at its k-th distance, or the smaller node_id of a tie can be lost."""
     nodes, queries, oracle = tied
-    got = _rows_by_query(
-        brute_force_knn(queries, layout(nodes), k=K, strategy=strategy).collect()
-    )
+    with join_path(strategy == "join"):
+        got = _rows_by_query(brute_force_knn(queries, layout(nodes), k=K).collect())
     assert got == {
         qi: [(rank, n, dist) for rank, (n, dist) in enumerate(rows, start=1)]
         for qi, rows in oracle.items()
@@ -350,15 +370,14 @@ def test_brute_force_exact_under_ties_and_any_partitioning(tied, strategy, layou
 
 
 @pytest.mark.parametrize("strategy", ["broadcast", "join"])
-def test_brute_force_carries_node_columns(data, strategy):
+def test_brute_force_carries_node_columns(data, strategy, join_path):
     """``carry`` returns node columns beside each hit and leaves the kNN
     columns as they are without it."""
     nodes, queries, nv32, qv32 = data
     nodes = nodes.withColumn("label", F.concat(F.lit("n"), F.col("node_id").cast("string")))
     nodes = nodes.withColumn("n_tokens", (F.col("node_id") % 7).cast("int"))
-    carried = brute_force_knn(
-        queries, nodes, k=K, strategy=strategy, carry=("label", "n_tokens")
-    )
+    with join_path(strategy == "join"):
+        carried = brute_force_knn(queries, nodes, k=K, carry=("label", "n_tokens"))
     assert carried.columns == ["query_id", "node_id", "dist", "rank", "label", "n_tokens"]
     assert carried.schema["n_tokens"].dataType.simpleString() == "int"
     rows = carried.collect()

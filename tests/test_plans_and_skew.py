@@ -285,8 +285,8 @@ def test_aqe_skew_join_split(spark):
                 spark.conf.set(k, v)
 
 
-def test_join_scoring_plan_has_no_broadcast_of_queries(spark):
-    """strategy='join' brute force: the plan must contain NO
+def test_join_scoring_plan_has_no_broadcast_of_queries(spark, join_path):
+    """Join-path brute force: the plan must contain NO
     BroadcastExchange and NO cartesian/nested-loop join — the only
     exchanges are the hash partitioning into (query-block, node-block)
     groups and the final top-k window sort."""
@@ -299,7 +299,8 @@ def test_join_scoring_plan_has_no_broadcast_of_queries(spark):
         [(i, [float(x) for x in v / np.linalg.norm(v)]) for i, v in enumerate(rng.randn(m, 8))],
         f"{pre}_id long, {'q_embedding' if pre == 'query' else 'embedding'} array<float>",
     )
-    out = brute_force_knn(mk(40, "query"), mk(200, "node"), k=3, strategy="join")
+    with join_path():
+        out = brute_force_knn(mk(40, "query"), mk(200, "node"), k=3)
     plan = _plan(out)
     assert "BroadcastExchange" not in plan, plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
@@ -307,7 +308,7 @@ def test_join_scoring_plan_has_no_broadcast_of_queries(spark):
 
 
 def test_score_candidates_join_plans_hash_join(spark):
-    """_score_candidates(strategy='join'): candidates join query
+    """_score_candidates on the join path: candidates join query
     embeddings via a real equi-join (shuffle-hash or sort-merge — never
     a driver collect, never a nested loop)."""
     import numpy as np
@@ -326,7 +327,7 @@ def test_score_candidates_join_plans_hash_join(spark):
     cand = queries.select("query_id").crossJoin(nodes.limit(5)).select(
         "query_id", "node_id", "embedding"
     )
-    out = _score_candidates(cand, queries, strategy="join")
+    out = _score_candidates(cand, queries, broadcast=False)
     plan = _plan(out)
     assert "CartesianProduct" not in plan.replace("CartesianProduct", "", 1), plan  # only the test's own crossJoin
     assert ("ShuffledHashJoin" in plan or "SortMergeJoin" in plan or "BroadcastHashJoin" in plan), plan

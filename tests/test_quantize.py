@@ -35,7 +35,7 @@ def test_quantized_knn_recall_vs_exact(spark):
             F.col("node_id").alias("query_id"), F.col("embedding").alias("q_embedding")
         )
     )
-    exact = brute_force_knn(queries, emb, k=10, strategy="broadcast")
+    exact = brute_force_knn(queries, emb, k=10)
     quant = brute_force_knn(queries, nodes_q, k=10)
     inter = exact.select("query_id", "node_id").intersect(
         quant.select("query_id", "node_id")
@@ -70,30 +70,32 @@ def _by_query(rows):
     return by_q
 
 
-def test_quantized_join_strategy_matches_broadcast(spark):
-    """Identical ranked neighbors and distances (1e-9) at both physical
-    strategies — the int8 dequantized matmul is the same arithmetic in
-    both kernels."""
+def test_quantized_join_strategy_matches_broadcast(spark, join_path):
+    """Identical ranked neighbors and distances (1e-9) on both physical
+    paths — the int8 dequantized matmul is the same arithmetic in both
+    kernels."""
     _, nodes_q, queries = _corpus(spark)
-    a = brute_force_knn(queries, nodes_q, k=10, strategy="broadcast")
-    b = brute_force_knn(queries, nodes_q, k=10, strategy="join")
+    a = brute_force_knn(queries, nodes_q, k=10)
     ra = {(r["query_id"], r["rank"]): (r["node_id"], r["dist"]) for r in a.collect()}
-    rb = {(r["query_id"], r["rank"]): (r["node_id"], r["dist"]) for r in b.collect()}
+    with join_path():
+        b = brute_force_knn(queries, nodes_q, k=10)
+        rb = {(r["query_id"], r["rank"]): (r["node_id"], r["dist"]) for r in b.collect()}
     assert ra.keys() == rb.keys() and len(ra) == 200
     for key in ra:
         assert ra[key][0] == rb[key][0]
         assert abs(ra[key][1] - rb[key][1]) < 1e-9
 
 
-def test_quantized_join_never_collects_to_driver(spark, monkeypatch):
-    """No .toPandas() anywhere in the quantized join-strategy plan —
+def test_quantized_join_never_collects_to_driver(spark, monkeypatch, join_path):
+    """No .toPandas() anywhere in the quantized join-path plan —
     the int8 path must scale exactly like knn's join path (round-3
     verdict item: the broadcast path's unconditional collect was the
     anti-pattern)."""
     import pyspark.sql
 
     _, nodes_q, queries = _corpus(spark)
-    out = brute_force_knn(queries, nodes_q, k=10, strategy="join")
+    with join_path():
+        out = brute_force_knn(queries, nodes_q, k=10)
 
     def _boom(self):
         raise AssertionError("driver collect in quantized join-strategy plan")
@@ -103,32 +105,33 @@ def test_quantized_join_never_collects_to_driver(spark, monkeypatch):
 
 
 def test_quantized_auto_switches_on_query_count(spark, monkeypatch):
-    """Above BROADCAST_MAX_QUERIES, strategy='auto' must take the join
-    path — poison toPandas BEFORE building the plan."""
+    """Above the driver row bound the engine must take the join path —
+    poison toPandas BEFORE building the plan. The 20-query batch is a
+    limit, so its row statistic sizes it without a job."""
     import pyspark.sql
 
-    from raptor_rag_spark.operators import knn as knn_mod
+    from raptor_rag_spark.functions import planutil
 
     _, nodes_q, queries = _corpus(spark)
-    monkeypatch.setattr(knn_mod, "BROADCAST_MAX_QUERIES", 19)
+    monkeypatch.setattr(planutil, "DRIVER_MAX_ROWS", 19)
 
     def _boom(self):
         raise AssertionError("broadcast path taken above the threshold")
 
     monkeypatch.setattr(pyspark.sql.DataFrame, "toPandas", _boom)
-    rows = brute_force_knn(queries, nodes_q, k=10, strategy="auto").collect()
+    rows = brute_force_knn(queries, nodes_q, k=10).collect()
     assert len(rows) == 200
 
 
-def test_quantized_join_rejects_non_integral_ids(spark):
+def test_quantized_join_rejects_non_integral_ids(spark, join_path):
     import pytest
 
     _, nodes_q, _ = _corpus(spark)
     bad_q = spark.createDataFrame(
         [("a", [0.1] * 64)], "query_id string, q_embedding array<float>"
     )
-    with pytest.raises(TypeError, match="integral id"):
-        brute_force_knn(bad_q, nodes_q, k=5, strategy="join")
+    with join_path(), pytest.raises(TypeError, match="integral id"):
+        brute_force_knn(bad_q, nodes_q, k=5)
 
 
 def test_quantize_null_and_zero_vectors(spark):
@@ -152,12 +155,13 @@ def test_quantize_rejects_non_finite(spark):
         quantize_embeddings(df).collect()
 
 
-def test_quantized_join_plan_is_cogroup_no_broadcast(spark):
-    """The join strategy's physical plan: a FlatMapCoGroupsInPandas over
+def test_quantized_join_plan_is_cogroup_no_broadcast(spark, join_path):
+    """The join path's physical plan: a FlatMapCoGroupsInPandas over
     the two block-hashed sides, NO BroadcastExchange and no cartesian —
     the corpus side stays its own (int8) Arrow stream."""
     _, nodes_q, queries = _corpus(spark)
-    out = brute_force_knn(queries, nodes_q, k=5, strategy="join")
+    with join_path():
+        out = brute_force_knn(queries, nodes_q, k=5)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapCoGroupsInPandas" in plan
     assert "BroadcastExchange" not in plan
@@ -168,12 +172,14 @@ def test_quantized_join_plan_is_cogroup_no_broadcast(spark):
     ] == "array<tinyint>"
 
 
-def test_empty_query_batch_over_int8_nodes(spark):
+def test_empty_query_batch_over_int8_nodes(spark, join_path):
     """An empty query batch over int8 nodes returns 0 rows with the
-    ranked schema on both strategies, as it does over float nodes."""
+    ranked schema on both paths, as it does over float nodes. A bound of
+    -1 sends even the empty batch to the join path."""
     _, nodes_q, queries = _corpus(spark)
     for strategy in ("broadcast", "join"):
-        out = brute_force_knn(queries.limit(0), nodes_q, k=5, strategy=strategy)
+        with join_path(strategy == "join"):
+            out = brute_force_knn(queries.limit(0), nodes_q, k=5)
         assert out.dtypes == [
             ("query_id", "bigint"), ("node_id", "bigint"), ("dist", "double"), ("rank", "int")
         ], strategy

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from raptor_rag_spark.config import EngineConfig
 from raptor_rag_spark.datagen import synthetic_pages
+from raptor_rag_spark.functions import planutil
 from raptor_rag_spark.operators.chunk import chunk_documents
 from raptor_rag_spark.operators.embed import embed_texts
 from raptor_rag_spark.operators.tree import (
@@ -228,7 +229,7 @@ def test_cap_split_join_twin_matches_broadcast(spark, leaves, monkeypatch):
         return sorted(map(tuple, out.collect()))
 
     broadcast = assigned()
-    monkeypatch.setattr(tree, "_MAX_SPLITTABLE_BROADCAST", 0)
+    monkeypatch.setattr(planutil, "DRIVER_MAX_SPLIT_UNIVERSE", 0)
     joined = assigned()
     assert joined == broadcast
     assert len(broadcast) == nodes.count()

@@ -178,7 +178,9 @@ def compute_knn_golden(spark) -> dict:
     nodes, ``tile_knn`` over float nodes, and ``TileAnnIndex`` /
     ``IvfIndex`` search over float and int8 stores, each with broadcast
     and join scoring. The first ``KNN_QUERIES`` embeddings (by id) are
-    the queries."""
+    the queries; the join paths run with the driver row bound below
+    any batch."""
+    from raptor_rag_spark.functions import planutil
     from raptor_rag_spark.operators.ivf import IvfIndex
     from raptor_rag_spark.operators.knn import tile_knn
     from raptor_rag_spark.operators.quantize import quantize_embeddings
@@ -204,24 +206,29 @@ def compute_knn_golden(spark) -> dict:
     queries = queries_xy.select("query_id", "q_embedding")
     tiles = tile_assignments(nodes, "node_id", [3])
     out = {}
+    bound = planutil.DRIVER_MAX_ROWS
     for fmt, store in corpus.items():
         tile_idx = TileAnnIndex(corpus["float"], dim=dim, quantized=fmt == "int8")
         ivf_idx = IvfIndex(corpus["float"], dim=dim, nlist=16, quantized=fmt == "int8")
-        for strategy in ("broadcast", "join"):
-            out[f"brute_{fmt}_{strategy}"] = _knn_rows(
-                brute_force_knn(queries, store, k=KNN_K, strategy=strategy)
-            )
-            if fmt == "float":
-                out[f"tile_knn_{fmt}_{strategy}"] = _knn_rows(
-                    tile_knn(queries_xy, store, tiles, resolution=3, k=KNN_K,
-                             ring=1, max_ring=4, scoring=strategy)
+        for strategy, rows_bound in (("broadcast", bound), ("join", -1)):
+            planutil.DRIVER_MAX_ROWS = rows_bound
+            try:
+                out[f"brute_{fmt}_{strategy}"] = _knn_rows(
+                    brute_force_knn(queries, store, k=KNN_K)
                 )
-            out[f"tile_ann_{fmt}_{strategy}"] = _knn_rows(
-                tile_idx.search(queries, k=KNN_K, ring=2, scoring=strategy)
-            )
-            out[f"ivf_{fmt}_{strategy}"] = _knn_rows(
-                ivf_idx.search(queries, k=KNN_K, nprobe=4, scoring=strategy)
-            )
+                if fmt == "float":
+                    out[f"tile_knn_{fmt}_{strategy}"] = _knn_rows(
+                        tile_knn(queries_xy, store, tiles, resolution=3, k=KNN_K,
+                                 ring=1, max_ring=4)
+                    )
+                out[f"tile_ann_{fmt}_{strategy}"] = _knn_rows(
+                    tile_idx.search(queries, k=KNN_K, ring=2)
+                )
+                out[f"ivf_{fmt}_{strategy}"] = _knn_rows(
+                    ivf_idx.search(queries, k=KNN_K, nprobe=4)
+                )
+            finally:
+                planutil.DRIVER_MAX_ROWS = bound
     return out
 
 
